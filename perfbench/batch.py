@@ -1,9 +1,10 @@
-"""The ``batch_queries`` workload: the serving queries and the curation mix.
+"""The ``serving_queries`` workload: the dashboard and demo queries.
 
-Each query is one operation: ``q.fn(spark, data_dir)`` builds the plan and
-a full-column xxhash64 fold (as in ``bench.py``) reduces every output
-column to one row.  A closed loop with one client runs the queries in
-order, serving set first.
+The queries are every ``reference_queries`` registration with a SQL
+oracle.  Each query is one operation: ``q.fn(spark, data_dir)`` builds
+the plan and a full-column xxhash64 fold (as in ``bench.py``) reduces
+every output column to one row.  A closed loop with one client runs the
+queries in registry order, one pass after another.
 
 Before timing, each query runs once against its DuckDB oracle with the
 comparison of ``tests/oracle_harness.py``; that pass also warms the JVM.
@@ -12,6 +13,7 @@ Every timed repetition must then reproduce the verified fold.
 
 from __future__ import annotations
 
+import gc
 import time
 import traceback
 from concurrent.futures import ThreadPoolExecutor
@@ -21,24 +23,16 @@ import numpy as np
 from . import sparkobs
 from .inputs import SF01_ROWS
 
-#: The curation mix: headliners of the LLM-data operator families whose
-#: cost the serving queries do not show: the dedup graph and the quantile
-#: sketch (eager pins and driver collects at construction), IVFADC search
-#: (executor compute) and BPE (an Arrow UDF).  The other curation
-#: headliners repeat these families and are left out so that a run fits
-#: the benchmark's time budget.
-CURATION_MIX = (
-    "dedup_pipeline_end_to_end",
-    "value_quantile_sketch",
-    "ivfadc_search",
-    "bpe_token_counts",
-)
+#: Row counts: a fifth of sf0.1.  Serving latency is driver-bound (plan
+#: construction, eager jobs, scheduling) at either size; the smaller one
+#: keeps the verification pass and a timed pass near 20 s each.
+SERVING_ROWS = {k: v // 5 for k, v in SF01_ROWS.items()}
 
-#: Row counts: a fifth of sf0.1.  A run, its cold verification pass
-#: included, has to fit the benchmark's time budget; serving latency is
-#: driver-bound at either size, and the DuckDB oracles of the curation
-#: mix (the ivfadc replay costs ~25 ms per vector) must finish inside it.
-BATCH_ROWS = {k: v // 5 for k, v in SF01_ROWS.items()}
+
+def serving_names(queries) -> list[str]:
+    """Every ``reference_queries`` registration that has a SQL oracle."""
+    return [q.name for q in queries.values()
+            if q.fn.__module__.endswith(".reference_queries") and q.oracle]
 
 
 #: Queries verified at a time.  The verification pass runs cold and is
@@ -229,14 +223,18 @@ class BatchWorkload:
         return time.perf_counter() - t0, row
 
     def timed(self, seconds: float, queries) -> dict:
-        """Whole passes over ``queries`` until ``seconds`` have passed (at least one)."""
+        """Whole passes over ``queries``: one, then more while another would
+        end inside ``seconds`` at the last pass's pace."""
         ctx = self.ctx
         lat: list[tuple[str, float]] = []
         pass_s: list[float] = []
         pass_phases: list[dict] = []
+        # start every run from the same heap state
+        gc.collect()
+        self.spark.sparkContext._jvm.System.gc()
         start = time.perf_counter()
         p = 0
-        while queries and (p == 0 or time.perf_counter() - start < seconds):
+        while queries and (p == 0 or time.perf_counter() - start + pass_s[-1] <= seconds):
             phases = {"construct_s": 0.0, "exec_s": 0.0}
             t0 = time.perf_counter()
             for q in queries:
@@ -265,15 +263,9 @@ class BatchWorkload:
                 self._fail(f"{self.ctx.workload}/{p}/{name}: fold {row} != verified {want}")
 
 
-def groups(queries) -> dict[str, list[str]]:
-    """The two query sets of ``batch_queries``."""
-    return {"serving": serving_names(queries), "curation": list(CURATION_MIX)}
-
-
-def run(ctx, query_groups: dict[str, list[str]]) -> dict:
+def run(ctx) -> dict:
     """Verify every query (which also warms the JVM), then time whole passes."""
-    names = [n for g in query_groups.values() for n in g]
-    wl = BatchWorkload(ctx, names)
+    wl = BatchWorkload(ctx, serving_names(ctx.queries))
     t0 = time.perf_counter()
     wl.verify()
     verify_s = time.perf_counter() - t0
@@ -285,23 +277,23 @@ def run(ctx, query_groups: dict[str, list[str]]) -> dict:
         "latency_p90_s": _pct(lat, 90) if lat else float("nan"),
         "throughput_per_s": len(lat) / t["wall"] if t["wall"] > 0 else 0.0,
     }
+    per_query: dict[str, list[float]] = {}
+    for name, dt in t["lat"]:
+        per_query.setdefault(name, []).append(dt)
     report = {
+        # the names layers.json cites for the same numbers
+        "query_latency_p50_s": e2e["latency_p50_s"],
+        "query_latency_p90_s": e2e["latency_p90_s"],
+        "queries_per_s": e2e["throughput_per_s"],
+        "suite_s": float(np.median(t["pass_s"])) if t["pass_s"] else None,
         "verify_s": verify_s,
         "rounding_ties": wl.rounding_ties,
         "passes": t["passes"],
         "latency_samples": len(lat),
         "pass_s": t["pass_s"],
+        "query_median_s": {n: float(np.median(v)) for n, v in per_query.items()},
         "errors": wl.errors[:10],
     }
-    # the per-query-set names (query_latency_*, suite_s) layers.json cites
-    for g, members in query_groups.items():
-        gl = [dt for name, dt in t["lat"] if name in members]
-        report[g] = {
-            "queries": members,
-            "query_latency_p50_s": _pct(gl, 50) if gl else None,
-            "query_latency_p90_s": _pct(gl, 90) if gl else None,
-            "suite_s": sum(gl) / t["passes"] if t["passes"] else None,
-        }
     layers = {}
     if ctx.trace:
         layers = _batch_layers(ctx, t)

@@ -4,14 +4,14 @@
 
 Run from the repository root.  Workloads:
 
-- ``batch_queries``: every ``reference_queries`` registration with a SQL
-  oracle (the serving surface) and the LLM-data curation mix
-  (``batch.CURATION_MIX``), on seeded tables a fifth of sf0.1.
+- ``serving_queries``: every ``reference_queries`` registration with a
+  SQL oracle (the dashboard and demo surface), on seeded tables a fifth of
+  sf0.1 (``batch.py``).
 - ``streaming_ingest``: three dual-sink streaming queries (``stream.py``).
 
 The run generates its inputs from the seed, sets up a session fitted to
-the machine, verifies outputs, measures for about ``--seconds`` and prints
-a report line and then the result line:
+the machine ``SETUPS`` times, verifies outputs, measures for about
+``--seconds`` and prints a report line and then the result line:
 ``{"correct", "attempted", "failed", "metrics"}``.  With ``--trace 0`` the
 metrics are the end-to-end ones; with ``--trace 1`` the per-layer ones,
 and the spans are written to ``.perfbench_out/``.  The report line of a
@@ -33,13 +33,18 @@ import time
 from dataclasses import dataclass, field
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOADS = ("batch_queries", "streaming_ingest")
+WORKLOADS = ("serving_queries", "streaming_ingest")
+#: Session set-ups per run; ``setup_s`` is their median.  The first also
+#: launches the JVM and is reported apart as ``session.cold_start_s``; the
+#: others restart the session in that JVM after the workload has run.
+SETUPS = 5
 #: A run that has not finished by then stops its JVM and exits non-zero.
 DEADLINE_S = 170.0
 
 END_TO_END = ("setup_s", "latency_p50_s", "latency_p90_s", "throughput_per_s")
 PER_LAYER = (
-    "session.start_s", "session.warmup_s", "session.jvm_peak_rss_mb",
+    "session.start_s", "session.warmup_s", "session.cold_start_s",
+    "session.jvm_peak_rss_mb",
     "plans.construct_s", "plans.eager_jobs", "plans.analysis_ms",
     "plans.optimization_ms", "plans.planning_ms",
     "operators.exec_s", "operators.jobs", "operators.stages", "operators.tasks",
@@ -55,7 +60,7 @@ PER_LAYER = (
 )
 UNITS = {
     "setup_s": "s", "latency_p50_s": "s", "latency_p90_s": "s",
-    "throughput_per_s": "1/s",
+    "throughput_per_s": "1/s", "sinks.add_batch_ms_growth": "ms/1k_rows",
 }
 
 
@@ -72,8 +77,6 @@ def unit_of(name: str) -> str:
         return "bytes"
     if name.endswith("_frac"):
         return "fraction"
-    if name == "sinks.add_batch_ms_growth":
-        return "ms/1k_rows"
     return "count"
 
 
@@ -140,9 +143,39 @@ def main(argv=None) -> int:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _run(args, work: str) -> int:
-    from bigdata_20251_steam_spark.plans import QUERIES
+def _set_up(ctx, i: int, master: str, conf: dict, spark=None):
+    """Set-up ``i``: ``get_spark`` plus the warm-up job.
+
+    A set-up given the previous ``spark`` stops it first and starts a new
+    session in the same JVM.  Returns the session and the start and
+    warm-up times.
+    """
     from bigdata_20251_steam_spark.session import get_spark
+
+    from perfbench import sparkobs
+
+    if spark is not None:
+        # every later set-up starts from a collected heap
+        spark.sparkContext._jvm.System.gc()
+        spark.stop()
+    rid = f"{ctx.workload}/setup{i}"
+    with ctx.tracer.span("setup", "bench", rid):
+        t0 = time.perf_counter()
+        with ctx.tracer.span("get_spark", "session", rid):
+            spark = get_spark(app_name=f"perfbench-{ctx.workload}", master=master,
+                              extra_conf=conf)
+            spark.sparkContext.setLogLevel("ERROR")
+        t1 = time.perf_counter()
+        with ctx.tracer.span("warm_up", "session", rid):
+            sparkobs.warm_up(spark)
+        t2 = time.perf_counter()
+    return spark, t1 - t0, t2 - t1
+
+
+def _run(args, work: str) -> int:
+    from statistics import median
+
+    from bigdata_20251_steam_spark.plans import QUERIES
 
     from perfbench import batch, inputs, sparkobs, stream
     from perfbench.tracing import Tracer
@@ -151,45 +184,48 @@ def _run(args, work: str) -> int:
     ctx = Context(args.workload, args.seed % 2**64, args.seconds, bool(args.trace), work,
                   os.path.join(work, "data"), Tracer(bool(args.trace)), queries=QUERIES)
     tg = time.perf_counter()
-    if ctx.workload == "batch_queries":
-        inputs.write_tables(ctx.data_dir, ctx.seed, batch.BATCH_ROWS)
+    if ctx.workload == "serving_queries":
+        inputs.write_tables(ctx.data_dir, ctx.seed, batch.SERVING_ROWS)
     gen_s = time.perf_counter() - tg
     master, conf = sparkobs.session_conf(work)
-    rid = f"{ctx.workload}/setup"
+    ticks = sparkobs.cpu_ticks()
     spark = None
     try:
-        with ctx.tracer.span("setup", "bench", rid):
-            t0 = time.perf_counter()
-            with ctx.tracer.span("get_spark", "session", rid):
-                spark = get_spark(app_name=f"perfbench-{ctx.workload}", master=master,
-                                  extra_conf=conf)
-                spark.sparkContext.setLogLevel("ERROR")
-            t1 = time.perf_counter()
-            with ctx.tracer.span("warm_up", "session", rid):
-                sparkobs.warm_up(spark)
-            t2 = time.perf_counter()
+        spark, start, warm = _set_up(ctx, 0, master, conf)
+        starts, warms = [start], [warm]
         ctx.spark = spark
 
         if ctx.workload == "streaming_ingest":
             out = stream.run(ctx)
         else:
-            out = batch.run(ctx, batch.groups(QUERIES))
+            out = batch.run(ctx)
 
-        e2e = {"setup_s": t2 - t0, **out["e2e"]}
+        # The other set-ups run after the workload, once the JVM has
+        # finished compiling what the first one loaded.
+        for i in range(1, SETUPS):
+            spark, start, warm = _set_up(ctx, i, master, conf, spark)
+            starts.append(start)
+            warms.append(warm)
+        setups = [a + b for a, b in zip(starts, warms)]
+        e2e = {"setup_s": median(setups), **out["e2e"]}
         layers = {}
         if ctx.trace:
             # a layer the workload never calls did no work: it reads 0
             layers = {k: 0 for k in PER_LAYER}
             layers.update(out["layers"])
             layers.update({
-                "session.start_s": t1 - t0,
-                "session.warmup_s": t2 - t1,
+                "session.start_s": median(starts),
+                "session.warmup_s": median(warms),
+                "session.cold_start_s": setups[0],
                 "session.jvm_peak_rss_mb": sparkobs.jvm_peak_rss_mb(),
             })
         report = {
             "workload": ctx.workload, "seed": ctx.seed, "seconds": ctx.seconds,
             "trace": ctx.trace, "conf": sparkobs.effective_conf(spark),
             "end_to_end": e2e,
+            "setups_s": setups,
+            # machine noise: CPU time taken by other guests during the run
+            "host_steal_frac": sparkobs.steal_frac(ticks, sparkobs.cpu_ticks()),
             "input_gen_s": gen_s,
             "failed_ops_frac": out["failed"] / max(1, out["attempted"]),
             "ops_attempted": out["attempted"],

@@ -33,6 +33,18 @@ def mem_available_mb() -> int:
     raise RuntimeError("MemAvailable missing from /proc/meminfo")
 
 
+def cpu_ticks() -> list[int]:
+    """The machine's CPU time counters from ``/proc/stat`` (user ... steal)."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:]]
+
+
+def steal_frac(before: list[int], after: list[int]) -> float:
+    """Share of CPU time the hypervisor gave to other guests between two reads."""
+    d = [b - a for a, b in zip(before, after)]
+    return d[7] / sum(d) if sum(d) else 0.0
+
+
 def session_conf(work: str) -> tuple[str, dict[str, str]]:
     """Master and extra conf: one task slot per core, heap below MemAvailable."""
     n = cores()

@@ -8,13 +8,14 @@ all of bronze.
 
 - Warm-up: a few files, drained with ``processAllAvailable()``.
 - Steady phase (open loop): a generator thread writes one file per topic
-  every ``FILE_INTERVAL_S`` on a fixed schedule for ``--seconds``.  A
+  every ``FILE_INTERVAL_S`` on a fixed schedule, for ``--seconds`` rounded
+  up to whole trigger intervals and started just after a trigger.  A
   file's latency runs from when it was due to the commit of the
   micro-batch that put it into serving (its batch id comes from the
   checkpoint's file-source log, the commit time from the commit log).
 - Drain phase: a pre-written backlog processed with ``availableNow``;
   its rate is backlog rows over the span from the first drain batch's
-  start to the last one's commit (query start-up is reported apart).
+  start to the last one's end (query start-up is reported apart).
 
 After each phase every serving snapshot is checked against the batch
 pipeline over the same files, and bronze must hold every row written.
@@ -24,10 +25,12 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import math
 import os
 import threading
 import time
 import traceback
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 
@@ -35,17 +38,24 @@ from . import sparkobs
 from .inputs import TOPICS, StreamRecords, wire_lines
 
 #: Rows per generated file; one file per topic every ``FILE_INTERVAL_S``
-#: gives offered rates of 500 reviews/s, 50 game-info rows/s and 500
-#: player counts/s, about a third of what the drain phase sustains.
-ROWS_PER_FILE = {"reviews": 100, "charts": 10, "players": 100}
-FILE_INTERVAL_S = 0.2
-WARMUP_FILES = 3
-DRAIN_FILES = 24
+#: gives offered rates of 200 reviews/s, 40 game-info rows/s and 200
+#: player counts/s, well below what the drain phase sustains.
+ROWS_PER_FILE = {"reviews": 50, "charts": 10, "players": 50}
+FILE_INTERVAL_S = 0.25
+WARMUP_FILES = 2
+DRAIN_FILES = 12
 #: Drain files carry this many times the steady rows, so the drain
 #: measures processing rather than per-batch overhead.
-DRAIN_ROWS_SCALE = 4
-DRAIN_MAX_FILES_PER_TRIGGER = 6
-TRIGGER = {"processingTime": "500 milliseconds"}
+DRAIN_ROWS_SCALE = 8
+DRAIN_MAX_FILES_PER_TRIGGER = 4
+#: Steady-phase trigger interval.  Spark fires processing-time triggers on
+#: multiples of the interval since the epoch.  A micro-batch of the three
+#: queries costs about 2 s on 4 cores, whatever its rows, so a shorter
+#: interval keeps every query busy back to back and a slower machine then
+#: lengthens every batch and the files each one waits for.  With 3 s each
+#: query idles part of every interval: the phase runs below capacity.
+TRIGGER_S = 3
+TRIGGER = {"processingTime": f"{TRIGGER_S} seconds"}
 #: Micro-batch phases in the order MicroBatchExecution runs them, with
 #: the layer each belongs to.
 BATCH_PHASES = (
@@ -53,6 +63,11 @@ BATCH_PHASES = (
     ("getBatch", "sources"), ("queryPlanning", "streaming"),
     ("addBatch", "sinks"), ("commitOffsets", "streaming"),
 )
+
+
+def steady_files(seconds: float) -> int:
+    """Files per topic in the steady phase: ``seconds`` in whole trigger intervals."""
+    return math.ceil(max(seconds, 1) / TRIGGER_S) * round(TRIGGER_S / FILE_INTERVAL_S)
 
 
 def _wire_schema():
@@ -169,6 +184,14 @@ class StreamingIngest:
         self.run_ids: set[str] = set()
         self.construct_s = 0.0
         self.rows_written = {t: 0 for t in TOPICS}
+        self.phase_s: dict[str, float] = {}
+        self._t = time.perf_counter()
+
+    def mark(self, phase: str) -> None:
+        """Record the wall time since the previous mark as ``phase``."""
+        now = time.perf_counter()
+        self.phase_s[phase] = now - self._t
+        self._t = now
 
     def _fail(self, what: str) -> None:
         self.failed += 1
@@ -234,68 +257,93 @@ class StreamingIngest:
                 return f"{topic} query stopped early"
         return None
 
+    @staticmethod
+    def _process_all(queries: dict) -> list[str]:
+        """``processAllAvailable()`` on every query at once; returns the errors.
+
+        Each call waits for a trigger that finds no new data after the call,
+        so one after another they would wait a trigger interval each.
+        """
+        def one(topic, q):
+            try:
+                q.processAllAvailable()
+                return None
+            except Exception:
+                return f"{topic}: {traceback.format_exc(limit=3)}"
+
+        with ThreadPoolExecutor(max_workers=len(queries)) as pool:
+            futs = [pool.submit(one, t, q) for t, q in queries.items()]
+            return [e for e in (f.result() for f in futs) if e]
+
     def drain_and_stop(self, queries: dict) -> None:
         """``processAllAvailable()`` on every query, then ``stop()`` them all."""
         try:
-            for topic, q in queries.items():
-                try:
-                    q.processAllAvailable()
-                except Exception:
-                    self._fail(f"{topic} drain: {traceback.format_exc(limit=3)}")
+            for err in self._process_all(queries):
+                self._fail(f"drain {err}")
         finally:
             for q in queries.values():
                 q.stop()
         self._collect_progress(queries, "steady")
 
     # -- checks -------------------------------------------------------------
-    def check(self, phase: str) -> None:
+    def _check_topic(self, phase: str, topic: str) -> list[str]:
+        """Serving snapshot against the batch pipeline, bronze against the rows written."""
         from tests.oracle_harness import compare
 
-        sc = self.spark.sparkContext
-        if self.ctx.trace:
-            sc.setJobGroup("pb:verify", "pb:verify")
-        for topic in TOPICS:
-            pipeline, serving_agg = self.pipes[topic]
-            with self.ctx.tracer.span("verify", "check", f"streaming/{phase}/{topic}"):
+        pipeline, serving_agg = self.pipes[topic]
+        errors = []
+        try:
+            raw = self.spark.read.schema(_wire_schema()).json(self.d(topic, "in"))
+            golden = serving_agg(pipeline(raw)["bronze"]).toPandas()
+            compare(self.spark.read.parquet(self.d(topic, "serving")), golden,
+                    f"{phase}/{topic}/serving")
+        except Exception:
+            errors.append(f"{phase}/{topic} serving: {traceback.format_exc(limit=3)}")
+        try:
+            n = self.spark.read.parquet(self.d(topic, "bronze")).count()
+            if n != self.rows_written[topic]:
+                errors.append(f"{phase}/{topic} bronze rows {n} != "
+                              f"{self.rows_written[topic]} written")
+        except Exception:
+            errors.append(f"{phase}/{topic} bronze: {traceback.format_exc(limit=3)}")
+        return errors
+
+    def check(self, phase: str) -> None:
+        """Check the three topics at once (two operations each)."""
+        with self.ctx.tracer.span("verify", "check", f"streaming/{phase}"), \
+                ThreadPoolExecutor(max_workers=len(TOPICS)) as pool:
+            futs = [pool.submit(self._check_topic, phase, t) for t in TOPICS]
+            for fut in futs:
                 self.attempted += 2
-                try:
-                    raw = self.spark.read.schema(_wire_schema()).json(self.d(topic, "in"))
-                    golden = serving_agg(pipeline(raw)["bronze"]).toPandas()
-                    compare(self.spark.read.parquet(self.d(topic, "serving")), golden,
-                            f"{phase}/{topic}/serving")
-                except Exception:
-                    self._fail(f"{phase}/{topic} serving: {traceback.format_exc(limit=3)}")
-                try:
-                    n = self.spark.read.parquet(self.d(topic, "bronze")).count()
-                    if n != self.rows_written[topic]:
-                        self._fail(f"{phase}/{topic} bronze rows {n} != "
-                                   f"{self.rows_written[topic]} written")
-                except Exception:
-                    self._fail(f"{phase}/{topic} bronze: {traceback.format_exc(limit=3)}")
-        if self.ctx.trace:
-            sc.setJobGroup("", "")
+                for err in fut.result():
+                    self._fail(err)
 
     # -- phases -------------------------------------------------------------
     def steady(self, seconds: float) -> dict:
-        n_files = max(1, int(round(seconds / FILE_INTERVAL_S)))
+        n_files = steady_files(seconds)
         first = WARMUP_FILES
         self.prepare(range(first + n_files), self.records)
+        self.mark("prepare")
+        # the warm-up files are there before the queries start, so their
+        # first micro-batch takes them without waiting for a trigger
+        for seq in range(WARMUP_FILES):
+            for topic in TOPICS:
+                self.write_file(topic, seq)
         queries = self.start(TRIGGER, None)
-        try:
-            for seq in range(WARMUP_FILES):
-                for topic in TOPICS:
-                    self.write_file(topic, seq)
-            for q in queries.values():
-                q.processAllAvailable()
-        except Exception:
-            self._fail(f"warm-up: {traceback.format_exc(limit=3)}")
+        errors = self._process_all(queries)
+        if errors:
+            for err in errors:
+                self._fail(f"warm-up {err}")
             for q in queries.values():
                 q.stop()
             return {"written": [], "wall": 0.0, "backlog_files_end": 0}
         # warm-up batches are not measured
         self.warm_last = {t: max((p["batchId"] for p in _progress(q)), default=-1)
                           for t, q in queries.items()}
-        gen = Generator(self, first, n_files, time.time() + FILE_INTERVAL_S)
+        self.mark("warm_up")
+        # the first file lands just after a trigger, on every run
+        t0 = (math.floor(time.time() / TRIGGER_S) + 1) * TRIGGER_S + FILE_INTERVAL_S / 2
+        gen = Generator(self, first, n_files, t0)
         t0 = time.perf_counter()
         gen.start()
         failure = None
@@ -315,7 +363,9 @@ class StreamingIngest:
             self._fail(failure)
         if gen.error:
             self._fail(f"generator: {gen.error}")
+        self.mark("generate")
         self.drain_and_stop(queries)
+        self.mark("drain_and_stop")
         return {"written": gen.written, "wall": wall, "backlog_files_end": backlog}
 
     def latencies(self, written) -> tuple[list[float], list[float]]:
@@ -333,7 +383,7 @@ class StreamingIngest:
         return lat, late
 
     def drain(self) -> dict:
-        first = WARMUP_FILES + max(1, int(round(self.ctx.seconds / FILE_INTERVAL_S)))
+        first = WARMUP_FILES + steady_files(self.ctx.seconds)
         before = dict(self.rows_written)
         self.prepare(range(first, first + DRAIN_FILES), self.drain_records)
         for seq in range(first, first + DRAIN_FILES):
@@ -345,7 +395,7 @@ class StreamingIngest:
         t0 = time.perf_counter()
         queries = self.start({"availableNow": True}, DRAIN_MAX_FILES_PER_TRIGGER)
         try:
-            await_streams(list(queries.values()), mode="all", timeout=90)
+            await_streams(list(queries.values()), mode="all", timeout=60)
         except Exception:
             self._fail(f"drain: {traceback.format_exc(limit=3)}")
         wall = time.perf_counter() - t0
@@ -437,8 +487,11 @@ def run(ctx) -> dict:
     steady = s.steady(ctx.seconds)
     lat, late = s.latencies(steady["written"])
     s.check("steady")
+    s.mark("check_steady")
     drain = s.drain()
+    s.mark("drain")
     s.check("drain")
+    s.mark("check_drain")
     offered = {t: ROWS_PER_FILE[t] / FILE_INTERVAL_S for t in TOPICS}
     e2e = {
         "latency_p50_s": float(np.percentile(lat, 50)) if lat else float("nan"),
@@ -458,6 +511,7 @@ def run(ctx) -> dict:
         "drain_rows": drain["rows"],
         "drain_wall_s": drain["wall"],
         "drain_busy_s": drain["busy"],
+        "phase_s": s.phase_s,
         # the names layers.json cites for the same numbers
         "stream_latency_p50_s": e2e["latency_p50_s"],
         "stream_latency_p90_s": e2e["latency_p90_s"],
