@@ -45,6 +45,19 @@ def steal_frac(before: list[int], after: list[int]) -> float:
     return d[7] / sum(d) if sum(d) else 0.0
 
 
+def stolen_share(before: list[int], after: list[int]) -> float:
+    """Share of the CPU time the guest wanted between two reads that went to
+    other guests: steal over busy plus steal time.
+
+    A vCPU accrues steal only while it is runnable and the host runs
+    something else, so ``wall * (1 - share)`` is the wall time the same work
+    takes when the vCPUs are not taken away.
+    """
+    d = [b - a for a, b in zip(before, after)]
+    wanted = d[0] + d[1] + d[2] + d[5] + d[6] + d[7]  # user nice system irq softirq steal
+    return d[7] / wanted if wanted else 0.0
+
+
 def session_conf(work: str) -> tuple[str, dict[str, str]]:
     """Master and extra conf: one task slot per core, heap below MemAvailable."""
     n = cores()
