@@ -455,16 +455,16 @@ def sketch_quantiles(
     the rollup queries: FileScan count drops from 8/6 to 2.  Pass
     ``materialize=False`` when the caller has ALREADY materialized
     the sketch (e.g. it shares one checkpointed sketch with
-    :func:`exact_quantiles_banded`).
+    :func:`exact_quantiles_banded`).  A batch sketch is never pinned
+    here: the driver-side locate collects it once and nothing else
+    reads it, so a pin would only add a job.
     """
-    if materialize:
-        sketch = sketch.localCheckpoint()
     if not sketch.isStreaming:
-        # driver-side locate over the bounded (usually pinned) sketch
-        # (optimization r18, see _locate_target_buckets): the whole
-        # estimate is |groups| x |qs| integer arithmetic — the output
-        # frame is a LocalRelation, zero broadcast-chain jobs.  Exact
-        # same integers and tie rules as the join form below.
+        # driver-side locate over the bounded sketch (optimization r18,
+        # see _locate_target_buckets): the whole estimate is |groups| x
+        # |qs| integer arithmetic — the output frame is a
+        # LocalRelation, zero broadcast-chain jobs.  Exact same
+        # integers and tie rules as the join form below.
         _check_qs(qs)
         located = _locate_target_buckets(sketch, qs, group_cols)
         fields = [sketch.schema[c] for c in group_cols] + [
@@ -478,7 +478,10 @@ def sketch_quantiles(
             ],
             T.StructType(fields),
         )
-    # streaming sketches cannot collect — keep the relational locate
+    # streaming sketches cannot collect — keep the relational locate,
+    # which references the sketch twice
+    if materialize:
+        sketch = sketch.localCheckpoint()
     cum = _cum_buckets(sketch, group_cols)
     targets = _rank_targets(sketch, qs, group_cols)
     cond = F.col("cum") >= F.col("r")
@@ -579,8 +582,11 @@ def exact_quantiles_banded(
     rows per group) and the per-value histogram of the chosen buckets
     (``vals`` — distinct values inside ``<= |qs|`` buckets per group,
     the same frame the adaptive path already checkpoints per level).
-    The corpus is then scanned exactly TWICE — once for the sketch,
-    once for the in-band read-back — the prune-and-pick minimum.
+    The sketch pin applies only to the relational (streaming) locate;
+    the batch driver-side locate collects the sketch once, so a pin
+    there would only add a job.  The corpus is then scanned exactly
+    TWICE — once for the sketch, once for the in-band read-back — the
+    prune-and-pick minimum.
     Values are unchanged (checkpointing only cuts lineage).  Pass a
     precomputed ``sketch`` (MUST be ``quantile_sketch(df, cents_col,
     m, group_cols, weight_col)`` of the SAME arguments — e.g. one
@@ -601,20 +607,19 @@ def exact_quantiles_banded(
             *group_cols, "e", "sub", "c"
         )
         cnt_of = lambda: F.count(F.lit(1))  # noqa: E731
+    pin_sketch = sketch is None and materialize
     if sketch is None:
         sketch = rows.groupBy(*group_cols, "e", "sub").agg(
             cnt_of().alias("cnt")
         )
-        if materialize:
-            sketch = sketch.localCheckpoint()
     if not sketch.isStreaming and not rows.isStreaming:
-        # driver-side locate over the bounded (usually pinned) sketch
-        # (optimization r18, see _locate_target_buckets): the chosen
-        # buckets become a LocalRelation broadcast instead of a
-        # 4-job sequential cum/targets/locate/min chain.  Same
-        # integers, same tie rules; the in-band read-back below is
-        # unchanged (and stays distributed — the histogram is
-        # data-sized, never collected).
+        # driver-side locate over the bounded sketch, collected once and
+        # so never pinned here (optimization r18, see
+        # _locate_target_buckets): the chosen buckets become a
+        # LocalRelation broadcast instead of a 4-job sequential
+        # cum/targets/locate/min chain.  Same integers, same tie rules;
+        # the in-band read-back below is unchanged (and stays
+        # distributed — the histogram is data-sized, never collected).
         _check_qs(qs)
         located_rows = _locate_target_buckets(sketch, qs, group_cols)
         fields = [sketch.schema[c] for c in group_cols] + [
@@ -627,7 +632,10 @@ def exact_quantiles_banded(
             located_rows, T.StructType(fields)
         )
     else:
-        # streaming inputs cannot collect — keep the relational locate
+        # streaming inputs cannot collect — keep the relational locate,
+        # which references the sketch three times
+        if pin_sketch:
+            sketch = sketch.localCheckpoint()
         cum = _cum_buckets(sketch, group_cols)
         targets = _rank_targets(sketch, qs, group_cols)
         cond = F.col("cum") >= F.col("r")

@@ -7,9 +7,17 @@ Re-expresses the reference's three streaming apps' *mechanics* (SURVEY.md
    starts 2-3 independent ``writeStream`` queries on the same parsed Kafka
    DataFrame (``kafka-spark-configmap.yaml:95-121``), so every sink re-reads
    and re-parses the topic.  ``dual_sink_writer`` runs ONE streaming query
-   whose ``foreachBatch`` persists the micro-batch, appends it to the bronze
-   (cold) parquet table, and overwrites the serving (hot) snapshot — one
-   source read per trigger instead of three.
+   — one source read per trigger instead of three — whose ``foreachBatch``
+   runs three steps per epoch:
+
+   a. append the micro-batch to the bronze (cold) parquet table; the
+      write is the batch's only reader, so it is not persisted;
+   b. re-read bronze with the micro-batch's own schema (plus the
+      ``epoch`` partition column on the exactly-once path) — bronze
+      holds only what this stream wrote, so the schema is known and no
+      footer-inference job runs;
+   c. recompute ``serving_agg`` over that read and overwrite the serving
+      (hot) snapshot.
 
 2. **Complete-mode snapshots without MongoDB** (A5/G3).  The reference's
    hot store is Mongo with ``outputMode("complete")`` — the whole aggregate
@@ -35,7 +43,7 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.timeutil import normalize_ntz
 
@@ -158,25 +166,25 @@ def dual_sink_writer(
     spark = parsed.sparkSession
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            if exactly_once:
-                idempotent_epoch_append(
-                    batch_df, paths.bronze_dir, epoch_id, partition_cols
-                )
-                bronze = spark.read.parquet(paths.bronze_dir).drop("epoch")
-            else:
-                w = batch_df.write.mode("append")
-                if partition_cols:
-                    w = w.partitionBy(*partition_cols)
-                w.parquet(paths.bronze_dir)
-                bronze = spark.read.parquet(paths.bronze_dir)
-            snapshot = serving_agg(bronze)
-            # Overwrite = idempotent per epoch: replaying an epoch after a
-            # crash rewrites the same snapshot.
-            snapshot.write.mode("overwrite").parquet(paths.serving_dir)
-        finally:
-            batch_df.unpersist()
+        # bronze holds what the stream wrote, so the micro-batch schema is
+        # bronze's schema: re-reading with it skips the inference job
+        schema = batch_df.schema
+        if exactly_once:
+            idempotent_epoch_append(
+                batch_df, paths.bronze_dir, epoch_id, partition_cols
+            )
+            schema = StructType([*schema.fields, StructField("epoch", LongType())])
+            bronze = spark.read.schema(schema).parquet(paths.bronze_dir).drop("epoch")
+        else:
+            w = batch_df.write.mode("append")
+            if partition_cols:
+                w = w.partitionBy(*partition_cols)
+            w.parquet(paths.bronze_dir)
+            bronze = spark.read.schema(schema).parquet(paths.bronze_dir)
+        snapshot = serving_agg(bronze)
+        # Overwrite = idempotent per epoch: replaying an epoch after a
+        # crash rewrites the same snapshot.
+        snapshot.write.mode("overwrite").parquet(paths.serving_dir)
 
     writer = (
         parsed.writeStream.foreachBatch(_process)

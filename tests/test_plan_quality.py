@@ -1087,3 +1087,26 @@ def test_hybrid_lexical_tier_single_documents_scan(spark):
     plan = _final_plan(df)
     doc_scans = re.findall(r"FileScan parquet[^\n]*documents", plan)
     assert len(doc_scans) == 1, plan
+
+
+def test_reference_queries_construct_without_jobs(spark, jobs_fired):
+    """ROADMAP aim 3 on the serving surface: once each table has been
+    loaded, building any oracle-backed reference query starts no Spark
+    job — no schema inference, pins or driver collects at construction."""
+    from bigdata_20251_steam_spark.schemas import TESTDATA_TABLES
+    from bigdata_20251_steam_spark.sources.batch import load_table
+
+    for t in TESTDATA_TABLES:
+        load_table(spark, SF_SMOKE, t)
+    serving = [
+        q for q in QUERIES.values()
+        if q.fn.__module__.endswith(".reference_queries") and q.oracle
+    ]
+    assert serving
+    fired = {}
+    for q in serving:
+        with jobs_fired() as ids:
+            q.fn(spark, SF_SMOKE)
+        if ids:
+            fired[q.name] = ids
+    assert fired == {}

@@ -609,3 +609,31 @@ def test_subtract_sketches_retracts_exactly(spark):
             twice,
             group_cols=mk,
         ).collect()
+
+
+def test_driver_locate_skips_the_sketch_pin(spark, jobs_fired):
+    """On the batch driver-side locate the sketch's only reader is one
+    collect, so neither estimator pins it: each fires exactly one job
+    fewer than the same call on a pinned sketch, with identical rows."""
+    ev = load_table(spark, SF_SMOKE, "events")
+    mils = F.floor(F.col("value") * 1000).cast("long")
+    qs = [5, 50, 95]
+
+    # a fresh sketch frame per call: a frame already executed once
+    # would reuse its shuffle output and fire fewer jobs
+    def sketch():
+        return qa.quantile_sketch(ev, mils, m=16)
+
+    with jobs_fired() as pinned:
+        ref = qa.sketch_quantiles(sketch().localCheckpoint(), qs, m=16, materialize=False)
+    with jobs_fired() as direct:
+        got = qa.sketch_quantiles(sketch(), qs, m=16)
+    assert len(direct) == len(pinned) - 1, (direct, pinned)
+    assert sorted(got.collect()) == sorted(ref.collect())
+
+    with jobs_fired() as pinned:
+        ref = qa.exact_quantiles_banded(ev, mils, qs, m=16, sketch=sketch().localCheckpoint())
+    with jobs_fired() as direct:
+        got = qa.exact_quantiles_banded(ev, mils, qs, m=16)
+    assert len(direct) == len(pinned) - 1, (direct, pinned)
+    assert sorted(got.collect()) == sorted(ref.collect())

@@ -8,17 +8,26 @@ the deterministic batch stand-in for the review stream.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from bigdata_20251_steam_spark.operators.ingest import (
     flatten_app_details,
     valid_appids,
 )
-from bigdata_20251_steam_spark.sources.batch import parse_json_records, read_review_csv
+from bigdata_20251_steam_spark.sources.batch import (
+    load_table,
+    parse_json_records,
+    read_review_csv,
+)
 from bigdata_20251_steam_spark.sources.kafka import to_kafka_records
 
 _REVIEWS_DIR = "/root/reference/inputs/reviews"
@@ -520,3 +529,71 @@ def test_paged_api_http_probe_page_cap(tmp_path):
         assert len(log) == 3
     finally:
         srv.shutdown()
+
+
+def test_load_table_second_load_fires_no_job(spark, tmp_path, jobs_fired):
+    """The first load of a table infers its schema (a Spark job); a second
+    load of the unchanged file reads with the memoized schema and starts
+    no job at all."""
+    d = str(tmp_path)
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), f"{d}/t.parquet")
+    with jobs_fired() as first:
+        load_table(spark, d, "t")
+    with jobs_fired() as second:
+        df = load_table(spark, d, "t")
+    assert first, "the first load should infer the schema"
+    assert second == []
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_load_table_rewritten_table_gets_new_schema(spark, tmp_path):
+    """The memo is keyed by file version: a table rewritten at the same
+    path with other columns is inferred again, for a single parquet file
+    and for a directory written by Spark."""
+    d = str(tmp_path)
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), f"{d}/t.parquet")
+    assert load_table(spark, d, "t").columns == ["a", "b"]
+    pq.write_table(
+        pa.table({"a": [3], "c": [1.5], "e": [True]}), f"{d}/t.parquet"
+    )
+    df = load_table(spark, d, "t")
+    assert df.columns == ["a", "c", "e"]
+    assert [tuple(r) for r in df.collect()] == [(3, 1.5, True)]
+
+    spark.range(3).write.parquet(f"{d}/u.parquet")
+    assert load_table(spark, d, "u").columns == ["id"]
+    spark.range(2).selectExpr("id", "id * 2 AS y").write.mode("overwrite").parquet(
+        f"{d}/u.parquet"
+    )
+    df = load_table(spark, d, "u")
+    assert df.columns == ["id", "y"]
+    assert sorted(tuple(r) for r in df.collect()) == [(0, 0), (1, 2)]
+
+
+def test_load_table_nanos_and_micros_timestamps(spark, tmp_path):
+    """``ts`` written as parquet TIMESTAMP(NANOS) and as micros both load
+    as TIMESTAMP with the same values (nanos truncate to micros), on the
+    inferring first load and on the memoized second one."""
+    nanos = np.array(
+        ["2024-01-02T03:04:05.123456789", "2024-06-30T23:59:59.000000999"],
+        dtype="datetime64[ns]",
+    )
+    want = [
+        dt.datetime(2024, 1, 2, 3, 4, 5, 123456),
+        dt.datetime(2024, 6, 30, 23, 59, 59, 0),
+    ]
+    for unit, values in (("ns", nanos), ("us", nanos.astype("datetime64[us]"))):
+        d = str(tmp_path / unit)
+        os.makedirs(d)
+        pq.write_table(
+            pa.table({"event_id": [1, 2], "ts": pa.array(values, pa.timestamp(unit))}),
+            f"{d}/events.parquet",
+            version="2.6",
+        )
+        written = pq.ParquetFile(f"{d}/events.parquet").schema_arrow
+        assert written.field("ts").type == pa.timestamp(unit)
+        for _ in range(2):
+            df = load_table(spark, d, "events")
+            assert df.schema["ts"].dataType == TimestampType(), unit
+            got = [r["ts"] for r in df.orderBy("event_id").collect()]
+            assert got == want, unit

@@ -8,6 +8,7 @@ synthesized distributions.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -159,6 +160,64 @@ def test_dual_sink_writer_incremental(spark, tmp_path):
     assert {tuple(r) for r in serving.collect()} == {
         tuple(r) for r in exp.collect()
     }
+
+
+@pytest.mark.parametrize("exactly_once", [False, True])
+def test_dual_sink_writer_partitioned_bronze(spark, tmp_path, exactly_once):
+    """``partition_cols``: bronze is date-partitioned, the partition column
+    surfaces to readers, the serving snapshot equals the batch aggregate,
+    and the schema-first bronze re-read each epoch agrees with an
+    inferring read of the same directory."""
+    events = (
+        load_table(spark, SF_SMOKE, "events")
+        .select("event_id", "ts", "event_type", "value")
+        .withColumn("day", F.to_date("ts"))
+    )
+    assert events.select("day").distinct().count() > 1
+    src = str(tmp_path / "src")
+    # two source files, one per micro-batch, so the second epoch
+    # re-reads a bronze table the first one wrote
+    events.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
+    events.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
+
+    paths = DualSinkPaths(
+        bronze_dir=str(tmp_path / "bronze"),
+        serving_dir=str(tmp_path / "serving"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    reads = []
+
+    def serving_agg(bronze):
+        reads.append(bronze)
+        return bronze.groupBy("day", "event_type").agg(F.count("*").alias("n"))
+
+    q = dual_sink_writer(
+        file_stream(spark, src, events.schema, max_files_per_trigger=1),
+        paths,
+        serving_agg,
+        partition_cols=("day",),
+        exactly_once=exactly_once,
+    )
+    q.awaitTermination()
+    assert len(reads) == 2
+
+    layout = paths.bronze_dir
+    if exactly_once:
+        layout = f"{layout}/epoch=1"
+    assert any(p.startswith("day=") for p in os.listdir(layout))
+    inferred = spark.read.parquet(paths.bronze_dir)
+    assert "day" in inferred.columns
+    if exactly_once:
+        inferred = inferred.drop("epoch")
+    schema_first = reads[-1]
+    assert [(f.name, f.dataType) for f in schema_first.schema] == [
+        (f.name, f.dataType) for f in inferred.schema
+    ]
+    assert sorted(schema_first.collect()) == sorted(inferred.collect())
+    assert schema_first.count() == events.count()
+
+    serving = spark.read.parquet(paths.serving_dir)
+    assert sorted(serving.collect()) == sorted(serving_agg(events).collect())
 
 
 def test_watermark_append_mode_drops_open_windows(spark, tmp_path):
