@@ -458,6 +458,14 @@ def sketch_quantiles(
     :func:`exact_quantiles_banded`).  A batch sketch is never pinned
     here: the driver-side locate collects it once and nothing else
     reads it, so a pin would only add a job.
+
+    **Eager at construction (batch).**  For a batch sketch the locate
+    runs when this function is called: ``sketch.collect()`` is a Spark
+    job (a corpus-scale aggregate when the sketch is lazy), whatever
+    ``materialize`` says, and the returned frame is a local relation of
+    the estimates as of that call — re-executing it does not re-read
+    the sketch's inputs.  Only a streaming sketch keeps the lazy
+    relational locate.
     """
     if not sketch.isStreaming:
         # driver-side locate over the bounded sketch (optimization r18,
@@ -592,6 +600,14 @@ def exact_quantiles_banded(
     m, group_cols, weight_col)`` of the SAME arguments — e.g. one
     checkpointed sketch shared with :func:`sketch_quantiles`) to
     drop the sketch-build scan from this call entirely.
+
+    **Eager at construction (batch).**  For batch inputs the bucket
+    locate runs when this function is called: ``sketch.collect()`` is a
+    Spark job (the corpus-scale sketch aggregate unless a materialized
+    ``sketch`` is passed), whatever ``materialize`` says, and the chosen
+    buckets are frozen as a local relation at that call.  The in-band
+    read-back stays lazy and reads the corpus when the result executes.
+    Streaming inputs keep the fully relational locate.
     """
     if weight_col is not None:
         rows = (

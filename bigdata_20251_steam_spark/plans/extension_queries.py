@@ -3883,6 +3883,14 @@ def _sq(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
+def _spark_sq(s: str) -> str:
+    """Spark-SQL single-quoted string literal.  Spark's parser unescapes
+    backslash sequences inside quotes, so backslash and quote are
+    backslash-escaped (Python ``repr`` emits ``\\x..`` escapes Spark does
+    not read, and :func:`_sq`'s quote doubling loses backslashes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _bigram_lm_oracle() -> str:
     """Oracle scoring the documents with the PINNED tables — pure
     integer lookups + exact long arithmetic, no retraining, no libm."""
@@ -7421,7 +7429,7 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     for qid, terms in sorted(_HYBRID_QUERIES.items()):
         score = None
         for t in terms:
-            tf = f"CAST(size(filter(_toks, w -> w = {t!r})) AS DOUBLE)"
+            tf = f"CAST(size(filter(_toks, w -> w = {_spark_sq(t)})) AS DOUBLE)"
             part = (
                 f"{float(_HYBRID_IDF_MICRO[t]) / 1e6!r}D"
                 f" * ({tf} * {_BM25_K1 + 1.0!r}D) / ({tf} + {norm_s})"

@@ -16,6 +16,16 @@ This factory bakes in the settings we want on a real cluster and on
 - **Shuffle partitions sized to the test box** but overridable; on a
   1000-executor cluster you would set this to ~2-4x total cores (or rely on
   AQE coalescing from a high initial value).
+- **Codegen cache sized to the query surface.**  Spark keeps the
+  classes Janino compiled for whole-stage and expression codegen in one
+  LRU per JVM, 100 entries by default.  The 26 oracle-backed serving
+  queries need ~224 classes and run in a fixed cycle, so at 100 every
+  lookup missed and each warm pass recompiled ~222 classes; at 4096 a
+  warm pass compiles none.  A streaming-ingest run compiles ~59 (it
+  already fit), and one pass over all 177 registry queries at sf0.001
+  compiles ~2,600 distinct classes.  The conf is static and the cache is
+  built once per JVM, so — like ``spark.driver.memory`` — it only takes
+  effect when ``get_spark`` builds the JVM's first session.
 """
 
 from __future__ import annotations
@@ -66,6 +76,15 @@ _DEFAULTS = {
     # silently disable them.
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.enableVectorizedReader": "true",
+    # Compiled-class cache (static conf; the cache is built once per JVM,
+    # so like spark.driver.memory it only applies when this builds the
+    # JVM's first session).  Measured working sets, in distinct classes:
+    # the 26 oracle-backed serving queries ~224, so the default LRU of
+    # 100 missed on every lookup of a repeated pass (222 recompiles per
+    # pass -> 0); a streaming_ingest run 59, which fit the default; one
+    # pass over all 177 registry queries at sf0.001 ~2,600, so bench.py
+    # and the tests fit too.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     # Streaming state store: RocksDB spills state to local disk instead of
     # keeping it on-heap — required posture for unbounded/complete-mode
     # aggregations at scale (SURVEY.md §4 "state management").

@@ -217,6 +217,22 @@ def test_hybrid_bm25_provenance(spark):
     assert got["idf_micro"] == _HYBRID_IDF_MICRO
 
 
+def test_spark_sql_string_literal_round_trips(spark):
+    """The hybrid-BM25 score string quotes its terms with _spark_sq:
+    terms holding quotes, backslashes, control and non-ASCII characters
+    parse back through F.expr to the original string."""
+    from bigdata_20251_steam_spark.plans.extension_queries import _spark_sq
+
+    terms = [
+        "plain", "it's", 'say "hi"', "back\\slash", "a\\'b", "\\", "'",
+        "tab\tnl\n", "ctl\x01\x7f", "x\\u0041y", "café 漢字 \U0001f600",
+    ]
+    row = spark.range(1).select(
+        *[F.expr(_spark_sq(t)).alias(f"t{i}") for i, t in enumerate(terms)]
+    ).first()
+    assert list(row) == terms
+
+
 def test_grouped_sketch_and_exact_quantiles(spark):
     """The grouped form: per-group exact quantiles equal the per-group
     driver-side sorted answers, and grouped merge stays associative
