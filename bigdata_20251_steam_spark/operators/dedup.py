@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.estimates import size_estimate
 from ..functions.hashing import HASH_PRIME, MINHASH_PARAMS, md5_long, md5_long_lo
 
 _LOG = logging.getLogger(__name__)
@@ -107,31 +108,27 @@ def pin_frame(df: DataFrame) -> DataFrame:
       min-of-3 runs; on a long-lived cluster session the CacheManager
       reuse this enables is the desired production behavior.)
 
-    An estimate at or above ``spark.sql.defaultSizeInBytes`` is the
-    optimizer's "unknown" sentinel (``Long.MaxValue`` for RDD-backed
-    lineage such as ``createDataFrame(rdd)``, inflated further across
-    joins), not a size: it keeps the ``localCheckpoint`` route, as a
-    failed estimate does, instead of sending a tiny frame to a
-    ``DISK_ONLY`` pin whose blocks stay in the CacheManager.
+    The estimate is ``functions.estimates.size_estimate``.  An
+    unknown one (the optimizer's ``spark.sql.defaultSizeInBytes``
+    sentinel, e.g. RDD-backed lineage behind a join) or a failed one
+    keeps the ``localCheckpoint`` route instead of sending a tiny frame
+    to a ``DISK_ONLY`` pin whose blocks stay in the CacheManager.
 
     Values are identical on every route — all three only change WHERE
     the one materialization lives (gate + routes pinned by
     test_pin_frame_routes_by_size).
     """
     spark = df.sparkSession
+    est = size_estimate(df)
     try:
         gate = int(
             spark.conf.get(
                 "spark.graft.pin.maxLocalBytes", str(PIN_MAX_LOCAL_BYTES)
             )
         )
-        est = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        unknown = int(spark._jsparkSession.sessionState().conf().defaultSizeInBytes())
-    except Exception:  # estimate unavailable: keep the r17 behavior
+    except Exception:  # gate unreadable: keep the r17 behavior
         return df.localCheckpoint()
-    if est < gate or est >= unknown:
+    if est is None or est < gate:
         return df.localCheckpoint()
     ckpt_dir = spark.conf.get("spark.graft.pin.checkpointDir", "")
     if ckpt_dir:

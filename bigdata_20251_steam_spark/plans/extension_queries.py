@@ -36,6 +36,19 @@ P = HASH_PRIME
 # Shared oracle SQL fragments
 # ---------------------------------------------------------------------------
 
+def _sq(s: str) -> str:
+    """SQL single-quote a string literal."""
+    return "'" + s.replace("'", "''") + "'"
+
+
+def _spark_sq(s: str) -> str:
+    """Spark-SQL single-quoted string literal.  Spark's parser unescapes
+    backslash sequences inside quotes, so backslash and quote are
+    backslash-escaped (Python ``repr`` emits ``\\x..`` escapes Spark does
+    not read, and :func:`_sq`'s quote doubling loses backslashes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 _TOKS = "string_split_regex(trim(text), '\\s+')"
 
 _SHINGLES = f"""
@@ -562,7 +575,7 @@ def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lang_scores_sql() -> str:
     parts = []
     for lang, ws in sorted(STOPWORDS.items()):
-        lits = ", ".join(f"'{w}'" for w in ws)
+        lits = ", ".join(_sq(w) for w in ws)
         parts.append(
             f"CAST(len(list_intersect(list_distinct("
             f"string_split_regex(lower(trim(text)), '\\s+')), [{lits}])) AS INTEGER)"
@@ -3876,19 +3889,6 @@ _BIGRAM_LM: dict = {
     "oov_first": -4747240854,
     "oov_back": -5145180863,
 }
-
-
-def _sq(s: str) -> str:
-    """SQL single-quote a string literal."""
-    return "'" + s.replace("'", "''") + "'"
-
-
-def _spark_sq(s: str) -> str:
-    """Spark-SQL single-quoted string literal.  Spark's parser unescapes
-    backslash sequences inside quotes, so backslash and quote are
-    backslash-escaped (Python ``repr`` emits ``\\x..`` escapes Spark does
-    not read, and :func:`_sq`'s quote doubling loses backslashes)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _bigram_lm_oracle() -> str:

@@ -220,6 +220,120 @@ def test_dual_sink_writer_partitioned_bronze(spark, tmp_path, exactly_once):
     assert sorted(serving.collect()) == sorted(serving_agg(events).collect())
 
 
+def _small_epochs(spark, tmp_path, exactly_once=False):
+    """Four small source files streamed two per trigger through a dual
+    sink: returns (query, paths, source rows, serving_agg)."""
+    events = load_table(spark, SF_SMOKE, "events").select(
+        "event_id", "ts", "event_type", "value"
+    )
+    src = str(tmp_path / "src")
+    for i in range(4):
+        part = events.filter(F.col("event_id") % 4 == i).coalesce(1)
+        part.write.mode("append").parquet(src)
+    paths = DualSinkPaths(
+        bronze_dir=str(tmp_path / "bronze"),
+        serving_dir=str(tmp_path / "serving"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+
+    def serving_agg(bronze):
+        return bronze.groupBy("event_type").agg(
+            F.count("*").alias("n"), F.max("value").alias("top")
+        )
+
+    q = dual_sink_writer(
+        file_stream(spark, src, events.schema, max_files_per_trigger=2),
+        paths,
+        serving_agg,
+        exactly_once=exactly_once,
+    )
+    q.awaitTermination()
+    assert [p.numInputRows > 0 for p in q.recentProgress] == [True, True]
+    return q, paths, events, serving_agg
+
+
+def _part_files(directory):
+    return sorted(
+        os.path.relpath(os.path.join(root, n), directory)
+        for root, _, names in os.walk(directory)
+        for n in names
+        if n.startswith("part-")
+    )
+
+
+def _assert_serving_matches(spark, paths, events, serving_agg):
+    serving = spark.read.parquet(paths.serving_dir)
+    assert sorted(serving.collect()) == sorted(serving_agg(events).collect())
+
+
+@pytest.mark.parametrize("exactly_once", [False, True])
+def test_dual_sink_small_epoch_writes_one_bronze_file(spark, tmp_path, exactly_once):
+    """A multi-file micro-batch smaller than one advisory partition is
+    appended as one task: one bronze part file per epoch, on the plain
+    append and on the epoch-keyed one."""
+    _, paths, events, serving_agg = _small_epochs(spark, tmp_path, exactly_once)
+    files = _part_files(paths.bronze_dir)
+    assert len(files) == 2
+    if exactly_once:
+        assert sorted(f.split(os.sep)[0] for f in files) == ["epoch=0", "epoch=1"]
+    assert spark.read.parquet(paths.bronze_dir).count() == events.count()
+    _assert_serving_matches(spark, paths, events, serving_agg)
+
+
+def test_dual_sink_small_epoch_runs_two_single_stage_jobs(spark, tmp_path):
+    """Each small epoch runs the bronze write and the serving write and
+    nothing else: bronze below one advisory partition is aggregated in
+    one task, so no shuffle-map job (nor a job with a skipped map stage)
+    runs.  A streaming query's jobs carry its runId as job group."""
+    q, *_ = _small_epochs(spark, tmp_path)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 2 * 2
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1] * len(jobs)
+
+
+def test_dual_sink_large_epochs_keep_their_splits(spark, tmp_path):
+    """With the advisory partition size below every micro-batch and the
+    bronze table, nothing is coalesced: bronze keeps one part file per
+    input split, and serving still equals the batch aggregate."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1b")
+    try:
+        _, paths, events, serving_agg = _small_epochs(spark, tmp_path)
+    finally:
+        spark.conf.unset(key)
+    assert len(_part_files(paths.bronze_dir)) == 4
+    _assert_serving_matches(spark, paths, events, serving_agg)
+
+
+def test_dual_sink_unknown_size_batch_keeps_its_partitions(spark, tmp_path):
+    """A ``rate`` micro-batch reports no size estimate, so its bronze
+    append keeps the source's partitioning."""
+    stream = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 30)
+        .option("numPartitions", 3)
+        .load()
+    )
+    paths = DualSinkPaths(
+        bronze_dir=str(tmp_path / "bronze"),
+        serving_dir=str(tmp_path / "serving"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+
+    def serving_agg(bronze):
+        return bronze.groupBy((F.col("value") % 3).alias("k")).count()
+
+    q = dual_sink_writer(stream, paths, serving_agg, trigger={"once": True})
+    q.awaitTermination()
+    assert len(_part_files(paths.bronze_dir)) == 3
+    bronze = spark.read.parquet(paths.bronze_dir)
+    assert bronze.count() == 30
+    _assert_serving_matches(spark, paths, bronze, serving_agg)
+
+
 def test_watermark_append_mode_drops_open_windows(spark, tmp_path):
     """Append mode emits only windows closed by the final watermark (G6).
 
