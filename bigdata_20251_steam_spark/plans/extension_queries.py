@@ -99,7 +99,6 @@ _NORM_TEXT = (
              AS n_dup_docs
     FROM norm GROUP BY source
     """,
-    priority=46,  # changed in r4 (120-bit key) — needs a fresh driver row
     doc="Exact dedup accounting per source over normalized text: the "
     "distinct shuffle carries a 120-bit two-long content key (16 "
     "bytes/row; one 60-bit half collides near 2^30 docs), never text.",
@@ -270,7 +269,6 @@ def q_embed_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE              AS recall_ok
     FROM embeddings WHERE vec_id < 10
     """,
-    priority=46,  # r5: first oracle-bearing driver row (r4 verdict #9)
     doc="IVF ANN top-5 (16-cell deterministic k-means-lite coarse "
     "quantizer, nprobe=4), self-auditing: the raw top-k rows are not "
     "SQL-reproducible (Lloyd-iteration float means diverge across "
@@ -360,7 +358,6 @@ def q_embed_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE                   AS recall_ok
     FROM embeddings WHERE vec_id < 10
     """,
-    priority=46,  # round-4 addition (registry.py window policy)
     doc="IVF ANN recall gate, driver-checkable (r3 verdict #8): joins IVF "
     "top-5 (deterministic centroids, nprobe=4/16) against brute-force "
     "exact top-5 per query and asserts recall@5 >= 0.6 per query.  The "
@@ -393,7 +390,6 @@ def q_ivf_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE                   AS recall_ok
     FROM embeddings WHERE vec_id < 10
     """,
-    priority=46,  # r6 addition (verdict #6): first driver row this round
     doc="IVF recall gate under SAMPLED centroid training (r6, verdict "
     "#6): ivf_index(train_fraction=0.5) runs its Lloyd rounds on a "
     "deterministic hash half-sample (split_bucket salt 'ivftrain') and "
@@ -439,7 +435,6 @@ _MP_PLANES = rademacher_planes(n_planes=16, dim=64)
            TRUE                   AS recall_ok
     FROM embeddings WHERE vec_id < 10
     """,
-    priority=46,  # r6 addition (verdict #4): first driver row this round
     doc="Sign-LSH ANN recall gate (r6, verdict #4) — the multi-probe "
     "counterpart of ivf_recall_vs_exact: embed_topk_lsh is single-probe "
     "with no measured recall (~0.02 on this high-entropy corpus — the "
@@ -521,7 +516,6 @@ def q_embed_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            e.vec_id = COALESCE(c.component_id, e.vec_id) AS keep
     FROM embeddings e LEFT JOIN comp c USING (vec_id)
     """,
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="Semantic deduplication resolve (SemDeDup, Abbas et al. 2023 "
     "shape): embedding-cosine near-duplicate pairs (sign-LSH blocked, "
     "never all-pairs) -> transitive closure via the pointer-jumped "
@@ -665,7 +659,6 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "winnow_fingerprints",
-    priority=63,  # r6 continuation — never driver-checked, r7 first-in-line
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
@@ -700,7 +693,6 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "normalize_text",
-    priority=63,  # r6 continuation — never driver-checked, r7 first-in-line
     oracle="""
     WITH n AS (
       SELECT doc_id,
@@ -955,9 +947,8 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n % 251 AS DOUBLE)                        AS f7
     FROM h LEFT JOIN stats ON h.doc_id = stats.doc_id
     """,
-    priority=44,  # r5 continuation: first ORACLE-bearing driver row (was
-    # rows-only at 90 — the fake-moment features are pure byte statistics
-    # of the payload, which SQL can recompute from hex(encode(text)))
+    # the fake-moment features are pure byte statistics of the
+    # payload, which SQL can recompute from hex(encode(text))
     doc="Arrow-batched mapInPandas feature extraction over binary payloads "
     "(deterministic stand-in decoder; real PPM/BMP/PNG codecs route by "
     "magic bytes, pinned in tests/test_multimodal.py).  The text-payload "
@@ -1492,9 +1483,8 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Round-2 additions: relational extensions (as-of / range join), dataset
 # splits & stratified sampling, sequence packing, repetition quality,
-# dedup connected components.  Registered at priority 60: behind the 50
-# driver-checked queries (window composition is a deliberate allocation,
-# see registry.py), fully oracle-verified by tests/test_queries_vs_oracle.
+# dedup connected components, oracle-verified by
+# tests/test_queries_vs_oracle.
 # ---------------------------------------------------------------------------
 
 
@@ -1518,7 +1508,6 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM err e LEFT JOIN (SELECT * FROM m WHERE rn = 1) m
       ON e.event_id = m.event_id
     """,
-    priority=45,
     headline=True,
     doc="As-of join (operators.relational_ext.asof_join): for every error "
     "event, the latest at-or-before non-error reading of the same user — "
@@ -1571,7 +1560,6 @@ def q_asof_join_last_good(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM err e LEFT JOIN (SELECT * FROM m WHERE rn = 1) m
       ON e.event_id = m.event_id
     """,
-    priority=46,  # round-4 addition (registry.py window policy)
     doc="As-of join, nearest direction (operators.relational_ext.asof_join): "
     "for every error event, the temporally closest non-error reading of "
     "the same user in EITHER direction, exact-distance ties resolved "
@@ -1618,7 +1606,6 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON e.ts >= a.start_ts AND e.ts < a.end_ts
     GROUP BY 1
     """,
-    priority=45,
     doc="Keyless point-in-interval range join "
     "(operators.relational_ext.range_join): events landing in 6-hour "
     "windows anchored at sampled events.  Binned equi-join on bucket id "
@@ -1660,7 +1647,6 @@ _SPLIT_BUCKET_SQL = (
                 ELSE 'test' END AS split
     FROM b
     """,
-    priority=45,
     doc="Deterministic 80/10/10 train/val/test split by salted content "
     "hash (operators.sampling.hash_split): stable under repartitioning, "
     "engine changes, and incremental corpus growth — rows never migrate "
@@ -1691,7 +1677,6 @@ _SAMPLE_BUCKET_SQL = (
                                     ELSE 0.1 END * 1000000 AS BIGINT))
     SELECT lang, count(*) AS n_kept FROM kept GROUP BY lang
     """,
-    priority=45,
     doc="Deterministic stratified downsampling "
     "(operators.sampling.stratified_sample): per-language keep fractions "
     "via hash buckets — sampleBy without RNG, reproducible bit-for-bit "
@@ -1725,7 +1710,6 @@ def q_stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(pack_offset // 1024 AS BIGINT)  AS pack_id
     FROM c
     """,
-    priority=45,
     doc="Sequence packing (operators.packing.pack_documents): offset "
     "packing of docs into 1024-token context windows via a running "
     "prefix sum — pack_id = token_offset div budget.  Oracle-parity form "
@@ -1777,7 +1761,6 @@ def q_packing_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(mr AS BIGINT)          AS max_run_len
     FROM nz JOIN topc USING (doc_id) JOIN maxrun USING (doc_id)
     """,
-    priority=45,
     headline=True,
     doc="Gopher-style repetition quality signals "
     "(operators.text_analysis.repetition_metrics): dup-token ratio, top "
@@ -1811,7 +1794,6 @@ def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
     SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
     """,
-    priority=45,
     headline=True,
     doc="Transitive duplicate clusters over MinHash-LSH pairs "
     "(operators.dedup.connected_components): iterative min-label "
@@ -1854,7 +1836,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
     GROUP BY d.source
     """,
-    priority=46,  # round-4 addition (registry.py window policy)
     headline=True,
     doc="The full dedup pipeline a 100-TB training-data run executes, as ONE "
     "query: minhash signatures -> LSH banded candidate pairs -> transitive "
@@ -1909,7 +1890,6 @@ _IDC_DELTA_MOD = 8
       UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
     SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
     """,
-    priority=80,  # entered via _R15_ROTATION (new registration tier)
     # not a bench headliner: the in-query base-state computation (two
     # closures back to back) is fixed job-scheduling floor that would
     # dominate the suite; scale evidence is the SCALING.md r15 anchor
@@ -1973,7 +1953,6 @@ def q_incremental_dedup_components(
       UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
     SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
     """,
-    priority=80,  # enters via the r16 rotation (new registration tier)
     doc="Incremental near-dup closure over a BUCKETED band state "
     "(r16 — incremental_dedup_components' probe re-expressed against "
     "a band table persisted with write_bucketed on (band_id, "
@@ -2062,7 +2041,6 @@ _RETRACT_MOD = 7
       UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
     SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
     """,
-    priority=80,  # enters via the r16 rotation (new registration tier)
     doc="Near-dup closure RETRACTION (r16, r15 verdict #2 — the DELETE "
     "side of the IVM story: the insert direction landed in r15 as "
     "incremental_dedup_components; until now a takedown or TTL event "
@@ -2118,7 +2096,6 @@ def q_dedup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, CAST(rank AS INT) AS rank, term, tfidf
     FROM ranked WHERE rank <= 3
     """,
-    priority=45,
     doc="Top-3 characteristic terms per doc by smoothed TF-IDF "
     "(operators.text_analysis.tfidf_top_terms): explode+groupBy term "
     "frequencies, re-aggregated document frequencies, broadcast corpus "
@@ -2161,7 +2138,6 @@ _INC_BUCKET_SQL = (
                 ELSE 'kept' END AS status
     FROM m
     """,
-    priority=45,
     doc="Ingest-time incremental dedup (operators.dedup.incremental_dedup): "
     "a hash-derived 'new batch' (20% of docs) labeled against the "
     "'existing corpus' (80%) — dup_of_corpus via a longs-only semi-join "
@@ -2202,7 +2178,6 @@ def q_incremental_dedup_status(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(round(x * scale) AS INT)    AS qval
     FROM ex
     """,
-    priority=45,
     doc="Symmetric per-vector int8 quantization "
     "(operators.similarity.quantize_embeddings): q = round(x * 127 / "
     "max|x|) — the 4-8x storage compression for ANN corpora.  Emitted "
@@ -2222,7 +2197,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Relational-algebra family completion: pivot, cube, moving windows,
-# set operations (priority 60, pytest-oracle-verified)
+# set operations (pytest-oracle-verified)
 # ---------------------------------------------------------------------------
 
 
@@ -2237,7 +2212,6 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) FILTER (event_type = 'view')     AS BIGINT) AS view
     FROM events GROUP BY user_id
     """,
-    priority=45,
     doc="Pivot (long->wide): per-user event-type count matrix via "
     "groupBy().pivot() with the value list PINNED — an unpinned pivot "
     "runs an extra distinct-scan job to discover columns and makes the "
@@ -2268,7 +2242,6 @@ def q_pivot_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
-    priority=45,
     doc="CUBE grouping sets (all 2^k margin combinations — completes the "
     "grouping-sets family next to rollup_orders).  Spark expands the "
     "cube map-side: one shuffle regardless of the number of grouping "
@@ -2308,7 +2281,6 @@ def q_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
     """,
-    priority=45,
     doc="Moving-frame analytics: 7-day trailing average + day-over-day "
     "delta via ROWS window frames and lag() — the dashboard-trend family "
     "(lag/lead/sliding frames) the Mongo layer faked client-side.  One "
@@ -2353,7 +2325,6 @@ def q_moving_avg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 'click_no_buy' AS cohort, CAST(count(*) AS BIGINT) AS n FROM only_click
     """,
-    priority=45,
     doc="Set operations (INTERSECT / EXCEPT — completes §2.D's 'set ops' "
     "row beyond semi/anti joins): cohort sizes from distinct-user sets. "
     "Both plan as hash aggregates + joins, no row explosion.",
@@ -2388,7 +2359,6 @@ def q_set_ops_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, CAST(sentence_idx AS INT) AS sentence_idx, s AS sentence
     FROM nonempty
     """,
-    priority=45,
     doc="Python UDTF (operators.text_analysis.sentences): lateral-join "
     "table function emitting 0..n sentence rows per document — the 4th "
     "UDF shape (SURVEY.md §2.H) beside pandas_udf / mapInPandas / "
@@ -2410,7 +2380,6 @@ def q_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS INT) AS quartile
     FROM u
     """,
-    priority=45,
     doc="ntile(4) quartile assignment over per-user totals — completes "
     "the ranking-function family (row_number/rank in daily_user_rank, "
     "lag in moving_avg_daily).  r9 de-hazarding: this was the repo's "
@@ -2471,7 +2440,6 @@ def q_user_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            string_agg(text, '<|doc|>' ORDER BY doc_id) AS packed_text
     FROM c GROUP BY 2
     """,
-    priority=45,
     doc="Materialized packed training sequences "
     "(operators.packing.materialize_packs): pack assignment -> "
     "deterministic in-pack ordering (sorted struct array, because "
@@ -2494,7 +2462,7 @@ def q_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-4 additions: PII redaction + decontamination (priority 46)
+# Round-4 additions: PII redaction + decontamination
 # ---------------------------------------------------------------------------
 
 from ..operators.text_analysis import PII_PATTERNS  # noqa: E402
@@ -2540,7 +2508,6 @@ def _pii_oracle_sql() -> str:
 @register(
     "pii_redaction",
     oracle=_pii_oracle_sql(),
-    priority=46,  # round-4 addition (registry.py window policy)
     doc="PII scrub accounting (operators.text_analysis.redact_pii): "
     "deterministic synthetic emails/IPv4s/phones are injected keyed on "
     "doc_id (the testdata has no organic PII), then the sequential "
@@ -2604,7 +2571,6 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM test t LEFT JOIN train tr ON t.h = tr.h
     GROUP BY t.doc_id
     """,
-    priority=46,  # round-4 addition (registry.py window policy)
     doc="Train->test n-gram decontamination signal "
     "(operators.text_analysis.cross_split_contamination): per test-split "
     "doc, the fraction of its distinct word 3-grams that occur anywhere "
@@ -2642,7 +2608,6 @@ def q_cross_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
            'rev ' || CAST(event_id AS VARCHAR)                AS review_text
     FROM src WHERE rn <= 300
     """,
-    priority=46,  # round-4 addition: closes SURVEY.md section 2.A8
     doc="Cursor-paginated API source (sources/paged_api.py), closing A8 — "
     "the reference's driver-side HTTP review crawl "
     "(producers/steam_utils.py:128-173) re-expressed as a Spark Python "
@@ -2693,7 +2658,6 @@ _CHUNK, _STRIDE = 32, 24
              list_slice(t, start, start + {_CHUNK} - 1), ' ') AS chunk_text
     FROM starts
     """,
-    priority=47,  # round-5 addition: first driver row this round
     headline=True,  # representative explode/amplification shape for bench
     doc="LLM-pretraining context-window chunking "
     "(operators.text_analysis.chunk_documents): each doc becomes "
@@ -2731,7 +2695,6 @@ _SHUF_KEY_SQL = (
     SELECT epoch, CAST(position AS BIGINT) AS position, doc_id, shuffle_key
     FROM ranked WHERE position <= 100
     """,
-    priority=47,  # round-5 addition
     doc="Deterministic per-epoch training-order shuffle "
     "(operators.sampling.epoch_shuffle): the global order is a pure "
     "function of (salt, epoch, doc_id) — reproducible across re-runs, "
@@ -2770,7 +2733,6 @@ def q_epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE                    AS merge_consistent
     FROM events GROUP BY event_type
     """,
-    priority=47,  # round-5 addition
     doc="Self-auditing mergeable-HLL distinct rollup "
     "(operators.sketches.hll_distinct_rollup over DataSketches "
     "hll_sketch_agg/hll_union_agg): per-event-type distinct users as a "
@@ -2811,7 +2773,6 @@ _GS_KEY_SQL = (
            CAST(max(doc_id) AS BIGINT) AS max_doc
     FROM ranked WHERE rk <= 40 GROUP BY source
     """,
-    priority=47,  # round-5 continuation addition: first driver row
     doc="Deterministic per-source document cap "
     "(operators.sampling.sample_n_per_group): no source contributes more "
     "than 40 docs, survivors chosen by salted-hash rank — the "
@@ -2866,7 +2827,6 @@ _TB_KEY_SQL = (
            CAST(max(doc_id) AS BIGINT)   AS max_doc
     FROM c WHERE cum <= 2000 GROUP BY source
     """,
-    priority=47,  # round-5 continuation addition: first driver row
     doc="Per-source TOKEN-budget sampling "
     "(operators.sampling.token_budget_sample): pretraining mixes are "
     "specified in tokens, not documents — keep the largest salted-hash "
@@ -2936,7 +2896,6 @@ def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN rebuilt ON d.doc_id = rebuilt.doc_id
     """,
     headline=True,  # r6: segment shuffle + reassembly is a new heavy shape
-    priority=46,  # r6 addition: first driver row this round
     doc="Corpus-wide segment-level exact dedup "
     "(operators.dedup.dedupe_segments): the line/paragraph-dedup family "
     "(C4 three-sentence rule, RefinedWeb line dedup) over deterministic "
@@ -2989,7 +2948,6 @@ _EN_STOP_SQL = ", ".join(repr(w) for w in STOPWORDS["en"])
            pct_rank <= 0.5 AS kept
     FROM r
     """,
-    priority=46,  # r6 addition: first driver row this round
     doc="Per-source quality-QUANTILE filter "
     "(operators.text_analysis.quality_quantile_filter): keep the top "
     "half of each source by heuristic quality — quantile thresholds "
@@ -3042,7 +3000,6 @@ def q_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS shuffle_key
     FROM q
     """,
-    priority=46,  # r6 addition: first driver row this round
     doc="Curriculum training order "
     "(operators.sampling.curriculum_order): per-source quality-decile "
     "bins (bin 0 = cleanest; per-source binning keeps the mix's source "
@@ -3098,7 +3055,6 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, source, quality
     FROM r WHERE pct_rank <= 0.4
     """,
-    priority=30,  # new in r7 — first driver row (registry _R7_ROTATION)
     doc="Survivors-only per-source quality-quantile filter "
     "(operators.text_analysis.quality_threshold_filter) — the two-phase "
     "hot-group form (r6 verdict #2): per-source cutoff estimated with "
@@ -3181,7 +3137,6 @@ _INTRA_DOC_ORACLE = f"""
     "intra_doc_dedup",
     oracle=_INTRA_DOC_ORACLE,
     headline=True,  # bench promotion (r6 verdict #6 / r7 additions)
-    priority=30,  # new in r7 — first driver row (registry _R7_ROTATION)
     doc="Within-document repeated-span removal "
     "(operators.text_analysis.strip_repeated_spans, r6 verdict #5): the "
     "Lee et al. intra-doc dedup case — a k-gram starting at an earlier "
@@ -3261,7 +3216,6 @@ _CROSS_DOC_SPANS_ORACLE = f"""
     "cross_doc_span_dedup",
     oracle=_CROSS_DOC_SPANS_ORACLE,
     headline=True,
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="Corpus-wide repeated-span removal "
     "(operators.text_analysis.strip_cross_doc_spans, new r8): the full "
     "Lee et al. ExactSubstr case at k-gram granularity — a k-gram is a "
@@ -3415,7 +3369,6 @@ def _curation_v2_oracle() -> str:
     "curation_v2_end_to_end",
     oracle=_curation_v2_oracle(),
     headline=True,
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="The round-8 curation capstone: corpus-wide repeated-span "
     "removal (cross_doc_span_dedup, k=5) -> the published Gopher rule "
     "gate on the CLEANED text (word-count/mean-length/symbol/alpha/"
@@ -3508,7 +3461,6 @@ def _bpe_oracle() -> str:
     "bpe_token_counts",
     oracle=_bpe_oracle(),
     headline=True,  # bench promotion (r6 verdict #6 / r7 additions)
-    priority=30,  # new in r7 — first driver row (registry _R7_ROTATION)
     doc="Learned-subword token accounting (operators/bpe.py, r6 verdict "
     "#3): per-document BPE piece counts under the pinned 40-merge table "
     "trained deterministically from the corpus (Sennrich word-frequency "
@@ -3556,7 +3508,6 @@ def _bpe_packed_oracle() -> str:
 @register(
     "bpe_packed_sequences",
     oracle=_bpe_packed_oracle(),
-    priority=30,  # new in r8 — first driver row (registry rotation)
     doc="Packing denominated in LEARNED tokens (r7 verdict #4): "
     "operators.packing.materialize_packs with the per-doc count fed by "
     "operators.bpe.bpe_piece_count_column under the pinned 40-merge "
@@ -3600,7 +3551,6 @@ def _nb_oracle() -> str:
     "nb_classifier_scores",
     oracle=_nb_oracle(),
     headline=True,  # promoted r10 (r9 verdict #6)
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="Model-based quality classification "
     "(operators/classifier.py, new r8): hashed Naive-Bayes log-odds "
     "scoring — the learned does-this-look-like-the-reference-corpus "
@@ -3651,7 +3601,6 @@ def _nb_sweep_oracle() -> str:
 @register(
     "nb_threshold_sweep",
     oracle=_nb_sweep_oracle(),
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="Keep-rate curve for the NB classifier gate "
     "(operators.profiling.threshold_sweep): for each candidate cutoff, "
     "how many documents and how much token mass survive — the policy-"
@@ -3711,7 +3660,6 @@ def q_nb_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
              AND n_stopwords >= 2, FALSE) AS keep
     FROM r
     """,
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="The published Gopher document-quality rules "
     "(operators.text_analysis.gopher_quality_filter, Rae et al. 2021 "
     "SSA1.1): word-count bounds, mean-word-length band, symbol-to-word "
@@ -3754,7 +3702,6 @@ _BLOCKLIST_SQL = ", ".join(repr(w) for w in sorted(set(_BLOCKLIST)))
            COALESCE(len(hits), 0) = 0 AS keep
     FROM h
     """,
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="Token-level blocklist screening "
     "(operators.text_analysis.blocklist_filter): the bad-terms curation "
     "stage — exact case-insensitive token match against a pinned "
@@ -3773,7 +3720,6 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dataset_card",
     oracle="WITH " + _card_tail_sql("documents"),
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="One-pass per-source dataset card: the summary artifact a "
     "curation run publishes next to its shards — doc count, NULL-text "
     "count, whitespace-token mass, mean heuristic quality, language "
@@ -3825,7 +3771,6 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN scored sc USING (doc_id)
     """,
     headline=True,  # bench promotion (r6 verdict #6 / r7 additions)
-    priority=63,  # r6 continuation-4 addition: r7 first-in-line
     doc="Corpus-trained unigram LM quality scoring "
     "(operators.text_analysis.unigram_lm_scores, the CCNet shape one "
     "step up from heuristics): fit word frequencies over a top-16 "
@@ -3945,7 +3890,6 @@ def _bigram_lm_oracle() -> str:
 @register(
     "bigram_lm_scores",
     oracle=_bigram_lm_oracle(),
-    priority=28,  # r8 registration; r9: code changed (pinned model)
     doc="Bigram LM scoring with Stupid Backoff "
     "(operators.text_analysis.bigram_lm_scores, Brants et al. 2007): "
     "one modeling step from the unigram scorer toward CCNet's KenLM — "
@@ -3990,7 +3934,6 @@ def q_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(k.max_doc AS BIGINT)    AS max_doc
     FROM c LEFT JOIN k USING (source)
     """,
-    priority=63,  # r6 continuation-4 addition: r7 first-in-line
     doc="Temperature-weighted source rebalancing "
     "(operators.sampling.temperature_resample): the multinomial-alpha "
     "pretraining mix (mBERT/XLM-R/Gopher family) — source i keeps rows "
@@ -4047,7 +3990,6 @@ def q_temperature_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS achieved_rate
     FROM r LEFT JOIN k USING (source)
     """,
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="Achieved-vs-target mix audit "
     "(operators.sampling.temperature_mix_report): per source, the rate "
     "the temperature mix PROMISES (min(1, target*n^alpha/sum/n)) next "
@@ -4116,7 +4058,6 @@ def _bloom_oracle_sql() -> str:
     "bloom_decontaminate",
     oracle=_bloom_oracle_sql(),
     headline=True,  # bench promotion (r6 verdict #6 / r7 additions)
-    priority=63,  # r6 continuation-4 addition: r7 first-in-line
     doc="Bloom-filter benchmark decontamination "
     "(operators.sketches.bloom_build/bloom_might_contain): the "
     "membership sketch as a (word_idx, bits) TABLE of 63-bit words — "
@@ -4202,7 +4143,6 @@ def _cms_oracle_sql() -> str:
 @register(
     "cms_word_frequencies",
     oracle=_cms_oracle_sql(),
-    priority=63,  # r6 continuation-4 addition: r7 first-in-line
     doc="Count-min-sketch token frequencies "
     "(operators.sketches.cms_build/cms_estimate): the frequency sibling "
     "of the Bloom (membership) and HLL (distinct) sketches — a "
@@ -4248,7 +4188,6 @@ def q_cms_word_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND a.pid < b.pid
     WHERE levenshtein(a.p_name, b.p_name) <= 3
     """,
-    priority=63,  # r6 continuation-4 addition: r7 first-in-line
     doc="Blocked approximate-string matching "
     "(operators.dedup.fuzzy_string_pairs): the entity-resolution shape "
     "— near-identical product names at Levenshtein distance <= 3, "
@@ -4286,7 +4225,6 @@ def q_fuzzy_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(r.rank AS INTEGER) AS rank, t.n_keys
     FROM r, t WHERE r.rank <= 20
     """,
-    priority=63,  # r6 continuation-4 addition: r7 first-in-line
     doc="Key-skew diagnostics (operators.joins.key_skew_stats): top-20 "
     "heaviest join keys with row count, share of table, rank, and "
     "distinct-key cardinality — the monitoring companion every skew "
@@ -4398,7 +4336,6 @@ def _curation_oracle_sql() -> str:
 @register(
     "curation_pipeline_end_to_end",
     oracle=_curation_oracle_sql(),
-    priority=63,  # r6 continuation-4 addition: r7 first-in-line
     headline=True,
     doc="The full pretraining-curation pipeline a 100-TB run executes, "
     "as ONE query composing five already-anchored operators in their "
@@ -4531,7 +4468,6 @@ _PROFILE_ORACLE = """
     "profile_documents",
     oracle=_PROFILE_ORACLE,
     headline=True,  # bench promotion (r6 verdict #6 / r7 additions)
-    priority=63,  # r6 late addition: r7 first-in-line, never driver-checked
     doc="Exact per-column census of the documents table via the "
     "melt-then-double-aggregate profiler (operators/profiling.py): "
     "null counts, exact distinct cardinality, lexicographic min/max "
@@ -4576,7 +4512,6 @@ _HISTOGRAM_ORACLE = """
 @register(
     "histogram_event_values",
     oracle=_HISTOGRAM_ORACLE,
-    priority=63,  # r6 late addition: r7 first-in-line, never driver-checked
     doc="Exact 20-bin equi-width histogram of events.value "
     "(operators/profiling.py:value_histogram) — the distribution-SHAPE "
     "monitor beside approx_stats' rank points and profile_documents' "
@@ -4662,7 +4597,6 @@ def _bm25_oracle() -> str:
     "bm25_scores",
     oracle=_bm25_oracle(),
     headline=True,  # promoted r10 (r9 verdict #6)
-    priority=31,  # new in r9 — first driver row (registry rotation)
     doc="Okapi BM25 lexical retrieval scoring "
     "(operators.retrieval.bm25_scores, Robertson & Zaragoza 2009): the "
     "lexical complement to the embedding ANN tier — every document "
@@ -4720,7 +4654,6 @@ def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bk
     """,
     headline=True,  # promoted r10 (r9 verdict #6)
-    priority=31,  # new in r9 — first driver row (registry rotation)
     doc="Leakage-safe train/val/test split (r9): hash_split assigns by "
     "the NEAR-DUP CLUSTER REPRESENTATIVE, not the document id — near "
     "duplicates (minhash-LSH candidate pairs, transitively closed via "
@@ -4815,12 +4748,7 @@ def _kmeans_oracle(k: int, iters: int) -> str:
 @register(
     "kmeans_clusters",
     oracle=_kmeans_oracle(_KMEANS_K, _KMEANS_ITERS),
-    # registered after the r9 window froze at 50 — enters the r10
-    # driver window first per the new-registration rule (see the r10
-    # rotation note in plans/registry.py); r9 coverage = the committed
-    # full sweep + pytest.
     headline=True,  # promoted r10 (r9 verdict #6)
-    priority=80,
     doc="Integer-exact Lloyd's k-means over quantized embeddings "
     "(operators.similarity.kmeans_exact, r9): ivf_index is the "
     "production float coarse quantizer (recall-gated — float means "
@@ -5153,10 +5081,6 @@ def _dsir_oracle() -> str:
 @register(
     "dsir_selection",
     oracle=_dsir_oracle(),
-    # new r10 registration — enters the r10 driver window first (see
-    # the rotation note in plans/registry.py; it displaces the
-    # nb_classifier_scores fill, its hashed-scoring sibling).
-    priority=80,
     doc="DSIR importance resampling (operators/selection.py, r10; Xie "
     "et al., NeurIPS 2023): the generative data-selection tier next "
     "to the discriminative NB gate — hashed unigram+bigram models of "
@@ -5333,11 +5257,6 @@ def _pq_oracle(k: int = 5) -> str:
 @register(
     "pq_search_rerank",
     oracle=_pq_oracle(),
-    # new r10 registration — enters the r10 driver window first (see
-    # the rotation note in plans/registry.py; it displaces the
-    # q1_pricing_summary fill, whose scan-agg family keeps in-window
-    # siblings and a bench-headliner row).
-    priority=80,
     doc="Product-quantization search with exact re-ranking "
     "(operators/similarity.py pq_train/pq_encode/pq_topk/pq_search, "
     "r10; Jégou, Douze & Schmid, TPAMI 2011): the ANN tier's "
@@ -5538,11 +5457,6 @@ def q_multimodal_video_meta_roundtrip(
       FROM scored)
     SELECT query_id, vec_id, cos_sim, rank FROM ranked WHERE rank <= 5
     """,
-    # new r10 registration — enters the r10 driver window first (see
-    # the rotation note in plans/registry.py; it displaces the
-    # q5_region_revenue fill, whose join family keeps key_skew_orders
-    # in-window at 25 plus q5's own bench-headliner row).
-    priority=80,
     doc="Hard-negative mining for contrastive training pairs "
     "(operators/similarity.py:hard_negative_topk, r10; the DPR / "
     "SimCSE recipe): per query document, the top-5 highest-cosine "
@@ -5664,11 +5578,6 @@ def _logreg_oracle() -> str:
 @register(
     "logreg_quality_scores",
     oracle=_logreg_oracle(),
-    # new r10 registration — enters the r10 driver window first (see
-    # the rotation note in plans/registry.py; nb_threshold_sweep
-    # yields its promoted fill slot back — its classifier family now
-    # holds TWO in-window rows via this query and dsir_selection).
-    priority=80,
     doc="Integer-exact logistic regression, trained in-query "
     "(operators/classifier.py:train_logreg, r10): the TRAINED "
     "iterative tier next to the closed-form NB log-odds — hashed "
@@ -5764,11 +5673,6 @@ def q_logreg_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
              END AS recall_strong
     FROM vagg CROSS JOIN tagg CROSS JOIN hagg
     """,
-    # new r10 registration — enters the r10 driver window first (see
-    # the rotation note in plans/registry.py; it displaces the
-    # asof_join_nearest fill — the as-of family keeps its bench
-    # headliner + scaling-probe coverage via asof_join_last_good).
-    priority=80,
     doc="Dedup-policy evaluation report "
     "(operators/dedup.py:dedup_quality_report, r10): measures the LSH "
     "banding against exact Jaccard on BOTH sides of the S-curve — "
@@ -6130,10 +6034,6 @@ def _ivfadc_oracle(k: int = 5, cand_filter: str = "") -> str:
 @register(
     "ivfadc_search",
     oracle=_ivfadc_oracle(),
-    # new r11 registration — enters the r11 driver window first per
-    # the registry invariant (see the rotation note in
-    # plans/registry.py; the displaced fill is itemized there).
-    priority=80,
     headline=True,  # new heavy ANN shape -> bench + shuffle-audit row
     doc="IVFADC search with exact re-ranking "
     "(operators/similarity.py kmeans_train/ivfadc_train/ivfadc_search, "
@@ -6202,9 +6102,6 @@ def _staged_ivfadc_index_dir(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "ivfadc_pruned_search",
     oracle=_ivfadc_oracle(),
-    # new r12 registration — enters the r12 driver window first per
-    # the registry invariant (rotation note in plans/registry.py).
-    priority=80,
     headline=True,  # benched NEXT TO ivfadc_search: the stored-index
     # probe must show the in-plan encode cost disappearing (measured
     # ~3.5x cheaper at every scale multiple, SCALING.md r12)
@@ -6256,7 +6153,6 @@ _TOMB_MOD, _TOMB_REM = 10, 7
     SELECT p.phase, b.query_id, b.vec_id, b.sqdist, b.rank
     FROM base b CROSS JOIN (VALUES ('tombstoned'), ('purged')) p(phase)
     """,
-    priority=80,  # enters via the r16 rotation (new registration tier)
     doc="IVFADC tombstone DELETE lifecycle (r16, r15 verdict #3 — the "
     "delete side the index lifecycle lacked: upsert/compact/retrain "
     "existed, a takedown meant a rebuild).  The per-run store encodes "
@@ -6393,9 +6289,6 @@ def _qbc_oracle() -> str:
 @register(
     "qbc_disagreement",
     oracle=_qbc_oracle(),
-    # new r11 registration — enters the r11 driver window first per
-    # the registry invariant (rotation note in plans/registry.py).
-    priority=80,
     doc="Query-by-committee disagreement mining "
     "(operators/classifier.py:qbc_disagreement, r11; Seung, Opper & "
     "Sompolinsky 1992, Lewis & Gale 1994): the active-learning tier — "
@@ -6465,9 +6358,6 @@ _EDIT_VERIFY_PCT = 80
              AS is_dup
     FROM v
     """,
-    # new r11 registration — enters the r11 driver window first per
-    # the registry invariant (rotation note in plans/registry.py).
-    priority=80,
     doc="Edit-distance verification of LSH candidate pairs "
     "(operators/dedup.py:edit_distance_verify, r11): the third dedup "
     "verification metric next to exact shingle Jaccard "
@@ -6533,9 +6423,6 @@ def _ssp_oracle() -> str:
 @register(
     "selfsup_prune",
     oracle=_ssp_oracle(),
-    # new r11 registration — enters the r11 driver window first per
-    # the registry invariant (rotation note in plans/registry.py).
-    priority=80,
     doc="Self-supervised prototypicality pruning "
     "(operators/similarity.py:selfsup_prune, r11; Sorscher et al., "
     "NeurIPS 2022): the embedding-space data-pruning tier — each "
@@ -6645,11 +6532,6 @@ def _mmr_oracle(k: int = _MMR_K, shortlist: int = _MMR_SHORTLIST) -> str:
 @register(
     "mmr_diverse_topk",
     oracle=_mmr_oracle(),
-    # new r12 registration — enters the r12 driver window first per
-    # the registry invariant (it displaced the alphabetically-last
-    # in-window stale name into the r13 overflow; see the rotation
-    # note in plans/registry.py).
-    priority=80,
     doc="MMR diversified retrieval "
     "(operators/similarity.py:mmr_diversify, r12; Carbonell & "
     "Goldstein, SIGIR 1998): the diversity re-rank between ANN top-k "
@@ -6757,11 +6639,6 @@ def _hamming_oracle(k: int = 5, shortlist: int = _HAMMING_SHORTLIST) -> str:
 @register(
     "hamming_topk",
     oracle=_hamming_oracle(),
-    # new r12 registration — enters the r12 driver window first per
-    # the registry invariant (it displaced the then-alphabetically-last
-    # in-window stale name into the r13 overflow; see the rotation
-    # note in plans/registry.py).
-    priority=80,
     headline=True,  # the cheapest ANN tier belongs in the bench: its
     # flat ~1.5 s row is the stage-0 cost floor the ladder amortizes to
     doc="Binary-signature ANN: Hamming stage-0 prefilter + exact "
@@ -6832,11 +6709,6 @@ def _nb_calibration_oracle(n_bins: int = _CAL_BINS) -> str:
 @register(
     "nb_calibration_report",
     oracle=_nb_calibration_oracle(),
-    # new r12 registration — enters the r12 driver window first per
-    # the registry invariant (displacing the then-alphabetically-last
-    # in-window stale name into the r13 overflow; see the rotation
-    # note in plans/registry.py).
-    priority=80,
     doc="Classifier reliability report "
     "(operators/classifier.py:nb_calibration_report, r12; Zadrozny & "
     "Elkan 2002's reliability table in the integer-exact idiom): the "
@@ -6930,7 +6802,6 @@ def _ivfadc_distortion_oracle() -> str:
 @register(
     "ivfadc_distortion_report",
     oracle=_ivfadc_distortion_oracle(),
-    priority=80,
     headline=True,  # promoted r13: the pinned-artifact hoist cut this
     # from 11.8 s (r12, ~90% literal-compile) to ~2 s — benching it
     # keeps the index-maintenance read path's cost on the record
@@ -7005,7 +6876,6 @@ def _staged_ivfadc_meta_index_dir(spark: SparkSession, sf_dir: str) -> str:
             "WHERE lang = 'en')"
         )
     ),
-    priority=80,
     headline=True,  # the filtered-probe cost belongs on the record
     # next to the unfiltered pruned probe it specializes
     doc="Metadata-filtered ANN over the stored index (r13) — the "
@@ -7164,7 +7034,6 @@ def _ivfadc_nprobe_sweep_oracle(
 @register(
     "ivfadc_nprobe_sweep",
     oracle=_ivfadc_nprobe_sweep_oracle(),
-    priority=80,
     doc="IVFADC nprobe TUNING sweep "
     "(operators/similarity.py:ivfadc_nprobe_sweep, r13) — the "
     "operating-curve report an ANN deployment reads before pinning "
@@ -7242,7 +7111,6 @@ def _value_quantile_sketch_oracle() -> str:
     "value_quantile_sketch",
     oracle=_value_quantile_sketch_oracle(),
     headline=True,
-    priority=80,  # entered via _R14_ROTATION (new registration tier)
     doc="Log-bucket quantile sketch vs banded exact quantiles "
     "(operators/quantiles.py, r14): events.value quantized to integer "
     "mils (the FLOOR(value*1000) corpus convention), sketched into a "
@@ -7267,7 +7135,7 @@ def q_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE checkpointed sketch (bounded <= (48+1)*16+1 rows) feeds both
     # the estimate branch and the exact prune-and-pick — the corpus is
     # scanned twice total (sketch + in-band read-back) instead of 8x
-    # (optimization r17, guide §2.4; before/after plans in plans/r17/)
+    # (r17; the before/after plans are in plans/r17/ at commit 462c6b7)
     sk = qa.quantile_sketch(ev, mils, m=_QSK_M).localCheckpoint()
     est = qa.sketch_quantiles(sk, _QSK_QS, m=_QSK_M, materialize=False)
     exact = qa.exact_quantiles_banded(
@@ -7385,7 +7253,6 @@ def _hybrid_rrf_oracle() -> str:
     "hybrid_rrf_search",
     oracle=_hybrid_rrf_oracle(),
     headline=True,
-    priority=80,  # entered via _R14_ROTATION (new registration tier)
     doc="Hybrid retrieval with reciprocal-rank fusion "
     "(operators/retrieval.py:rrf_fuse, Cormack et al. 2009 — the "
     "standard lexical+dense combiner behind RAG retrieval stacks): "
@@ -7492,7 +7359,6 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
            valid_to IS NULL AS is_current, n_obs
     FROM fin
     """,
-    priority=80,  # entered via _R14_ROTATION (new registration tier)
     doc="SCD Type-2 change history "
     "(operators/relational_ext.py:scd2_intervals, r14): the "
     "dimension-history builder — each user's event-type run-lengths "
@@ -7567,7 +7433,6 @@ def _doclen_quantiles_oracle() -> str:
 @register(
     "doclen_quantiles_by_source",
     oracle=_doclen_quantiles_oracle(),
-    priority=80,  # entered via _R14_ROTATION (new registration tier)
     doc="GROUPED quantile telemetry (operators/quantiles.py with "
     "group_cols, r14): per-source document-length quartiles + p95 — "
     "the length-distribution cut a corpus profiler reads per "
@@ -7654,7 +7519,6 @@ def _doclen_quantiles_weighted_oracle() -> str:
 @register(
     "doclen_quantiles_weighted",
     oracle=_doclen_quantiles_weighted_oracle(),
-    priority=80,  # entered via _R15_ROTATION (new registration tier)
     doc="TOKEN-MASS-WEIGHTED document-length quantiles per source "
     "(r15, r14 verdict #8): every count in the sketch, rank targets "
     "and exact prune-and-pick becomes a whitespace-token weight sum, "
@@ -7749,7 +7613,6 @@ def _incremental_rollup_oracle() -> str:
 @register(
     "incremental_rollup_merge",
     oracle=_incremental_rollup_oracle(),
-    priority=80,  # entered via _R14_ROTATION (new registration tier)
     doc="Incremental-view-maintenance rollup (r14): the per-type "
     "daily-rollup state (count, sum, min, max, p50-sketch buckets) is "
     "computed SEPARATELY for the base slice (ts < "
@@ -7822,11 +7685,10 @@ _ROLLBACK_TS = "2024-01-25 00:00:00"
     "rollup_retraction",
     oracle=_incremental_rollup_oracle().replace(
         "WHERE value IS NOT NULL",
-        "WHERE value IS NOT NULL AND (ts < TIMESTAMP "
-        f"'{_ROLLBACK_TS}' OR ts IS NULL)",
+        f"WHERE value IS NOT NULL AND (ts < TIMESTAMP {_sq(_ROLLBACK_TS)} "
+        "OR ts IS NULL)",
         1,
     ),
-    priority=80,  # enters via the r16 rotation (new registration tier)
     doc="Rollup-state RETRACTION (r16 — the delete side of "
     "incremental_rollup_merge, completing the IVM delete story across "
     "all three state families: rollup states here, component labels "
@@ -7953,7 +7815,6 @@ def _sketch_rollup_oracle() -> str:
 @register(
     "sketch_rollup_daily",
     oracle=_sketch_rollup_oracle(),
-    priority=80,  # entered via _R14_ROTATION (new registration tier)
     doc="Sketch ROLLUP-ON-READ (r14): hourly quantile-sketch bucket "
     "counts — the exact frame streaming_quantile_sketch persists per "
     "window — re-keyed to day and MERGED by count-sum, then p50/p95 "
@@ -8101,7 +7962,7 @@ def _takedown_oracle() -> str:
     ]
     selects = []
     for family, subq, present in branches:
-        exprs = [f"'{family}' AS family"]
+        exprs = [f"{_sq(family)} AS family"]
         for name, _, dtyp in _TD_COLS:
             exprs.append(
                 f"{present.get(name, f'CAST(NULL AS {dtyp})')} AS {name}"
@@ -8115,7 +7976,6 @@ def _takedown_oracle() -> str:
 @register(
     "takedown_end_to_end",
     oracle=_takedown_oracle(),
-    priority=80,  # enters via the r17 rotation (new registration tier)
     doc="TAKEDOWN CAPSTONE (r17, r16 verdict #2): ONE erasure event — "
     f"content (doc_id % {_RETRACT_MOD} == 0) and activity (user_id % "
     f"{_TD_USER_MOD} == {_TD_USER_REM}) — flows through the DELETE "

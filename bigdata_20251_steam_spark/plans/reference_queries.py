@@ -43,7 +43,6 @@ from .registry import register
 
 @register(
     "sentiment_hourly",
-    priority=40,  # §2 sentinel canary (r4 window rotation, registry.py)
     oracle="""
     SELECT date_trunc('hour', ts)                          AS window_start,
            date_trunc('hour', ts) + INTERVAL 1 HOUR        AS window_end,
@@ -103,7 +102,6 @@ def q_review_bomb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "genre_distribution",
-    priority=40,  # §2 sentinel canary (r4 window rotation, registry.py)
     oracle="""
     SELECT genre, count(*) AS total
     FROM (SELECT unnest(string_split(text, ' ')) AS genre FROM documents)
@@ -168,7 +166,6 @@ def q_player_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "peak_activity",
-    priority=40,  # §2 sentinel canary (r4 window rotation, registry.py)
     oracle="""
     WITH w AS (
       SELECT time_bucket(INTERVAL 10 MINUTE, ts) AS window_start,
@@ -394,7 +391,6 @@ def q_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "epoch_casts",
-    priority=40,  # §2 sentinel canary (r4 window rotation, registry.py)
     oracle="""
     SELECT event_id,
            CAST(floor(epoch(ts)) AS BIGINT)                 AS epoch_s,
@@ -422,7 +418,6 @@ def q_epoch_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dim_join",
-    priority=40,  # §2 sentinel canary (r4 window rotation, registry.py)
     oracle="""
     SELECT c.c_mktsegment                        AS segment,
            count(*)                              AS n_orders,

@@ -11,8 +11,10 @@ Every implemented query/operator registers here with:
 - ``headline``: whether ``bench.py`` times it at sf0.1.
 
 ``__spark_entry__.py`` re-exports this registry as ``queries()`` /
-``oracle_sql()``.  Column names are aliased identically on both sides
-because the driver's comparison sorts columns by name before hashing.
+``oracle_sql()``, in registration order: reference, extension, then
+streaming queries, each module top to bottom.  Column names are aliased
+identically on both sides because the driver's comparison sorts columns
+by name before hashing.
 """
 
 from __future__ import annotations
@@ -32,30 +34,10 @@ class Query:
     oracle: str | None
     headline: bool = False
     doc: str = ""
-    #: Driver-exposure ordering.  The correctness driver checks the FIRST
-    #: 50 queries it receives (observed in round 1: 54 registered, exactly
-    #: the first 50 got CORRECTNESS rows), so exposure order is a
-    #: resource-allocation decision.  Lower = earlier.
-    #:
-    #: Round-4 rotation (r3 verdict #2): queries hash-match-proven by the
-    #: driver in BOTH rounds 2 and 3 move to the default tier 80 — the
-    #: rotation pool that fills whatever window slots remain, in
-    #: registration order.  Six §2 sentinels stay pinned at 40 as canaries
-    #: (C1 sentiment_hourly, C7 peak_activity, F1 genre_distribution,
-    #: D dim_join, G5 streaming_genre_counts, and the repaired
-    #: epoch_casts).  The round-2 additions that have never had a driver
-    #: row run at 45, ahead of the pool; round-4 additions register at 46.
-    #: >=90 stays reserved for entries whose driver row is redundant
-    #: (streaming variants whose oracle duplicates a checked batch query,
-    #: rows-only entries fully covered by pytest).  Everything registered
-    #: is still verified locally by tests/test_queries_vs_oracle.py
-    #: regardless of position.
-    priority: int = 80
-    _seq: int = 0
 
 
+#: Registration order is the contract order of ``queries()``.
 QUERIES: dict[str, Query] = {}
-_SEQ = 0
 
 
 def register(
@@ -63,211 +45,41 @@ def register(
     oracle: str | None,
     headline: bool = False,
     doc: str = "",
-    priority: int = 80,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the registry."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        global _SEQ
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = Query(
-            name=name, fn=fn, oracle=oracle, headline=headline, doc=doc,
-            priority=priority, _seq=_SEQ,
+            name=name, fn=fn, oracle=oracle, headline=headline, doc=doc
         )
-        _SEQ += 1
         return fn
 
     return deco
 
 
-def ordered_queries() -> list[Query]:
-    """Registry in driver-exposure order: priority, then registration."""
-    return sorted(QUERIES.values(), key=lambda q: (q.priority, q._seq))
-
-
 def spark_queries() -> dict[str, QueryFn]:
-    return {q.name: q.fn for q in ordered_queries()}
+    return {q.name: q.fn for q in QUERIES.values()}
 
 
 def oracle_map() -> dict[str, str]:
-    return {q.name: q.oracle for q in ordered_queries() if q.oracle is not None}
+    return {q.name: q.oracle for q in QUERIES.values() if q.oracle is not None}
 
-
-#: STALENESS-INVARIANT AMENDMENT (r8 verdict #2 / ADVICE): with 126
-#: registered queries and a 50-row driver window, the original
-#: "every query driver-confirmed within <=2 rounds" is arithmetically
-#: unsatisfiable (50 x 2 = 100 row-slots < 126 queries, before even
-#: counting new/changed-code re-proves).  The evidence model is,
-#: formally:
-#:
-#:   1. COVERAGE OF RECORD: every round commits a FULL-registry
-#:      bare-session sweep artifact (CORRECTNESS_FULL_r0N.json, built
-#:      by full_registry_sweep.py — the same rows+schema+value
-#:      comparison the driver runs, over ALL queries).  Every query is
-#:      therefore three-way-checked EVERY round.
-#:   2. INDEPENDENT CONFIRMATION: the 50-row driver window rotates so
-#:      every query gets a driver-run row at most three rounds apart,
-#:      scheduled as: queries whose code changed this round first,
-#:      then the oldest-driver-green cohort, then fills preferring
-#:      operators with no in-window sibling.
-#:
-#: Round-17 window rotation (r16 verdict #1).  Cohorts computed from
-#: the committed CORRECTNESS_r0{14,15,16}.json artifacts (last GREEN
-#: driver row per query) and validated by EXECUTING the dict
-#: (test_r17_rotation_window).  The r16 dict this replaces is in git
-#: history (commit 0bf0e15 and earlier).
-#:
-#: - 23: the 32 MUST-ENTER overflow names itemized by the r16 note —
-#:   four-rounds driver-stale by r17 (last green driver row r13;
-#:   recomputed from the artifacts, matches the itemized list exactly:
-#:   29 from the alphabetical split + the 3 displaced fills
-#:   hard_negative_pairs / hamming_topk / genre_distribution);
-#: - 24: code whose EXECUTED path changed in r17, re-prove, plus the
-#:   two new registrations:
-#:     takedown_end_to_end — NEW (the delete-story capstone across all
-#:       four state families);
-#:     streaming_dedup_maintenance_bucketed — NEW (the bucketed
-#:       band-state maintenance loop with in-loop retention);
-#:     index_tombstone_delete — compact_ivfadc_index's tombstone clear
-#:       is now snapshot-scoped and the query body gained try/finally
-#:       (both execute);
-#:     index_lifecycle_end_to_end — the streaming upsert now repairs
-#:       interrupted swaps + runs the re-insert guard per batch, and
-#:       compact executes the snapshot-scoped clear;
-#:     streaming_index_upsert — same upsert-side repair + guard
-#:       executes inside its foreachBatch;
-#:     streaming_incremental_dedup / streaming_dedup_maintenance —
-#:       their _merge closures now call repair_state_dir before every
-#:       state append (executed per batch);
-#:     incremental_dedup_bucketed — incremental_minhash_pairs_bucketed
-#:       gained the removed= branch; the None-default check executes
-#:       on its path (plan byte-identical — the driver row proves it);
-#:     multimodal_features — the pixel-decoder factory was
-#:       restructured (hoisted IDCT/assembly + the progressive path);
-#:       the factory body executes at query build;
-#: - 25: 5 of the 39-name three-round-stale cohort (last GREEN driver
-#:   row r14, no r15/r16 slot; recomputed from the committed JSONs;
-#:   multimodal_features belongs to it but enters at 24 above).
-#:   50 slots minus 32 must-enters minus 17 changed/new leaves 1;
-#:   ties all at age r14, broken ALPHABETICALLY; the 29 overflow
-#:   names are itemized in the r18 note below, with
-#:   CORRECTNESS_FULL_r17.json (all queries) as the compensating
-#:   evidence meanwhile.
-_R17_ROTATION: dict[str, int] = {
-    # r16-note must-enters (four-rounds-stale otherwise)
-    "genre_distribution": 23,
-    "hamming_topk": 23,
-    "hard_negative_pairs": 23,
-    "histogram_event_values": 23,
-    "interval_event_counts": 23,
-    "intra_doc_dedup": 23,
-    "ivfadc_distortion_report": 23,
-    "ivfadc_nprobe_sweep": 23,
-    "ivfadc_search": 23,
-    "key_skew_orders": 23,
-    "logreg_quality_scores": 23,
-    "minhash_dedup_pairs": 23,
-    "minhash_signatures": 23,
-    "multimodal_audio_roundtrip": 23,
-    "multimodal_meta": 23,
-    "multimodal_video_meta_roundtrip": 23,
-    "nb_calibration_report": 23,
-    "ngram_jaccard_pairs": 23,
-    "pq_search_rerank": 23,
-    "qbc_disagreement": 23,
-    "quality_scores": 23,
-    "review_bomb": 23,
-    "streaming_genre_counts": 23,
-    "streaming_pq_adjudicate": 23,
-    "streaming_pq_probe": 23,
-    "streaming_running_totals": 23,
-    "streaming_token_budget": 23,
-    "supplier_nation_stats": 23,
-    "top_genres": 23,
-    "top_spenders": 23,
-    "user_value_quartiles": 23,
-    "winnow_fingerprints": 23,
-    # r17 changed-code re-proves + new registrations
-    "takedown_end_to_end": 24,
-    "streaming_dedup_maintenance_bucketed": 24,
-    "index_tombstone_delete": 24,
-    "index_lifecycle_end_to_end": 24,
-    "streaming_index_upsert": 24,
-    "streaming_incremental_dedup": 24,
-    "streaming_dedup_maintenance": 24,
-    "incremental_dedup_bucketed": 24,
-    "multimodal_features": 24,
-    # late-r17 NEW registrations (compressed-audio + video-frame
-    # decode roundtrips — each displaces one prio-25 fill below)
-    "multimodal_g711_roundtrip": 24,
-    "multimodal_adpcm_roundtrip": 24,
-    "multimodal_flac_roundtrip": 24,
-    "video_frame_decode": 24,
-    "multimodal_gif_roundtrip": 24,
-    "multimodal_resize_roundtrip": 24,
-    "multimodal_resample_roundtrip": 24,
-    "streaming_media_decode": 24,
-    # three-round-stale cohort (last driver row r14) — first 1
-    # of 39, alphabetical (was 9; asof_join_nearest /
-    # blocklist_filter / bpe_packed_sequences /
-    # cross_split_contamination / daily_user_rank / dataset_card /
-    # dedup_canonical_by_pagerank / dedup_graph_pagerank displaced by
-    # the eight late registrations above, itemized in the r18 note)
-    "api_source_reviews": 25,
-}
-
-
-#: r18 ROTATION NOTE (for the next session):
-#: - MUST-ENTER first: the 29 overflow names from the r17 alphabetical
-#:   split of the 39-name stale cohort (last driver row r14) — they
-#:   are four-rounds-stale by r18:
-#:     doc_chunks, embed_topk_lsh, gopher_quality_filter,
-#:     hash_split_assignments, hll_user_rollup, hybrid_rrf_search,
-#:     incremental_dedup_status, kmeans_clusters, minhash_dedup_resolve,
-#:     nb_classifier_scores, nb_threshold_sweep, pii_redaction,
-#:     player_windows, q1_pricing_summary, q5_region_revenue,
-#:     session_windows, simhash_signatures, sliding_windows,
-#:     streaming_bloom_decontaminate, streaming_dsir_gate,
-#:     streaming_hll_windows, streaming_player_windows,
-#:     streaming_segment_dedup, streaming_stream_join,
-#:     temperature_mix_sample, token_budget_sample, token_counts,
-#:     udtf_sentences, unigram_lm_scores
-#:   plus the EIGHT fills the late-r17 registrations displaced
-#:   (asof_join_nearest, blocklist_filter, bpe_packed_sequences,
-#:   cross_split_contamination, daily_user_rank, dataset_card,
-#:   dedup_canonical_by_pagerank, dedup_graph_pagerank — still
-#:   last-green r14)
-#:   (37 itemized; re-read the final committed dict, it is the
-#:   source of truth) —
-#:   full-sweep coverage (CORRECTNESS_FULL_r17.json) is the
-#:   compensating evidence until their r18 driver row lands.  29
-#:   must-enters leave ~21 slots: changed-code re-proves and new r18
-#:   registrations next, then fills from the three-round-stale-by-r18
-#:   cohort (last GREEN driver row r15, no r16/r17 slot — recompute
-#:   from CORRECTNESS_r0{15,16,17}.json, split oldest-first,
-#:   alphabetical on ties, itemize the remainder for r19);
-#: - validate by executing the dict, never by comment arithmetic.
 
 def _load_all() -> None:
     """Import every query module (side effect: registration).
 
     Imports are UNGUARDED (r12 verdict "what's wrong" #2): the old
     ``except ImportError: pass`` meant a real import failure in
-    extension/streaming modules silently deregistered ~130 queries and
-    shrank the driver window with no loud signal — only the full-sweep
-    count would have noticed.  A broken module now fails the whole
-    registry load (tests/test_registry.py poisons one module in a
-    subprocess and asserts the loud failure)."""
+    extension/streaming modules silently deregistered ~130 queries with
+    no loud signal — only the full-sweep count would have noticed.  A
+    broken module now fails the whole registry load
+    (tests/test_registry.py poisons one module in a subprocess and
+    asserts the loud failure)."""
     from . import reference_queries  # noqa: F401
     from . import extension_queries  # noqa: F401
     from . import streaming_queries  # noqa: F401
-    import dataclasses
-
-    for name, q in QUERIES.items():
-        prio = _R17_ROTATION.get(name, 80)
-        if q.priority != prio:
-            QUERIES[name] = dataclasses.replace(q, priority=prio)
 
 
 _load_all()

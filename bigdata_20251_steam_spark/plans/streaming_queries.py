@@ -235,7 +235,6 @@ def q_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_genre_counts",
-    priority=40,  # §2 sentinel canary (r4 window rotation, registry.py)
     oracle=QUERIES["genre_distribution"].oracle,
     doc="The charts app's running genre distribution as a stream: explode "
     "(F1) + global grouped count in complete mode with NO watermark/window "
@@ -256,8 +255,6 @@ def q_streaming_genre_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_session_windows",
     oracle=QUERIES["session_windows"].oracle,
-    priority=90,  # oracle duplicates the driver-checked batch
-    # session_windows query; parity is still pytest-verified
     doc="Session windows on a real stream: watermark + F.session_window "
     "(30-min gap) per user in complete mode — the stateful merging-window "
     "mode the reference lacks entirely. Same oracle as the batch "
@@ -283,8 +280,6 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_player_windows",
     oracle=QUERIES["player_windows"].oracle,
-    priority=90,  # oracle duplicates the driver-checked batch
-    # player_windows query; parity is still pytest-verified
     doc="player_windows as a streaming query: watermark 5m, 10-minute "
     "tumbling windows per key, complete mode (kafka-spark-configmap.yaml:"
     "259-265 mechanics).",
@@ -332,7 +327,6 @@ def q_streaming_player_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM err e JOIN (SELECT * FROM m WHERE rn = 1) m
       ON e.event_id = m.event_id
     """,
-    priority=46,  # round-4 addition (registry.py window policy)
     doc="Streaming as-of enrichment (r3 verdict #10): the error-event "
     "STREAM enriched with each user's latest at-or-before non-error "
     "reading, via operators.relational_ext.scd_asof_enrich — the static "
@@ -382,7 +376,6 @@ def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.event_type = 'click' AND e.event_type = 'error'
      AND e.ts >= c.ts AND e.ts < c.ts + INTERVAL 6 HOUR
     """,
-    priority=45,
     doc="Watermarked stream-stream inner join (the Structured Streaming "
     "capability beyond every G-row of the reference): clicks joined to "
     "errors of the same user within the following 6 hours, both sides "
@@ -431,9 +424,8 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_api_source",
     oracle=QUERIES["api_source_reviews"].oracle,
-    priority=90,  # oracle duplicates the driver-checked batch
-    # api_source_reviews query; incremental/exactly-once semantics are
-    # pinned by tests/test_sources.py restart test
+    # incremental/exactly-once semantics are pinned by the
+    # tests/test_sources.py restart test
     doc="The paged-API source consumed as a STREAM "
     "(sources/paged_api.py streamReader): offsets are per-app "
     "next-unread-page dicts checkpointed by the engine, each micro-batch "
@@ -469,9 +461,6 @@ def q_streaming_api_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_doc_chunks",
     oracle=QUERIES["doc_chunks"].oracle,
-    priority=62,  # r5 continuation; first in line for the r6 window —
-    # the oracle duplicates the driver-checked batch doc_chunks query,
-    # but per the r4 verdict "redundant" is the driver's call to make
     doc="Context-window chunking on a real stream: chunk_documents is a "
     "pure stateless projection (tokenize -> sequence -> explode -> "
     "slice), so the SAME operator code runs under Structured Streaming "
@@ -492,7 +481,6 @@ def q_streaming_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_token_budget",
     oracle=QUERIES["token_budget_sample"].oracle,
-    priority=46,  # r6 addition (verdict #5): first driver row this round
     doc="Incremental training-prep tail (r6, verdict #5): documents "
     "arrive as a stream, land in an epoch-keyed bronze store via the "
     "EXACTLY-ONCE foreachBatch append (streaming/engine."
@@ -574,10 +562,6 @@ def q_streaming_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
            bit_xor(h1)                             AS checksum_xor
     FROM h
     """,
-    priority=62,  # registered r6, first in line for the r7 window (the
-    # streaming_doc_chunks precedent: the r6 window is full at exactly
-    # 50, so this earns its first driver row next round; locally
-    # oracle-verified at sf0.001/sf0.01 meanwhile)
     doc="STATEFUL streaming segment dedup: the stream-capable "
     "segmentation (operators.dedup.segment_tokens, stateless) feeds "
     "dropDuplicates on the 120-bit segment content key — real "
@@ -625,7 +609,6 @@ def _streaming_bloom_oracle() -> str:
 @register(
     "streaming_bloom_decontaminate",
     oracle=_streaming_bloom_oracle(),
-    priority=63,  # registered r6 after the window filled: r7 first-in-line
     doc="STREAMING Bloom-filter decontamination: the document stream is "
     "probed against a STATIC filter built batch-side from the benchmark "
     "set (operators.sketches.bloom_build), with the filter inlined as a "
@@ -691,7 +674,6 @@ def q_streaming_bloom_decontaminate(
            TRUE AS est_ok
     FROM events GROUP BY 1, 2
     """,
-    priority=63,  # registered r6 after the window filled: r7 first-in-line
     doc="STREAMING windowed HLL distinct-user rollup: hll_sketch_agg "
     "inside a watermarked 1-hour tumbling-window aggregation (complete "
     "mode) — the mergeable-sketch family composed with streaming "
@@ -1009,7 +991,6 @@ def _streaming_curation_result(
 @register(
     "streaming_curation_pipeline",
     oracle=QUERIES["curation_pipeline_end_to_end"].oracle,
-    priority=30,  # new in r7 — first driver row (registry _R7_ROTATION)
     doc="The streaming curation capstone (r6 verdict #4): documents "
     "arrive as a stream, ingest-time exact dedup (stateful "
     "min_by(doc_id) per 120-bit normalized content key, update mode — "
@@ -1040,7 +1021,6 @@ def q_streaming_curation_pipeline(
 @register(
     "streaming_curation_bounded_state",
     oracle=QUERIES["curation_pipeline_end_to_end"].oracle,
-    priority=30,  # new in r8 — first driver row (registry rotation)
     doc="Bounded-state sibling of the streaming curation capstone (r7 "
     "verdict #7): ingest dedup via dropDuplicatesWithinWatermark over a "
     "deterministic synthetic ingest timestamp — the state store evicts "
@@ -1111,7 +1091,6 @@ def _streaming_quality_gate_oracle() -> str:
 @register(
     "streaming_quality_gate",
     oracle=_streaming_quality_gate_oracle(),
-    priority=28,  # new in r8 — first driver row (registry rotation)
     doc="The r8 gate tier running IN the stream: documents arrive as a "
     "file stream, the Gopher rule gate and the blocklist gate evaluate "
     "as stateless scan-fused projections on each micro-batch (both are "
@@ -1169,11 +1148,6 @@ def _streaming_dsir_gate_oracle() -> str:
 @register(
     "streaming_dsir_gate",
     oracle=_streaming_dsir_gate_oracle(),
-    # new r10 registration — enters the r10 driver window first (see
-    # the rotation note in plans/registry.py; it displaces the
-    # pii_redaction fill, whose regex-scan family keeps
-    # clean_html_roundtrip in-window at 25).
-    priority=80,
     doc="The DSIR selection tier running IN the stream (r10): documents "
     "arrive as a file stream, each micro-batch scores the pinned "
     "hashed-n-gram importance log-ratio as a stateless scan-fused "
@@ -1321,9 +1295,6 @@ def _streaming_pq_probe_oracle() -> str:
 @register(
     "streaming_pq_probe",
     oracle=_streaming_pq_probe_oracle(),
-    # new r11 registration — enters the r11 driver window first per
-    # the registry invariant (rotation note in plans/registry.py).
-    priority=80,
     doc="The ANN tier running IN the stream (r11, verdict #6): the "
     "live-ingest 'is this a near-duplicate of the corpus?' gate at "
     "the embedding tier, complementing the exact-hash "
@@ -1503,9 +1474,6 @@ def _streaming_pq_adjudicate_oracle() -> str:
 @register(
     "streaming_pq_adjudicate",
     oracle=_streaming_pq_adjudicate_oracle(),
-    # new r12 registration — enters the r12 driver window first per
-    # the registry invariant (rotation note in plans/registry.py).
-    priority=80,
     doc="Streaming ANN flag -> batch IVFADC adjudication (r12, r11 "
     "verdict #7 — the composition streaming_pq_probe's docstring "
     "promised but no query executed): the same stateless micro-batch "
@@ -1614,7 +1582,6 @@ def _streaming_index_upsert_oracle() -> str:
 @register(
     "streaming_index_upsert",
     oracle=_streaming_index_upsert_oracle(),
-    priority=80,
     doc="Live IVFADC index maintenance as a STREAM (r13, r12 verdict "
     "#6): the staged embeddings replay as micro-batches "
     "(maxFilesPerTrigger=4) and operators/similarity.py:"
@@ -1926,7 +1893,6 @@ def _index_lifecycle_oracle() -> str:
 @register(
     "index_lifecycle_end_to_end",
     oracle=_index_lifecycle_oracle(),
-    priority=80,
     doc="Index-lifecycle CAPSTONE (r14, r13 verdict #4 — the "
     "curation_v2_end_to_end treatment for the ANN side): ONE "
     "registered query runs the full maintenance loop a live vector "
@@ -2052,7 +2018,6 @@ def _streaming_quantile_sketch_oracle() -> str:
 @register(
     "streaming_quantile_sketch",
     oracle=_streaming_quantile_sketch_oracle(),
-    priority=80,  # entered via _R14_ROTATION (new registration tier)
     doc="STREAMING windowed log-bucket quantile sketch "
     "(operators/quantiles.py composed with watermarked 1-hour "
     "tumbling windows, complete mode): per-window (e, sub) bucket "
@@ -2097,7 +2062,6 @@ _SCD2_SLICE_BOUNDS = ["2024-01-25 00:00:00", "2024-01-28 00:00:00"]
 @register(
     "streaming_scd2_merge",
     oracle=QUERIES["scd2_event_history"].oracle,
-    priority=80,  # entered via _R15_ROTATION (new registration tier)
     doc="STREAMING SCD Type-2 maintenance (r15, r14 verdict #9): the "
     f"event log before {_SCD2_CUT} closes into interval state once "
     "(scd2_intervals); the remainder arrives as three time-ordered "
@@ -2188,7 +2152,6 @@ def q_streaming_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_incremental_dedup",
     oracle=QUERIES["incremental_dedup_components"].oracle,
-    priority=80,  # entered via _R15_ROTATION (new registration tier)
     doc="STREAMING incremental near-dup closure (r15 — the streaming "
     "form of incremental_dedup_components, completing the IVM trilogy "
     "operationally: rollup states, SCD2 history, component labels). "
@@ -2333,7 +2296,6 @@ _MAINT_REMOVED = (1, 9, 17)
         f"FROM documents WHERE doc_id % 24 NOT IN "
         f"{_MAINT_REMOVED}", 1,
     ),
-    priority=80,  # enters via the r16 rotation (new registration tier)
     doc="STREAMING dedup MAINTENANCE loop (r16 — the composition of "
     "the whole IVM family: each micro-batch carries both ADDS (new "
     "docs) and REMOVES (takedown doc_ids), and the foreachBatch folds "
@@ -2519,7 +2481,6 @@ def q_streaming_dedup_maintenance(
         f"FROM documents WHERE doc_id % 24 NOT IN "
         f"{_MAINT_REMOVED}", 1,
     ),
-    priority=80,  # enters via the r17 rotation (new registration tier)
     doc="STREAMING dedup maintenance over a BUCKETED band state (r17, "
     "r16 verdict #3 — the wiring the two r16 pieces were built for: "
     "streaming_dedup_maintenance proved the add+remove fold, "
@@ -2856,7 +2817,6 @@ def q_streaming_dedup_maintenance_bucketed(
            CAST(CAST(mx AS REAL) AS DOUBLE) AS f7
     FROM allfam
     """,
-    priority=80,
     doc="The r17 codec tier run OPERATIONALLY (the streaming "
     "composition of the round's growth theme): a heterogeneous media "
     "stream — each user's payload codec chosen by user_id % 4 "

@@ -9,18 +9,17 @@ runs every `queries()` entry under two different
 (atol=0) — any difference is an order-sensitive float composition that
 will eventually disagree with the driver's oracle.
 
-Usage: python determinism_audit.py [round] [sf_dir]
+Prints each partition-order-sensitive or failing query and a one-line
+JSON summary; exits 1 on any issue.
 
-With a numeric first argument the result is ALSO written to
-``DETERMINISM_r{N}.json`` so the claim is committable evidence, not
-prose (r9 verdict: "determinism audit clean" lived only in commit
-messages).  ``sf_dir`` defaults to ``/root/testdata/sf0.01``.
+Usage: python determinism_audit.py [sf_dir]
+
+``sf_dir`` defaults to ``/root/testdata/sf0.01``.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
@@ -33,11 +32,7 @@ def canon(pdf):
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    rnd: int | None = None
-    if args and args[0].isdigit():
-        rnd = int(args.pop(0))
-    sf = args[0] if args else "/root/testdata/sf0.01"
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from bigdata_20251_steam_spark.plans import QUERIES
     from bigdata_20251_steam_spark.session import get_spark
 
@@ -56,6 +51,7 @@ def main() -> None:
         a, b = runs
         if isinstance(a, str) or isinstance(b, str):
             bad.append((name, "error"))
+            print("ERROR:", name, (a if isinstance(a, str) else b)[:300])
             continue
         ok = list(a.columns) == list(b.columns) and len(a) == len(b)
         if ok:
@@ -73,23 +69,13 @@ def main() -> None:
         if not ok:
             bad.append((name, "partition-order-sensitive"))
             print("NONDETERMINISTIC:", name)
-    print(f"audited {len(QUERIES)} queries; issues: {bad}")
-    if rnd is not None:
-        out = {
-            "audited": len(QUERIES),
-            "shuffle_partition_settings": [16, 48],
-            "comparison": "exact (atol=0, schema + row order after canon sort)",
-            "issues": [list(x) for x in bad],
-            "wall_sec": round(time.time() - t0, 1),
-            "sf_dir": sf,
-        }
-        path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            f"DETERMINISM_r{rnd:02d}.json",
-        )
-        with open(path, "w") as f:
-            json.dump(out, f, indent=1, sort_keys=True)
-        print(f"wrote {path}")
+    print(json.dumps({
+        "sf_dir": sf,
+        "audited": len(QUERIES),
+        "shuffle_partition_settings": [16, 48],
+        "issues": [list(x) for x in bad],
+        "wall_sec": round(time.time() - t0, 1),
+    }))
     sys.exit(1 if bad else 0)
 
 

@@ -1,20 +1,11 @@
 """Full-registry correctness sweep on a BARE session at sf0.01.
 
 Replicates the driver's comparison (rows+schema+value equality,
-order-insensitive) for EVERY registered query — not just the 50-slot
-driver window — and writes one JSON artifact
-``CORRECTNESS_FULL_r{N}.json``.  This artifact is the per-round
-coverage of record now that the registry (123+ queries) has outgrown
-the 50-row driver window (see the staleness-invariant amendment in
-``plans/registry.py``); the driver window remains a rotating
-independent confirmation on top of it.
+order-insensitive) for EVERY registered query, in registration order.
+Prints one status line per query (with the mismatch or error detail)
+and a one-line JSON summary; exits 1 when any query is not a match.
 
-Promoted from a round-8 one-off to a repo script so every round
-refreshes the artifact the same way (round-8 verdict #3: figures cited
-in changelogs must come from committed artifacts — see
-``round_figures.py``).
-
-Usage:  python full_registry_sweep.py <round>     (e.g. 9)
+Usage:  python full_registry_sweep.py
         SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.01 to override the SF.
 """
 
@@ -30,21 +21,13 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tes
 
 
 def main() -> None:
-    if len(sys.argv) != 2 or not sys.argv[1].isdigit():
-        raise SystemExit("usage: python full_registry_sweep.py <round-number>")
-    rnd = int(sys.argv[1])
+    if len(sys.argv) != 1:
+        raise SystemExit("usage: python full_registry_sweep.py")
     sf = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.01")
-    # resolve the artifact's sf figure BEFORE the (minutes-long) sweep:
-    # a path without an 'sf<number>' suffix must not discard the run at
-    # write time — record the raw path instead
-    try:
-        sf_figure: float | str = float(sf.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        sf_figure = sf
 
     from pyspark.sql import SparkSession
 
-    from bigdata_20251_steam_spark.plans.registry import ordered_queries
+    from bigdata_20251_steam_spark.plans import QUERIES
     from oracle_harness import compare, duckdb_run
 
     spark = (
@@ -56,52 +39,32 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    out: dict[str, dict] = {}
+    n_match = 0
     t_start = time.time()
-    for q in ordered_queries():
+    for q in QUERIES.values():
         t0 = time.time()
         try:
             got = q.fn(spark, sf)
             exp = duckdb_run(q.oracle, sf)
             compare(got, exp, q.name)
-            out[q.name] = {
-                "status": "match",
-                "rows": len(exp),
-                "sec": round(time.time() - t0, 2),
-            }
+            status, detail = "match", f"rows={len(exp)}"
+            n_match += 1
         except AssertionError as e:
-            out[q.name] = {
-                "status": "MISMATCH",
-                "detail": str(e)[:300],
-                "sec": round(time.time() - t0, 2),
-            }
+            status, detail = "MISMATCH", str(e)[:300]
         except Exception as e:  # noqa: BLE001 — sweep must finish
-            out[q.name] = {
-                "status": "ERROR",
-                "detail": f"{type(e).__name__}: {e}"[:300],
-                "sec": round(time.time() - t0, 2),
-            }
-        print(q.name, out[q.name]["status"], flush=True)
+            status, detail = "ERROR", f"{type(e).__name__}: {e}"[:300]
+        print(q.name, status, f"{time.time() - t0:.2f}s", detail, flush=True)
 
-    n_match = sum(1 for v in out.values() if v["status"] == "match")
-    artifact = {
-        "round": rnd,
-        "sf": sf_figure,
-        "session": "bare (master=local[16], UTC timezone only)",
-        "total": len(out),
+    print(json.dumps({
+        "sf": sf,
+        "total": len(QUERIES),
         "match": n_match,
-        "fail": len(out) - n_match,
+        "fail": len(QUERIES) - n_match,
         "wall_sec": round(time.time() - t_start, 1),
-        "queries": out,
-    }
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"CORRECTNESS_FULL_r{rnd:02d}.json",
-    )
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print(json.dumps({"total": len(out), "match": n_match, "artifact": path}))
+    }))
     spark.stop()
+    if n_match != len(QUERIES):
+        raise SystemExit(1)
 
 
 if __name__ == "__main__":

@@ -7,9 +7,12 @@ each, and dumps ``explain("formatted")`` for every measured query to
 
 Usage:
     python measure_queries.py --names q5_region_revenue,dedup_components \
-        --sf-dir /root/testdata/sf0.1 --runs 3 --plan-dir plans/r17 \
+        --sf-dir /root/testdata/sf0.1 --runs 3 --plan-dir plans/run1 \
         --suffix before
     python measure_queries.py --headline ...   # all headline queries
+
+The r17 before/after dumps made this way are in ``plans/r17/`` at
+commit 462c6b7.
 
 Prints one JSON line per query and a final summary line, e.g.
     {"name": "q5_region_revenue", "hashfold_sec": 1.02, "noop_sec": 0.97}

@@ -34,7 +34,10 @@ known ones.  Streaming-wrapped queries execute their availableNow run
 as a side effect of building the frame — the audit therefore doubles
 as a bare-session build check for every registered callable.
 
-Usage:  python plan_audit.py <round>   → PLAN_AUDIT_r{N}.json
+Prints one status line per query and a one-line JSON summary; exits 1
+on any unexplained hit or build error.
+
+Usage:  python plan_audit.py
 """
 
 from __future__ import annotations
@@ -280,14 +283,13 @@ def count_real_scans(jnode, _seen_subqueries=None) -> int:
 
 
 def main() -> None:
-    if len(sys.argv) != 2 or not sys.argv[1].isdigit():
-        raise SystemExit("usage: python plan_audit.py <round-number>")
-    rnd = int(sys.argv[1])
+    if len(sys.argv) != 1:
+        raise SystemExit("usage: python plan_audit.py")
     sf = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.01")
 
     from pyspark.sql import SparkSession
 
-    from bigdata_20251_steam_spark.plans.registry import ordered_queries
+    from bigdata_20251_steam_spark.plans import QUERIES
 
     spark = (
         SparkSession.builder.master("local[16]")
@@ -301,7 +303,7 @@ def main() -> None:
     t0 = time.time()
     results: dict[str, dict] = {}
     violations = 0
-    for q in ordered_queries():
+    for q in QUERIES.values():
         try:
             jplan = q.fn(spark, sf)._jdf.queryExecution().executedPlan()
             plan = jplan.toString()
@@ -312,6 +314,7 @@ def main() -> None:
                 "detail": f"{type(e).__name__}: {e}"[:200],
             }
             violations += 1
+            print(q.name, "BUILD_ERROR", results[q.name]["detail"], flush=True)
             continue
         hits = {}
         for pat in PATTERNS:
@@ -332,10 +335,13 @@ def main() -> None:
             if hits
             else {"status": "clean", "n_scans": n_scans}
         )
-        print(q.name, results[q.name]["status"], flush=True)
+        unexplained = [p for p, r in hits.items() if r == "UNEXPLAINED"]
+        print(
+            q.name, results[q.name]["status"], f"scans={n_scans}",
+            *(f"UNEXPLAINED:{p}" for p in unexplained), flush=True,
+        )
 
-    artifact = {
-        "round": rnd,
+    summary = {
         "sf": sf,
         "total": len(results),
         "clean": sum(1 for v in results.values() if v["status"] == "clean"),
@@ -347,24 +353,8 @@ def main() -> None:
         ),
         "violations": violations,
         "wall_sec": round(time.time() - t0, 1),
-        "queries": results,
     }
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"PLAN_AUDIT_r{rnd:02d}.json",
-    )
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print(
-        json.dumps(
-            {
-                "total": artifact["total"],
-                "clean": artifact["clean"],
-                "whitelisted": artifact["whitelisted"],
-                "violations": violations,
-            }
-        )
-    )
+    print(json.dumps(summary))
     spark.stop()
     if violations:
         raise SystemExit(1)

@@ -35,7 +35,7 @@ committed prior round's artifact and fails loudly (exit 1) on
 unless the query is in ``SHUFFLE_WHITELIST`` with a written reason
 (the plan-audit convention).  New headliners are reported as baseline
 rows, never violations.  The full diff table lands in the artifact's
-``diff`` section and round_figures prints it for CHANGES.
+``diff`` section.
 
 Usage:  python shuffle_audit.py <round>      -> SHUFFLE_r{N}.json
         SPARK_GRAFT_SF_DIR to override the SF (default sf0.1).

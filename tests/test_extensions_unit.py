@@ -3663,127 +3663,6 @@ def test_mmr_diversify_semantics(spark):
         mmr_diversify(df, k=0)
 
 
-def test_r17_rotation_window():
-    """The r17 driver-window invariant, validated by EXECUTING the
-    rotation dict (the r10 lesson: never trust comment arithmetic):
-    exactly 50 names, and they are exactly the first 50 of
-    ordered_queries() — the 32 r16-note must-enters ahead of
-    everything, then the changed-code re-proves + new r17
-    registrations, then the three-round-stale cohort under the
-    documented alphabetical split (the 29 overflow names are itemized
-    in the registry's r18 note and must NOT hold a window slot)."""
-    from bigdata_20251_steam_spark.plans.registry import (
-        _R17_ROTATION,
-        ordered_queries,
-    )
-
-    assert len(_R17_ROTATION) == 50
-    first50 = {q.name for q in ordered_queries()[:50]}
-    assert first50 == set(_R17_ROTATION)
-    # the 32 four-rounds-stale must-enters lead the window
-    for name in (
-        "genre_distribution",
-        "hamming_topk",
-        "hard_negative_pairs",
-        "histogram_event_values",
-        "interval_event_counts",
-        "intra_doc_dedup",
-        "ivfadc_distortion_report",
-        "ivfadc_nprobe_sweep",
-        "ivfadc_search",
-        "key_skew_orders",
-        "logreg_quality_scores",
-        "minhash_dedup_pairs",
-        "minhash_signatures",
-        "multimodal_audio_roundtrip",
-        "multimodal_meta",
-        "multimodal_video_meta_roundtrip",
-        "nb_calibration_report",
-        "ngram_jaccard_pairs",
-        "pq_search_rerank",
-        "qbc_disagreement",
-        "quality_scores",
-        "review_bomb",
-        "streaming_genre_counts",
-        "streaming_pq_adjudicate",
-        "streaming_pq_probe",
-        "streaming_running_totals",
-        "streaming_token_budget",
-        "supplier_nation_stats",
-        "top_genres",
-        "top_spenders",
-        "user_value_quartiles",
-        "winnow_fingerprints",
-    ):
-        assert _R17_ROTATION[name] == 23, name
-    # changed-executed-path re-proves + the new registrations enter next
-    for name in (
-        "takedown_end_to_end",
-        "streaming_dedup_maintenance_bucketed",
-        "index_tombstone_delete",
-        "index_lifecycle_end_to_end",
-        "streaming_index_upsert",
-        "streaming_incremental_dedup",
-        "streaming_dedup_maintenance",
-        "incremental_dedup_bucketed",
-        "multimodal_features",
-        # late-r17 registrations (compressed-audio + video-frame
-        # decode roundtrips)
-        "multimodal_g711_roundtrip",
-        "multimodal_adpcm_roundtrip",
-        "multimodal_flac_roundtrip",
-        "video_frame_decode",
-        "multimodal_gif_roundtrip",
-        "multimodal_resize_roundtrip",
-        "multimodal_resample_roundtrip",
-        "streaming_media_decode",
-    ):
-        assert _R17_ROTATION[name] == 24, name
-    # the itemized r18 overflow is OUT of the window (including the
-    # four fills the late-r17 registrations displaced)
-    for name in (
-        "asof_join_nearest",
-        "blocklist_filter",
-        "bpe_packed_sequences",
-        "cross_split_contamination",
-        "daily_user_rank",
-        "dataset_card",
-        "dedup_canonical_by_pagerank",
-        "dedup_graph_pagerank",
-        "doc_chunks",
-        "embed_topk_lsh",
-        "gopher_quality_filter",
-        "hash_split_assignments",
-        "hll_user_rollup",
-        "hybrid_rrf_search",
-        "incremental_dedup_status",
-        "kmeans_clusters",
-        "minhash_dedup_resolve",
-        "nb_classifier_scores",
-        "nb_threshold_sweep",
-        "pii_redaction",
-        "player_windows",
-        "q1_pricing_summary",
-        "q5_region_revenue",
-        "session_windows",
-        "simhash_signatures",
-        "sliding_windows",
-        "streaming_bloom_decontaminate",
-        "streaming_dsir_gate",
-        "streaming_hll_windows",
-        "streaming_player_windows",
-        "streaming_segment_dedup",
-        "streaming_stream_join",
-        "temperature_mix_sample",
-        "token_budget_sample",
-        "token_counts",
-        "udtf_sentences",
-        "unigram_lm_scores",
-    ):
-        assert name not in _R17_ROTATION, name
-        assert name not in first50, name
-
-
 def test_hamming_topk_recall_floor(spark):
     """The binary-signature prefilter's quality claim at sf0.001: a
     64-bit sign signature (8 bytes/vector) + shortlist-50 exact

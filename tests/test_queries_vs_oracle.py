@@ -45,3 +45,6 @@ def test_entry_smoke(spark):
     # every queries() key with an oracle_sql() entry matches the registry
     qs, os_ = e.queries(), e.oracle_sql()
     assert set(os_) <= set(qs)
+    # the contract lists queries in registration order
+    assert list(qs) == list(QUERIES)
+    assert list(os_) == [n for n, q in QUERIES.items() if q.oracle is not None]

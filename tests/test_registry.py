@@ -2,9 +2,9 @@
 
 The registry's ``_load_all`` used to wrap the extension/streaming
 module imports in ``except ImportError: pass`` — a real import failure
-would silently deregister ~130 queries and shrink the driver window
-with no loud signal.  These tests pin the fixed contract: a poisoned
-module import fails the WHOLE registry load, loudly.
+would silently deregister ~130 queries with no loud signal.  These
+tests pin the fixed contract: a poisoned module import fails the WHOLE
+registry load, loudly.
 
 Subprocess-based (no Spark session needed): poisoning is simulated by
 pre-seeding ``sys.modules`` with ``None`` for one query module, which
