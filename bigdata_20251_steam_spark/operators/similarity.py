@@ -146,20 +146,11 @@ def _flt_arr_sql(c: list[float]) -> str:
 
 
 def _sqdist_to_sql(vec: str, center: list[float]) -> str:
-    """SQL twin of :func:`_sqdist_to` (optimization r18, guide §4)."""
+    """Double squared L2 between an array SQL expression and a literal
+    center (``zip_with`` + ``aggregate``)."""
     return (
         f"aggregate(zip_with({vec}, {_flt_arr_sql(center)}, "
         f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _sqdist_to(vec: Column, center: list[float]) -> Column:
-    # lit(list) — per-element .cast calls dropped (ADVICE r17)
-    c = F.lit([float(x) for x in center]).cast("array<double>")
-    return F.aggregate(
-        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 
@@ -566,23 +557,12 @@ def _int_arr_sql(c: list[int]) -> str:
     return "array(" + ",".join(f"{int(v)}L" for v in c) + ")"
 
 
-def _int_sqdist(qcol: Column, c: list[int]) -> Column:
-    """Integer squared L2 between a grid vector column and a literal."""
-    arr = F.lit([int(v) for v in c]).cast("array<long>")
-    return F.aggregate(
-        F.zip_with(qcol, arr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _int_assign_sql(q: str, cents: list[list[int]]) -> str:
-    """SQL twin of :func:`_int_assign`'s argmin struct (optimization
-    r18, guide §4): one JVM parse instead of ``k x 2`` py4j lambda
-    builds per assignment expression.  The centroid literals render as
-    SQL ``array(...L)`` text — CreateArray of long literals, which
-    ConstantFolding collapses to the exact Literal the ``F.lit`` form
-    built.  Same struct-min tie rule (lowest cluster index)."""
+    """:func:`_int_assign`'s argmin ``struct(d, c)`` over literal
+    centroids: one JVM parse instead of ``k x 2`` py4j lambda builds per
+    assignment expression.  The centroid literals render as SQL
+    ``array(...L)`` text, which ConstantFolding collapses to one
+    Literal.  Struct min: ties go to the lowest cluster index."""
     pairs = ",".join(
         f"named_struct('d', {_sq_sql(q, _int_arr_sql(c))}, 'c', {i})"
         for i, c in enumerate(cents)
@@ -721,36 +701,14 @@ def _pq_quantized(
 
 
 def _pq_sub_assign_sql(codebook: list[list[int]], sub: str) -> str:
-    """SQL twin of :func:`_pq_sub_assign` (optimization r18, guide §4) —
-    same struct-min argmin, one JVM parse; parity pinned in tests."""
+    """argmin code of one subspace slice over its literal codebook —
+    integer squared L2, ties to the lowest code (struct min, the
+    kmeans_exact rule)."""
     pairs = ",".join(
         f"named_struct('d', {_sq_sql(sub, _int_arr_sql(c))}, 'c', {i})"
         for i, c in enumerate(codebook)
     )
     return f"array_min(array({pairs})).c"
-
-
-def _pq_sub_assign(codebook: list[list[int]], sub: Column) -> Column:
-    """argmin code over one subspace codebook — integer squared L2,
-    ties to the lowest code (struct min, the kmeans_exact rule)."""
-    pairs = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.lit([int(v) for v in c]).cast("array<long>"),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                F.lit(i).alias("c"),
-            )
-            for i, c in enumerate(codebook)
-        ]
-    )
-    return F.array_min(pairs)["c"]
 
 
 def pq_train(
@@ -815,8 +773,8 @@ def _pq_train_grid(
         for s in range(m)
     ]
     for _ in range(iters):
-        # one-F.expr assignment array (r18, guide §4): the Column form
-        # built m x k_sub literal lists + 2 lambdas each per iteration
+        # the assignment array as one SQL string: a Column-API build
+        # would cost m x k_sub literal lists + 2 lambdas each per iteration
         entries = ",".join(
             "named_struct('s', {s}, 'c', {c}, 'sq', {sq})".format(
                 s=s,
@@ -1040,24 +998,12 @@ def hard_negative_topk(
 # ---------------------------------------------------------------------------
 
 
-def _centroid_matrix(cents: list[list[int]]) -> Column:
-    """Literal k x dim integer centroid matrix (array<array<long>>)."""
-    # lit(nested list) — in classic py4j mode still one call per
-    # element, but the per-element .cast calls are gone (~2x fewer
-    # round-trips) and ConstantFolding folds it to one Literal
-    # (ADVICE r17 corrected the single-Literal claim; only Spark
-    # Connect builds it as one node)
-    return F.lit([[int(v) for v in c] for c in cents]).cast(
-        "array<array<long>>"
-    )
-
-
 def _pinned_view(spark, tag: str, value, sql_type: str) -> str:
     """Register a pinned quantizer artifact (centroid matrix / PQ
     codebooks) as a ONE-ROW temp view and return its name (r13, r12
     verdict #2 — the IVFADC literal-compile fix).
 
-    The literal form (:func:`_centroid_matrix` et al.) builds a
+    The literal form (``F.lit`` of the nested list) builds a
     ``CreateArray`` tree of ~1-2k ``Literal`` nodes that Catalyst
     re-analyzes at EVERY reference — and the salted two-stage rank
     references the scoring frame twice, so ``ivfadc_search``'s
@@ -1150,28 +1096,25 @@ def _sqdist_cols(a: Column, b: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# SQL-string twins of the HOF builders (optimization r18, guide §4/§7.3).
+# SQL-string builders of the IVFADC higher-order expressions.
 #
 # Each Python lambda handed to F.transform/F.zip_with/F.aggregate is
 # converted driver-side via ``_create_lambda`` — several py4j round-trips
-# per lambda — and the ivfadc-family query builders stack dozens of them,
-# which measured as the dominant residual construct cost after r17
-# (~0.5 s per ivfadc query).  The same higher-order expressions written
-# as ONE SQL string parse JVM-side in a single round-trip and analyze to
-# the IDENTICAL Catalyst operators (same functions, same casts, same tie
-# rules), so results are bit-identical and plans differ only in lambda
-# variable names.  The Column forms above/below are kept as parity twins
-# (pinned by tests/test_extensions_unit.py::test_sql_twin_builders_parity).
+# per lambda — and the ivfadc-family query builders stack dozens of them
+# (~0.5 s of construction per ivfadc query).  Written as SQL
+# text, each expression parses JVM-side in one round-trip.  The DuckDB
+# oracles replay them, and tests/test_extensions_unit.py::
+# test_sql_builders_expected_rows pins them against hand-computed rows.
 #
-# Composition hygiene: every twin's internal lambda variables are chosen
-# so nesting one twin inside another never shadows a variable the inner
-# expression references (inner sqdist uses x/y/acc; enclosing transforms
-# use c/i/j/s/w/ci/cbs/code).
+# Composition hygiene: each builder's internal lambda variables are
+# chosen so nesting one inside another never shadows a variable the
+# inner expression references (inner sqdist uses x/y/acc; enclosing
+# transforms use c/i/j/s/w/ci/cbs/code).
 # ---------------------------------------------------------------------------
 
 
 def _sq_sql(a: str, b: str) -> str:
-    """SQL twin of :func:`_sqdist_cols` over two array SQL expressions."""
+    """Integer squared L2 between two array SQL expressions."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
@@ -1179,7 +1122,9 @@ def _sq_sql(a: str, b: str) -> str:
 
 
 def _argmin_cell_sql(q: str, cm: str) -> str:
-    """SQL twin of :func:`_argmin_cell` (struct min, ties to lowest cell)."""
+    """Nearest cell ``struct(d, c)`` of ``q`` over the centroid matrix
+    ``cm`` — struct min, ties to the lowest cell (transform's 0-based
+    index replays :func:`_int_assign`'s ``enumerate``)."""
     return (
         f"array_min(transform({cm}, (c, i) -> "
         f"named_struct('d', {_sq_sql(q, 'c')}, 'c', i)))"
@@ -1187,7 +1132,8 @@ def _argmin_cell_sql(q: str, cm: str) -> str:
 
 
 def _probes_sql(q: str, cm: str, nprobe: int) -> str:
-    """SQL twin of :func:`_probes_of` (deterministic (d, j) argsort)."""
+    """The ``nprobe`` nearest cell ids of ``q`` over ``cm`` — a
+    deterministic ``(distance, cell)`` argsort, ties to the lower cell."""
     return (
         f"slice(transform(array_sort(transform({cm}, (c, j) -> "
         f"named_struct('d', {_sq_sql(q, 'c')}, 'j', j))), s -> s.j), "
@@ -1204,7 +1150,8 @@ def _residual_sql(q: str, cm: str, cell: str) -> str:
 
 
 def _recon_sql(cb: str, codes: str) -> str:
-    """SQL twin of :func:`_recon_col`."""
+    """Residual reconstruction of an m-code array under the codebook
+    array ``cb`` (the decoded codewords, concatenated)."""
     return (
         f"flatten(transform({codes}, (code, s) -> "
         f"element_at(element_at({cb}, s + 1), CAST(code + 1 AS INT))))"
@@ -1212,7 +1159,8 @@ def _recon_sql(cb: str, codes: str) -> str:
 
 
 def _codes_sql(cb: str, q: str, subdim: int) -> str:
-    """SQL twin of :func:`_codes_col` (per-subspace argmin codes)."""
+    """Per-subspace argmin codes of ``q`` over the codebook array ``cb``
+    — ties to the lowest code via struct min."""
     sub = f"slice({q}, s * {int(subdim)} + 1, {int(subdim)})"
     return (
         f"transform({cb}, (cbs, s) -> array_min(transform(cbs, (w, ci) -> "
@@ -1221,7 +1169,19 @@ def _codes_sql(cb: str, q: str, subdim: int) -> str:
 
 
 def _lut_sql(cb: str, qres: str, subdim: int) -> str:
-    """SQL twin of :func:`_ivfadc_lut_col` (per-(query, cell) ADC LUT)."""
+    """Per-(query, cell) ADC lookup table over the codebook array
+    (Jégou §V's actual ADC formulation):
+    ``lut[s][c]`` = integer squared L2 between the query residual's
+    subspace-``s`` slice and codeword ``c``.
+
+    ``||qres − recon(codes)||² = Σ_s ||qres_sub[s] − cb[s][codes[s]]||²``
+    regroups exactly (int64 addition is associative), so scoring a
+    candidate becomes ``m`` table lookups (:func:`_lut_adc_sql`) instead
+    of a dim-element zip_with/aggregate per pair, and the candidate side
+    never needs its decoded reconstruction.  Spark interprets
+    higher-order-function lambdas (no codegen), so moving the O(dim)
+    arithmetic from per-candidate rows onto the bounded (query × probed
+    cell) frame is the dominant term in the ivfadc headline cost."""
     sub = f"slice({qres}, s * {int(subdim)} + 1, {int(subdim)})"
     return (
         f"transform({cb}, (cbs, s) -> transform(cbs, w -> "
@@ -1230,135 +1190,14 @@ def _lut_sql(cb: str, qres: str, subdim: int) -> str:
 
 
 def _lut_adc_sql(lut: str, codes: str) -> str:
-    """SQL twin of :func:`_lut_adc_col` (``Σ_s lut[s][codes[s]]``)."""
+    """ADC distance from a :func:`_lut_sql` table and an m-code array:
+    ``Σ_s lut[s][codes[s]]`` — m element_at lookups + m adds per
+    candidate, shape-agnostic in k_sub (per-cell retrained codebooks
+    keep their own inner length)."""
     return (
         f"aggregate(transform({codes}, (code, s) -> "
         f"element_at(element_at({lut}, CAST(s + 1 AS INT)), "
         f"CAST(code + 1 AS INT))), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
-def _argmin_cell(qcol: Column, cmat: Column) -> Column:
-    """Integer argmin ``struct(d, c)`` of ``qcol`` over the centroid
-    MATRIX COLUMN — ties to the lowest index via struct min, the exact
-    :func:`_int_assign` rule (transform's 0-based index replays
-    ``enumerate``)."""
-    return F.array_min(
-        F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                _sqdist_cols(qcol, c).alias("d"), i.alias("c")
-            ),
-        )
-    )
-
-
-def _probes_of(qcol: Column, cmat: Column, nprobe: int) -> Column:
-    """The ``nprobe`` nearest cell ids for a query vector over the
-    centroid matrix column — deterministic ``(distance, cell)``
-    argsort, ties to the lower cell id (the :func:`ivfadc_search`
-    literal rule, column form)."""
-    return F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    cmat,
-                    lambda c, j: F.struct(
-                        _sqdist_cols(qcol, c).alias("d"), j.alias("j")
-                    ),
-                )
-            ),
-            lambda s: s["j"],
-        ),
-        1,
-        nprobe,
-    )
-
-
-def _recon_col(cb: Column, codes: Column) -> Column:
-    """Residual reconstruction from an m-code column under the codebook
-    COLUMN (the :func:`_ivfadc_recon` semantics, column form)."""
-    return F.flatten(
-        F.transform(
-            codes,
-            lambda code, s: F.element_at(
-                F.element_at(cb, s + F.lit(1)),
-                (code + F.lit(1)).cast("int"),
-            ),
-        )
-    )
-
-
-def _codes_col(cb: Column, qcol: Column, subdim: int) -> Column:
-    """Per-subspace argmin codes over the codebook COLUMN — ties to
-    the lowest code via struct min (the :func:`_pq_sub_assign` rule,
-    column form)."""
-    return F.transform(
-        cb,
-        lambda cbs, s: F.array_min(
-            F.transform(
-                cbs,
-                lambda w, ci: F.struct(
-                    _sqdist_cols(
-                        F.slice(
-                            qcol,
-                            s * F.lit(subdim) + F.lit(1),
-                            F.lit(subdim),
-                        ),
-                        w,
-                    ).alias("d"),
-                    ci.alias("c"),
-                ),
-            )
-        )["c"],
-    )
-
-
-def _ivfadc_lut_col(cb: Column, qres: Column, subdim: int) -> Column:
-    """Per-(query, cell) ADC lookup table over the codebook COLUMN
-    (optimization r17, guide §1.2 "per-task work" — Jégou §V's actual
-    ADC formulation): ``lut[s][c]`` = integer squared L2 between the
-    query-residual's subspace-``s`` slice and codeword ``c``.
-
-    Because ``||qres − recon(codes)||² = Σ_s ||qres_sub[s] −
-    cb[s][codes[s]]||²`` regroups exactly (int64 addition is
-    associative), scoring a candidate becomes ``m`` table lookups
-    (:func:`_lut_adc_col`) instead of a 64-element zip_with/aggregate
-    per pair — and the candidate side no longer needs the decoded
-    reconstruction at all, eliminating the per-corpus-row
-    :func:`_recon_col` pass.  Spark evaluates higher-order-function
-    lambdas INTERPRETED (no codegen), so moving the O(dim) arithmetic
-    from per-candidate rows onto the bounded (query × probed-cell)
-    frame is the dominant term in the measured ivfadc headline cost.
-    Same integers, same tie rules — bit-identical results (the
-    registered oracles replay both formulations)."""
-    return F.transform(
-        cb,
-        lambda cbs, s: F.transform(
-            cbs,
-            lambda w: _sqdist_cols(
-                F.slice(qres, s * F.lit(subdim) + F.lit(1), F.lit(subdim)),
-                w,
-            ),
-        ),
-    )
-
-
-def _lut_adc_col(lut: Column, codes: Column) -> Column:
-    """ADC distance from a per-(query, cell) LUT (:func:`_ivfadc_lut_col`)
-    and an m-code column: ``Σ_s lut[s][codes[s]]`` — m element_at
-    lookups + m adds per candidate, shape-agnostic in k_sub (per-cell
-    retrained codebooks keep their own inner length)."""
-    return F.aggregate(
-        F.transform(
-            codes,
-            lambda code, s: F.element_at(
-                F.element_at(lut, (s + F.lit(1)).cast("int")),
-                (code + F.lit(1)).cast("int"),
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
     )
 
 
@@ -1454,25 +1293,6 @@ def ivfadc_train(
     )
 
 
-def _ivfadc_recon(codebooks: list[list[list[int]]], codes: Column) -> Column:
-    """Decode an m-code column back to the residual reconstruction
-    under literal codebooks (array<long> of the full dim)."""
-    m = len(codebooks)
-    return F.flatten(
-        F.array(
-            *[
-                F.element_at(
-                    F.lit(
-                        [[int(v) for v in c] for c in codebooks[s]]
-                    ).cast("array<array<long>>"),
-                    (codes.getItem(s) + 1).cast("int"),
-                )
-                for s in range(m)
-            ]
-        )
-    )
-
-
 def ivfadc_encode(
     embeddings: DataFrame,
     coarse_cents: list[list[int]],
@@ -1483,13 +1303,29 @@ def ivfadc_encode(
 ) -> DataFrame:
     """The stored IVFADC index frame: ``(vec_id, cluster, codes)``.
 
-    Zero-shuffle scan-fused projection (coarse argmin + residual +
-    per-subspace argmin, all over literals).  At 100 TB this is the
-    write-path pass whose output lands PARTITIONED BY ``cluster`` so
-    probe routing becomes partition pruning."""
+    One projection through the Arrow encode (coarse argmin + residual
+    + per-subspace argmin, :func:`_np_ivfadc_encode_udf`).  At 100 TB
+    this is the write-path pass whose output lands PARTITIONED BY
+    ``cluster`` so probe routing becomes partition pruning."""
     return _ivfadc_working(
         embeddings, coarse_cents, codebooks, scale, id_col, vec_col
     ).select("vec_id", "cluster", "codes")
+
+
+def _round_half_up(x: np.ndarray) -> np.ndarray:
+    """Spark ``round(double)`` at scale 0, elementwise: HALF_UP, halves
+    away from zero (numpy's ``rint`` sends them to even).
+
+    Spark rounds the double's decimal string, whose fraction reaches 0.5
+    exactly when the double's does, so the half test reads the exact
+    fraction ``a - floor(a)``.  ``floor(a + 0.5)`` would round the sum
+    first and send 0.49999999999999994 to 1 and 2**52 + 1 to
+    2**52 + 2.  The subtraction is exact for every ``|x| < 2**52``, and
+    every double at or above that is already an integer."""
+    a = np.abs(x)
+    q = np.floor(a)
+    q += (a - q) >= 0.5
+    return np.copysign(q, x)
 
 
 def _np_ivfadc_encode_udf(
@@ -1497,35 +1333,28 @@ def _np_ivfadc_encode_udf(
     codebooks: list[list[list[int]]],
     scale: int,
 ):
-    """Arrow-vectorized IVFADC encode (optimization r18, guide §4.2 —
-    the r17 verdict's #1 item, attack (b)): coarse argmin + residual +
-    per-subspace codes computed by numpy int64 matrix arithmetic over
-    whole Arrow batches, replacing the INTERPRETED higher-order-function
-    chain that Spark evaluates per row without codegen.
+    """Arrow-vectorized IVFADC encode, the one encoder of batch and
+    streaming frames: coarse argmin + residual + per-subspace codes in
+    numpy int64 over whole Arrow batches, instead of the interpreted
+    per-row higher-order-function chain Spark runs without codegen.
 
-    Bit-exact by construction: quantization replicates Spark's
-    ``round(double)`` HALF_UP (away from zero — NOT numpy's banker's
-    rint); int64 squared-L2 sums are exact; ``np.argmin`` returns the
-    FIRST minimum, which is precisely the struct-min ties-to-lowest
-    rule of the HOF form.  Parity pinned by
-    test_np_encode_matches_hof_encode and by every registered ivfadc
-    oracle (hash-exact).  Measured on the encode pass: ~tie at sf0.1
-    (2k vectors — Python-worker fork dominates), 1.56 s -> 0.59 s at
-    10x (interleaved noop A/B, one session) — the per-row interpreted
-    arithmetic was the scale bottleneck, exactly as the r17 verdict
-    called it.
+    It gives the integers the inline SQL pipeline gives (the registered
+    ivfadc oracles replay that pipeline hash-exactly): quantization is
+    :func:`_round_half_up` of the same double product ``x * scale``;
+    int64 squared-L2 sums are exact; ``argmin`` returns the FIRST
+    minimum, the struct-min ties-to-lowest rule.  Pinned by
+    test_np_encode_matches_hof_encode.  Measured on the encode pass:
+    ~tie at sf0.1 (2k vectors, Python-worker fork dominates), 1.56 s
+    -> 0.59 s at 10x.
 
-    A NULL embedding row yields (cluster = 0, NULL qr, codes =
-    [0]*m) — the HOF form's exact semantics: every distance is NULL,
-    struct comparison falls through to the index, and the lowest
-    cell/code (0) wins.  The artifacts ride the closure (kilobytes,
-    broadcast once per executor); heavy work is one matmul-shaped
-    pass per batch (guide §4.5's iterator shape is unnecessary —
-    there is no per-task init beyond the closure unpickle).
+    NULLs follow SQL's per-element semantics.  A NULL element (NaN once
+    in Arrow) makes every coarse distance NULL, so the row goes to cell
+    0; its residual keeps NULL at that position, and each subspace that
+    holds a NULL gets code 0 while the others encode as usual.  A NULL
+    embedding row is the all-NULL case: cell 0, NULL residual, codes
+    ``[0] * m``.  The artifacts ride the closure (kilobytes, shipped
+    once per executor).
     """
-    import numpy as np
-    import pandas as pd
-
     cents = np.asarray(
         [[int(v) for v in c] for c in coarse_cents], dtype=np.int64
     )
@@ -1540,35 +1369,33 @@ def _np_ivfadc_encode_udf(
     @pandas_udf("struct<cluster:int, qr:array<bigint>, codes:array<int>>")
     def _enc(v: pd.Series) -> pd.DataFrame:
         n = len(v)
-        # null-embedding rows: every distance is NULL, so the HOF
-        # struct-min falls through to the index — cell 0 and code 0
-        # win, while the residual itself stays NULL; replicate exactly
-        cluster = np.full(n, 0, dtype=object)
+        cluster = np.zeros(n, dtype=np.int32)
         qr_col = np.full(n, None, dtype=object)
-        codes_col = np.full(n, None, dtype=object)
-        codes_col[:] = [np.zeros(m, dtype=np.int32)] * n
+        codes = np.zeros((n, m), dtype=np.int32)
         ok = np.flatnonzero(v.notna().to_numpy())
         if len(ok):
             x = np.stack(v.iloc[ok].to_numpy()).astype(np.float64) * fscale
-            # Spark round(double) is HALF_UP (away from zero), not rint
-            q = np.where(
-                x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)
-            ).astype(np.int64)
+            null = np.isnan(x)
+            null_rows = null.any(axis=1)
+            q = _round_half_up(np.where(null, 0.0, x)).astype(np.int64)
             d = ((q[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            cl = d.argmin(axis=1)  # first min == ties-to-lowest cell
+            cl = np.where(null_rows, 0, d.argmin(axis=1))
             qr = q - cents[cl]
-            codes = np.empty((len(ok), m), dtype=np.int32)
             for s in range(m):
-                sub = qr[:, s * subdim:(s + 1) * subdim]
-                ds = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(
+                sl = slice(s * subdim, (s + 1) * subdim)
+                ds = ((qr[:, None, sl] - books[s][None, :, :]) ** 2).sum(
                     axis=2
                 )
-                codes[:, s] = ds.argmin(axis=1)
-            cluster[ok] = [int(c) for c in cl]
-            qr_col[ok] = list(qr)
-            codes_col[ok] = list(codes)
+                codes[ok, s] = np.where(
+                    null[:, sl].any(axis=1), 0, ds.argmin(axis=1)
+                )
+            cluster[ok] = cl
+            rows = list(qr)
+            for i in np.flatnonzero(null_rows):
+                rows[i] = np.where(null[i], None, qr[i])
+            qr_col[ok] = rows
         return pd.DataFrame(
-            {"cluster": cluster, "qr": qr_col, "codes": codes_col}
+            {"cluster": cluster, "qr": qr_col, "codes": list(codes)}
         )
 
     return _enc
@@ -1583,61 +1410,31 @@ def _ivfadc_working(
     vec_col: str,
 ) -> DataFrame:
     """Shared IVFADC working frame ``(vec_id, cluster, qr, codes, _cb)``
-    with ``qr`` the integer residual and the pinned artifacts hoisted
-    into scalar-subquery columns (r13, r12 verdict #2): one zero-shuffle
-    scan-fused projection, but every artifact reference is a single
-    ``ScalarSubquery`` node instead of a ~1k-literal ``CreateArray``
-    tree, cutting the Catalyst compile cost that dominated the r12
-    ``ivfadc_search``/``ivfadc_distortion_report`` headlines.  Same
-    integers, same tie rules — bit-identical to the literal form (the
-    registered oracles replay both)."""
-    spark = embeddings.sparkSession
-    subdim = len(codebooks[0][0])
-    cbv = _pinned_scalar(_cb_view(spark, codebooks))
-    if not embeddings.isStreaming:
-        # Arrow-vectorized encode (r18, guide §4.2): numpy int64 over
-        # whole batches instead of the interpreted per-row HOF chain —
-        # bit-exact (see _np_ivfadc_encode_udf), 2.7x on the encode
-        # pass at data-dominated scale.  Only (vec_id, vec) crosses the
-        # Python boundary (guide §4.1 column hygiene); the spread keeps
-        # the single-row-group local scan parallel, a no-op at scale.
-        from .dedup import spread_partitions
+    with ``qr`` the integer residual, encoded by
+    :func:`_np_ivfadc_encode_udf` on batch and streaming frames alike,
+    and the codebooks hoisted into a scalar-subquery column: one
+    ``ScalarSubquery`` node per reference instead of a ~1k-literal
+    ``CreateArray`` tree.  Only (vec_id, vec) crosses the Python
+    boundary; the spread keeps a single-row-group scan parallel and
+    passes a stream through unchanged."""
+    from .dedup import spread_partitions
 
-        enc = _np_ivfadc_encode_udf(coarse_cents, codebooks, scale)
-        base = spread_partitions(
-            embeddings.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
-            )
+    enc = _np_ivfadc_encode_udf(coarse_cents, codebooks, scale)
+    base = spread_partitions(
+        embeddings.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
         )
-        return (
-            base.select("vec_id", enc(F.col("_v")).alias("_e"))
-            .select(
-                "vec_id",
-                F.col("_e.cluster").alias("cluster"),
-                F.col("_e.qr").alias("qr"),
-                F.col("_e.codes").alias("codes"),
-            )
-            .withColumn("_cb", cbv)
+    )
+    cbv = _pinned_scalar(_cb_view(embeddings.sparkSession, codebooks))
+    return (
+        base.select("vec_id", enc(F.col("_v")).alias("_e"))
+        .select(
+            "vec_id",
+            F.col("_e.cluster").alias("cluster"),
+            F.col("_e.qr").alias("qr"),
+            F.col("_e.codes").alias("codes"),
         )
-    # streaming frames keep the pure-JVM SQL-twin form (r18) — same
-    # Catalyst operators as the r17 lambdas, one JVM parse per column
-    cm = _pinned_scalar(_cmat_view(spark, coarse_cents))
-    grid = (
-        _pq_quantized(embeddings, scale, id_col, vec_col)
-        .withColumn("_cm", cm)
         .withColumn("_cb", cbv)
-    )
-    res = grid.withColumn(
-        "cluster", F.expr(_argmin_cell_sql("q", "_cm") + ".c")
-    ).withColumn(
-        "qr", F.expr(_residual_sql("q", "_cm", "cluster"))
-    )
-    return res.select(
-        "vec_id",
-        "cluster",
-        "qr",
-        F.expr(_codes_sql("_cb", "qr", subdim)).alias("codes"),
-        "_cb",
     )
 
 
@@ -1732,7 +1529,7 @@ def ivfadc_search(
     # pass is encode ONLY (optimization r17): the decoded
     # reconstruction is never materialized, because ADC scoring runs
     # against the per-(query, cell) LUT below (same integers — see
-    # :func:`_ivfadc_lut_col`).
+    # :func:`_lut_sql`).
     enc = ivfadc_encode(
         embeddings, coarse_cents, codebooks, scale, id_col, vec_col
     )
@@ -1929,9 +1726,9 @@ def ivfadc_search_pruned(
     if ts is not None:
         idx = idx.join(F.broadcast(ts), "vec_id", "left_anti")
     # The query batch is already a driver-side literal, so the ADC LUT
-    # (optimization r17 — see :func:`_ivfadc_lut_col`) is computed in
+    # (see :func:`_lut_sql`) is computed in
     # driver integer arithmetic per (query, probed cell): the store is
-    # never decoded (no per-row _recon_col pass), candidates score via
+    # never decoded (no per-row reconstruction), candidates score via
     # m lookups, and the codebook artifact never enters the plan at
     # all.  Per-cell codebook OVERRIDES route here exactly as decode
     # did: the LUT for an overridden cell is built from ITS codebook.
@@ -2029,9 +1826,9 @@ def ivfadc_topk_frame(
     # corpus pass is encode ONLY (optimization r17): candidates score
     # via the per-(query, cell) ADC LUT computed on the exploded probe
     # frame — same integers as decoding the snapshot per row (see
-    # :func:`_ivfadc_lut_col`), but the O(dim) arithmetic runs on
-    # |flagged| x nprobe rows instead of every candidate pair, and the
-    # per-corpus-row _recon_col pass disappears.
+    # :func:`_lut_sql`), but the O(dim) arithmetic runs on
+    # |flagged| x nprobe rows instead of every candidate pair, and no
+    # corpus row is decoded.
     enc = ivfadc_encode(
         embeddings, coarse_cents, codebooks, scale, id_col, vec_col
     )
@@ -2250,9 +2047,9 @@ def mmr_diversify(cands: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def sign_signature(qcol: Column, dim: int = 64) -> list[Column]:
-    """Pack a grid vector's SIGN BITS into two 32-bit halves
-    ``(sig_lo, sig_hi)`` (r12) — the 8-bytes-per-vector binary
+def _sign_signature_sql(q: str, dim: int = 64) -> list[str]:
+    """SQL for a grid vector's SIGN BITS packed into two 32-bit halves
+    ``(sig_lo, sig_hi)`` — the 8-bytes-per-vector binary
     signature billion-scale ANN systems keep memory-resident as the
     stage-0 prefilter (sign quantization; Charikar's hyperplane-LSH
     degenerate case where the planes are the coordinate axes).
@@ -2263,36 +2060,10 @@ def sign_signature(qcol: Column, dim: int = 64) -> list[Column]:
     one 64-bit word: every packed value stays a small POSITIVE long,
     so neither engine's shift/overflow semantics are in play (the
     XOR+popcount distance is two's-complement-safe either way, but
-    the BUILD path avoids the 1<<63 hazard entirely)."""
+    the BUILD path avoids the 1<<63 hazard entirely).  One CASE-per-bit
+    fold per half, parsed JVM-side in one call."""
     if dim != 64:
-        raise ValueError("sign_signature: packs exactly 64 dims")
-    halves = []
-    for h in range(2):
-        powers = F.array(
-            *[F.lit(1 << j).cast("long") for j in range(32)]
-        )
-        halves.append(
-            F.aggregate(
-                F.zip_with(
-                    F.slice(qcol, h * 32 + 1, 32),
-                    powers,
-                    lambda x, p: F.when(x > 0, p).otherwise(
-                        F.lit(0).cast("long")
-                    ),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-        )
-    return halves
-
-
-def _sign_signature_sql(q: str, dim: int = 64) -> list[str]:
-    """SQL twin of :func:`sign_signature` (optimization r18, guide §4):
-    same CASE-per-bit fold, one JVM parse per half instead of ~68 py4j
-    literal/lambda builds.  Parity pinned next to the other twins."""
-    if dim != 64:
-        raise ValueError("sign_signature: packs exactly 64 dims")
+        raise ValueError("_sign_signature_sql: packs exactly 64 dims")
     out = []
     for h in range(2):
         powers = ",".join(f"{1 << j}L" for j in range(32))
@@ -3016,9 +2787,9 @@ def _pq_train_grid_cells(
       CASE ladder (r16, ADVICE r15: the r15 slot-per-cell-id layout
       padded the artifact to ``max(cells)+1`` slots with filler
       books, so its size scaled with the max drifted id rather than
-      ``|drifted|``) — and the argmin is the column form of
-      :func:`_pq_sub_assign` — ``array_min`` over ``struct(d, c)``,
-      ties to the lowest code;
+      ``|drifted|``) — and the argmin is the :func:`_pq_sub_assign_sql`
+      rule — ``array_min`` over ``struct(d, c)``, ties to the lowest
+      code;
     - UPDATE: the same driver-side ``floor(sum/n)`` fold, now over a
       collect bounded by ``|cells| * m * k_sub * subdim``; an emptied
       code keeps its centroid.

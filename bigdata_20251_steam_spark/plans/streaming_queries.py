@@ -1326,13 +1326,7 @@ def q_streaming_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         _IVFADC_CENTS,
         _IVFADC_CODEBOOKS,
     )
-    grid = stream.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.round(x * F.lit(1000.0)).cast("long"),
-        ).alias("q"),
-    )
+    grid = sim._pq_quantized(stream, 1000, "vec_id", "embedding")
     probe = sim._ivf_residuals_hoisted(grid, _IVFADC_CENTS).select(
         "vec_id", F.col("cluster").alias("cell"), F.col("q").alias("qr")
     )
@@ -1506,13 +1500,7 @@ def q_streaming_pq_adjudicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _IVFADC_CENTS,
         _IVFADC_CODEBOOKS,
     )
-    grid = stream.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.round(x * F.lit(1000.0)).cast("long"),
-        ).alias("q"),
-    )
+    grid = sim._pq_quantized(stream, 1000, "vec_id", "embedding")
     probe = sim._ivf_residuals_hoisted(grid, _IVFADC_CENTS).select(
         "vec_id", F.col("cluster").alias("cell"), F.col("q").alias("qr")
     )

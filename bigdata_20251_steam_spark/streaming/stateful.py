@@ -83,79 +83,3 @@ def running_totals(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def running_totals_tws(
-    stream: DataFrame, key_col: str = "user_id", value_col: str = "value"
-) -> DataFrame:
-    """``running_totals`` on the transformWithStateInPandas API (Spark 4).
-
-    Same semantics and emission contract as :func:`running_totals`, on
-    the successor API: explicit ``ValueState`` via a ``StatefulProcessor``
-    (vs the single implicit ``GroupState``), lifecycle hooks, and room
-    for multiple named state variables / timers per key — the direction
-    custom stateful operators are headed.  Requires the RocksDB state
-    store provider (set in ``session.py``).  Parity with the batch
-    groupBy is pinned in ``tests/test_stateful_storage.py`` — the test
-    SKIPS in this container because TWS's state-server protocol needs
-    ``google.protobuf``, which is not importable here (r14 probe:
-    ``transform_with_state_driver_worker`` dies with ``ImportError:
-    cannot import name 'descriptor' from 'google.protobuf'``; r15
-    re-probe 2026-08-16: ``import google.protobuf`` now raises
-    ``ModuleNotFoundError: No module named 'google'`` — the package is
-    absent outright, and installs are disallowed in this environment;
-    r16 re-probe 2026-08-16: unchanged, still ``No module named
-    'google'``; r17 re-probe 2026-08-16: unchanged — flip the
-    env-gated test the day ``import google.protobuf`` succeeds);
-    on a normally-provisioned cluster the same code runs as-is.  The
-    applyInPandasWithState form above is the executed tier in this repo.
-
-    The processor class is defined inside this function so cloudpickle
-    ships it BY VALUE to Python workers (module-level classes pickle by
-    reference; see operators/multimodal.py for the precedent).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    vcol = value_col
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s, m = (
-                self._totals.get() if self._totals.exists() else (0, 0.0, None)
-            )
-            for pdf in rows:
-                vals = pdf[vcol].dropna()
-                n += len(pdf)
-                s += float(vals.sum())
-                if len(vals):
-                    batch_max = float(vals.max())
-                    m = batch_max if m is None else max(m, batch_max)
-            self._totals.update((n, s, m))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [s],
-                    "max_value": [m],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select(key_col, vcol)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=_RunningTotals(),
-            outputStructType=RUNNING_TOTALS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

@@ -1,11 +1,12 @@
-"""Full-registry correctness sweep on a BARE session at sf0.01.
+"""Registry correctness sweep on a BARE session at sf0.01.
 
 Replicates the driver's comparison (rows+schema+value equality,
-order-insensitive) for EVERY registered query, in registration order.
+order-insensitive) for every registered query in registration order,
+or for just the named ones (the fast loop while working on a few).
 Prints one status line per query (with the mismatch or error detail)
 and a one-line JSON summary; exits 1 when any query is not a match.
 
-Usage:  python full_registry_sweep.py
+Usage:  python full_registry_sweep.py [<query> ...]
         SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.01 to override the SF.
 """
 
@@ -21,14 +22,17 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tes
 
 
 def main() -> None:
-    if len(sys.argv) != 1:
-        raise SystemExit("usage: python full_registry_sweep.py")
     sf = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.01")
 
     from pyspark.sql import SparkSession
 
     from bigdata_20251_steam_spark.plans import QUERIES
     from oracle_harness import compare, duckdb_run
+
+    unknown = [n for n in sys.argv[1:] if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    chosen = [QUERIES[n] for n in sys.argv[1:]] or list(QUERIES.values())
 
     spark = (
         SparkSession.builder.master("local[16]")
@@ -41,7 +45,7 @@ def main() -> None:
 
     n_match = 0
     t_start = time.time()
-    for q in QUERIES.values():
+    for q in chosen:
         t0 = time.time()
         try:
             got = q.fn(spark, sf)
@@ -57,13 +61,13 @@ def main() -> None:
 
     print(json.dumps({
         "sf": sf,
-        "total": len(QUERIES),
+        "total": len(chosen),
         "match": n_match,
-        "fail": len(QUERIES) - n_match,
+        "fail": len(chosen) - n_match,
         "wall_sec": round(time.time() - t_start, 1),
     }))
     spark.stop()
-    if n_match != len(QUERIES):
+    if n_match != len(chosen):
         raise SystemExit(1)
 
 

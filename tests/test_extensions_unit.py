@@ -3776,11 +3776,11 @@ def test_r12_operators_degenerate_inputs(spark):
     import pytest as _pytest
 
     from bigdata_20251_steam_spark.operators.similarity import (
+        _sign_signature_sql,
         hamming_topk_rerank,
         ivfadc_distortion_report,
         ivfadc_topk_frame,
         mmr_diversify,
-        sign_signature,
     )
     from bigdata_20251_steam_spark.plans.extension_queries import (
         _IVFADC_CENTS,
@@ -3813,7 +3813,7 @@ def test_r12_operators_degenerate_inputs(spark):
 
     # parameter guards
     with _pytest.raises(ValueError, match="packs exactly 64"):
-        sign_signature(None, dim=32)
+        _sign_signature_sql("q", dim=32)
     with _pytest.raises(ValueError, match="k must be <= shortlist"):
         hamming_topk_rerank(emb, query_ids=[1], k=9, shortlist=3)
     with _pytest.raises(ValueError, match="nprobe must be in"):
@@ -3832,17 +3832,17 @@ def test_r12_operators_degenerate_inputs(spark):
     assert r["mean_err"] == r["max_err"] == r["total_err"] >= 0
 
 
-def test_pinned_artifact_forms_match_literal(spark):
-    """r13 (r12 verdict #2): the scalar-subquery artifact forms —
-    coarse argmin, probe argsort, per-subspace codes, reconstruction —
-    replay the LITERAL forms bit-for-bit, including both tie rules
-    (equidistant centroids -> lowest cell; equidistant codewords ->
-    lowest code).  This is the cross-check that keeps the literal
-    helpers (_int_assign/_pq_sub_assign/_ivfadc_recon) as the executable
-    reference for the hoisted plan shapes, and it pins the
-    CollapseProject behavior the hoist relies on: a scalar subquery
-    materialized via withColumn may be folded INTO a higher-order
-    function after analysis and still execute."""
+def test_sql_builders_expected_rows(spark):
+    """The SQL-string IVFADC builders the query builders construct
+    (_argmin_cell_sql/_probes_sql/_residual_sql/_codes_sql/_recon_sql/
+    _lut_sql/_lut_adc_sql/_int_assign_sql/_pq_sub_assign_sql/
+    _sign_signature_sql/_sqdist_to_sql) give hand-computed rows, with
+    both tie rules hit (equidistant centroids -> lowest cell;
+    equidistant codewords -> lowest code).  The artifacts ride as
+    ``F.lit`` columns and as pinned scalar-subquery views: the second
+    form pins the CollapseProject behavior the hoist relies on (a
+    scalar subquery materialized via withColumn may be folded INTO a
+    higher-order function after analysis and still execute)."""
     from pyspark.sql import functions as F
 
     from bigdata_20251_steam_spark.operators import similarity as sim
@@ -3855,102 +3855,111 @@ def test_pinned_artifact_forms_match_literal(spark):
     subdim = 2
     rows = [
         (1, [1, 0, 0, 0]),
-        (2, [5, 0, 0, 0]),   # equidistant cells 0/1 -> tie to cell 0
+        (2, [5, 0, 0, 0]),   # equidistant cells 0/1, codewords 0/1
         (3, [0, 12, 3, -4]),
-        (4, [2, 2, 2, 2]),   # residual subspace ties exercise code min
+        (4, [2, 2, 2, 2]),
         (5, [-7, 3, 9, 9]),
+        (6, [16, 6, -4, -7]),  # nonzero codes in both subspaces
     ]
+    # vec_id -> (cluster, sqdist, probes, qr, codes, recon, lut, adc,
+    # sig_lo); sig bits 4..31 come from the 60 padding ones
+    expect = {
+        1: (0, 1, [0, 1], [1, 0, 0, 0], [0, 0], [0, 0, 0, 0],
+            [[1, 41, 145], [0, 50]], 1, 0xFFFFFFF1),
+        2: (0, 25, [0, 1], [5, 0, 0, 0], [0, 0], [0, 0, 0, 0],
+            [[25, 25, 97], [0, 50]], 25, 0xFFFFFFF1),
+        3: (2, 29, [2, 0], [0, 2, 3, -4], [0, 0], [0, 0, 0, 0],
+            [[4, 34, 130], [25, 65]], 29, 0xFFFFFFF6),
+        4: (0, 16, [0, 1], [2, 2, 2, 2], [0, 0], [0, 0, 0, 0],
+            [[8, 18, 98], [8, 98]], 16, 0xFFFFFFFF),
+        5: (0, 220, [0, 2], [-7, 3, 9, 9], [0, 0], [0, 0, 0, 0],
+            [[58, 148, 292], [162, 392]], 220, 0xFFFFFFFE),
+        6: (1, 137, [1, 2], [6, 6, -4, -7], [1, 1], [5, 5, -5, -5],
+            [[72, 2, 18], [65, 5]], 7, 0xFFFFFFF3),
+    }
     grid = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
-
-    # literal forms
-    lit_assigned = sim._int_assign(grid, cents)
-    m = len(books)
-    lit_codes = F.array(
-        *[
-            sim._pq_sub_assign(
-                books[s], F.slice(F.col("qr"), s * subdim + 1, subdim)
-            )
-            for s in range(m)
-        ]
-    )
-    cent = F.element_at(
-        sim._centroid_matrix(cents), (F.col("cluster") + 1).cast("int")
-    )
-    lit = lit_assigned.select(
-        "vec_id",
-        "cluster",
-        F.zip_with(F.col("q"), cent, lambda x, y: x - y).alias("qr"),
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        lit_codes.alias("codes"),
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        "codes",
-        sim._ivfadc_recon(books, F.col("codes")).alias("r"),
+    sig = sim._sign_signature_sql(
+        "concat(qr, array_repeat(CAST(1 AS BIGINT), 60))"
     )
 
-    # pinned scalar-subquery forms
-    cm = sim._pinned_scalar(sim._cmat_view(spark, cents))
-    cb = sim._pinned_scalar(sim._cb_view(spark, books))
-    g = grid.withColumn("_cm", cm).withColumn("_cb", cb)
-    best = sim._argmin_cell(F.col("q"), F.col("_cm"))
-    col = g.withColumn("cluster", best["c"]).withColumn(
-        "qr",
-        F.zip_with(
-            F.col("q"),
-            F.element_at(F.col("_cm"), (F.col("cluster") + 1).cast("int")),
-            lambda x, y: x - y,
-        ),
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        sim._codes_col(F.col("_cb"), F.col("qr"), subdim).alias("codes"),
-        "_cb",
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        "codes",
-        sim._recon_col(F.col("_cb"), F.col("codes")).alias("r"),
-    )
+    def run(cm, cb):
+        out = grid.withColumn("_cm", cm).withColumn("_cb", cb).withColumn(
+            "_best", F.expr(sim._argmin_cell_sql("q", "_cm"))
+        ).withColumn("cluster", F.col("_best.c")).withColumn(
+            "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
+        ).withColumn(
+            "codes", F.expr(sim._codes_sql("_cb", "qr", subdim))
+        ).withColumn("lut", F.expr(sim._lut_sql("_cb", "qr", subdim)))
+        got = out.select(
+            "vec_id",
+            "cluster",
+            F.col("_best.d").alias("sqdist"),
+            F.expr(sim._probes_sql("q", "_cm", 2)).alias("probes"),
+            "qr",
+            "codes",
+            F.expr(sim._recon_sql("_cb", "codes")).alias("recon"),
+            "lut",
+            F.expr(sim._lut_adc_sql("lut", "codes")).alias("adc"),
+            F.expr(sig[0]).alias("sig_lo"),
+            F.expr(sig[1]).alias("sig_hi"),
+            # the LUT regrouping: m lookups == the decoded residual's L2
+            F.expr(
+                sim._sq_sql("qr", sim._recon_sql("_cb", "codes"))
+            ).alias("adc_decoded"),
+        ).collect()
+        return {r["vec_id"]: r for r in got}
 
-    lit_rows = {r["vec_id"]: r.asDict() for r in lit.collect()}
-    col_rows = {r["vec_id"]: {k: v for k, v in r.asDict().items() if k != "_cb"}
-                for r in col.collect()}
-    assert lit_rows == col_rows
-    # the tie cases actually hit the rules they claim to
-    assert lit_rows[2]["cluster"] == 0
-
-    # probe argsort parity (ties to the lower cell id)
-    lit_probes = F.slice(
-        F.transform(
-            F.array_sort(
-                F.array(
-                    *[
-                        F.struct(
-                            sim._int_sqdist(F.col("q"), c).alias("d"),
-                            F.lit(j).alias("j"),
-                        )
-                        for j, c in enumerate(cents)
-                    ]
-                )
-            ),
-            lambda s: s["j"],
-        ),
-        1,
-        2,
+    lit = run(
+        F.lit(cents).cast("array<array<bigint>>"),
+        F.lit(books).cast("array<array<array<bigint>>>"),
     )
-    got_lit = {r["vec_id"]: r["p"] for r in grid.select(
-        "vec_id", lit_probes.alias("p")).collect()}
-    got_col = {r["vec_id"]: r["p"] for r in g.select(
-        "vec_id", sim._probes_of(F.col("q"), F.col("_cm"), 2).alias("p")
-    ).collect()}
-    assert got_lit == got_col
+    pinned = run(
+        sim._pinned_scalar(sim._cmat_view(spark, cents)),
+        sim._pinned_scalar(sim._cb_view(spark, books)),
+    )
+    for got in (lit, pinned):
+        assert {
+            v: (r["cluster"], r["sqdist"], r["probes"], r["qr"], r["codes"],
+                r["recon"], r["lut"], r["adc"], r["sig_lo"])
+            for v, r in got.items()
+        } == expect
+        assert all(r["sig_hi"] == 0xFFFFFFFF for r in got.values())
+        assert all(r["adc"] == r["adc_decoded"] for r in got.values())
+
+    # literal-centroid assign and subspace argmin on the same grid
+    assigned = {
+        r["vec_id"]: (r["_b"]["c"], r["_b"]["d"])
+        for r in grid.select(
+            "vec_id", F.expr(sim._int_assign_sql("q", cents)).alias("_b")
+        ).collect()
+    }
+    assert assigned == {v: e[:2] for v, e in expect.items()}
+    sub0 = {
+        r["vec_id"]: r["c"]
+        for r in grid.select(
+            "vec_id",
+            F.expr(sim._pq_sub_assign_sql(books[0], "slice(q, 1, 2)"))
+            .alias("c"),
+        ).collect()
+    }
+    assert sub0 == {1: 0, 2: 0, 3: 1, 4: 0, 5: 0, 6: 2}
+
+    # float path: the double squared L2, summed in element order
+    fl = spark.createDataFrame(
+        [(1, [0.1, -2.5, 3.25]), (2, [1e-7, 2.0, -0.125])],
+        "vec_id long, v array<double>",
+    )
+    ctr = [0.30000000000000004, -1.5, 2.0]
+    got = fl.orderBy("vec_id").select(
+        F.expr(sim._sqdist_to_sql("v", ctr)).alias("d")
+    ).collect()
+    want = []
+    for v in ([0.1, -2.5, 3.25], [1e-7, 2.0, -0.125]):
+        acc = 0.0
+        for x, y in zip(v, ctr):
+            acc += (x - y) * (x - y)
+        want.append(acc)
+    assert [r["d"] for r in got] == want
 
 
 def test_ivfadc_nprobe_sweep_contracts(spark):
@@ -4636,123 +4645,6 @@ def test_guard_not_retracted_blocks_readd(spark):
     }
 
 
-def test_sql_twin_builders_parity(spark):
-    """Optimization r18 (guide §4): the SQL-string twins of the HOF
-    builders (_sq_sql/_argmin_cell_sql/_probes_sql/_residual_sql/
-    _recon_sql/_codes_sql/_lut_sql/_lut_adc_sql/_int_assign_sql/
-    _pq_sub_assign_sql/_sign_signature_sql/_sqdist_to_sql) must replay
-    the Column forms bit-for-bit — same integers, same struct-min tie
-    rules — on a frame that exercises ties and negatives.  The Column
-    forms stay in-module as the executable reference; the twins are
-    what the query builders construct (one JVM parse instead of dozens
-    of py4j lambda builds)."""
-    from pyspark.sql import functions as F
-
-    from bigdata_20251_steam_spark.operators import similarity as sim
-
-    cents = [[0, 0, 0, 0], [10, 0, 0, 0], [0, 10, 0, 0]]
-    books = [
-        [[0, 0], [5, 5], [9, 9]],
-        [[0, 0], [-5, -5]],
-    ]
-    subdim = 2
-    rows = [
-        (1, [1, 0, 0, 0]),
-        (2, [5, 0, 0, 0]),  # equidistant cells 0/1 -> tie to cell 0
-        (3, [0, 12, 3, -4]),
-        (4, [2, 2, 2, 2]),
-        (5, [-7, 3, 9, 9]),
-    ]
-    grid = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
-    cmv = F.lit(cents).cast("array<array<bigint>>")
-    cbv = F.lit(books).cast("array<array<array<bigint>>>")
-    base = grid.withColumn("_cm", cmv).withColumn("_cb", cbv)
-
-    # built stepwise: the Column residual needs q/_cm still present
-    col_step = base.withColumn(
-        "best", sim._argmin_cell(F.col("q"), F.col("_cm"))
-    ).withColumn("cluster", F.col("best.c")).withColumn(
-        "qr",
-        F.zip_with(
-            F.col("q"),
-            F.element_at(F.col("_cm"), (F.col("cluster") + 1).cast("int")),
-            lambda x, y: x - y,
-        ),
-    )
-    col_out = col_step.select(
-        "vec_id",
-        "cluster",
-        "_cb",
-        "qr",
-        F.col("best.d").alias("sqdist"),
-        sim._probes_of(F.col("q"), F.col("_cm"), 2).alias("probes"),
-        sim._codes_col(F.col("_cb"), F.col("qr"), subdim).alias("codes"),
-        sim._ivfadc_lut_col(F.col("_cb"), F.col("qr"), subdim).alias("lut"),
-    ).withColumn(
-        "recon", sim._recon_col(F.col("_cb"), F.col("codes"))
-    ).withColumn(
-        "adc", sim._lut_adc_col(F.col("lut"), F.col("codes"))
-    ).withColumn("sig_lo", sim.sign_signature(
-        F.concat(F.col("qr"), F.expr("array_repeat(CAST(1 AS BIGINT), 60)"))
-    )[0]).drop("lut", "_cb", "qr")
-
-    sql_step = base.withColumn(
-        "cluster", F.expr(sim._argmin_cell_sql("q", "_cm") + ".c")
-    ).withColumn(
-        "sqdist", F.expr(sim._argmin_cell_sql("q", "_cm") + ".d")
-    ).withColumn("qr", F.expr(sim._residual_sql("q", "_cm", "cluster")))
-    sql_out = sql_step.select(
-        "vec_id",
-        "cluster",
-        "_cb",
-        "qr",
-        "sqdist",
-        F.expr(sim._probes_sql("q", "_cm", 2)).alias("probes"),
-        F.expr(sim._codes_sql("_cb", "qr", subdim)).alias("codes"),
-        F.expr(sim._lut_sql("_cb", "qr", subdim)).alias("lut"),
-    ).withColumn(
-        "recon", F.expr(sim._recon_sql("_cb", "codes"))
-    ).withColumn(
-        "adc", F.expr(sim._lut_adc_sql("lut", "codes"))
-    ).withColumn("sig_lo", F.expr(sim._sign_signature_sql(
-        "concat(qr, array_repeat(CAST(1 AS BIGINT), 60))"
-    )[0])).drop("lut", "_cb", "qr")
-
-    a = [tuple(r) for r in col_out.orderBy("vec_id").collect()]
-    b = [tuple(r) for r in sql_out.orderBy("vec_id").collect()]
-    assert a == b
-
-    # int-assign / pq-sub-assign twins on the same hand grid
-    lit_a = sim._int_assign(grid, cents).orderBy("vec_id").collect()
-    sql_a = grid.withColumn(
-        "_b", F.expr(sim._int_assign_sql("q", cents))
-    ).select(
-        "vec_id", "q", F.col("_b.c").alias("cluster"),
-        F.col("_b.d").alias("sqdist"),
-    ).orderBy("vec_id").collect()
-    assert [tuple(r) for r in lit_a] == [tuple(r) for r in sql_a]
-
-    sub_lit = grid.select(
-        "vec_id",
-        sim._pq_sub_assign(books[0], F.slice(F.col("q"), 1, 2)).alias("c"),
-    ).orderBy("vec_id").collect()
-    sub_sql = grid.select(
-        "vec_id",
-        F.expr(sim._pq_sub_assign_sql(books[0], "slice(q, 1, 2)")).alias("c"),
-    ).orderBy("vec_id").collect()
-    assert [tuple(r) for r in sub_lit] == [tuple(r) for r in sub_sql]
-
-    # float path: _sqdist_to twin (repr round-trip of doubles)
-    fl = spark.createDataFrame(
-        [(1, [0.1, -2.5, 3.25]), (2, [1e-7, 2.0, -0.125])],
-        "vec_id long, v array<double>",
-    )
-    ctr = [0.30000000000000004, -1.5, 2.0]
-    f_lit = fl.select(sim._sqdist_to(F.col("v"), ctr).alias("d")).collect()
-    f_sql = fl.select(F.expr(sim._sqdist_to_sql("v", ctr)).alias("d")).collect()
-    assert [r["d"] for r in f_lit] == [r["d"] for r in f_sql]
-
-
 def test_word_shingles_sql_twin_parity(spark):
     """Optimization r18 (guide §4): word_shingles_sql / _md5_long_sql —
     the SQL-string twins the minhash/fingerprint builders construct —
@@ -4875,33 +4767,70 @@ def test_pin_frame_keeps_existing_checkpoint_dir(spark, tmp_path):
     assert glob.glob(current.removeprefix("file:") + "/*")
 
 
-def test_np_encode_matches_hof_encode(spark):
-    """Optimization r18 (r17 verdict #1, attack (b)): the Arrow/numpy
-    IVFADC encode must replay the interpreted-HOF form bit-for-bit —
-    HALF_UP quantization, ties-to-lowest cell and code, null
-    propagation for a NULL embedding row."""
-    from pyspark.sql import functions as F
+#: (scale, cells, codebooks, rows) fixtures of the IVFADC encode
+#: exactness tests: the HALF_UP edges, equidistant cells, NULL
+#: embedding and NULL elements, and a double just above 2**52 (kept
+#: apart: against small cells its squared distance overflows under ANSI)
+_BOOKS_2X2 = [[[0, 0], [1, 0]], [[0, 0], [0, 1]]]
+_ENCODE_CASES = [
+    (
+        1000,
+        [[0, 0, 0, 0], [10, 0, 0, 0], [0, 10, 0, 0]],
+        [[[0, 0], [5, 5], [9, 9]], [[0, 0], [-5, -5]]],
+        [
+            (1, [0.0015, -0.0025, 0.0004999, 0.0]),  # HALF_UP edges
+            (2, [0.005, 0.0, 0.0, 0.0]),             # equidistant cells
+            (3, [0.0, 0.0121, 0.003, -0.004]),
+            (4, [0.002, 0.002, 0.002, 0.002]),
+            (5, None),                                # null embedding row
+        ],
+    ),
+    (
+        1,
+        [[0, 0, 0, 0], [1, 0, 0, 0], [-1, 0, 0, 0]],
+        _BOOKS_2X2,
+        [
+            (1, [0.49999999999999994, 0.0, 0.0, 0.0]),
+            (2, [-0.49999999999999994, 0.0, 0.0, 0.0]),
+            (3, [0.5, 0.0, 0.5, -0.5]),
+            (4, [None, 0.3, 0.0, 2.0]),   # NULL element, subspace 0
+            (5, [2.0, 0.0, None, 0.0]),   # NULL element, subspace 1
+        ],
+    ),
+    (
+        1,
+        [[2**52, 0, 0, 0], [2**52 + 2, 0, 0, 0]],
+        _BOOKS_2X2,
+        [(1, [4503599627370497.0, 0.0, 0.0, 0.0])],
+    ),
+]
 
+#: (cluster, qr, codes) the SQL pipeline gives the rows of the last two
+#: fixtures: Spark rounds ±0.49999999999999994 to 0 and keeps 2**52 + 1;
+#: a NULL element sends the row to cell 0 and its subspace to code 0
+_ENCODE_EXPECT = [
+    {
+        1: (0, (0, 0, 0, 0), (0, 0)),
+        2: (0, (0, 0, 0, 0), (0, 0)),
+        3: (1, (0, 0, 1, -1), (0, 0)),
+        4: (0, (None, 0, 0, 2), (0, 1)),
+        5: (0, (2, 0, None, 0), (1, 0)),
+    },
+    {1: (0, (1, 0, 0, 0), (1, 0))},
+]
+
+
+def _sql_encode(frame, cents, books, scale):
+    """The inline SQL IVFADC encode the registered oracles replay:
+    HALF_UP grid, struct-min coarse argmin, residual, per-subspace
+    codes."""
     from bigdata_20251_steam_spark.operators import similarity as sim
 
-    cents = [[0, 0, 0, 0], [10, 0, 0, 0], [0, 10, 0, 0]]
-    books = [[[0, 0], [5, 5], [9, 9]], [[0, 0], [-5, -5]]]
-    rows = [
-        (1, [0.0015, -0.0025, 0.0004999, 0.0]),  # HALF_UP edges
-        (2, [0.005, 0.0, 0.0, 0.0]),             # equidistant cells
-        (3, [0.0, 0.0121, 0.003, -0.004]),
-        (4, [0.002, 0.002, 0.002, 0.002]),
-        (5, None),                                # null embedding row
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    # HOF reference: the streaming branch's SQL-twin pipeline
-    cbv = sim._pinned_scalar(sim._cb_view(spark, books))
-    cm = sim._pinned_scalar(sim._cmat_view(spark, cents))
-    grid = sim._pq_quantized(emb, 1000, "vec_id", "embedding").withColumn(
-        "_cm", cm
-    ).withColumn("_cb", cbv)
-    hof = grid.withColumn(
+    spark = frame.sparkSession
+    grid = sim._pq_quantized(frame, scale, "vec_id", "embedding").withColumn(
+        "_cm", sim._pinned_scalar(sim._cmat_view(spark, cents))
+    ).withColumn("_cb", sim._pinned_scalar(sim._cb_view(spark, books)))
+    return grid.withColumn(
         "cluster", F.expr(sim._argmin_cell_sql("q", "_cm") + ".c")
     ).withColumn(
         "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
@@ -4909,26 +4838,85 @@ def test_np_encode_matches_hof_encode(spark):
         "vec_id",
         "cluster",
         "qr",
-        F.expr(sim._codes_sql("_cb", "qr", 2)).alias("codes"),
+        F.expr(sim._codes_sql("_cb", "qr", len(books[0][0]))).alias("codes"),
     )
 
-    work = sim._ivfadc_working(emb, cents, books, 1000, "vec_id", "embedding")
-    npf = work.select("vec_id", "cluster", "qr", "codes")
 
-    def norm(df):
-        return sorted(
-            (
-                r["vec_id"],
-                r["cluster"],
-                tuple(r["qr"]) if r["qr"] is not None else None,
-                tuple(r["codes"]) if r["codes"] is not None else None,
-            )
-            for r in df.collect()
+def _encoded_rows(df):
+    return {
+        r["vec_id"]: (
+            r["cluster"],
+            tuple(r["qr"]) if r["qr"] is not None else None,
+            tuple(r["codes"]),
         )
+        for r in df.collect()
+    }
 
-    assert norm(hof) == norm(npf)
-    # the HOF form's null-embedding semantics: every distance is NULL,
-    # struct min falls through to the index — cell 0 / code 0 win,
-    # the residual stays NULL
-    null_row = [t for t in norm(npf) if t[0] == 5][0]
-    assert null_row[1:] == (0, None, (0, 0))
+
+def _check_np_encode(spark, frame_of):
+    """Compare the Arrow/numpy encode with the SQL pipeline on every
+    ``_ENCODE_CASES`` fixture; ``frame_of(rows)`` builds the input frame
+    and returns ``(frame, run)``, ``run`` turning a plan over it into
+    a batch frame."""
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    got = []
+    for scale, cents, books, rows in _ENCODE_CASES:
+        frame, run = frame_of(rows)
+        work = sim._ivfadc_working(
+            frame, cents, books, scale, "vec_id", "embedding"
+        ).select("vec_id", "cluster", "qr", "codes")
+        plan = work._jdf.queryExecution().analyzed().toString()
+        assert "_enc(" in plan, "encode must run through the Arrow UDF"
+        np_rows = _encoded_rows(run(work))
+        assert np_rows == _encoded_rows(
+            run(_sql_encode(frame, cents, books, scale))
+        )
+        got.append(np_rows)
+    # the NULL-embedding row: every distance is NULL, struct min falls
+    # through to the index — cell 0 / code 0 win, the residual stays NULL
+    assert got[0][5] == (0, None, (0, 0))
+    assert got[1:] == _ENCODE_EXPECT
+
+
+def test_np_encode_matches_hof_encode(spark):
+    """The Arrow/numpy IVFADC encode of a batch frame gives the SQL
+    pipeline's integers: exact HALF_UP quantization (also where
+    ``floor(x + 0.5)`` is off by one), ties-to-lowest cell and code,
+    and the SQL NULL semantics for a NULL row and NULL elements."""
+    schema = "vec_id long, embedding array<double>"
+
+    def batch(rows):
+        return spark.createDataFrame(rows, schema), lambda df: df
+
+    _check_np_encode(spark, batch)
+
+
+def test_np_encode_matches_hof_encode_on_stream(spark, tmp_path):
+    """The same encode on a ``file_stream`` frame run with availableNow:
+    a micro-batch goes through the one Arrow encoder and gives the SQL
+    pipeline's integers."""
+    import itertools
+
+    from bigdata_20251_steam_spark.streaming.engine import (
+        file_stream,
+        run_available_now,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    n = itertools.count()
+
+    def stream(rows):
+        src = str(tmp_path / f"src{next(n)}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+        frame = file_stream(spark, src, spark.read.parquet(src).schema)
+
+        def run(df):
+            return run_available_now(
+                df, output_mode="append",
+                checkpoint_dir=str(tmp_path / f"ckpt{next(n)}"),
+            )
+
+        return frame, run
+
+    _check_np_encode(spark, stream)

@@ -311,49 +311,6 @@ def test_write_partitioned_orc_round_trip(spark, tmp_path):
     assert "PartitionFilters" in plan or one_day.count() > 0
 
 
-def test_running_totals_tws_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas variant: same finals as the batch
-    groupBy, across genuine multi-batch state carry."""
-    import pytest as _pytest
-
-    from bigdata_20251_steam_spark.streaming.stateful import running_totals_tws
-
-    events = load_table(spark, SF_SMOKE, "events").select("user_id", "value", "ts")
-    src = str(tmp_path / "src")
-    events.repartition(3).write.parquet(src)
-    stream = file_stream(spark, src, events.schema, max_files_per_trigger=1)
-    try:
-        updates = run_available_now(
-            running_totals_tws(stream), output_mode="update",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        ).cache()
-    except Exception as e:  # pragma: no cover - environment-dependent API
-        if "transformWithState" in str(e) or "STATE_STORE" in str(e):
-            _pytest.skip(f"transformWithStateInPandas unavailable: {e}")
-        raise
-
-    n_batches = updates.select("key", "n_events").groupBy("key").count()
-    assert n_batches.agg(F.max("count")).collect()[0][0] > 1
-
-    finals = updates.groupBy("key").agg(
-        F.max("n_events").alias("n_events"),
-        F.max_by("sum_value", "n_events").alias("sum_value"),
-        F.max_by("max_value", "n_events").alias("max_value"),
-    )
-    expected = events.groupBy(F.col("user_id").alias("key")).agg(
-        F.count("*").alias("n_events"),
-        F.sum("value").alias("sum_value"),
-        F.max("value").alias("max_value"),
-    )
-    diff = finals.join(expected, "key").filter(
-        (finals.n_events != expected.n_events)
-        | (F.abs(finals.sum_value - expected.sum_value) > 1e-6)
-        | (F.abs(finals.max_value - expected.max_value) > 1e-9)
-    )
-    assert finals.count() == expected.count()
-    assert diff.count() == 0
-
-
 def test_write_training_shards_order_and_determinism(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -1070,7 +1027,7 @@ def test_index_lifecycle_stream_compact_retrain_composes(spark, tmp_path):
             "_cb", sim._pinned_scalar(sim._cb_view(spark, books))
         ).select(
             "vec_id",
-            sim._codes_col(F.col("_cb"), F.col("q"), subdim).alias("codes"),
+            F.expr(sim._codes_sql("_cb", "q", subdim)).alias("codes"),
         ).join(meta, "vec_id")
         enc.write.mode("overwrite").parquet(f"{fresh}/cluster={cell}")
 
