@@ -3832,99 +3832,137 @@ def test_r12_operators_degenerate_inputs(spark):
     assert r["mean_err"] == r["max_err"] == r["total_err"] >= 0
 
 
-def test_sql_builders_expected_rows(spark):
-    """The SQL-string IVFADC builders the query builders construct
-    (_argmin_cell_sql/_probes_sql/_residual_sql/_codes_sql/_recon_sql/
-    _lut_sql/_lut_adc_sql/_int_assign_sql/_pq_sub_assign_sql/
-    _sign_signature_sql/_sqdist_to_sql) give hand-computed rows, with
-    both tie rules hit (equidistant centroids -> lowest cell;
-    equidistant codewords -> lowest code).  The artifacts ride as
-    ``F.lit`` columns and as pinned scalar-subquery views: the second
-    form pins the CollapseProject behavior the hoist relies on (a
-    scalar subquery materialized via withColumn may be folded INTO a
-    higher-order function after analysis and still execute)."""
-    from pyspark.sql import functions as F
+_TWIN_CENTS = [[0, 0, 0, 0], [10, 0, 0, 0], [0, 10, 0, 0]]
+_TWIN_BOOKS = [
+    [[0, 0], [5, 5], [9, 9]],
+    [[0, 0], [-5, -5]],
+]
+_TWIN_SUBDIM = 2
+_TWIN_ROWS = [
+    (1, [1, 0, 0, 0]),
+    (2, [5, 0, 0, 0]),   # equidistant cells 0/1, codewords 0/1
+    (3, [0, 12, 3, -4]),
+    (4, [2, 2, 2, 2]),
+    (5, [-7, 3, 9, 9]),
+    (6, [16, 6, -4, -7]),  # nonzero codes in both subspaces
+]
+# vec_id -> (cluster, sqdist, probes, qr, codes, recon, lut, adc,
+# sig_lo); sig bits 4..31 come from the 60 padding ones
+_TWIN_EXPECT = {
+    1: (0, 1, [0, 1], [1, 0, 0, 0], [0, 0], [0, 0, 0, 0],
+        [[1, 41, 145], [0, 50]], 1, 0xFFFFFFF1),
+    2: (0, 25, [0, 1], [5, 0, 0, 0], [0, 0], [0, 0, 0, 0],
+        [[25, 25, 97], [0, 50]], 25, 0xFFFFFFF1),
+    3: (2, 29, [2, 0], [0, 2, 3, -4], [0, 0], [0, 0, 0, 0],
+        [[4, 34, 130], [25, 65]], 29, 0xFFFFFFF6),
+    4: (0, 16, [0, 1], [2, 2, 2, 2], [0, 0], [0, 0, 0, 0],
+        [[8, 18, 98], [8, 98]], 16, 0xFFFFFFFF),
+    5: (0, 220, [0, 2], [-7, 3, 9, 9], [0, 0], [0, 0, 0, 0],
+        [[58, 148, 292], [162, 392]], 220, 0xFFFFFFFE),
+    6: (1, 137, [1, 2], [6, 6, -4, -7], [1, 1], [5, 5, -5, -5],
+        [[72, 2, 18], [65, 5]], 7, 0xFFFFFFF3),
+}
 
+
+def _twin_ref(q, cents, books, subdim, nprobe=2):
+    """Pure-Python IVFADC reference for the SQL builders: squared L2,
+    ties to the lowest cell and the lowest code."""
+    def sq(a, b):
+        return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+    ds = [sq(q, c) for c in cents]
+    order = sorted(range(len(cents)), key=lambda j: (ds[j], j))
+    cell = order[0]
+    qr = [x - y for x, y in zip(q, cents[cell])]
+    lut = [
+        [sq(qr[s * subdim:(s + 1) * subdim], w) for w in cb]
+        for s, cb in enumerate(books)
+    ]
+    codes = [min(range(len(t)), key=lambda c: (t[c], c)) for t in lut]
+    recon = [x for s, c in enumerate(codes) for x in books[s][c]]
+    adc = sum(t[c] for t, c in zip(lut, codes))
+    return (cell, ds[cell], order[:nprobe], qr, codes, recon, lut, adc)
+
+
+def _twin_sql_rows(grid, cm, cb):
+    """Run every SQL builder the IVFADC query builders construct over
+    ``grid`` (``vec_id``, ``q``) with the centroid matrix ``cm`` and the
+    codebook array ``cb`` riding as columns; rows keyed by vec_id."""
     from bigdata_20251_steam_spark.operators import similarity as sim
 
-    cents = [[0, 0, 0, 0], [10, 0, 0, 0], [0, 10, 0, 0]]
-    books = [
-        [[0, 0], [5, 5], [9, 9]],
-        [[0, 0], [-5, -5]],
-    ]
-    subdim = 2
-    rows = [
-        (1, [1, 0, 0, 0]),
-        (2, [5, 0, 0, 0]),   # equidistant cells 0/1, codewords 0/1
-        (3, [0, 12, 3, -4]),
-        (4, [2, 2, 2, 2]),
-        (5, [-7, 3, 9, 9]),
-        (6, [16, 6, -4, -7]),  # nonzero codes in both subspaces
-    ]
-    # vec_id -> (cluster, sqdist, probes, qr, codes, recon, lut, adc,
-    # sig_lo); sig bits 4..31 come from the 60 padding ones
-    expect = {
-        1: (0, 1, [0, 1], [1, 0, 0, 0], [0, 0], [0, 0, 0, 0],
-            [[1, 41, 145], [0, 50]], 1, 0xFFFFFFF1),
-        2: (0, 25, [0, 1], [5, 0, 0, 0], [0, 0], [0, 0, 0, 0],
-            [[25, 25, 97], [0, 50]], 25, 0xFFFFFFF1),
-        3: (2, 29, [2, 0], [0, 2, 3, -4], [0, 0], [0, 0, 0, 0],
-            [[4, 34, 130], [25, 65]], 29, 0xFFFFFFF6),
-        4: (0, 16, [0, 1], [2, 2, 2, 2], [0, 0], [0, 0, 0, 0],
-            [[8, 18, 98], [8, 98]], 16, 0xFFFFFFFF),
-        5: (0, 220, [0, 2], [-7, 3, 9, 9], [0, 0], [0, 0, 0, 0],
-            [[58, 148, 292], [162, 392]], 220, 0xFFFFFFFE),
-        6: (1, 137, [1, 2], [6, 6, -4, -7], [1, 1], [5, 5, -5, -5],
-            [[72, 2, 18], [65, 5]], 7, 0xFFFFFFF3),
-    }
-    grid = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
     sig = sim._sign_signature_sql(
         "concat(qr, array_repeat(CAST(1 AS BIGINT), 60))"
     )
+    out = grid.withColumn("_cm", cm).withColumn("_cb", cb).withColumn(
+        "_best", F.expr(sim._argmin_cell_sql("q", "_cm"))
+    ).withColumn("cluster", F.col("_best.c")).withColumn(
+        "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
+    ).withColumn(
+        "codes", F.expr(sim._codes_sql("_cb", "qr", _TWIN_SUBDIM))
+    ).withColumn("lut", F.expr(sim._lut_sql("_cb", "qr", _TWIN_SUBDIM)))
+    got = out.select(
+        "vec_id",
+        "cluster",
+        F.col("_best.d").alias("sqdist"),
+        F.expr(sim._probes_sql("q", "_cm", 2)).alias("probes"),
+        "qr",
+        "codes",
+        F.expr(sim._recon_sql("_cb", "codes")).alias("recon"),
+        "lut",
+        F.expr(sim._lut_adc_sql("lut", "codes")).alias("adc"),
+        F.expr(sig[0]).alias("sig_lo"),
+        F.expr(sig[1]).alias("sig_hi"),
+        # the LUT regrouping: m lookups == the decoded residual's L2
+        F.expr(
+            sim._sq_sql("qr", sim._recon_sql("_cb", "codes"))
+        ).alias("adc_decoded"),
+    ).collect()
+    return {r["vec_id"]: r for r in got}
 
-    def run(cm, cb):
-        out = grid.withColumn("_cm", cm).withColumn("_cb", cb).withColumn(
-            "_best", F.expr(sim._argmin_cell_sql("q", "_cm"))
-        ).withColumn("cluster", F.col("_best.c")).withColumn(
-            "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
-        ).withColumn(
-            "codes", F.expr(sim._codes_sql("_cb", "qr", subdim))
-        ).withColumn("lut", F.expr(sim._lut_sql("_cb", "qr", subdim)))
-        got = out.select(
-            "vec_id",
-            "cluster",
-            F.col("_best.d").alias("sqdist"),
-            F.expr(sim._probes_sql("q", "_cm", 2)).alias("probes"),
-            "qr",
-            "codes",
-            F.expr(sim._recon_sql("_cb", "codes")).alias("recon"),
-            "lut",
-            F.expr(sim._lut_adc_sql("lut", "codes")).alias("adc"),
-            F.expr(sig[0]).alias("sig_lo"),
-            F.expr(sig[1]).alias("sig_hi"),
-            # the LUT regrouping: m lookups == the decoded residual's L2
-            F.expr(
-                sim._sq_sql("qr", sim._recon_sql("_cb", "codes"))
-            ).alias("adc_decoded"),
-        ).collect()
-        return {r["vec_id"]: r for r in got}
 
-    lit = run(
+_TWIN_FIELDS = (
+    "cluster", "sqdist", "probes", "qr", "codes", "recon", "lut", "adc",
+)
+
+
+def test_sql_twin_builders_parity(spark):
+    """The SQL-string IVFADC builders the query builders construct
+    (_argmin_cell_sql/_probes_sql/_residual_sql/_codes_sql/_recon_sql/
+    _lut_sql/_lut_adc_sql/_int_assign_sql/_pq_sub_assign_sql/
+    _sign_signature_sql/_sqdist_to_sql/_sq_sql) replay their
+    pure-Python twin (_twin_ref) row for row — same integers, same
+    tie rules (equidistant centroids -> lowest cell; equidistant
+    codewords -> lowest code) — on a hand grid with hand-computed rows
+    and on a seeded grid of small integers dense in ties."""
+    import random
+
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    cents, books = _TWIN_CENTS, _TWIN_BOOKS
+    # the Python twin agrees with the hand-computed rows
+    assert {
+        v: _twin_ref(q, cents, books, _TWIN_SUBDIM) for v, q in _TWIN_ROWS
+    } == {v: e[:8] for v, e in _TWIN_EXPECT.items()}
+
+    rnd = random.Random(18)
+    rows = _TWIN_ROWS + [
+        (100 + i, [rnd.randint(-12, 12) for _ in range(4)])
+        for i in range(40)
+    ]
+    grid = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
+    got = _twin_sql_rows(
+        grid,
         F.lit(cents).cast("array<array<bigint>>"),
         F.lit(books).cast("array<array<array<bigint>>>"),
     )
-    pinned = run(
-        sim._pinned_scalar(sim._cmat_view(spark, cents)),
-        sim._pinned_scalar(sim._cb_view(spark, books)),
-    )
-    for got in (lit, pinned):
-        assert {
-            v: (r["cluster"], r["sqdist"], r["probes"], r["qr"], r["codes"],
-                r["recon"], r["lut"], r["adc"], r["sig_lo"])
-            for v, r in got.items()
-        } == expect
-        assert all(r["sig_hi"] == 0xFFFFFFFF for r in got.values())
-        assert all(r["adc"] == r["adc_decoded"] for r in got.values())
+    assert {
+        v: tuple(r[f] for f in _TWIN_FIELDS) for v, r in got.items()
+    } == {v: _twin_ref(q, cents, books, _TWIN_SUBDIM) for v, q in rows}
+    assert {
+        v: got[v]["sig_lo"] for v in _TWIN_EXPECT
+    } == {v: e[8] for v, e in _TWIN_EXPECT.items()}
+    assert all(r["sig_hi"] == 0xFFFFFFFF for r in got.values())
+    assert all(r["adc"] == r["adc_decoded"] for r in got.values())
 
     # literal-centroid assign and subspace argmin on the same grid
     assigned = {
@@ -3933,7 +3971,9 @@ def test_sql_builders_expected_rows(spark):
             "vec_id", F.expr(sim._int_assign_sql("q", cents)).alias("_b")
         ).collect()
     }
-    assert assigned == {v: e[:2] for v, e in expect.items()}
+    assert assigned == {
+        v: _twin_ref(q, cents, books, _TWIN_SUBDIM)[:2] for v, q in rows
+    }
     sub0 = {
         r["vec_id"]: r["c"]
         for r in grid.select(
@@ -3942,7 +3982,12 @@ def test_sql_builders_expected_rows(spark):
             .alias("c"),
         ).collect()
     }
-    assert sub0 == {1: 0, 2: 0, 3: 1, 4: 0, 5: 0, 6: 2}
+    assert {v: sub0[v] for v, _ in _TWIN_ROWS} == {
+        1: 0, 2: 0, 3: 1, 4: 0, 5: 0, 6: 2,
+    }
+    assert sub0 == {
+        v: _twin_ref(q[:2], [[0, 0]], [books[0]], 2)[4][0] for v, q in rows
+    }
 
     # float path: the double squared L2, summed in element order
     fl = spark.createDataFrame(
@@ -3960,6 +4005,40 @@ def test_sql_builders_expected_rows(spark):
             acc += (x - y) * (x - y)
         want.append(acc)
     assert [r["d"] for r in got] == want
+
+
+def test_pinned_artifact_forms_match_literal(spark):
+    """The IVFADC artifacts ride as ``F.lit`` columns and as pinned
+    scalar-subquery views (_pinned_scalar over _cmat_view/_cb_view);
+    every SQL builder gives the same hand-computed rows under both
+    forms.  The pinned run pins the CollapseProject behavior the hoist
+    relies on: a scalar subquery materialized via withColumn may be
+    folded INTO a higher-order function after analysis and still
+    execute."""
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    grid = spark.createDataFrame(
+        _TWIN_ROWS, "vec_id long, q array<bigint>"
+    )
+    lit = _twin_sql_rows(
+        grid,
+        F.lit(_TWIN_CENTS).cast("array<array<bigint>>"),
+        F.lit(_TWIN_BOOKS).cast("array<array<array<bigint>>>"),
+    )
+    pinned = _twin_sql_rows(
+        grid,
+        sim._pinned_scalar(sim._cmat_view(spark, _TWIN_CENTS)),
+        sim._pinned_scalar(sim._cb_view(spark, _TWIN_BOOKS)),
+    )
+    assert {v: tuple(r) for v, r in pinned.items()} == {
+        v: tuple(r) for v, r in lit.items()
+    }
+    assert {
+        v: tuple(r[f] for f in _TWIN_FIELDS + ("sig_lo",))
+        for v, r in pinned.items()
+    } == _TWIN_EXPECT
+    assert all(r["sig_hi"] == 0xFFFFFFFF for r in pinned.values())
+    assert all(r["adc"] == r["adc_decoded"] for r in pinned.values())
 
 
 def test_ivfadc_nprobe_sweep_contracts(spark):
