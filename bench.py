@@ -4,72 +4,39 @@ Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"q1": sec, ...}, "sf": <sf>}
 
-Each query is timed end-to-end (plan + execute + reduce).  The first
-execution of any plan pays whole-stage-codegen compilation + JVM JIT
-(~5-10x the steady-state time on this VM), so each query runs three times
-and the minimum is reported — that is the engine's throughput, not the
-JIT's.  ``value`` is the sum of per-query best times across the headline
-suite.
-
-The reduction is a full-column xxhash64 fold, NOT ``count()`` (r7 harness
-fix): count() lets the optimizer PRUNE every computed column of a
-narrow-map query, so the bench was timing the file scan alone for
-projection-only operators (measured at sf0.1: intra_doc_dedup 0.27 s
-pruned vs 5.9 s real pre-optimization, bpe_token_counts 0.10 s vs 3.2 s;
-shuffle/aggregate queries were unaffected — their numbers are comparable
-across rounds; the affected r1-anchored headliner is repetition_metrics,
-re-anchored in SCALING.md's round-8 section along with every other
-projection-heavy slope row).  The fold's own cost is one hash per output
-row — negligible against any real query.
+Each query is timed end-to-end: plan, execute, and the full-column
+xxhash64 fold of ``tools.harness.hashfold`` (which says why not
+``count()``).  The first execution of any plan pays whole-stage-codegen
+compilation + JVM JIT (~5-10x the steady-state time), so each query
+runs three times and the minimum is reported — that is the engine's
+throughput, not the JIT's.  ``value`` is the sum of per-query best
+times across the headline suite.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import time
+
+from tools.harness import best_of, cpus, hashfold, session
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from bigdata_20251_steam_spark.plans import QUERIES
-    from bigdata_20251_steam_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.sql.shuffle.partitions": cpus},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from pyspark.sql import functions as F
-
-    def run_once(q) -> None:
-        df = q.fn(spark, sf_dir)
-        # force evaluation of EVERY output column (see module docstring)
-        row = df.select(F.xxhash64(*df.columns).alias("_h")).agg(
-            F.bit_xor("_h"), F.count(F.lit(1))
-        ).first()
-        assert row[1] >= 0
-
+    spark = session("bench", cpus())
     headline = [q for q in QUERIES.values() if q.headline]
 
     # Warmup: run the first headline query once to absorb JVM/codegen startup.
     if headline:
-        run_once(headline[0])
+        hashfold(headline[0].fn(spark, sf_dir))
 
-    # min-of-3: the VM shows rare multi-second stalls (GC/noisy neighbor)
-    # that would otherwise masquerade as engine regressions.
-    times: dict[str, float] = {}
-    for q in headline:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run_once(q)
-            best = min(best, time.perf_counter() - t0)
-        times[q.name] = round(best, 4)
+    times = {
+        q.name: round(best_of(3, lambda: hashfold(q.fn(spark, sf_dir))), 4)
+        for q in headline
+    }
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:

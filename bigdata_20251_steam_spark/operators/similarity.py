@@ -24,6 +24,7 @@ lambda wins (no serialization).
 
 from __future__ import annotations
 
+import itertools
 import math
 
 import numpy as np
@@ -1103,8 +1104,10 @@ def _sqdist_cols(a: Column, b: Column) -> Column:
 # per lambda — and the ivfadc-family query builders stack dozens of them
 # (~0.5 s of construction per ivfadc query).  Written as SQL
 # text, each expression parses JVM-side in one round-trip.  The DuckDB
-# oracles replay them, and tests/test_extensions_unit.py::
-# test_sql_builders_expected_rows pins them against hand-computed rows.
+# oracles replay them, tests/test_extensions_unit.py::
+# test_sql_twin_builders_parity pins them against hand-computed rows, and
+# ::test_pinned_artifact_forms_match_literal pins the pinned views they
+# read against their literal forms.
 #
 # Composition hygiene: each builder's internal lambda variables are
 # chosen so nesting one inside another never shadows a variable the
@@ -1328,6 +1331,43 @@ def _round_half_up(x: np.ndarray) -> np.ndarray:
     return np.copysign(q, x)
 
 
+_I64_MAX = (1 << 63) - 1
+
+
+def _sq_exact(a: list, b: list) -> int | None:
+    """:func:`_sq_sql` in Python ints, evaluated as ANSI Spark does:
+    ``zip_with`` squares every element difference (NULL where ``a`` is
+    NULL), then ``aggregate`` adds them left to right, NULL from the
+    first NULL term on.  Raises :class:`OverflowError` where Spark
+    raises ARITHMETIC_OVERFLOW: a square, or the sum before the first
+    NULL, above 2**63 - 1 (a difference that overflows has a square
+    that does)."""
+    terms = [None if x is None else (x - y) ** 2 for x, y in zip(a, b)]
+    head = list(itertools.takewhile(lambda t: t is not None, terms))
+    if sum(head) > _I64_MAX or any(
+        t is not None and t > _I64_MAX for t in terms
+    ):
+        raise OverflowError(
+            "IVFADC encode: a squared distance overflows BIGINT (the SQL "
+            "encode raises ARITHMETIC_OVERFLOW)"
+        )
+    return sum(head) if len(head) == len(terms) else None
+
+
+def _check_encode_exact(q: list, cents: list, books: list) -> None:
+    """Raise :class:`OverflowError` where the SQL encode of the row
+    ``q`` (ints, None for NULL) raises: on a coarse distance, or on a
+    subspace distance of the residual.  The residual's own elements fit,
+    since each is a term of the chosen cell's coarse distance."""
+    d = [_sq_exact(q, c) for c in cents]
+    cell = 0 if None in d else d.index(min(d))
+    r = [None if x is None else x - y for x, y in zip(q, cents[cell])]
+    subdim = len(books[0][0])
+    for s, book in enumerate(books):
+        for w in book:
+            _sq_exact(r[s * subdim:(s + 1) * subdim], w)
+
+
 def _np_ivfadc_encode_udf(
     coarse_cents: list[list[int]],
     codebooks: list[list[list[int]]],
@@ -1354,6 +1394,15 @@ def _np_ivfadc_encode_udf(
     embedding row is the all-NULL case: cell 0, NULL residual, codes
     ``[0] * m``.  The artifacts ride the closure (kilobytes, shipped
     once per executor).
+
+    Overflow raises where ANSI SQL raises, instead of wrapping: a
+    ``round(x * scale)`` outside BIGINT (exactly 2**63 saturates to
+    2**63 - 1, as Spark's cast does), and a coarse or subspace squared
+    distance above 2**63 - 1.  One float bound per row covers every
+    distance (``|q - c| <= |q| + max|c|``, plus ``max|w|`` for the
+    residual); only rows whose bound passes 2**62 are rechecked exactly
+    in Python ints (:func:`_check_encode_exact`), and below it the int64
+    sums cannot wrap.
     """
     cents = np.asarray(
         [[int(v) for v in c] for c in coarse_cents], dtype=np.int64
@@ -1365,6 +1414,11 @@ def _np_ivfadc_encode_udf(
     m = len(books)
     subdim = books[0].shape[1]
     fscale = float(scale)
+    reach = np.abs(cents.astype(np.float64)).max(axis=0) + np.concatenate(
+        [np.abs(b.astype(np.float64)).max(axis=0) for b in books]
+    )
+    cents_int = cents.tolist()
+    books_int = [b.tolist() for b in books]
 
     @pandas_udf("struct<cluster:int, qr:array<bigint>, codes:array<int>>")
     def _enc(v: pd.Series) -> pd.DataFrame:
@@ -1377,7 +1431,22 @@ def _np_ivfadc_encode_udf(
             x = np.stack(v.iloc[ok].to_numpy()).astype(np.float64) * fscale
             null = np.isnan(x)
             null_rows = null.any(axis=1)
-            q = _round_half_up(np.where(null, 0.0, x)).astype(np.int64)
+            r = _round_half_up(np.where(null, 0.0, x))
+            if (np.abs(r) > 2.0**63).any():
+                raise OverflowError(
+                    "IVFADC encode: round(x * scale) is outside BIGINT (the "
+                    "SQL encode raises CAST_OVERFLOW)"
+                )
+            top = r == 2.0**63
+            q = np.where(top, 0.0, r).astype(np.int64)
+            q[top] = _I64_MAX
+            bound = ((np.abs(r) + reach) ** 2).sum(axis=1)
+            for i in np.flatnonzero(bound > 2.0**62):
+                _check_encode_exact(
+                    [None if z else int(e) for e, z in zip(q[i], null[i])],
+                    cents_int,
+                    books_int,
+                )
             d = ((q[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             cl = np.where(null_rows, 0, d.argmin(axis=1))
             qr = q - cents[cl]

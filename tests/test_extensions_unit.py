@@ -4971,10 +4971,10 @@ def test_np_encode_matches_hof_encode(spark):
     _check_np_encode(spark, batch)
 
 
-def test_np_encode_matches_hof_encode_on_stream(spark, tmp_path):
-    """The same encode on a ``file_stream`` frame run with availableNow:
-    a micro-batch goes through the one Arrow encoder and gives the SQL
-    pipeline's integers."""
+def _stream_frames(spark, tmp_path):
+    """``frame_of`` for :func:`_check_np_encode` over ``file_stream``
+    frames: each call writes the rows as parquet, and ``run`` executes a
+    plan over the stream with availableNow."""
     import itertools
 
     from bigdata_20251_steam_spark.streaming.engine import (
@@ -4998,4 +4998,76 @@ def test_np_encode_matches_hof_encode_on_stream(spark, tmp_path):
 
         return frame, run
 
-    _check_np_encode(spark, stream)
+    return stream
+
+
+def test_np_encode_matches_hof_encode_on_stream(spark, tmp_path):
+    """The same encode on a ``file_stream`` frame run with availableNow:
+    a micro-batch goes through the one Arrow encoder and gives the SQL
+    pipeline's integers."""
+    _check_np_encode(spark, _stream_frames(spark, tmp_path))
+
+
+#: cells and row of the overflow fixture: (2**52 + 1)**2 overflows BIGINT
+_OVERFLOW_CELLS = [[0, 0, 0, 0], [1, 0, 0, 0], [-1, 0, 0, 0]]
+_OVERFLOW_ROW = (1, [4503599627370497.0, 0.0, 0.0, 0.0])
+
+
+def _assert_encodes_raise(frame, run, cents, books, scale):
+    """The Arrow encode and the SQL encode of ``frame`` both fail with
+    an overflow."""
+    import pytest
+
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    arrow = sim._ivfadc_working(
+        frame, cents, books, scale, "vec_id", "embedding"
+    ).select("vec_id", "cluster", "qr", "codes")
+    for enc in (arrow, _sql_encode(frame, cents, books, scale)):
+        with pytest.raises(Exception, match="(?i)overflow"):
+            run(enc).collect()
+
+
+def test_np_encode_overflow_raises_like_sql(spark):
+    """The Arrow encode raises where ANSI SQL raises instead of wrapping
+    int64: a squared coarse distance past 2**63 - 1, a NULL element
+    ahead of an overflowing square (zip_with squares every element), a
+    squared subspace distance only, and a quantized value past BIGINT.
+    Rows at the edge still encode as SQL does: a distance sum just
+    under 2**63 and a value of exactly 2**63, which Spark's cast
+    saturates to 2**63 - 1."""
+    schema = "vec_id long, embedding array<double>"
+    wide_books = [[[0, 0], [-3037000500, 0]], [[0, 0], [0, 1]]]
+    raising = [
+        (_OVERFLOW_CELLS, _BOOKS_2X2, [_OVERFLOW_ROW]),
+        (_OVERFLOW_CELLS, _BOOKS_2X2, [(1, [None, 4e9, 0.0, 0.0])]),
+        ([[0, 0, 0, 0]], wide_books, [(1, [1.0, 0.0, 0.0, 0.0])]),
+        (_OVERFLOW_CELLS, _BOOKS_2X2, [(1, [2.0**63 + 2048, 0.0, 0.0, 0.0])]),
+    ]
+    for cents, books, rows in raising:
+        frame = spark.createDataFrame(rows, schema)
+        _assert_encodes_raise(frame, lambda df: df, cents, books, 1)
+
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    top = (1 << 63) - 1
+    encoding = [
+        (_OVERFLOW_CELLS, [(1, [2147483647.0, 2147483647.0, 0.0, 0.0])],
+         {1: (1, (2147483646, 2147483647, 0, 0), (1, 0))}),
+        ([[top, 0, 0, 0]], [(1, [2.0**63, 0.0, 0.0, 0.0])],
+         {1: (0, (0, 0, 0, 0), (0, 0))}),
+    ]
+    for cents, rows, want in encoding:
+        frame = spark.createDataFrame(rows, schema)
+        arrow = sim._ivfadc_working(
+            frame, cents, _BOOKS_2X2, 1, "vec_id", "embedding"
+        )
+        assert _encoded_rows(arrow) == want
+        assert _encoded_rows(_sql_encode(frame, cents, _BOOKS_2X2, 1)) == want
+
+
+def test_np_encode_overflow_raises_on_stream(spark, tmp_path):
+    """The overflow fixture on a ``file_stream`` frame run with
+    availableNow: the micro-batch encode raises as the SQL encode does."""
+    frame, run = _stream_frames(spark, tmp_path)([_OVERFLOW_ROW])
+    _assert_encodes_raise(frame, run, _OVERFLOW_CELLS, _BOOKS_2X2, 1)

@@ -801,7 +801,7 @@ def test_count_real_scans_sees_subquery_scans(spark, tmp_path):
     import sys as _sys
 
     _sys.path.insert(0, "/root/repo")
-    from plan_audit import count_real_scans
+    from tools.plan_audit import count_real_scans
 
     p = str(tmp_path / "t")
     spark.range(10).toDF("x").write.parquet(p)

@@ -200,7 +200,7 @@ def test_shuffle_diff_gate_catches_injected_regression():
     import sys as _sys
 
     _sys.path.insert(0, "/root/repo")
-    from shuffle_audit import diff_vs_previous
+    from tools.shuffle_audit import diff_vs_previous
 
     def q(wb, spill=0):
         return {

@@ -7,37 +7,36 @@ partial-aggregation order follows the partition layout.  This audit
 runs every `queries()` entry under two different
 ``spark.sql.shuffle.partitions`` settings and requires EXACT equality
 (atol=0) — any difference is an order-sensitive float composition that
-will eventually disagree with the driver's oracle.
+will eventually disagree with the driver's oracle.  Both runs are put in
+the oracle comparison's canonical order (``tests.oracle_harness._canon``).
 
 Prints each partition-order-sensitive or failing query and a one-line
 JSON summary; exits 1 on any issue.
 
-Usage: python determinism_audit.py [sf_dir]
-
-``sf_dir`` defaults to ``/root/testdata/sf0.01``.
+Usage:  python -m tools.determinism_audit
+        SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.01 to override the SF.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import numpy as np
 
-
-def canon(pdf):
-    pdf = pdf[sorted(pdf.columns)]
-    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+from tools.harness import session
 
 
 def main() -> None:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    if len(sys.argv) != 1:
+        raise SystemExit("usage: python -m tools.determinism_audit")
+    sf = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.01")
     from bigdata_20251_steam_spark.plans import QUERIES
-    from bigdata_20251_steam_spark.session import get_spark
+    from tests.oracle_harness import _canon
 
-    spark = get_spark(app_name="determinism_audit", master="local[16]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("determinism_audit", 16)
     t0 = time.time()
     bad = []
     for name, q in QUERIES.items():
@@ -45,7 +44,7 @@ def main() -> None:
         for parts in ("16", "48"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             try:
-                runs.append(canon(q.fn(spark, sf).toPandas()))
+                runs.append(_canon(q.fn(spark, sf).toPandas()))
             except Exception as ex:  # noqa: BLE001 — audit must not abort
                 runs.append(f"ERR {ex}")
         a, b = runs
@@ -76,6 +75,7 @@ def main() -> None:
         "issues": [list(x) for x in bad],
         "wall_sec": round(time.time() - t0, 1),
     }))
+    spark.stop()
     sys.exit(1 if bad else 0)
 
 

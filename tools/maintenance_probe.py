@@ -3,10 +3,11 @@ compact_ivfadc_index and retrain_ivfadc_on_drift at 1x / 16x / 64x of
 the sf0.1 embeddings so the "bounded per-cell job" claim is MEASURED,
 not asserted.
 
-Per multiple: materialize an id-shifted union of the sf0.1 embeddings
-(vector values unchanged — per-cell distortion is then
-multiple-invariant, so the SAME top-3 cells drift at every size with
-|cell| growing linearly: exactly the bounded-per-cell-job question),
+Per multiple: materialize N x the sf0.1 embeddings with
+``tools.harness.replicate`` (vec_id shifted, vector values unchanged —
+per-cell distortion is then multiple-invariant, so the SAME top-3 cells
+drift at every size with |cell| growing linearly: exactly the
+bounded-per-cell-job question),
 build the epoch-segmented store the streaming ingest accretes (4
 (cluster, epoch) dynamic-overwrite generations, written directly —
 the probe times MAINTENANCE, not micro-batch machinery), then time:
@@ -20,7 +21,7 @@ Prints one JSON line per multiple:
   {"mult": m, "rows": n, "compact_sec": s, "cells_compacted": k,
    "retrain_sec": s, "retrained_cells": [...], "retrain_rows": n}
 
-Usage:  python maintenance_probe.py [multiples...]   (default: 1 16 64)
+Usage:  python -m tools.maintenance_probe [multiples...]   (default: 1 16 64)
 Quiet box required — wall-clock numbers feed SCALING.md.
 """
 
@@ -35,6 +36,8 @@ import time
 
 from pyspark.sql import functions as F
 
+from tools.harness import cpus, replicate, session
+
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 EPOCHS = 4
 
@@ -42,43 +45,22 @@ EPOCHS = 4
 def main() -> None:
     mults = [int(a) for a in sys.argv[1:]] or [1, 16, 64]
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "12g")
-        .getOrCreate()
+    spark = session(
+        "maintenance_probe", cpus(), 32, bare=True,
+        conf={"spark.driver.memory": "12g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from bigdata_20251_steam_spark.operators import similarity as sim
     from bigdata_20251_steam_spark.plans.extension_queries import (
         _IVFADC_CENTS,
         _IVFADC_CODEBOOKS,
     )
-    from bigdata_20251_steam_spark.sources.batch import load_table
-
-    base = load_table(spark, BASE_SF, "embeddings")
-    max_id = base.agg(F.max("vec_id")).collect()[0][0]
 
     for mult in mults:
         work = tempfile.mkdtemp(prefix=f"maint_probe_{mult}x_")
         try:
-            copies = [
-                base.withColumn("vec_id", F.col("vec_id") + i * (max_id + 1))
-                for i in range(mult)
-            ]
-            emb_df = copies[0]
-            for c in copies[1:]:
-                emb_df = emb_df.unionByName(c)
-            src = os.path.join(work, "embeddings.parquet")
-            emb_df.write.mode("overwrite").parquet(src)
-            emb = spark.read.parquet(src)
+            replicate(spark, BASE_SF, work, mult, tables=("embeddings",))
+            emb = spark.read.parquet(os.path.join(work, "embeddings.parquet"))
             n = emb.count()
 
             # epoch-segmented store: 4 dynamic-overwrite generations,

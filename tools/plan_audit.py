@@ -37,7 +37,8 @@ as a bare-session build check for every registered callable.
 Prints one status line per query and a one-line JSON summary; exits 1
 on any unexplained hit or build error.
 
-Usage:  python plan_audit.py
+Usage:  python -m tools.plan_audit
+        SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.01 to override the SF.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from tools.harness import session
 
 #: (query, pattern) pairs that are DECLARED acceptable, with reasons.
 #: Every entry is the bounded-broadcast-side class: Catalyst plans a
@@ -284,21 +285,12 @@ def count_real_scans(jnode, _seen_subqueries=None) -> int:
 
 def main() -> None:
     if len(sys.argv) != 1:
-        raise SystemExit("usage: python plan_audit.py")
+        raise SystemExit("usage: python -m tools.plan_audit")
     sf = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.01")
-
-    from pyspark.sql import SparkSession
 
     from bigdata_20251_steam_spark.plans import QUERIES
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("plan_audit", 16, bare=True)
 
     t0 = time.time()
     results: dict[str, dict] = {}

@@ -8,7 +8,10 @@ representative query slice at each multiple.  A healthy plan scales
 anything super-linear is a candidate quadratic (join explosion,
 unblocked self-join) that 100 TB would amplify.
 
-Usage:  python scaling_probe.py [multiples...]   (default: 1 4 16)
+Fact tables are multiplied with ``tools.harness.replicate``; only the
+ones the chosen probes read (``PROBE_TABLES``) are written.
+
+Usage:  python -m tools.scaling_probe [multiples...]   (default: 1 4 16)
 Prints one JSON line per multiple plus a final summary with the
 observed log-slope per query (1.0 = linear).
 """
@@ -21,9 +24,8 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
-from pyspark.sql import functions as F
+from tools.harness import DIMENSIONS, best_of, cpus, hashfold, replicate, session
 
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -200,19 +202,6 @@ PROBES = [
     "multimodal_resample_roundtrip",
 ]
 
-#: id columns to shift per table so multiplied rows stay unique/joinable.
-#: Keys referenced across tables shift together (custkey/orderkey pairs),
-#: so join fan-out per key is PRESERVED, not multiplied.
-SHIFT_COLS = {
-    "lineitem": ("l_orderkey",),
-    "orders": ("o_orderkey", "o_custkey"),
-    "customer": ("c_custkey",),
-    "events": ("event_id", "user_id"),
-    "documents": ("doc_id",),
-    "embeddings": ("vec_id",),
-}
-STATIC = ("region", "nation", "supplier", "part")
-
 #: tables each probe reads — lets a filtered probe run (SCALING_PROBES)
 #: skip materializing fact tables it never touches (a 64x lineitem build
 #: for a documents-only probe would dominate the wall clock).
@@ -298,63 +287,6 @@ PROBE_TABLES = {
 }
 
 
-def materialize(spark, mult: int, out_dir: str, needed: set[str]) -> None:
-    from bigdata_20251_steam_spark.sources.batch import load_table
-
-    os.makedirs(out_dir, exist_ok=True)
-    for t in STATIC:
-        load_table(spark, BASE_SF, t).write.mode("overwrite").parquet(
-            f"{out_dir}/{t}.parquet"
-        )
-    for t, cols in SHIFT_COLS.items():
-        if t not in needed:
-            continue
-        base = load_table(spark, BASE_SF, t)
-        maxes = base.agg(
-            *[F.max(c).alias(c) for c in cols]
-        ).collect()[0]
-        copies = []
-        for i in range(mult):
-            c = base
-            for col in cols:
-                c = c.withColumn(col, F.col(col) + i * (maxes[col] + 1))
-            # replica docs must NOT be near-duplicates of each other:
-            # identical text would grow LSH candidate pairs ~quadratically
-            # in mult and the probe would measure workload explosion, not
-            # plan scaling (duplicate density stays constant per replica).
-            # FIXTURE v2 (r10): the original transform appended ONE token
-            # (" r{i}"), which defeats exact dedup but leaves replicas
-            # sharing ~(N-2)/N of their 3-gram shingles — they stayed
-            # near-duplicates, and minhash candidate pairs measured
-            # x4.4 per doc-doubling (quadratic; caught when the
-            # dedup_quality_report anchor came back super-linear at
-            # slope 1.18).  v2 suffixes EVERY whitespace token with
-            # "r{i}", so replicas share no shingle and no hashed word
-            # feature: duplicate density per replica is now genuinely
-            # constant.  Anchors measured before r10's re-run used v1 —
-            # pair-graph numbers from those runs overstate workload
-            # growth (adjudicated in SCALING.md round-10).
-            if t == "documents" and i > 0:
-                c = c.withColumn(
-                    "text",
-                    F.when(
-                        F.col("text").isNotNull(),
-                        F.concat_ws(
-                            " ",
-                            F.transform(
-                                F.split(F.col("text"), r"\s+"),
-                                lambda x: F.concat(x, F.lit(f"r{i}")),
-                            ),
-                        ),
-                    ),
-                )
-            copies.append(c)
-        out = copies[0]
-        for c in copies[1:]:
-            out = out.unionByName(c)
-        out.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
-
-
 def main() -> None:
     mults = [int(a) for a in sys.argv[1:]] or [1, 4, 16]
     # SCALING_PROBES=name,name limits the probe slice (e.g. the 64x
@@ -369,26 +301,14 @@ def main() -> None:
         probes = sel
     needed = set().union(*(PROBE_TABLES[q] for q in probes))
     from bigdata_20251_steam_spark.plans import QUERIES
-    from bigdata_20251_steam_spark.session import get_spark
 
-    spark = get_spark(app_name="scaling_probe")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("scaling_probe", cpus("*"), 32)
     results: dict[str, dict[int, float]] = {q: {} for q in probes}
     for mult in mults:
         d = os.path.join(tempfile.gettempdir(), f"scaleprobe_x{mult}")
-        materialize(spark, mult, d, needed)
+        replicate(spark, BASE_SF, d, mult, tables=DIMENSIONS + tuple(needed))
         for q in probes:
-            best = math.inf
-            for _ in range(2):  # min-of-2: exclude JIT/VM stalls
-                t0 = time.perf_counter()
-                df = QUERIES[q].fn(spark, d)
-                # full-column xxhash64 fold, not count(): count lets the
-                # optimizer prune every computed column of a narrow-map
-                # query and time the bare scan (r7 bench-harness fix)
-                df.select(F.xxhash64(*df.columns).alias("_h")).agg(
-                    F.bit_xor("_h")
-                ).collect()
-                best = min(best, time.perf_counter() - t0)
+            best = best_of(2, lambda: hashfold(QUERIES[q].fn(spark, d)))
             results[q][mult] = round(best, 3)
         print(json.dumps({"mult": mult, "times": {q: results[q][mult] for q in probes}}), flush=True)
         if mult != 1:

@@ -23,9 +23,9 @@ up as a reduction — which is the correct accounting.  Streaming
 queries are excluded (micro-batch jobs run on the stream-execution
 thread, outside the caller's job group); the headline suite is batch.
 
-r11 (verdict #4): the audit is a DIFFED REGRESSION GATE, not just a
-snapshot — after writing SHUFFLE_r{N}.json it loads the most recent
-committed prior round's artifact and fails loudly (exit 1) on
+The audit is a DIFFED REGRESSION GATE, not just a snapshot: it diffs
+against the committed baseline ``SHUFFLE_r18.json`` and fails loudly
+(exit 1) on
 
   - any NEW spill (prior rounds pin zero spill at bench SF), or
   - a carried headliner whose shuffle_write_bytes grew more than
@@ -34,29 +34,39 @@ committed prior round's artifact and fails loudly (exit 1) on
 
 unless the query is in ``SHUFFLE_WHITELIST`` with a written reason
 (the plan-audit convention).  New headliners are reported as baseline
-rows, never violations.  The full diff table lands in the artifact's
-``diff`` section.
+rows, never violations.
 
-Usage:  python shuffle_audit.py <round>      -> SHUFFLE_r{N}.json
+It writes no file: it prints one line per query (its diff status and
+shuffle bytes written) and a one-line JSON whose ``queries`` section
+has the baseline's shape.  A change that accepts new shuffle volume
+re-baselines by redirecting that JSON line into ``SHUFFLE_r18.json``.
+
+Usage:  python -m tools.shuffle_audit
         SPARK_GRAFT_SF_DIR to override the SF (default sf0.1).
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 import time
 import urllib.request
+
+from tools.harness import hashfold, session
+
+#: The committed per-headliner baseline the audit diffs against.
+BASELINE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "SHUFFLE_r18.json",
+)
 
 #: Grow-tolerance for carried headliners: BOTH must be exceeded.
 GROWTH_PCT = 0.20
 GROWTH_ABS_BYTES = 256 * 1024
 
-#: query -> reason for an ACCEPTED shuffle growth this round (cleared
-#: each round once the baseline artifact absorbs the new volume).
+#: query -> reason for an ACCEPTED shuffle growth (cleared once the
+#: baseline absorbs the new volume).
 SHUFFLE_WHITELIST: dict[str, str] = {}
 
 
@@ -118,38 +128,19 @@ def diff_vs_previous(
     return rows, violations
 
 
-def _previous_artifact(here: str, rnd: int) -> tuple[int, dict] | None:
-    """Most recent committed SHUFFLE_r{M}.json with M < rnd."""
-    best = None
-    for p in glob.glob(os.path.join(here, "SHUFFLE_r*.json")):
-        m = re.search(r"SHUFFLE_r(\d+)\.json$", p)
-        if m and int(m.group(1)) < rnd:
-            if best is None or int(m.group(1)) > best[0]:
-                best = (int(m.group(1)), p)
-    if best is None:
-        return None
-    with open(best[1]) as f:
-        return best[0], json.load(f)
-
-
 def main() -> None:
-    if len(sys.argv) != 2 or not sys.argv[1].isdigit():
-        raise SystemExit("usage: python shuffle_audit.py <round-number>")
-    rnd = int(sys.argv[1])
+    if len(sys.argv) != 1:
+        raise SystemExit("usage: python -m tools.shuffle_audit")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    from pyspark.sql import functions as F
 
     from bigdata_20251_steam_spark.plans import QUERIES
     from bigdata_20251_steam_spark.plans.extension_queries import (
         _staged_ivfadc_index_dir,
         _staged_ivfadc_meta_index_dir,
     )
-    from bigdata_20251_steam_spark.session import get_spark
 
-    spark = get_spark(app_name="shuffle_audit", master="local[32]",
-                      extra_conf={"spark.sql.shuffle.partitions": "32"})
-    spark.sparkContext.setLogLevel("ERROR")
+    # the baseline was measured at local[32]
+    spark = session("shuffle_audit", 32)
     sc = spark.sparkContext
     t0 = time.time()
 
@@ -161,12 +152,8 @@ def main() -> None:
     headline = [q for q in QUERIES.values() if q.headline]
     for q in headline:
         sc.setJobGroup(q.name, q.name)
-        df = q.fn(spark, sf_dir)
-        # same full-column fold as bench.py: no pruning, every column
-        # computed, so the audited plan is the benched plan
-        df.select(F.xxhash64(*df.columns).alias("_h")).agg(
-            F.bit_xor("_h"), F.count(F.lit(1))
-        ).collect()
+        # bench.py's fold, so the audited plan is the benched plan
+        hashfold(q.fn(spark, sf_dir))
         sc.setJobGroup("", "")
 
     ui = sc.uiWebUrl
@@ -213,22 +200,21 @@ def main() -> None:
             acc["input_bytes"] += s.get("inputBytes", 0)
 
     missing = sorted(names - set(out))
-    prev = _previous_artifact(os.path.dirname(os.path.abspath(__file__)), rnd)
-    if prev is not None:
-        base_round, base = prev
-        diff, diff_violations = diff_vs_previous(
-            out, base.get("queries", {}), SHUFFLE_WHITELIST
-        )
-    else:
-        base_round, diff, diff_violations = None, {}, []
-    artifact = {
-        "round": rnd,
+    with open(BASELINE) as f:
+        baseline = json.load(f)["queries"]
+    diff, violations = diff_vs_previous(out, baseline, SHUFFLE_WHITELIST)
+    for name, row in diff.items():
+        print(name, row["status"],
+              f"write_bytes={row.get('cur_write_bytes', 0):,}",
+              f"delta_pct={row.get('delta_pct', '-')}", flush=True)
+    statuses = [r["status"] for r in diff.values()]
+    print(json.dumps({
         "sf": sf_dir,
-        "queries": dict(sorted(out.items())),
+        "baseline": os.path.basename(BASELINE),
+        "ok": statuses.count("ok"),
+        "new": statuses.count("new"),
+        "diff_violations": violations,
         "missing": missing,  # should be [] — loud if attribution broke
-        "baseline_round": base_round,
-        "diff": diff,
-        "diff_violations": diff_violations,
         "growth_gate": {
             "pct": GROWTH_PCT,
             "abs_bytes": GROWTH_ABS_BYTES,
@@ -242,29 +228,10 @@ def main() -> None:
             for v in out.values()
         ),
         "wall_sec": round(time.time() - t0, 1),
-    }
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), f"SHUFFLE_r{rnd:02d}.json"
-    )
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print(
-        f"wrote {path}: {len(out)} queries, "
-        f"{artifact['total_shuffle_write_bytes']:,} shuffle bytes written, "
-        f"{artifact['total_spill_bytes']:,} spill bytes"
-        + (f", MISSING {missing}" if missing else "")
-    )
-    if base_round is not None:
-        n_ok = sum(1 for r in diff.values() if r["status"] == "ok")
-        n_new = sum(1 for r in diff.values() if r["status"] == "new")
-        print(
-            f"diff vs SHUFFLE_r{base_round:02d}: {n_ok} ok, {n_new} new, "
-            f"{len(diff_violations)} violations"
-        )
-        for name in diff_violations:
-            print(f"  {name}: {diff[name]['status']}")
+        "queries": dict(sorted(out.items())),
+    }))
     spark.stop()
-    sys.exit(1 if (missing or diff_violations) else 0)
+    sys.exit(1 if (missing or violations) else 0)
 
 
 if __name__ == "__main__":
