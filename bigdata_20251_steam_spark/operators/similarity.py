@@ -29,6 +29,8 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
@@ -513,14 +515,15 @@ def kmeans_exact(
     - init = the ``k`` lowest-id vectors (deterministic, id-density
       independent);
     - assignment = integer squared L2 argmin, ties to the lowest
-      cluster index (``array_min`` over (dist, idx) structs — struct
-      comparison orders lexicographically);
+      cluster index, through the vector family's one nearest-codeword
+      kernel (:func:`_vq`, an Arrow UDF over the grid; the oracle
+      replays it as ``array_min`` over (dist, idx) structs);
     - update = element-wise ``floor(sum / count)`` — integer sums are
       exact and order-free, the single floored division is exact IEEE
       on both engines (sums stay far inside 2^53); an emptied cluster
       keeps its previous centroid.
 
-    Scale shape: per-iteration work is one narrow zero-shuffle
+    Scale shape: per-iteration work is one narrow zero-shuffle Arrow
     assignment pass + one ``(k x dim)``-bounded posexplode aggregate
     (map-side partials; the exchange carries k*dim rows); only the
     k x dim integer centroid matrix reaches the driver per iteration
@@ -550,32 +553,9 @@ def kmeans_exact(
 
         base = pin_frame(base)
     cents = kmeans_train_grid(base, k=k, iters=iters)
-    return _int_assign(base, cents).select("vec_id", "cluster", "sqdist")
-
-
-def _int_arr_sql(c: list[int]) -> str:
-    """SQL literal text of an integer array (bigint elements)."""
-    return "array(" + ",".join(f"{int(v)}L" for v in c) + ")"
-
-
-def _int_assign_sql(q: str, cents: list[list[int]]) -> str:
-    """:func:`_int_assign`'s argmin ``struct(d, c)`` over literal
-    centroids: one JVM parse instead of ``k x 2`` py4j lambda builds per
-    assignment expression.  The centroid literals render as SQL
-    ``array(...L)`` text, which ConstantFolding collapses to one
-    Literal.  Struct min: ties go to the lowest cluster index."""
-    pairs = ",".join(
-        f"named_struct('d', {_sq_sql(q, _int_arr_sql(c))}, 'c', {i})"
-        for i, c in enumerate(cents)
+    return _vq(base, ("cluster", "sqdist"), cents).select(
+        "vec_id", "cluster", "sqdist"
     )
-    return f"array_min(array({pairs}))"
-
-
-def _int_assign(df: DataFrame, cents: list[list[int]]) -> DataFrame:
-    """Add integer argmin ``cluster`` + ``sqdist`` columns over literal
-    centroids (ties to the lowest cluster index — struct min)."""
-    best = F.expr(_int_assign_sql("q", cents))
-    return df.withColumn("cluster", best["c"]).withColumn("sqdist", best["d"])
 
 
 def kmeans_train_grid(
@@ -611,7 +591,7 @@ def kmeans_train_grid(
         )
     for _ in range(iters):
         sums = (
-            _int_assign(base, cents)
+            _vq(base, ("cluster",), cents)
             .select("cluster", F.posexplode("q").alias("pos", "x"))
             .groupBy("cluster", "pos")
             .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -670,16 +650,19 @@ def _pq_quantized(
 ) -> DataFrame:
     """(vec_id, q) on the COMMON integer grid round(x * scale) — the
     kmeans_exact quantization, shared so codes/ADC are cross-engine
-    exact.
+    exact.  It is the vector family's only quantizer: Spark's own
+    ``round`` (HALF_UP) and ANSI ``CAST`` (CAST_OVERFLOW past BIGINT)
+    make the grid, and every nearest-codeword pass reads it through
+    the one Arrow kernel (:func:`_vq`).
 
-    Spread-partitioned (optimization r17, guide §2.5 input skew): every
-    consumer of this frame (kmeans assign, PQ/IVFADC encode, ADC
-    scoring, Hamming fold) runs O(dim × k_sub) INTERPRETED
-    higher-order-function arithmetic per row with no shuffle of its
-    own, so its parallelism equals the scan's partition count — a
-    single-row-group parquet input pins the entire encode to one core
-    while the rest of the machine idles (measured: 3.7 s vs 0.4 s for
-    the sf0.1 encode pass).  The round-robin exchange ships only the
+    Spread-partitioned (optimization r17, guide §2.5 input skew): the
+    consumers of this frame (the Arrow kernel's assignment and encode
+    passes, ADC scoring, the Hamming fold) do O(dim × k) work per row
+    with no shuffle of their own, so their parallelism equals the
+    scan's partition count — a single-row-group parquet input pins the
+    whole Arrow kernel pass to one Python worker while the rest of the
+    machine idles (measured on the older interpreted encode: 3.7 s vs
+    0.4 s for the sf0.1 pass).  The round-robin exchange ships only the
     narrow (vec_id, q) grid and fires ONLY when the scan is narrower
     than the session's parallelism — at 100 TB the input has ≫ cores
     row groups and this is a no-op (the dedup/text families already
@@ -699,17 +682,6 @@ def _pq_quantized(
             ).alias("q"),
         )
     )
-
-
-def _pq_sub_assign_sql(codebook: list[list[int]], sub: str) -> str:
-    """argmin code of one subspace slice over its literal codebook —
-    integer squared L2, ties to the lowest code (struct min, the
-    kmeans_exact rule)."""
-    pairs = ",".join(
-        f"named_struct('d', {_sq_sql(sub, _int_arr_sql(c))}, 'c', {i})"
-        for i, c in enumerate(codebook)
-    )
-    return f"array_min(array({pairs})).c"
 
 
 def pq_train(
@@ -774,26 +746,7 @@ def _pq_train_grid(
         for s in range(m)
     ]
     for _ in range(iters):
-        # the assignment array as one SQL string: a Column-API build
-        # would cost m x k_sub literal lists + 2 lambdas each per iteration
-        entries = ",".join(
-            "named_struct('s', {s}, 'c', {c}, 'sq', {sq})".format(
-                s=s,
-                c=_pq_sub_assign_sql(
-                    books[s], f"slice(q, {s * subdim + 1}, {subdim})"
-                ),
-                sq=f"slice(q, {s * subdim + 1}, {subdim})",
-            )
-            for s in range(m)
-        )
-        per_sub = F.expr(f"array({entries})")
-        rows = (
-            base.select(F.explode(per_sub).alias("e"))
-            .select("e.s", "e.c", F.posexplode("e.sq").alias("pos", "x"))
-            .groupBy("s", "c", "pos")
-            .agg(F.sum("x").alias("sum"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
+        rows = _pq_sums(_vq(base, ("codes",), books=books), subdim)
         new = [[list(code) for code in book] for book in books]
         for r in rows:
             new[r["s"]][r["c"]][r["pos"]] = int(
@@ -801,6 +754,28 @@ def _pq_train_grid(
             )
         books = new
     return books
+
+
+def _pq_sums(coded: DataFrame, subdim: int, *keys: str) -> list:
+    """One PQ Lloyd round's sums: over a frame carrying the grid ``q``
+    and its ``codes``, each row explodes into its m (subspace, code)
+    slices, whose positions aggregate map-side per ``(*keys, s, c,
+    pos)``.  The exchange and the driver collect carry at most one row
+    per codebook cell."""
+    return (
+        coded.select(*keys, "q", F.posexplode("codes").alias("s", "c"))
+        .select(
+            *keys,
+            "s",
+            "c",
+            F.posexplode(
+                F.slice("q", F.col("s") * subdim + 1, F.lit(subdim))
+            ).alias("pos", "x"),
+        )
+        .groupBy(*keys, "s", "c", "pos")
+        .agg(F.sum("x").alias("sum"), F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
 
 
 def pq_encode(
@@ -815,19 +790,13 @@ def pq_encode(
     Output ``(vec_id, codes)`` — ``codes`` an ``array<int>`` of length
     ``m``; at 4-bit codes this is the 32-64x storage compression that
     makes billion-vector ANN corpora memory-resident.  Zero-shuffle
-    scan-fused projection: the codebooks ride as a pinned
-    scalar-subquery column (r13 — the :func:`_pinned_view` hoist; each
-    subspace is still an integer argmin expression — no Python, no
-    exchange, the NB/BM25 scoring contract).
+    narrow pass: each subspace's code is the integer argmin of the one
+    Arrow kernel (:func:`_vq`, ties to the lowest code), with the
+    codebooks riding its closure — no exchange, the NB/BM25 scoring
+    contract.
     """
-    subdim = len(codebooks[0][0])
-    cbv = _pinned_scalar(_cb_view(embeddings.sparkSession, codebooks))
-    base = _pq_quantized(embeddings, scale, id_col, vec_col).withColumn(
-        "_cb", cbv
-    )
-    return base.select(
-        "vec_id", F.expr(_codes_sql("_cb", "q", subdim)).alias("codes")
-    )
+    grid = _pq_quantized(embeddings, scale, id_col, vec_col)
+    return _vq(grid, ("codes",), books=codebooks).select("vec_id", "codes")
 
 
 def pq_topk(
@@ -1087,17 +1056,11 @@ def _cb_view(spark, codebooks: list[list[list[int]]]) -> str:
     )
 
 
-def _sqdist_cols(a: Column, b: Column) -> Column:
-    """Integer squared L2 between two array columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 # ---------------------------------------------------------------------------
-# SQL-string builders of the IVFADC higher-order expressions.
+# SQL-string builders of the query-side IVFADC expressions (probe
+# argsort, query residual, decode, ADC lookup table).  The corpus-side
+# nearest-codeword passes do not use them: they run through the one
+# Arrow kernel (:func:`_vq`), whose SQL reference lives with the tests.
 #
 # Each Python lambda handed to F.transform/F.zip_with/F.aggregate is
 # converted driver-side via ``_create_lambda`` — several py4j round-trips
@@ -1121,16 +1084,6 @@ def _sq_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
-def _argmin_cell_sql(q: str, cm: str) -> str:
-    """Nearest cell ``struct(d, c)`` of ``q`` over the centroid matrix
-    ``cm`` — struct min, ties to the lowest cell (transform's 0-based
-    index replays :func:`_int_assign`'s ``enumerate``)."""
-    return (
-        f"array_min(transform({cm}, (c, i) -> "
-        f"named_struct('d', {_sq_sql(q, 'c')}, 'c', i)))"
     )
 
 
@@ -1158,16 +1111,6 @@ def _recon_sql(cb: str, codes: str) -> str:
     return (
         f"flatten(transform({codes}, (code, s) -> "
         f"element_at(element_at({cb}, s + 1), CAST(code + 1 AS INT))))"
-    )
-
-
-def _codes_sql(cb: str, q: str, subdim: int) -> str:
-    """Per-subspace argmin codes of ``q`` over the codebook array ``cb``
-    — ties to the lowest code via struct min."""
-    sub = f"slice({q}, s * {int(subdim)} + 1, {int(subdim)})"
-    return (
-        f"transform({cb}, (cbs, s) -> array_min(transform(cbs, (w, ci) -> "
-        f"named_struct('d', {_sq_sql(sub, 'w')}, 'c', ci))).c)"
     )
 
 
@@ -1211,8 +1154,8 @@ def _nn_join_cluster(df: DataFrame) -> DataFrame:
 
     A join keyed on (or filtered by ``array_contains`` against)
     ``cluster`` makes Catalyst infer ``IsNotNull(cluster)``; because a
-    derived ``cluster`` is a PROJECTED argmin over the centroid
-    literals rather than a stored column, the inferred predicate
+    derived ``cluster`` is a PROJECTED argmin (the Arrow kernel's
+    output) rather than a stored column, the inferred predicate
     substitutes the ENTIRE coarse-assignment expression and pushes it
     below the parallelism-floor repartition — re-running the most
     expensive arithmetic in the query per corpus row INSIDE the
@@ -1236,36 +1179,11 @@ def _ivf_residuals(grid: DataFrame, cents: list[list[int]]) -> DataFrame:
     that centroid: ``(vec_id, cluster, q)`` with ``q`` the integer
     RESIDUAL (Jégou §V — IVFADC quantizes residuals, which are far more
     clusterable than raw vectors because the coarse quantizer has
-    already removed the cell mean).  Zero-shuffle scan-fused: argmin +
-    element_at + zip_with over literals."""
-    assigned = _int_assign(grid, cents)
-    cmat = (
-        "CAST(array("
-        + ",".join(_int_arr_sql(c) for c in cents)
-        + ") AS ARRAY<ARRAY<BIGINT>>)"
-    )
-    return assigned.select(
-        "vec_id",
-        "cluster",
-        F.expr(_residual_sql("q", cmat, "cluster")).alias("q"),
-    )
-
-
-def _ivf_residuals_hoisted(grid: DataFrame, cents: list[list[int]]) -> DataFrame:
-    """:func:`_ivf_residuals` with the centroid matrix hoisted into a
-    pinned scalar-subquery column (r13) — bit-identical output, ~K x dim
-    fewer literal nodes per plan reference.  Used on the STREAM side of
-    the streaming ANN probes, where the literal tree was re-analyzed
-    per micro-batch plan; uncorrelated scalar subqueries execute fine
-    inside the micro-batch plans (pinned by the registered streaming
-    queries' oracles)."""
-    cm = _pinned_scalar(_cmat_view(grid.sparkSession, cents))
-    g = grid.withColumn("_cm", cm)
-    g = g.withColumn("cluster", F.expr(_argmin_cell_sql("q", "_cm") + ".c"))
-    return g.select(
-        "vec_id",
-        "cluster",
-        F.expr(_residual_sql("q", "_cm", "cluster")).alias("q"),
+    already removed the cell mean).  One zero-shuffle pass of the Arrow
+    kernel (:func:`_vq`), on batch and streaming grids alike; the
+    centroids ride its closure."""
+    return _vq(grid, ("cluster", "qr"), cents).select(
+        "vec_id", "cluster", F.col("qr").alias("q")
     )
 
 
@@ -1306,29 +1224,13 @@ def ivfadc_encode(
 ) -> DataFrame:
     """The stored IVFADC index frame: ``(vec_id, cluster, codes)``.
 
-    One projection through the Arrow encode (coarse argmin + residual
-    + per-subspace argmin, :func:`_np_ivfadc_encode_udf`).  At 100 TB
+    One pass of the Arrow kernel (coarse argmin + residual +
+    per-subspace argmin, :func:`_vq`).  At 100 TB
     this is the write-path pass whose output lands PARTITIONED BY
     ``cluster`` so probe routing becomes partition pruning."""
     return _ivfadc_working(
         embeddings, coarse_cents, codebooks, scale, id_col, vec_col
     ).select("vec_id", "cluster", "codes")
-
-
-def _round_half_up(x: np.ndarray) -> np.ndarray:
-    """Spark ``round(double)`` at scale 0, elementwise: HALF_UP, halves
-    away from zero (numpy's ``rint`` sends them to even).
-
-    Spark rounds the double's decimal string, whose fraction reaches 0.5
-    exactly when the double's does, so the half test reads the exact
-    fraction ``a - floor(a)``.  ``floor(a + 0.5)`` would round the sum
-    first and send 0.49999999999999994 to 1 and 2**52 + 1 to
-    2**52 + 2.  The subtraction is exact for every ``|x| < 2**52``, and
-    every double at or above that is already an integer."""
-    a = np.abs(x)
-    q = np.floor(a)
-    q += (a - q) >= 0.5
-    return np.copysign(q, x)
 
 
 _I64_MAX = (1 << 63) - 1
@@ -1348,126 +1250,172 @@ def _sq_exact(a: list, b: list) -> int | None:
         t is not None and t > _I64_MAX for t in terms
     ):
         raise OverflowError(
-            "IVFADC encode: a squared distance overflows BIGINT (the SQL "
-            "encode raises ARITHMETIC_OVERFLOW)"
+            "nearest codeword: a squared distance overflows BIGINT (the "
+            "SQL argmin raises ARITHMETIC_OVERFLOW)"
         )
     return sum(head) if len(head) == len(terms) else None
 
 
-def _check_encode_exact(q: list, cents: list, books: list) -> None:
-    """Raise :class:`OverflowError` where the SQL encode of the row
-    ``q`` (ints, None for NULL) raises: on a coarse distance, or on a
-    subspace distance of the residual.  The residual's own elements fit,
-    since each is a term of the chosen cell's coarse distance."""
-    d = [_sq_exact(q, c) for c in cents]
-    cell = 0 if None in d else d.index(min(d))
-    r = [None if x is None else x - y for x, y in zip(q, cents[cell])]
-    subdim = len(books[0][0])
-    for s, book in enumerate(books):
-        for w in book:
-            _sq_exact(r[s * subdim:(s + 1) * subdim], w)
+def _check_encode_exact(q: list, codewords: list) -> None:
+    """Raise :class:`OverflowError` where the SQL distance from the grid
+    row ``q`` (ints, None for NULL) to one of ``codewords`` raises."""
+    for c in codewords:
+        _sq_exact(q, c)
 
 
-def _np_ivfadc_encode_udf(
-    coarse_cents: list[list[int]],
-    codebooks: list[list[list[int]]],
-    scale: int,
-):
-    """Arrow-vectorized IVFADC encode, the one encoder of batch and
-    streaming frames: coarse argmin + residual + per-subspace codes in
-    numpy int64 over whole Arrow batches, instead of the interpreted
-    per-row higher-order-function chain Spark runs without codegen.
+def _book(codewords: list[list[int]]) -> tuple:
+    """A codeword set as the kernel reads it: the int64 matrix, its
+    per-column ``max |c|`` (the overflow screen's reach) and the Python
+    ints the exact recheck uses."""
+    cw = np.asarray([[int(v) for v in c] for c in codewords], np.int64)
+    return cw, np.abs(cw.astype(np.float64)).max(axis=0), cw.tolist()
 
-    It gives the integers the inline SQL pipeline gives (the registered
-    ivfadc oracles replay that pipeline hash-exactly): quantization is
-    :func:`_round_half_up` of the same double product ``x * scale``;
-    int64 squared-L2 sums are exact; ``argmin`` returns the FIRST
-    minimum, the struct-min ties-to-lowest rule.  Pinned by
-    test_np_encode_matches_hof_encode.  Measured on the encode pass:
-    ~tie at sf0.1 (2k vectors, Python-worker fork dominates), 1.56 s
-    -> 0.59 s at 10x.
 
-    NULLs follow SQL's per-element semantics.  A NULL element (NaN once
-    in Arrow) makes every coarse distance NULL, so the row goes to cell
-    0; its residual keeps NULL at that position, and each subspace that
-    holds a NULL gets code 0 while the others encode as usual.  A NULL
-    embedding row is the all-NULL case: cell 0, NULL residual, codes
-    ``[0] * m``.  The artifacts ride the closure (kilobytes, shipped
-    once per executor).
+def _nearest(x: np.ndarray, null: np.ndarray, book: tuple) -> tuple:
+    """The vector family's one nearest-codeword kernel: for the int64
+    grid rows ``x`` (n, d), 0 where the mask ``null`` is set, the index
+    and int64 squared L2 of each row's nearest codeword in ``book``.
 
-    Overflow raises where ANSI SQL raises, instead of wrapping: a
-    ``round(x * scale)`` outside BIGINT (exactly 2**63 saturates to
-    2**63 - 1, as Spark's cast does), and a coarse or subspace squared
-    distance above 2**63 - 1.  One float bound per row covers every
-    distance (``|q - c| <= |q| + max|c|``, plus ``max|w|`` for the
-    residual); only rows whose bound passes 2**62 are rechecked exactly
-    in Python ints (:func:`_check_encode_exact`), and below it the int64
-    sums cannot wrap.
-    """
-    cents = np.asarray(
-        [[int(v) for v in c] for c in coarse_cents], dtype=np.int64
+    It keeps the SQL argmin's rules (the oracles replay ``array_min``
+    over ``struct(d, c)``): the FIRST minimum wins, so ties go to the
+    lowest index; a row holding a NULL has a NULL distance to every
+    codeword, so it gets index 0 and a NULL distance (the returned
+    ``hole`` mask).  A distance above 2**63 - 1 raises
+    :class:`OverflowError`, as ANSI SQL does: one float bound per row
+    (``|x - c| <= |x| + max|c|``) screens the batch, only rows whose
+    bound passes 2**62 are rechecked exactly in Python ints
+    (:func:`_check_encode_exact`), and below it the int64 sums cannot
+    wrap."""
+    cw, reach, exact = book
+    bound = (
+        np.where(null, 0.0, np.abs(x.astype(np.float64)) + reach) ** 2
+    ).sum(axis=1)
+    for i in np.flatnonzero(bound > 2.0**62):
+        _check_encode_exact(
+            [None if z else int(e) for e, z in zip(x[i], null[i])], exact
+        )
+    d = ((x[:, None, :] - cw[None, :, :]) ** 2).sum(axis=2)
+    hole = null.any(axis=1)
+    idx = np.where(hole, 0, d.argmin(axis=1))
+    return idx, d[np.arange(len(x)), idx], hole
+
+
+#: Spark types of the fields :func:`_vq` can return.
+_VQ_TYPES = {
+    "cluster": "int",
+    "sqdist": "bigint",
+    "qr": "array<bigint>",
+    "codes": "array<int>",
+}
+
+
+def _vq_udf(cents, books, fields: tuple[str, ...]):
+    """The Arrow UDF behind :func:`_vq`.  It reads the grid through
+    ``arrow_udf``, not ``pandas_udf``: pandas turns a whole
+    ``list<int64>`` batch into float64 once any element is NULL, so
+    2**53 + 1 would come back as 2**53."""
+    coarse = None if cents is None else _book(cents)
+    by_cell = isinstance(books, dict)
+    sets = {
+        c: [_book(b) for b in bk]
+        for c, bk in (books if by_cell else {0: books or []}).items()
+        if bk
+    }
+    dim = (
+        coarse[0].shape[1]
+        if coarse
+        else sum(b[0].shape[1] for b in next(iter(sets.values())))
     )
-    books = [
-        np.asarray([[int(v) for v in w] for w in cb], dtype=np.int64)
-        for cb in codebooks
-    ]
-    m = len(books)
-    subdim = books[0].shape[1]
-    fscale = float(scale)
-    reach = np.abs(cents.astype(np.float64)).max(axis=0) + np.concatenate(
-        [np.abs(b.astype(np.float64)).max(axis=0) for b in books]
-    )
-    cents_int = cents.tolist()
-    books_int = [b.tolist() for b in books]
+    rtype = ", ".join(f"{f}:{_VQ_TYPES[f]}" for f in fields)
 
-    @pandas_udf("struct<cluster:int, qr:array<bigint>, codes:array<int>>")
-    def _enc(v: pd.Series) -> pd.DataFrame:
-        n = len(v)
-        cluster = np.zeros(n, dtype=np.int32)
-        qr_col = np.full(n, None, dtype=object)
-        codes = np.zeros((n, m), dtype=np.int32)
-        ok = np.flatnonzero(v.notna().to_numpy())
-        if len(ok):
-            x = np.stack(v.iloc[ok].to_numpy()).astype(np.float64) * fscale
-            null = np.isnan(x)
-            null_rows = null.any(axis=1)
-            r = _round_half_up(np.where(null, 0.0, x))
-            if (np.abs(r) > 2.0**63).any():
-                raise OverflowError(
-                    "IVFADC encode: round(x * scale) is outside BIGINT (the "
-                    "SQL encode raises CAST_OVERFLOW)"
+    @F.arrow_udf(f"struct<{rtype}>")
+    def _enc(q: pa.Array, *cell: pa.Array) -> pa.Array:
+        n = len(q)
+        gone = q.is_null().to_numpy(zero_copy_only=False)
+        lens = pc.list_value_length(q).to_numpy(zero_copy_only=False)
+        if (lens[~gone] != dim).any():
+            raise ValueError(f"nearest codeword: a grid row is not {dim} long")
+        flat = q.flatten()
+        x = np.zeros((n, dim), np.int64)
+        null = np.ones((n, dim), bool)
+        x[~gone] = flat.fill_null(0).to_numpy().reshape(-1, dim)
+        null[~gone] = flat.is_null().to_numpy(zero_copy_only=False).reshape(
+            -1, dim
+        )
+        out = {}
+        if coarse is not None:
+            cl, dist, hole = _nearest(x, null, coarse)
+            out["cluster"] = pa.array(cl.astype(np.int32))
+            out["sqdist"] = pa.array(dist, mask=hole)
+            x = x - coarse[0][cl]
+            if "qr" in fields:
+                out["qr"] = pa.ListArray.from_arrays(
+                    pa.array(np.arange(n + 1, dtype=np.int32) * dim),
+                    pa.array(x.ravel(), mask=null.ravel()),
+                    mask=pa.array(gone),
                 )
-            top = r == 2.0**63
-            q = np.where(top, 0.0, r).astype(np.int64)
-            q[top] = _I64_MAX
-            bound = ((np.abs(r) + reach) ** 2).sum(axis=1)
-            for i in np.flatnonzero(bound > 2.0**62):
-                _check_encode_exact(
-                    [None if z else int(e) for e, z in zip(q[i], null[i])],
-                    cents_int,
-                    books_int,
-                )
-            d = ((q[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            cl = np.where(null_rows, 0, d.argmin(axis=1))
-            qr = q - cents[cl]
-            for s in range(m):
-                sl = slice(s * subdim, (s + 1) * subdim)
-                ds = ((qr[:, None, sl] - books[s][None, :, :]) ** 2).sum(
-                    axis=2
-                )
-                codes[ok, s] = np.where(
-                    null[:, sl].any(axis=1), 0, ds.argmin(axis=1)
-                )
-            cluster[ok] = cl
-            rows = list(qr)
-            for i in np.flatnonzero(null_rows):
-                rows[i] = np.where(null[i], None, qr[i])
-            qr_col[ok] = rows
-        return pd.DataFrame(
-            {"cluster": cluster, "qr": qr_col, "codes": list(codes)}
+        if sets:
+            m = len(next(iter(sets.values())))
+            codes = np.zeros((n, m), np.int32)
+            cells = (
+                cell[0].to_numpy(zero_copy_only=False)
+                if by_cell
+                else np.zeros(n, np.int32)
+            )
+            for c in np.unique(cells):
+                rows = np.flatnonzero(cells == c)
+                xc, nc, lo = x[rows], null[rows], 0
+                for s, book in enumerate(sets[int(c)]):
+                    hi = lo + book[0].shape[1]
+                    codes[rows, s] = _nearest(
+                        xc[:, lo:hi], nc[:, lo:hi], book
+                    )[0]
+                    lo = hi
+            out["codes"] = pa.ListArray.from_arrays(
+                pa.array(np.arange(n + 1, dtype=np.int32) * m),
+                pa.array(codes.ravel()),
+            )
+        return pa.StructArray.from_arrays(
+            [out[f] for f in fields], names=list(fields)
         )
 
     return _enc
+
+
+def _vq(
+    grid: DataFrame,
+    fields: tuple[str, ...],
+    cents: list[list[int]] | None = None,
+    books=None,
+) -> DataFrame:
+    """Vector quantization of the integer grid ``(vec_id, q, ...)``
+    through the one nearest-codeword kernel (:func:`_nearest`), run as
+    one Arrow UDF over the ``array<bigint>`` grid of
+    :func:`_pq_quantized`.  Every corpus-side assignment of the vector
+    family goes through here: the kmeans assign, the coarse residual,
+    the PQ and IVFADC encodes and the PQ trainers, on batch and
+    streaming frames alike.
+
+    Returns ``grid``'s columns plus ``fields``, a subset of:
+
+    - ``cluster``, ``sqdist``: the nearest of the centroids ``cents``
+      and its squared distance (NULL for a row holding a NULL);
+    - ``qr``: the residual ``q - cents[cluster]``, NULL where ``q`` is;
+    - ``codes``: per subspace of the residual (of ``q`` itself when
+      ``cents`` is None), the nearest codeword of ``books[m][k][sub]``;
+      a subspace holding a NULL gets code 0.  ``books`` may instead map
+      each cell to its own codebooks; the row's ``cluster`` column then
+      picks them.
+
+    A NULL row is the all-NULL case (cluster 0, NULL ``sqdist`` and
+    ``qr``, codes 0).  The artifacts ride the closure (kilobytes,
+    shipped once per executor), so no Spark literal tree is built."""
+    enc = _vq_udf(cents, books, fields)
+    args = ("q", "cluster") if isinstance(books, dict) else ("q",)
+    keep = [c for c in grid.columns if c not in fields]
+    return grid.select(*keep, enc(*args).alias("_e")).select(
+        *keep, *[F.col(f"_e.{f}").alias(f) for f in fields]
+    )
 
 
 def _ivfadc_working(
@@ -1479,30 +1427,17 @@ def _ivfadc_working(
     vec_col: str,
 ) -> DataFrame:
     """Shared IVFADC working frame ``(vec_id, cluster, qr, codes, _cb)``
-    with ``qr`` the integer residual, encoded by
-    :func:`_np_ivfadc_encode_udf` on batch and streaming frames alike,
-    and the codebooks hoisted into a scalar-subquery column: one
-    ``ScalarSubquery`` node per reference instead of a ~1k-literal
-    ``CreateArray`` tree.  Only (vec_id, vec) crosses the Python
-    boundary; the spread keeps a single-row-group scan parallel and
-    passes a stream through unchanged."""
-    from .dedup import spread_partitions
-
-    enc = _np_ivfadc_encode_udf(coarse_cents, codebooks, scale)
-    base = spread_partitions(
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
-        )
-    )
+    with ``qr`` the integer residual: one pass of the Arrow kernel
+    (:func:`_vq`) over the :func:`_pq_quantized` grid, on batch and
+    streaming frames alike, and the codebooks hoisted into a
+    scalar-subquery column for the decode (one ``ScalarSubquery`` node
+    per reference instead of a ~1k-literal ``CreateArray`` tree).  Only
+    (vec_id, q) crosses the Python boundary."""
+    grid = _pq_quantized(embeddings, scale, id_col, vec_col)
     cbv = _pinned_scalar(_cb_view(embeddings.sparkSession, codebooks))
     return (
-        base.select("vec_id", enc(F.col("_v")).alias("_e"))
-        .select(
-            "vec_id",
-            F.col("_e.cluster").alias("cluster"),
-            F.col("_e.qr").alias("qr"),
-            F.col("_e.codes").alias("codes"),
-        )
+        _vq(grid, ("cluster", "qr", "codes"), coarse_cents, codebooks)
+        .select("vec_id", "cluster", "qr", "codes")
         .withColumn("_cb", cbv)
     )
 
@@ -1971,8 +1906,9 @@ def selfsup_prune(
 
     Integer-exact composition of existing tiers: the PINNED
     :func:`kmeans_train` centroids assign each vector (argmin, ties
-    to the lowest cell) with its integer squared distance — a
-    zero-shuffle scan-fused projection, no training jobs — and the
+    to the lowest cell) with its integer squared distance — one
+    zero-shuffle pass of the Arrow kernel (:func:`_vq`), no training
+    jobs — and the
     per-cluster rank under ``(sqdist DESC, vec_id ASC)`` is
     :func:`~.ranking.banded_percent_rank`'s exact grouped rank
     (map-side-collapsible bands, no per-cluster single-task window —
@@ -1985,7 +1921,9 @@ def selfsup_prune(
     if not 0 <= keep_pct <= 100:
         raise ValueError("selfsup_prune: keep_pct must be in [0, 100]")
     grid = _pq_quantized(embeddings, scale, id_col, vec_col)
-    assigned = _int_assign(grid, cents).select("vec_id", "cluster", "sqdist")
+    assigned = _vq(grid, ("cluster", "sqdist"), cents).select(
+        "vec_id", "cluster", "sqdist"
+    )
     from .ranking import banded_percent_rank
 
     ranked = banded_percent_rank(
@@ -2850,15 +2788,12 @@ def _pq_train_grid_cells(
       ``vec_id`` and keeps its ``k_sub`` lowest — exactly the per-cell
       ``orderBy(vec_id).limit(k_sub)`` seeds;
     - ASSIGNMENT: per iteration ONE aggregate keyed by
-      ``(cluster, subspace, code, pos)``.  The per-cell books ride as
-      one pinned cb4 artifact with DENSE slots — one per drifted cell
-      in sorted order, addressed through a literal cluster -> slot
-      CASE ladder (r16, ADVICE r15: the r15 slot-per-cell-id layout
-      padded the artifact to ``max(cells)+1`` slots with filler
-      books, so its size scaled with the max drifted id rather than
-      ``|drifted|``) — and the argmin is the :func:`_pq_sub_assign_sql`
-      rule — ``array_min`` over ``struct(d, c)``, ties to the lowest
-      code;
+      ``(cluster, subspace, code, pos)`` (:func:`_pq_sums`).  The codes
+      come from the one Arrow kernel (:func:`_vq`, ties to the lowest
+      code) with the per-cell books riding its closure as a
+      ``{cell: codebooks}`` map, which the row's ``cluster`` indexes —
+      its size scales with ``|drifted|``, and no pinned artifact or
+      cluster -> slot ladder is built;
     - UPDATE: the same driver-side ``floor(sum/n)`` fold, now over a
       collect bounded by ``|cells| * m * k_sub * subdim``; an emptied
       code keeps its centroid.
@@ -2868,9 +2803,6 @@ def _pq_train_grid_cells(
     many cells drifted — the Lloyd math itself was always relational
     on (cell, subspace) keys; only the orchestration was per-cell.
     """
-    from pyspark.sql.window import Window
-
-    spark = res.sparkSession
     work = res.filter(
         F.col("cluster").isin([int(c) for c in cells])
     ).select("cluster", "vec_id", "q")
@@ -2901,59 +2833,9 @@ def _pq_train_grid_cells(
             ]
             for s in range(m)
         ]
-    # DENSE slot layout (r16, ADVICE r15): one artifact slot per
-    # DRIFTED cell (sorted order), looked up through a literal
-    # cluster -> slot CASE ladder — the r15 form padded one slot per
-    # id in range(max(cells)+1) with filler books, so the pinned
-    # artifact scaled with the MAX drifted cluster id (K*m*k_sub*
-    # subdim worst case) instead of |drifted|
-    dense = sorted(int(c) for c in cells)
-    slot_of: Column = F.lit(None).cast("int")
-    for i, c in enumerate(dense):
-        slot_of = F.when(F.col("cluster") == c, F.lit(i + 1)).otherwise(
-            slot_of
-        )
     for _ in range(iters):
-        slots = [books_by_cell[c] for c in dense]
-        cbv = _pinned_scalar(
-            _pinned_view(
-                spark, "cb4i", slots, "array<array<array<array<bigint>>>>"
-            )
-        )
-        cb_cell = F.element_at(F.col("_cb4"), slot_of)
-
-        def _assign(s: int, sub: Column) -> Column:
-            return F.array_min(
-                F.transform(
-                    F.element_at(cb_cell, s + 1),
-                    lambda code, i: F.struct(
-                        _sqdist_cols(sub, code).alias("d"),
-                        i.alias("c"),
-                    ),
-                )
-            )["c"]
-
-        per_sub = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("s"),
-                    _assign(
-                        s, F.slice(F.col("q"), s * subdim + 1, subdim)
-                    ).alias("c"),
-                    F.slice(F.col("q"), s * subdim + 1, subdim).alias("sq"),
-                )
-                for s in range(m)
-            ]
-        )
-        rows = (
-            work.withColumn("_cb4", cbv)
-            .select("cluster", F.explode(per_sub).alias("e"))
-            .select(
-                "cluster", "e.s", "e.c", F.posexplode("e.sq").alias("pos", "x")
-            )
-            .groupBy("cluster", "s", "c", "pos")
-            .agg(F.sum("x").alias("sum"), F.count(F.lit(1)).alias("n"))
-            .collect()
+        rows = _pq_sums(
+            _vq(work, ("codes",), books=books_by_cell), subdim, "cluster"
         )
         new = {
             c: [[list(code) for code in book] for book in bks]
@@ -3081,23 +2963,18 @@ def retrain_ivfadc_on_drift(
         if f.split()[0] not in ("vec_id", "codes", "cluster", "epoch")
     ]
     grid = _pq_quantized(embeddings, scale, id_col, vec_col)
-    res = _ivf_residuals_hoisted(grid, coarse_cents)
+    res = _ivf_residuals(grid, coarse_cents)
     trained = _pq_train_grid_cells(
         res, drifted, m=m, k_sub=k_sub, iters=iters
     )
     for cell in drifted:
         cell_dir = f"{index_path}/cluster={cell}"
         books = trained[cell]
-        subdim = len(books[0][0])
-        coded = (
-            res.filter(F.col("cluster") == cell)
-            .select("vec_id", "q")
-            .withColumn("_cb", _pinned_scalar(_cb_view(spark, books)))
-            .select(
-                "vec_id",
-                F.expr(_codes_sql("_cb", "q", subdim)).alias("codes"),
-            )
-        )
+        coded = _vq(
+            res.filter(F.col("cluster") == cell).select("vec_id", "q"),
+            ("codes",),
+            books=books,
+        ).select("vec_id", "codes")
         if meta_cols:
             cell_schema = ", ".join(
                 f for f in (s.strip() for s in index_schema.split(","))

@@ -82,6 +82,29 @@ def _evict_stale(tag_prefix: str, keep: str) -> None:
             shutil.rmtree(os.path.join(base, name), ignore_errors=True)
 
 
+def _silver_dir(kind: str, sf_dir: str, key: str) -> str:
+    """The staged SILVER directory of one streaming query's result for
+    one SF and content key: ``{tempdir}/{kind}_silver/{sf tag}/{key}``.
+
+    Older keys of the same kind and SF tag are evicted, so each testdata
+    generation leaves one directory.  Another SF's copies are kept:
+    another process, or a frame returned earlier in this one, may still
+    be reading them.  The SF tag is a directory level of its own, so no
+    tag matches another as a name prefix (``sf0.1`` and ``sf0.1_x10``)."""
+    import shutil
+
+    parent = os.path.join(
+        tempfile.gettempdir(),
+        f"{kind}_silver",
+        sf_dir.strip("/").replace("/", "_"),
+    )
+    if os.path.isdir(parent):
+        for name in os.listdir(parent):
+            if name != key:
+                shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+    return os.path.join(parent, key)
+
+
 def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write a normalized (micros-timestamp) copy of events once per
     (sf_dir, content fingerprint)."""
@@ -1327,7 +1350,7 @@ def q_streaming_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         _IVFADC_CODEBOOKS,
     )
     grid = sim._pq_quantized(stream, 1000, "vec_id", "embedding")
-    probe = sim._ivf_residuals_hoisted(grid, _IVFADC_CENTS).select(
+    probe = sim._ivf_residuals(grid, _IVFADC_CENTS).select(
         "vec_id", F.col("cluster").alias("cell"), F.col("q").alias("qr")
     )
     adc = F.aggregate(
@@ -1501,7 +1524,7 @@ def q_streaming_pq_adjudicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _IVFADC_CODEBOOKS,
     )
     grid = sim._pq_quantized(stream, 1000, "vec_id", "embedding")
-    probe = sim._ivf_residuals_hoisted(grid, _IVFADC_CENTS).select(
+    probe = sim._ivf_residuals(grid, _IVFADC_CENTS).select(
         "vec_id", F.col("cluster").alias("cell"), F.col("q").alias("qr")
     )
     adc = F.aggregate(
@@ -1549,11 +1572,7 @@ def q_streaming_pq_adjudicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reusing ONE directory per testdata generation (no tempdir leak;
     # stale fingerprints evicted) — and only the per-run bronze +
     # checkpoint workdir is deleted eagerly.
-    tag_fp = os.path.basename(src_dir)[len("emb_stream_"):]
-    silver = os.path.join(
-        tempfile.gettempdir(), f"pq_adjudicate_silver_{tag_fp}"
-    )
-    _evict_stale("pq_adjudicate_silver_", os.path.basename(silver))
+    silver = _silver_dir("pq_adjudicate", sf_dir, os.path.basename(src_dir))
     out.write.mode("overwrite").parquet(silver)
     import shutil
 
@@ -1626,11 +1645,9 @@ def q_streaming_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silver staging (the pq_adjudicate pattern): land the bounded
     # |queries| x k result once per content fingerprint, delete the
     # per-run store+checkpoint eagerly, return the parquet read
-    tag_fp = os.path.basename(src_dir)[len("emb_stream_"):]
-    silver = os.path.join(
-        tempfile.gettempdir(), f"stream_idx_upsert_silver_{tag_fp}"
+    silver = _silver_dir(
+        "stream_idx_upsert", sf_dir, os.path.basename(src_dir)
     )
-    _evict_stale("stream_idx_upsert_silver_", os.path.basename(silver))
     out.write.mode("overwrite").parquet(silver)
     import shutil
 
@@ -1973,11 +1990,7 @@ def q_index_lifecycle_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silver staging (the pq_adjudicate pattern): land the bounded
     # |queries| x k result once per content fingerprint, delete the
     # per-run store+checkpoint eagerly, return the parquet read
-    tag_fp = os.path.basename(src_dir)[len("emb_meta_stream_"):]
-    silver = os.path.join(
-        tempfile.gettempdir(), f"idx_lifecycle_silver_{tag_fp}"
-    )
-    _evict_stale("idx_lifecycle_silver_", os.path.basename(silver))
+    silver = _silver_dir("idx_lifecycle", sf_dir, os.path.basename(src_dir))
     out.write.mode("overwrite").parquet(silver)
     import shutil
 
@@ -2258,12 +2271,8 @@ def q_streaming_incremental_dedup(
     # collect): land the label set once per (sf_dir, content
     # fingerprint), delete the per-run work dir, return the parquet
     # read — O(files) driver-side however large the duplicate set
-    tag = sf_dir.strip("/").replace("/", "_")
     fp = _fingerprint(docs, "doc_id", F.length("text"))
-    silver = os.path.join(
-        tempfile.gettempdir(), f"inc_dedup_silver_{tag}_{fp}"
-    )
-    _evict_stale("inc_dedup_silver_", os.path.basename(silver))
+    silver = _silver_dir("inc_dedup", sf_dir, fp)
     final.write.mode("overwrite").parquet(silver)
     shutil.rmtree(work, ignore_errors=True)
     return spark.read.parquet(silver)
@@ -2451,12 +2460,8 @@ def q_streaming_dedup_maintenance(
     final = spark.read.parquet(versions[-1]).select(
         "doc_id", "component_id"
     )
-    tag = sf_dir.strip("/").replace("/", "_")
     fp = _fingerprint(docs, "doc_id", F.length("text"))
-    silver = os.path.join(
-        tempfile.gettempdir(), f"dedup_maint_silver_{tag}_{fp}"
-    )
-    _evict_stale("dedup_maint_silver_", os.path.basename(silver))
+    silver = _silver_dir("dedup_maint", sf_dir, fp)
     final.write.mode("overwrite").parquet(silver)
     shutil.rmtree(work, ignore_errors=True)
     return spark.read.parquet(silver)
@@ -2663,12 +2668,8 @@ def q_streaming_dedup_maintenance_bucketed(
         final = spark.read.parquet(versions[-1]).select(
             "doc_id", "component_id"
         )
-        tag = sf_dir.strip("/").replace("/", "_")
         fp = _fingerprint(docs, "doc_id", F.length("text"))
-        silver = os.path.join(
-            tempfile.gettempdir(), f"dedup_maint_bkt_silver_{tag}_{fp}"
-        )
-        _evict_stale("dedup_maint_bkt_silver_", os.path.basename(silver))
+        silver = _silver_dir("dedup_maint_bkt", sf_dir, fp)
         final.write.mode("overwrite").parquet(silver)
         return spark.read.parquet(silver)
     finally:

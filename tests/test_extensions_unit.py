@@ -9,6 +9,7 @@ from bigdata_20251_steam_spark.operators.dedup import simhash_near_pairs
 from bigdata_20251_steam_spark.plans import QUERIES
 from bigdata_20251_steam_spark.sources.batch import load_table
 
+from . import sql_reference as ref
 from .conftest import SF_SMOKE
 
 
@@ -3894,11 +3895,11 @@ def _twin_sql_rows(grid, cm, cb):
         "concat(qr, array_repeat(CAST(1 AS BIGINT), 60))"
     )
     out = grid.withColumn("_cm", cm).withColumn("_cb", cb).withColumn(
-        "_best", F.expr(sim._argmin_cell_sql("q", "_cm"))
+        "_best", F.expr(ref._argmin_cell_sql("q", "_cm"))
     ).withColumn("cluster", F.col("_best.c")).withColumn(
         "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
     ).withColumn(
-        "codes", F.expr(sim._codes_sql("_cb", "qr", _TWIN_SUBDIM))
+        "codes", F.expr(ref._codes_sql("_cb", "qr", _TWIN_SUBDIM))
     ).withColumn("lut", F.expr(sim._lut_sql("_cb", "qr", _TWIN_SUBDIM)))
     got = out.select(
         "vec_id",
@@ -3929,7 +3930,8 @@ def test_sql_twin_builders_parity(spark):
     """The SQL-string IVFADC builders the query builders construct
     (_argmin_cell_sql/_probes_sql/_residual_sql/_codes_sql/_recon_sql/
     _lut_sql/_lut_adc_sql/_int_assign_sql/_pq_sub_assign_sql/
-    _sign_signature_sql/_sqdist_to_sql/_sq_sql) replay their
+    _sign_signature_sql/_sqdist_to_sql/_sq_sql), and the Arrow kernel
+    (_vq) the corpus side assigns through, replay their
     pure-Python twin (_twin_ref) row for row — same integers, same
     tie rules (equidistant centroids -> lowest cell; equidistant
     codewords -> lowest code) — on a hand grid with hand-computed rows
@@ -3968,7 +3970,7 @@ def test_sql_twin_builders_parity(spark):
     assigned = {
         r["vec_id"]: (r["_b"]["c"], r["_b"]["d"])
         for r in grid.select(
-            "vec_id", F.expr(sim._int_assign_sql("q", cents)).alias("_b")
+            "vec_id", F.expr(ref._int_assign_sql("q", cents)).alias("_b")
         ).collect()
     }
     assert assigned == {
@@ -3978,7 +3980,7 @@ def test_sql_twin_builders_parity(spark):
         r["vec_id"]: r["c"]
         for r in grid.select(
             "vec_id",
-            F.expr(sim._pq_sub_assign_sql(books[0], "slice(q, 1, 2)"))
+            F.expr(ref._pq_sub_assign_sql(books[0], "slice(q, 1, 2)"))
             .alias("c"),
         ).collect()
     }
@@ -3987,6 +3989,21 @@ def test_sql_twin_builders_parity(spark):
     }
     assert sub0 == {
         v: _twin_ref(q[:2], [[0, 0]], [books[0]], 2)[4][0] for v, q in rows
+    }
+
+    # the one Arrow kernel on the same grid: the coarse assign and its
+    # distance, the residual and its codes, and the codes of q itself
+    twins = {v: _twin_ref(q, cents, books, _TWIN_SUBDIM) for v, q in rows}
+    vq = sim._vq(grid, ("cluster", "sqdist", "qr", "codes"), cents, books)
+    assert {
+        r["vec_id"]: (r["cluster"], r["sqdist"], r["qr"], r["codes"])
+        for r in vq.collect()
+    } == {v: (t[0], t[1], t[3], t[4]) for v, t in twins.items()}
+    assert {
+        r["vec_id"]: r["codes"]
+        for r in sim._vq(grid, ("codes",), books=books).collect()
+    } == {
+        v: _twin_ref(q, [[0] * 4], books, _TWIN_SUBDIM)[4] for v, q in rows
     }
 
     # float path: the double squared L2, summed in element order
@@ -4910,14 +4927,14 @@ def _sql_encode(frame, cents, books, scale):
         "_cm", sim._pinned_scalar(sim._cmat_view(spark, cents))
     ).withColumn("_cb", sim._pinned_scalar(sim._cb_view(spark, books)))
     return grid.withColumn(
-        "cluster", F.expr(sim._argmin_cell_sql("q", "_cm") + ".c")
+        "cluster", F.expr(ref._argmin_cell_sql("q", "_cm") + ".c")
     ).withColumn(
         "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
     ).select(
         "vec_id",
         "cluster",
         "qr",
-        F.expr(sim._codes_sql("_cb", "qr", len(books[0][0]))).alias("codes"),
+        F.expr(ref._codes_sql("_cb", "qr", len(books[0][0]))).alias("codes"),
     )
 
 
@@ -5071,3 +5088,166 @@ def test_np_encode_overflow_raises_on_stream(spark, tmp_path):
     availableNow: the micro-batch encode raises as the SQL encode does."""
     frame, run = _stream_frames(spark, tmp_path)([_OVERFLOW_ROW])
     _assert_encodes_raise(frame, run, _OVERFLOW_CELLS, _BOOKS_2X2, 1)
+
+#: the raising rows of test_np_encode_overflow_raises_like_sql as
+#: (scale, cells, codebooks, rows) fixtures: a squared coarse distance
+#: past 2**63 - 1, a NULL element ahead of an overflowing square, a
+#: squared subspace distance only, and a quantized value past BIGINT
+_OVERFLOW_CASES = [
+    (1, _OVERFLOW_CELLS, _BOOKS_2X2, [_OVERFLOW_ROW]),
+    (1, _OVERFLOW_CELLS, _BOOKS_2X2, [(1, [None, 4e9, 0.0, 0.0])]),
+    (
+        1,
+        [[0, 0, 0, 0]],
+        [[[0, 0], [-3037000500, 0]], [[0, 0], [0, 1]]],
+        [(1, [1.0, 0.0, 0.0, 0.0])],
+    ),
+    (1, _OVERFLOW_CELLS, _BOOKS_2X2, [(1, [2.0**63 + 2048, 0.0, 0.0, 0.0])]),
+]
+
+
+def _sql_vq(grid, cents, books):
+    """The SQL reference of the kernel's fields over ``grid``: the
+    struct-min coarse argmin and its distance, the residual, and the
+    per-subspace codes of the residual."""
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    return (
+        grid.withColumn("_cm", F.lit(cents).cast("array<array<bigint>>"))
+        .withColumn("_cb", F.lit(books).cast("array<array<array<bigint>>>"))
+        .withColumn("_b", F.expr(ref._argmin_cell_sql("q", "_cm")))
+        .withColumn("qr", F.expr(sim._residual_sql("q", "_cm", "_b.c")))
+        .select(
+            "vec_id",
+            F.col("_b.c").alias("cluster"),
+            F.col("_b.d").alias("sqdist"),
+            "qr",
+            F.expr(ref._codes_sql("_cb", "qr", len(books[0][0])))
+            .alias("codes"),
+        )
+    )
+
+
+def _kernel_consumers(frame, scale, cents, books):
+    """``{consumer: (kernel frame, SQL reference frame)}`` over the
+    embeddings ``frame``: the kmeans assign's (cluster, sqdist),
+    pq_encode's codes and _ivf_residuals' (cluster, q)."""
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    grid = sim._pq_quantized(frame, scale, "vec_id", "embedding")
+    best = F.expr(ref._int_assign_sql("q", cents))
+    cb = F.lit(books).cast("array<array<array<bigint>>>")
+    return {
+        "kmeans assign": (
+            sim._vq(grid, ("cluster", "sqdist"), cents).select(
+                "vec_id", "cluster", "sqdist"
+            ),
+            grid.select(
+                "vec_id", best["c"].alias("cluster"), best["d"].alias("sqdist")
+            ),
+        ),
+        "pq_encode": (
+            sim.pq_encode(frame, books, scale),
+            grid.withColumn("_cb", cb).select(
+                "vec_id",
+                F.expr(ref._codes_sql("_cb", "q", len(books[0][0])))
+                .alias("codes"),
+            ),
+        ),
+        "_ivf_residuals": (
+            sim._ivf_residuals(grid, cents),
+            _sql_vq(grid, cents, books).select(
+                "vec_id", "cluster", F.col("qr").alias("q")
+            ),
+        ),
+    }
+
+
+def _outcome(rows_of):
+    """The sorted row tuples ``rows_of()`` returns, or ``"overflow"``
+    when it raises an overflow."""
+    import re
+
+    try:
+        rows = rows_of()
+    except Exception as e:  # noqa: BLE001 - the engine wraps the error
+        assert re.search("(?i)overflow", str(e)), e
+        return "overflow"
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in rows
+    )
+
+
+def _check_kernel_consumers(frame_of):
+    """Every consumer of the one nearest-codeword kernel gives its SQL
+    reference's rows, or raises an overflow where the reference does,
+    on the ``_ENCODE_CASES`` and ``_OVERFLOW_CASES`` fixtures;
+    ``frame_of`` is the :func:`_check_np_encode` frame builder."""
+    for scale, cents, books, rows in _ENCODE_CASES + _OVERFLOW_CASES:
+        frame, run = frame_of(rows)
+        outcomes = {}
+        for name, (kernel, sql) in _kernel_consumers(
+            frame, scale, cents, books
+        ).items():
+            got = _outcome(lambda: run(kernel).collect())
+            assert got == _outcome(lambda: run(sql).collect()), (name, rows)
+            outcomes[name] = got
+        if (cents, books, rows) in [c[1:] for c in _OVERFLOW_CASES]:
+            assert "overflow" in outcomes.values(), rows
+        if rows == _ENCODE_CASES[1][3]:
+            # a NULL element: cell 0 with a NULL distance, code 0 for
+            # the subspace holding it
+            assert outcomes["kmeans assign"][3:] == [(4, 0, None), (5, 0, None)]
+            assert outcomes["pq_encode"][3:] == [(4, (0, 1)), (5, (1, 0))]
+
+
+def test_kernel_consumers_match_sql_reference(spark):
+    """The kmeans assign, pq_encode and the coarse residual all run the
+    one Arrow kernel; on batch frames each gives the SQL reference's
+    integers on the HALF_UP, 2**52 + 1, NULL-element and NULL-row
+    fixtures, and raises an overflow where ANSI SQL raises."""
+    schema = "vec_id long, embedding array<double>"
+
+    def batch(rows):
+        return spark.createDataFrame(rows, schema), lambda df: df
+
+    _check_kernel_consumers(batch)
+
+
+def test_kernel_consumers_match_sql_reference_on_stream(spark, tmp_path):
+    """The same consumers on ``file_stream`` frames run with
+    availableNow: a micro-batch goes through the same kernel."""
+    _check_kernel_consumers(_stream_frames(spark, tmp_path))
+
+
+def test_kernel_reads_exact_int64_from_one_arrow_batch(spark):
+    """One Arrow batch holds a row with a NULL element and a row whose
+    grid value is 2**53 + 1.  The kernel reads exact int64 values and
+    the null mask (``arrow_udf``), so it returns the SQL reference's
+    integers: 2**53 + 1 is 1 from cell 1 and 2 from cell 0.  Read
+    through pandas, the whole ``list<int64>`` batch would turn float64
+    for the NULL, 2**53 + 1 would read as 2**53, and the row would go
+    to cell 0."""
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    top = 2**53
+    cents = [[top - 1, 0, 0, 0], [top + 2, 0, 0, 0]]
+    grid = spark.createDataFrame(
+        [
+            (1, [top + 1, 0, 0, 0]),
+            (2, [None, 1, 0, 0]),
+            (3, [top - 1, 0, 0, 1]),
+        ],
+        "vec_id long, q array<bigint>",
+    ).coalesce(1)
+    got = sim._vq(
+        grid, ("cluster", "sqdist", "qr", "codes"), cents, _BOOKS_2X2
+    ).select("vec_id", "cluster", "sqdist", "qr", "codes")
+    want = _outcome(lambda: _sql_vq(grid, cents, _BOOKS_2X2).collect())
+    assert _outcome(got.collect) == want
+    assert want == [
+        (1, 1, 1, (-1, 0, 0, 0), (0, 0)),
+        (2, 0, None, (None, 1, 0, 0), (0, 0)),
+        (3, 0, 1, (0, 0, 0, 1), (0, 1)),
+    ]

@@ -16,6 +16,7 @@ from bigdata_20251_steam_spark.sources.batch import load_table
 from bigdata_20251_steam_spark.streaming.engine import file_stream, run_available_now
 from bigdata_20251_steam_spark.streaming.stateful import running_totals
 
+from . import sql_reference as ref
 from .conftest import SF_SMOKE
 
 
@@ -1018,7 +1019,7 @@ def test_index_lifecycle_stream_compact_retrain_composes(spark, tmp_path):
         ),
         fresh,
     )
-    grid_res = sim._ivf_residuals_hoisted(
+    grid_res = sim._ivf_residuals(
         sim._pq_quantized(emb, 1000, "vec_id", "embedding"), _IVFADC_CENTS
     )
     for cell, books in overrides.items():
@@ -1027,7 +1028,7 @@ def test_index_lifecycle_stream_compact_retrain_composes(spark, tmp_path):
             "_cb", sim._pinned_scalar(sim._cb_view(spark, books))
         ).select(
             "vec_id",
-            F.expr(sim._codes_sql("_cb", "q", subdim)).alias("codes"),
+            F.expr(ref._codes_sql("_cb", "q", subdim)).alias("codes"),
         ).join(meta, "vec_id")
         enc.write.mode("overwrite").parquet(f"{fresh}/cluster={cell}")
 
@@ -1099,7 +1100,7 @@ def test_retrain_batched_trainer_matches_per_cell_loop(spark):
     from bigdata_20251_steam_spark.operators import similarity as sim
 
     cents, books, cur, m, k_sub = _drift_corpus(spark)
-    res = sim._ivf_residuals_hoisted(
+    res = sim._ivf_residuals(
         sim._pq_quantized(cur, 1000, "vec_id", "embedding"), cents
     )
     batched = sim._pq_train_grid_cells(

@@ -1065,3 +1065,36 @@ def test_bounded_state_oracle_precondition_no_normalized_dups(spark):
             "oracle no longer binds; switch its driver row to the "
             "min_by capstone or regenerate without duplicates"
         )
+
+
+def test_silver_dir_evicts_only_stale_copies_of_its_own_sf(
+    spark, tmp_path, monkeypatch
+):
+    """A streaming query's staged silver result is kept per SF tag:
+    staging it for a second SF keeps the first SF's copy readable (a
+    frame returned earlier still reads it), and a new content key
+    evicts only the stale copy of the same SF.  ``sf0.1`` and
+    ``sf0.1_x10`` are separate tags although one name is a prefix of
+    the other."""
+    import tempfile
+
+    from bigdata_20251_steam_spark.plans.streaming_queries import _silver_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = _silver_dir("idx_lifecycle", "/data/sf0.1", "fp1")
+    spark.range(3).write.parquet(first)
+    earlier = spark.read.parquet(first)
+    for sf in ("/data/sf0.01", "/data/sf0.1_x10"):
+        other = _silver_dir("idx_lifecycle", sf, "fp2")
+        spark.range(5).write.mode("overwrite").parquet(other)
+    assert earlier.count() == 3
+    assert os.path.isdir(first)
+
+    again = _silver_dir("idx_lifecycle", "/data/sf0.1", "fp1")
+    assert again == first and os.path.isdir(first)
+    newer = _silver_dir("idx_lifecycle", "/data/sf0.1", "fp3")
+    assert not os.path.exists(first) and newer != first
+    assert os.path.isdir(_silver_dir("idx_lifecycle", "/data/sf0.01", "fp2"))
+    assert os.path.isdir(
+        _silver_dir("idx_lifecycle", "/data/sf0.1_x10", "fp2")
+    )
