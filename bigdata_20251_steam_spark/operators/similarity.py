@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import itertools
 import math
+import os
 
 import numpy as np
 import pandas as pd
@@ -666,7 +667,9 @@ def _pq_quantized(
     narrow (vec_id, q) grid and fires ONLY when the scan is narrower
     than the session's parallelism — at 100 TB the input has ≫ cores
     row groups and this is a no-op (the dedup/text families already
-    run this guard; see :func:`..dedup.spread_partitions`)."""
+    run this guard; see :func:`..dedup.spread_partitions`).  The
+    kernel's Python pass itself runs at most one task per core
+    (:func:`_kernel_tasks`)."""
     from .dedup import spread_partitions
 
     # one-F.expr quantize projection (optimization r18, guide §4): the
@@ -1256,19 +1259,17 @@ def _sq_exact(a: list, b: list) -> int | None:
     return sum(head) if len(head) == len(terms) else None
 
 
-def _check_encode_exact(q: list, codewords: list) -> None:
-    """Raise :class:`OverflowError` where the SQL distance from the grid
-    row ``q`` (ints, None for NULL) to one of ``codewords`` raises."""
-    for c in codewords:
-        _sq_exact(q, c)
-
-
 def _book(codewords: list[list[int]]) -> tuple:
     """A codeword set as the kernel reads it: the int64 matrix, its
     per-column ``max |c|`` (the overflow screen's reach) and the Python
     ints the exact recheck uses."""
     cw = np.asarray([[int(v) for v in c] for c in codewords], np.int64)
     return cw, np.abs(cw.astype(np.float64)).max(axis=0), cw.tolist()
+
+
+def _py_row(x: np.ndarray, null: np.ndarray) -> list:
+    """One grid row as :func:`_sq_exact` reads it: ints, None for NULL."""
+    return [None if z else int(e) for e, z in zip(x, null)]
 
 
 def _nearest(x: np.ndarray, null: np.ndarray, book: tuple) -> tuple:
@@ -1284,16 +1285,16 @@ def _nearest(x: np.ndarray, null: np.ndarray, book: tuple) -> tuple:
     :class:`OverflowError`, as ANSI SQL does: one float bound per row
     (``|x - c| <= |x| + max|c|``) screens the batch, only rows whose
     bound passes 2**62 are rechecked exactly in Python ints
-    (:func:`_check_encode_exact`), and below it the int64 sums cannot
-    wrap."""
+    (:func:`_sq_exact` against every codeword), and below it the int64
+    sums cannot wrap."""
     cw, reach, exact = book
     bound = (
         np.where(null, 0.0, np.abs(x.astype(np.float64)) + reach) ** 2
     ).sum(axis=1)
     for i in np.flatnonzero(bound > 2.0**62):
-        _check_encode_exact(
-            [None if z else int(e) for e, z in zip(x[i], null[i])], exact
-        )
+        row = _py_row(x[i], null[i])
+        for c in exact:
+            _sq_exact(row, c)
     d = ((x[:, None, :] - cw[None, :, :]) ** 2).sum(axis=2)
     hole = null.any(axis=1)
     idx = np.where(hole, 0, d.argmin(axis=1))
@@ -1306,19 +1307,31 @@ _VQ_TYPES = {
     "sqdist": "bigint",
     "qr": "array<bigint>",
     "codes": "array<int>",
+    "err": "bigint",
 }
 
 
-def _vq_udf(cents, books, fields: tuple[str, ...]):
+def _sq_to(x: np.ndarray, null: np.ndarray, recon: np.ndarray) -> tuple:
+    """:func:`_sq_sql` from each grid row of ``x`` to its row of
+    ``recon``: the int64 squared L2 and the mask of rows holding a NULL
+    (whose distance is NULL).  A sum above 2**63 - 1 raises
+    :class:`OverflowError` as in :func:`_nearest`: rows whose float
+    value passes 2**62 are rechecked exactly."""
+    dev = np.where(null, 0.0, x.astype(np.float64) - recon)
+    for i in np.flatnonzero((dev**2).sum(axis=1) > 2.0**62):
+        _sq_exact(_py_row(x[i], null[i]), recon[i].tolist())
+    return ((x - recon) ** 2).sum(axis=1), null.any(axis=1)
+
+
+def _vq_udf(cents, books, books_by_cell, fields: tuple[str, ...]):
     """The Arrow UDF behind :func:`_vq`.  It reads the grid through
     ``arrow_udf``, not ``pandas_udf``: pandas turns a whole
     ``list<int64>`` batch into float64 once any element is NULL, so
     2**53 + 1 would come back as 2**53."""
     coarse = None if cents is None else _book(cents)
-    by_cell = isinstance(books, dict)
     sets = {
         c: [_book(b) for b in bk]
-        for c, bk in (books if by_cell else {0: books or []}).items()
+        for c, bk in (books_by_cell or {0: books or []}).items()
         if bk
     }
     dim = (
@@ -1357,9 +1370,10 @@ def _vq_udf(cents, books, fields: tuple[str, ...]):
         if sets:
             m = len(next(iter(sets.values())))
             codes = np.zeros((n, m), np.int32)
+            recon = np.zeros_like(x)
             cells = (
                 cell[0].to_numpy(zero_copy_only=False)
-                if by_cell
+                if cell
                 else np.zeros(n, np.int32)
             )
             for c in np.unique(cells):
@@ -1367,14 +1381,17 @@ def _vq_udf(cents, books, fields: tuple[str, ...]):
                 xc, nc, lo = x[rows], null[rows], 0
                 for s, book in enumerate(sets[int(c)]):
                     hi = lo + book[0].shape[1]
-                    codes[rows, s] = _nearest(
-                        xc[:, lo:hi], nc[:, lo:hi], book
-                    )[0]
+                    idx = _nearest(xc[:, lo:hi], nc[:, lo:hi], book)[0]
+                    codes[rows, s] = idx
+                    recon[rows, lo:hi] = book[0][idx]
                     lo = hi
             out["codes"] = pa.ListArray.from_arrays(
                 pa.array(np.arange(n + 1, dtype=np.int32) * m),
                 pa.array(codes.ravel()),
             )
+            if "err" in fields:
+                err, hole = _sq_to(x, null, recon)
+                out["err"] = pa.array(err, mask=hole)
         return pa.StructArray.from_arrays(
             [out[f] for f in fields], names=list(fields)
         )
@@ -1382,11 +1399,35 @@ def _vq_udf(cents, books, fields: tuple[str, ...]):
     return _enc
 
 
+def _kernel_tasks(grid: DataFrame) -> DataFrame:
+    """``grid`` in at most one partition per core for the Python pass of
+    :func:`_vq`, in local mode.
+
+    Every Python task pays a fixed cost in the worker whatever its rows:
+    PySpark's per-task ``importlib.invalidate_caches()`` makes zipimport
+    re-read the directory of ``pyspark.zip`` once per package imported
+    from it (~0.25 CPU-s; an identity ``arrow_udf`` over 2,000 rows took
+    2.3 s in 32 partitions and 0.4 s in 4 on a 4-vCPU VM).  A
+    ``local[N]`` session with N above the machine's cores spreads the
+    grid to N partitions (:func:`_pq_quantized`), so the pass would pay
+    N of them on fewer cores.  In local mode the driver's cores are the
+    executor's, so capping the tasks at them loses no parallelism, and
+    the narrow scoring downstream keeps every core busy.  On a cluster
+    the grid's partitions are the executors' and are left alone; a
+    stream's micro-batches are its source's."""
+    if grid.isStreaming or not grid.sparkSession.sparkContext.master.startswith(
+        "local"
+    ):
+        return grid
+    return grid.coalesce(len(os.sched_getaffinity(0)))
+
+
 def _vq(
     grid: DataFrame,
     fields: tuple[str, ...],
     cents: list[list[int]] | None = None,
-    books=None,
+    books: list[list[list[int]]] | None = None,
+    books_by_cell: dict[int, list[list[list[int]]]] | None = None,
 ) -> DataFrame:
     """Vector quantization of the integer grid ``(vec_id, q, ...)``
     through the one nearest-codeword kernel (:func:`_nearest`), run as
@@ -1403,18 +1444,23 @@ def _vq(
     - ``qr``: the residual ``q - cents[cluster]``, NULL where ``q`` is;
     - ``codes``: per subspace of the residual (of ``q`` itself when
       ``cents`` is None), the nearest codeword of ``books[m][k][sub]``;
-      a subspace holding a NULL gets code 0.  ``books`` may instead map
-      each cell to its own codebooks; the row's ``cluster`` column then
-      picks them.
+      a subspace holding a NULL gets code 0.  ``books_by_cell`` instead
+      maps each cell to its own codebooks, picked by the row's
+      ``cluster`` column;
+    - ``err``: the squared distance from that residual to its
+      reconstruction from ``codes`` (the sum of the per-subspace
+      minimum distances), NULL for a row holding a NULL.
 
-    A NULL row is the all-NULL case (cluster 0, NULL ``sqdist`` and
-    ``qr``, codes 0).  The artifacts ride the closure (kilobytes,
+    A NULL row is the all-NULL case (cluster 0, NULL ``sqdist``, ``qr``
+    and ``err``, codes 0).  The artifacts ride the closure (kilobytes,
     shipped once per executor), so no Spark literal tree is built."""
-    enc = _vq_udf(cents, books, fields)
-    args = ("q", "cluster") if isinstance(books, dict) else ("q",)
+    enc = _vq_udf(cents, books, books_by_cell, fields)
+    args = ("q", "cluster") if books_by_cell else ("q",)
     keep = [c for c in grid.columns if c not in fields]
-    return grid.select(*keep, enc(*args).alias("_e")).select(
-        *keep, *[F.col(f"_e.{f}").alias(f) for f in fields]
+    return (
+        _kernel_tasks(grid)
+        .select(*keep, enc(*args).alias("_e"))
+        .select(*keep, *[F.col(f"_e.{f}").alias(f) for f in fields])
     )
 
 
@@ -2835,7 +2881,7 @@ def _pq_train_grid_cells(
         ]
     for _ in range(iters):
         rows = _pq_sums(
-            _vq(work, ("codes",), books=books_by_cell), subdim, "cluster"
+            _vq(work, ("codes",), books_by_cell=books_by_cell), subdim, "cluster"
         )
         new = {
             c: [[list(code) for code in book] for book in bks]
@@ -3017,28 +3063,20 @@ def ivfadc_distortion_report(
     mean_err, max_err, total_err)`` with ``mean_err = total DIV n``
     (truncating, identical cross-engine).
 
-    Scale shape: encode+decode+error fuse into ONE zero-shuffle scan
-    projection (all literals); the only exchange is the K-key
-    aggregate (map-side partials, K = number of cells) — the
-    CMS/HLL bounded-shuffle posture.  Runs identically over the
-    stored index (read codes, decode, join the grid) when the corpus
-    scan is the expensive part.
-
-    Optimization r17, examined and kept as-is: an alternative that
-    folds the decode + second distance pass into a per-subspace
-    ``array_min`` of plain distances (mathematically identical —
-    ``err = Σ_s min_c ||qr_sub[s] − cb[s][c]||²``) measured SLOWER
-    (interleaved min-of-5 at sf0.1: 3.01 s vs 2.36 s) — the removed
-    work is only ~6% of the row's arithmetic (the m×k_sub×subdim
-    argmin search dominates and is shared by both forms), and the
-    deeper nested-HOF tree interprets worse than the split
-    codes→recon→zip projections."""
-    work = _ivfadc_working(
-        embeddings, coarse_cents, codebooks, scale, id_col, vec_col
-    )
-    scored = work.select(
-        "cluster",
-        F.expr(_sq_sql("qr", _recon_sql("_cb", "codes"))).alias("err"),
+    Scale shape: encode and error fuse into ONE zero-shuffle pass of
+    the Arrow kernel (:func:`_vq`), which returns the error as the sum
+    of the per-subspace minimum distances it already found
+    (``err = Σ_s min_c ||qr_sub[s] − cb[s][c]||²``, the squared
+    distance to the reconstruction), so no row is decoded or re-scored;
+    the only exchange is the K-key aggregate (map-side partials, K =
+    number of cells) — the CMS/HLL bounded-shuffle posture.  Runs
+    identically over the stored index (read codes, decode, join the
+    grid) when the corpus scan is the expensive part."""
+    scored = _vq(
+        _pq_quantized(embeddings, scale, id_col, vec_col),
+        ("cluster", "err"),
+        coarse_cents,
+        codebooks,
     )
     return scored.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),

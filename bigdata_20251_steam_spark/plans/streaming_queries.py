@@ -90,9 +90,12 @@ def _silver_dir(kind: str, sf_dir: str, key: str) -> str:
     generation leaves one directory.  Another SF's copies are kept:
     another process, or a frame returned earlier in this one, may still
     be reading them.  The SF tag is a directory level of its own, so no
-    tag matches another as a name prefix (``sf0.1`` and ``sf0.1_x10``)."""
+    tag matches another as a name prefix (``sf0.1`` and ``sf0.1_x10``).
+    Copies left in the older flat layout, ``{kind}_silver_{tag}_{key}``,
+    match no key of this one and are evicted too."""
     import shutil
 
+    _evict_stale(f"{kind}_silver_", "")
     parent = os.path.join(
         tempfile.gettempdir(),
         f"{kind}_silver",

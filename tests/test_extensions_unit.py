@@ -3928,10 +3928,11 @@ _TWIN_FIELDS = (
 
 def test_sql_twin_builders_parity(spark):
     """The SQL-string IVFADC builders the query builders construct
-    (_argmin_cell_sql/_probes_sql/_residual_sql/_codes_sql/_recon_sql/
-    _lut_sql/_lut_adc_sql/_int_assign_sql/_pq_sub_assign_sql/
-    _sign_signature_sql/_sqdist_to_sql/_sq_sql), and the Arrow kernel
-    (_vq) the corpus side assigns through, replay their
+    (_probes_sql/_residual_sql/_recon_sql/_lut_sql/_lut_adc_sql/
+    _sign_signature_sql/_sqdist_to_sql/_sq_sql), the test-only SQL
+    argmin references of tests/sql_reference.py (ref._argmin_cell_sql/
+    ref._codes_sql/ref._int_assign_sql/ref._pq_sub_assign_sql), and the
+    Arrow kernel (_vq) the corpus side assigns through, replay their
     pure-Python twin (_twin_ref) row for row — same integers, same
     tie rules (equidistant centroids -> lowest cell; equidistant
     codewords -> lowest code) — on a hand grid with hand-computed rows
@@ -3992,13 +3993,19 @@ def test_sql_twin_builders_parity(spark):
     }
 
     # the one Arrow kernel on the same grid: the coarse assign and its
-    # distance, the residual and its codes, and the codes of q itself
+    # distance, the residual, its codes and its distance to their
+    # reconstruction, and the codes of q itself
     twins = {v: _twin_ref(q, cents, books, _TWIN_SUBDIM) for v, q in rows}
-    vq = sim._vq(grid, ("cluster", "sqdist", "qr", "codes"), cents, books)
+    vq = sim._vq(
+        grid, ("cluster", "sqdist", "qr", "codes", "err"), cents, books
+    )
     assert {
-        r["vec_id"]: (r["cluster"], r["sqdist"], r["qr"], r["codes"])
+        r["vec_id"]: (r["cluster"], r["sqdist"], r["qr"], r["codes"], r["err"])
         for r in vq.collect()
-    } == {v: (t[0], t[1], t[3], t[4]) for v, t in twins.items()}
+    } == {
+        v: (*t[:2], *t[3:5], sum((a - b) ** 2 for a, b in zip(t[3], t[5])))
+        for v, t in twins.items()
+    }
     assert {
         r["vec_id"]: r["codes"]
         for r in sim._vq(grid, ("codes",), books=books).collect()
@@ -5128,10 +5135,23 @@ def _sql_vq(grid, cents, books):
     )
 
 
+#: a residual whose codes do not overflow but whose distance to its
+#: reconstruction does: each subspace's squared distance is just under
+#: 2**63, their sum is past it, so only ivfadc_distortion_report's err
+#: raises
+_ERR_OVERFLOW_CASE = (
+    1,
+    [[0, 0, 0, 0]],
+    [[[-3037000499, 0]], [[-3037000499, 0]]],
+    [(1, [0.0, 0.0, 0.0, 0.0])],
+)
+
+
 def _kernel_consumers(frame, scale, cents, books):
     """``{consumer: (kernel frame, SQL reference frame)}`` over the
     embeddings ``frame``: the kmeans assign's (cluster, sqdist),
-    pq_encode's codes and _ivf_residuals' (cluster, q)."""
+    pq_encode's codes, _ivf_residuals' (cluster, q) and
+    ivfadc_distortion_report's per-row (cluster, err)."""
     from bigdata_20251_steam_spark.operators import similarity as sim
 
     grid = sim._pq_quantized(frame, scale, "vec_id", "embedding")
@@ -5160,6 +5180,17 @@ def _kernel_consumers(frame, scale, cents, books):
                 "vec_id", "cluster", F.col("qr").alias("q")
             ),
         ),
+        "distortion err": (
+            sim._vq(grid, ("cluster", "err"), cents, books).select(
+                "vec_id", "cluster", "err"
+            ),
+            _sql_vq(grid, cents, books).withColumn("_cb", cb).select(
+                "vec_id",
+                "cluster",
+                F.expr(sim._sq_sql("qr", sim._recon_sql("_cb", "codes")))
+                .alias("err"),
+            ),
+        ),
     }
 
 
@@ -5182,9 +5213,12 @@ def _outcome(rows_of):
 def _check_kernel_consumers(frame_of):
     """Every consumer of the one nearest-codeword kernel gives its SQL
     reference's rows, or raises an overflow where the reference does,
-    on the ``_ENCODE_CASES`` and ``_OVERFLOW_CASES`` fixtures;
-    ``frame_of`` is the :func:`_check_np_encode` frame builder."""
-    for scale, cents, books, rows in _ENCODE_CASES + _OVERFLOW_CASES:
+    on the ``_ENCODE_CASES``, ``_OVERFLOW_CASES`` and
+    ``_ERR_OVERFLOW_CASE`` fixtures; ``frame_of`` is the
+    :func:`_check_np_encode` frame builder."""
+    for scale, cents, books, rows in (
+        _ENCODE_CASES + _OVERFLOW_CASES + [_ERR_OVERFLOW_CASE]
+    ):
         frame, run = frame_of(rows)
         outcomes = {}
         for name, (kernel, sql) in _kernel_consumers(
@@ -5200,11 +5234,19 @@ def _check_kernel_consumers(frame_of):
             # the subspace holding it
             assert outcomes["kmeans assign"][3:] == [(4, 0, None), (5, 0, None)]
             assert outcomes["pq_encode"][3:] == [(4, (0, 1)), (5, (1, 0))]
+            assert outcomes["distortion err"][3:] == [
+                (4, 0, None), (5, 0, None),
+            ]
+        if rows == _ERR_OVERFLOW_CASE[3]:
+            assert [n for n, o in outcomes.items() if o == "overflow"] == [
+                "distortion err"
+            ]
 
 
 def test_kernel_consumers_match_sql_reference(spark):
-    """The kmeans assign, pq_encode and the coarse residual all run the
-    one Arrow kernel; on batch frames each gives the SQL reference's
+    """The kmeans assign, pq_encode, the coarse residual and the
+    distortion report's error all run the one Arrow kernel; on batch
+    frames each gives the SQL reference's
     integers on the HALF_UP, 2**52 + 1, NULL-element and NULL-row
     fixtures, and raises an overflow where ANSI SQL raises."""
     schema = "vec_id long, embedding array<double>"

@@ -1075,13 +1075,19 @@ def test_silver_dir_evicts_only_stale_copies_of_its_own_sf(
     frame returned earlier still reads it), and a new content key
     evicts only the stale copy of the same SF.  ``sf0.1`` and
     ``sf0.1_x10`` are separate tags although one name is a prefix of
-    the other."""
+    the other.  A copy of the same kind in the older flat layout is
+    evicted; another kind's is not."""
     import tempfile
 
     from bigdata_20251_steam_spark.plans.streaming_queries import _silver_dir
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    flat = tmp_path / "idx_lifecycle_silver_data_sf0.1_fp0"
+    other_kind = tmp_path / "dedup_maint_silver_data_sf0.1_fp0"
+    flat.mkdir()
+    other_kind.mkdir()
     first = _silver_dir("idx_lifecycle", "/data/sf0.1", "fp1")
+    assert not flat.exists() and other_kind.is_dir()
     spark.range(3).write.parquet(first)
     earlier = spark.read.parquet(first)
     for sf in ("/data/sf0.01", "/data/sf0.1_x10"):
