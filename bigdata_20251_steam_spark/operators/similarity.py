@@ -80,7 +80,7 @@ def _topk_per_query(
     that could prune a global winner).  Both stages use the same
     deterministic ordering (score desc, vec_id asc), so results are
     identical to the single-window form and partition-invariant
-    (re-checked by determinism_audit.py).
+    (re-checked by tools/determinism_audit.py).
     """
     n_buckets = scored.sparkSession.sparkContext.defaultParallelism * 2
     oc = F.col(order_col)

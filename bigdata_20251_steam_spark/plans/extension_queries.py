@@ -74,6 +74,36 @@ _MINHASH_CTE = f"""
          FROM hashed CROSS JOIN params GROUP BY 1, 2)
 """
 
+#: Transitive closure of an undirected ``edges(a, b)`` graph: ``reach``
+#: pairs every node with each node of its component (WITH RECURSIVE).
+_REACH_CTE = """reach(a, b) AS (
+      SELECT a, a FROM edges
+      UNION SELECT a, b FROM edges
+      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)"""
+
+#: CTE suffix after _MINHASH_CTE: the LSH candidate pairs ``prs``
+#: (doc_a < doc_b) of 4-row bands.
+_LSH_PAIRS_CTE = """,
+    banded AS (
+      SELECT doc_id, h_idx // 4 AS band_id,
+             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
+      FROM mh GROUP BY 1, 2),
+    prs AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM banded a
+      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
+                   AND a.doc_id < b.doc_id)"""
+
+#: _MINHASH_CTE under WITH RECURSIVE, then the closure of its LSH
+#: candidate pairs: ``banded -> prs -> edges -> reach``.
+_MINHASH_CLOSURE_CTE = _MINHASH_CTE.replace(
+    "WITH params", "WITH RECURSIVE params", 1
+) + _LSH_PAIRS_CTE + f""",
+    edges AS (
+      SELECT doc_a AS a, doc_b AS b FROM prs
+      UNION SELECT doc_b, doc_a FROM prs),
+    {_REACH_CTE}"""
+
 # ---------------------------------------------------------------------------
 # Deduplication
 # ---------------------------------------------------------------------------
@@ -281,7 +311,7 @@ def q_embed_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ANY regression (missing rows, broken ranking, wrong scores, recall "
     "collapse) hash-mismatches the driver row.  The raw rows stay "
     "available via operators.similarity.ivf_topk and are "
-    "partition-invariance-audited in determinism_audit.py.",
+    "partition-invariance-audited in tools/determinism_audit.py.",
 )
 def q_embed_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -506,10 +536,7 @@ def q_embed_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges AS (
       SELECT ia AS a, ib AS b FROM prs
       UNION SELECT ib, ia FROM prs),
-    reach(a, b) AS (
-      SELECT a, a FROM edges
-      UNION SELECT a, b FROM edges
-      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+    {_REACH_CTE},
     comp AS (SELECT a AS vec_id, min(b) AS component_id FROM reach GROUP BY a)
     SELECT e.vec_id,
            COALESCE(c.component_id, e.vec_id) AS cluster_id,
@@ -1128,16 +1155,7 @@ _PAGERANK_SCALE = 100_000
 
 #: LSH pair graph as (src, dst) edges + degree — shared CTE suffix for
 #: every pair-graph oracle (PageRank, canonical representative).
-_PAIR_GRAPH_CTE = """,
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
+_PAIR_GRAPH_CTE = _LSH_PAIRS_CTE + """,
     edges AS (SELECT doc_a AS src, doc_b AS dst FROM prs
               UNION ALL
               SELECT doc_b AS src, doc_a AS dst FROM prs),
@@ -1774,24 +1792,8 @@ def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_components",
-    oracle=_MINHASH_CTE.replace("WITH params", "WITH RECURSIVE params", 1)
-    + """,
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM prs
-      UNION SELECT doc_b, doc_a FROM prs),
-    reach(a, b) AS (
-      SELECT a, a FROM edges
-      UNION SELECT a, b FROM edges
-      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+    oracle=_MINHASH_CLOSURE_CTE
+    + """
     SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
     """,
     headline=True,
@@ -1808,24 +1810,8 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_pipeline_end_to_end",
-    oracle=_MINHASH_CTE.replace("WITH params", "WITH RECURSIVE params", 1)
+    oracle=_MINHASH_CLOSURE_CTE
     + """,
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM prs
-      UNION SELECT doc_b, doc_a FROM prs),
-    reach(a, b) AS (
-      SELECT a, a FROM edges
-      UNION SELECT a, b FROM edges
-      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
     comp AS (SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a)
     SELECT d.source,
            count(*) AS n_docs,
@@ -1870,24 +1856,8 @@ _IDC_DELTA_MOD = 8
 
 @register(
     "incremental_dedup_components",
-    oracle=_MINHASH_CTE.replace("WITH params", "WITH RECURSIVE params", 1)
-    + """,
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM prs
-      UNION SELECT doc_b, doc_a FROM prs),
-    reach(a, b) AS (
-      SELECT a, a FROM edges
-      UNION SELECT a, b FROM edges
-      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+    oracle=_MINHASH_CLOSURE_CTE
+    + """
     SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
     """,
     # not a bench headliner: the in-query base-state computation (two
@@ -1933,24 +1903,8 @@ def q_incremental_dedup_components(
 
 @register(
     "incremental_dedup_bucketed",
-    oracle=_MINHASH_CTE.replace("WITH params", "WITH RECURSIVE params", 1)
-    + """,
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM prs
-      UNION SELECT doc_b, doc_a FROM prs),
-    reach(a, b) AS (
-      SELECT a, a FROM edges
-      UNION SELECT a, b FROM edges
-      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+    oracle=_MINHASH_CLOSURE_CTE
+    + """
     SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
     """,
     doc="Incremental near-dup closure over a BUCKETED band state "
@@ -2018,27 +1972,10 @@ _RETRACT_MOD = 7
 
 @register(
     "dedup_retraction",
-    oracle=_MINHASH_CTE.replace("WITH params", "WITH RECURSIVE params", 1)
-    .replace(
+    oracle=_MINHASH_CLOSURE_CTE.replace(
         "FROM documents", f"FROM documents WHERE doc_id % {_RETRACT_MOD} <> 0", 1
     )
-    + """,
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM prs
-      UNION SELECT doc_b, doc_a FROM prs),
-    reach(a, b) AS (
-      SELECT a, a FROM edges
-      UNION SELECT a, b FROM edges
-      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+    + """
     SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a
     """,
     doc="Near-dup closure RETRACTION (r16, r15 verdict #2 — the DELETE "
@@ -4619,24 +4556,8 @@ def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "leakage_safe_split",
-    oracle=_MINHASH_CTE.replace("WITH params", "WITH RECURSIVE params", 1)
+    oracle=_MINHASH_CLOSURE_CTE
     + """,
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM prs
-      UNION SELECT doc_b, doc_a FROM prs),
-    reach(a, b) AS (
-      SELECT a, a FROM edges
-      UNION SELECT a, b FROM edges
-      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
     comp AS (SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a),
     assigned AS (
       SELECT d.doc_id,
@@ -5198,503 +5119,6 @@ _PQ_CODEBOOKS: list[list[list[int]]] = [
 ]
 
 
-def _pq_oracle(k: int = 5) -> str:
-    """Full relational replay of pq_search: encode (argmin per
-    subspace) -> decode -> ADC shortlist -> exact integer re-rank.
-    Integer end-to-end on the same grid as the kmeans oracle, so the
-    replay is bit-identical."""
-    m, sub = _PQ_M, 64 // _PQ_M
-    cb = [
-        "[" + ", ".join(
-            "[" + ", ".join(str(v) for v in c) + "]" for c in _PQ_CODEBOOKS[s]
-        ) + "]"
-        for s in range(m)
-    ]
-    d_cols = ", ".join(
-        f"""list_transform({cb[s]}, c -> list_sum(list_transform(
-            range(1, {sub + 1}), j -> (q[{s * sub}+j]-c[j])*(q[{s * sub}+j]-c[j])))) AS d{s}"""
-        for s in range(m)
-    )
-    recon = " || ".join(
-        f"{cb[s]}[list_indexof(d{s}, list_min(d{s}))]" for s in range(m)
-    )
-    return f"""
-    WITH qv AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings),
-    d AS (SELECT vec_id, q, {d_cols} FROM qv),
-    dec AS (SELECT vec_id, ({recon}) AS r FROM d),
-    qs AS (SELECT vec_id AS query_id, q AS qq FROM qv WHERE vec_id < 10),
-    adc AS (
-      SELECT s.query_id, b.vec_id,
-             list_sum(list_transform(range(1, 65),
-               i -> (s.qq[i]-b.r[i])*(s.qq[i]-b.r[i]))) AS adc_d
-      FROM dec b CROSS JOIN qs s WHERE b.vec_id <> s.query_id),
-    sl AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc_d, vec_id) AS rn
-        FROM adc) t WHERE rn <= {_PQ_SHORTLIST}),
-    ex AS (
-      SELECT sl.query_id, sl.vec_id,
-             CAST(list_sum(list_transform(range(1, 65),
-               i -> (s.qq[i]-v.q[i])*(s.qq[i]-v.q[i]))) AS BIGINT) AS sqdist
-      FROM sl
-      JOIN qv v ON v.vec_id = sl.vec_id
-      JOIN qs s ON s.query_id = sl.query_id),
-    rr AS (
-      SELECT query_id, vec_id, sqdist,
-             CAST(row_number() OVER (PARTITION BY query_id
-                                     ORDER BY sqdist, vec_id) AS INT) AS rank
-      FROM ex)
-    SELECT query_id, vec_id, sqdist, rank FROM rr WHERE rank <= {k}
-    """
-
-
-@register(
-    "pq_search_rerank",
-    oracle=_pq_oracle(),
-    doc="Product-quantization search with exact re-ranking "
-    "(operators/similarity.py pq_train/pq_encode/pq_topk/pq_search, "
-    "r10; Jégou, Douze & Schmid, TPAMI 2011): the ANN tier's "
-    "compression path — vectors encode to m=8 sub-codes (4 bits each "
-    "under the PINNED integer codebooks; a 100 TB float corpus "
-    "becomes ~1.5 TB of codes), the scan ranks asymmetric distances "
-    "against the literal-decoded reconstructions, the best "
-    "shortlist=50 per query re-rank under the exact integer grid "
-    "distance (pure ADC plateaus ~0.35 recall on unclusterable "
-    "embeddings; shortlist re-rank measures 0.90, floor pinned in "
-    "pytest — the deployed IVFADC+R shape).  Integer-exact Lloyd "
-    "training per subspace (ONE bounded job per iteration, "
-    "m*k*subdim-cell exchange+collect, loud cap); encode/ADC are "
-    "zero-shuffle scan-fused projections; the corpus never shuffles "
-    "in either search stage (queries and the candidate shortlist "
-    "broadcast); both top-k cuts are the salted two-stage rank.  The "
-    "oracle replays encode, decode, ADC shortlist and re-rank "
-    "relationally, bit-for-bit.",
-)
-def q_pq_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.pq_search(
-        load_table(spark, sf_dir, "embeddings"),
-        _PQ_CODEBOOKS,
-        query_ids=_QUERY_IDS,
-        k=5,
-        shortlist=_PQ_SHORTLIST,
-    )
-
-
-@register(
-    "multimodal_video_meta_roundtrip",
-    oracle="""
-    WITH a AS (
-      SELECT user_id,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(((CAST(FLOOR(value * 1000) AS BIGINT) % 600 + 600)
-                       % 600)) AS BIGINT) AS ssum
-      FROM events GROUP BY user_id),
-    p AS (
-      SELECT user_id, n, ssum,
-             600 * n + ssum                        AS dur,
-             16 * (1 + (n % 64))                   AS w,
-             16 * (1 + (ssum % 48))                AS h,
-             ((user_id % 2) + 2) % 2               AS has_audio
-      FROM a)
-    SELECT user_id AS doc_id,
-           'mp4-meta' AS decoder,
-           -- features surface through a FLOAT32 Arrow array; replay the
-           -- double->float32 rounding so the match stays BIT-exact
-           CAST(CAST(CAST(dur AS DOUBLE) / CAST(600 AS DOUBLE) AS REAL)
-                AS DOUBLE)                         AS f0,
-           CAST(CAST(600 AS REAL) AS DOUBLE)       AS f1,
-           CAST(CAST(dur AS REAL) AS DOUBLE)       AS f2,
-           CAST(CAST(1 + has_audio AS REAL) AS DOUBLE) AS f3,
-           CAST(CAST(1 AS REAL) AS DOUBLE)         AS f4,
-           CAST(CAST(has_audio AS REAL) AS DOUBLE) AS f5,
-           CAST(CAST(w AS REAL) AS DOUBLE)         AS f6,
-           CAST(CAST(h AS REAL) AS DOUBLE)         AS f7
-    FROM p
-    """,
-    doc="Driver-tier roundtrip proof for the stdlib ISO BMFF (MP4) "
-    "container parser (r10, the video sibling of "
-    "multimodal_audio_roundtrip): per user, derive deterministic "
-    "container parameters from the events table (duration units, "
-    "16.16 track dimensions, a parity-keyed audio track), ENCODE a "
-    "minimal ftyp+moov box tree in an executor (Arrow-batched "
-    "mapInPandas), route it through decode_features' magic-byte "
-    "dispatch, and emit the mp4-meta features.  The oracle recomputes "
-    "every feature DIRECTLY from the parameter derivation — never "
-    "touching a box — so a hash match proves the encoder+parser pair "
-    "is field-exact (timescale, 64-bit-safe duration, fixed-point "
-    "dimensions, handler-type track split) and fake=False pins the "
-    "routing.  Scale shape: one bounded per-user aggregate, then two "
-    "narrow Arrow passes; no collect.",
-)
-def q_multimodal_video_meta_roundtrip(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import pandas as pd
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.pmod(F.floor(F.col("value") * 1000).cast("long"), F.lit(600)).alias(
-            "m"
-        ),
-    )
-    params = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("m").alias("ssum")
-    ).select(
-        "user_id",
-        (F.lit(600) * F.col("n") + F.col("ssum")).alias("dur"),
-        (F.lit(16) * (F.lit(1) + F.pmod(F.col("n"), F.lit(64)))).alias("w"),
-        (F.lit(16) * (F.lit(1) + F.pmod(F.col("ssum"), F.lit(48)))).alias(
-            "h"
-        ),
-        F.pmod(F.col("user_id"), F.lit(2)).cast("int").alias("has_audio"),
-    )
-
-    def encode(batches):
-        # self-contained (cloudpickle by value): minimal ftyp+moov tree
-        import struct as _s
-
-        def _box(t, body):
-            return _s.pack(">I", 8 + len(body)) + t + body
-
-        def _full(t, body):
-            return _box(t, b"\0\0\0\0" + body)
-
-        def _trak(handler, w, h):
-            tkhd = _full(
-                b"tkhd",
-                _s.pack(">IIIII", 0, 0, 1, 0, 0)
-                + b"\0" * 16
-                + b"\0" * 36
-                + _s.pack(">II", w << 16, h << 16),
-            )
-            hdlr = _full(
-                b"hdlr", _s.pack(">I", 0) + handler + b"\0" * 12 + b"\0"
-            )
-            return _box(b"trak", tkhd + _box(b"mdia", hdlr))
-
-        def mp4(dur, w, h, has_audio):
-            ftyp = _box(
-                b"ftyp", b"isom" + _s.pack(">I", 512) + b"isomiso2mp41"
-            )
-            mvhd = _full(
-                b"mvhd", _s.pack(">IIII", 0, 0, 600, dur) + b"\0" * 80
-            )
-            tracks = _trak(b"vide", w, h)
-            if has_audio:
-                tracks += _trak(b"soun", 0, 0)
-            return ftyp + _box(b"moov", mvhd + tracks)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["user_id"],
-                    "payload": [
-                        mp4(int(d), int(w), int(h), int(a))
-                        for d, w, h, a in zip(
-                            pdf["dur"], pdf["w"], pdf["h"], pdf["has_audio"]
-                        )
-                    ],
-                    "media_type": "video/mp4",
-                }
-            )
-
-    media = params.mapInPandas(
-        encode, "doc_id bigint, payload binary, media_type string"
-    )
-    feats = mm.decode_features(media, fake=False, route_magic=True)
-    return feats.select(
-        "doc_id",
-        "decoder",
-        *[
-            F.col("feature")[i].cast("double").alias(f"f{i}")
-            for i in range(8)
-        ],
-    )
-
-
-@register(
-    "hard_negative_pairs",
-    oracle=_MINHASH_CTE.replace("WITH params", "WITH RECURSIVE params", 1)
-    + """,
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM prs
-      UNION SELECT doc_b, doc_a FROM prs),
-    reach(a, b) AS (
-      SELECT a, a FROM edges
-      UNION SELECT a, b FROM edges
-      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-    comp AS (SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a),
-    rp AS (
-      SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v,
-             COALESCE(c.component_id, e.vec_id) AS rep
-      FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.doc_id),
-    qs AS (SELECT vec_id AS query_id, v AS qv, rep AS qrep
-           FROM rp WHERE vec_id < 10),
-    scored AS (
-      SELECT q.query_id, b.vec_id,
-             round(list_cosine_similarity(qv, v), 6) AS cos_sim
-      FROM rp b CROSS JOIN qs q
-      WHERE b.vec_id <> q.query_id AND b.rep <> q.qrep),
-    ranked AS (
-      SELECT *, CAST(row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS INTEGER)
-        AS rank
-      FROM scored)
-    SELECT query_id, vec_id, cos_sim, rank FROM ranked WHERE rank <= 5
-    """,
-    doc="Hard-negative mining for contrastive training pairs "
-    "(operators/similarity.py:hard_negative_topk, r10; the DPR / "
-    "SimCSE recipe): per query document, the top-5 highest-cosine "
-    "candidates AFTER excluding the query's own near-dup cluster — "
-    "high-similarity candidates make the hardest negatives, but a "
-    "near-duplicate of the query is a FALSE negative (semantically "
-    "the positive), which untreated poisons the contrastive loss.  "
-    "Composes the engine's tiers across both modalities: documents "
-    "-> minhash LSH pairs -> pointer-jumped closure -> cluster "
-    "representative joins the EMBEDDINGS side (one corpus equi join, "
-    "AQE-splittable), queries + reps broadcast, salted two-stage "
-    "top-k cut.  Oracle = the recursive-CTE closure + "
-    "list_cosine_similarity rank replay.",
-)
-def q_hard_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import hard_negative_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dd.minhash_candidate_pairs(dd.minhash_signatures(docs))
-    comp = dd.connected_components(pairs)
-    reps = (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component_id"), F.col("doc_id")).alias("rep"),
-        )
-    )
-    return hard_negative_topk(
-        load_table(spark, sf_dir, "embeddings"), reps, query_ids=_QUERY_IDS
-    )
-
-
-_LOGREG_B = 64
-_LOGREG_ITERS = 2
-
-
-def _logreg_oracle() -> str:
-    """Unrolled-CTE replay of integer-exact logistic GD: one
-    (sigmoid-lookup -> error -> bucket gradient -> truncated-division
-    update) block per iteration from all-zero init, then the final
-    scoring pass over ALL documents.  Every intermediate is an integer
-    (DuckDB's truncating // replicated driver-side), so the replay is
-    bit-identical — the kmeans unrolled-iteration posture extended to
-    a gradient method."""
-    from ..operators.classifier import (
-        SIGMOID_CLAMP_MICRO,
-        SIGMOID_STEP_MICRO,
-        sigmoid_micro_table,
-    )
-
-    lst = "[" + ", ".join(str(v) for v in sigmoid_micro_table()) + "]"
-
-    def lookup(z: str) -> str:
-        zc = (
-            f"least(greatest({z}, -{SIGMOID_CLAMP_MICRO}), "
-            f"{SIGMOID_CLAMP_MICRO})"
-        )
-        return (
-            f"({lst})[CAST((({zc}) + {SIGMOID_CLAMP_MICRO}) "
-            f"// {SIGMOID_STEP_MICRO} AS INT) + 1]"
-        )
-
-    bucket = f"CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % {_LOGREG_B}"
-    parts = [
-        f"""
-    WITH tok AS (
-      SELECT doc_id, CASE WHEN doc_id % 7 = 3 THEN 1 ELSE 0 END AS y,
-             regexp_extract_all(lower(text), '[a-z]+') AS ws
-      FROM documents WHERE text IS NOT NULL),
-    x AS (
-      SELECT doc_id, {bucket} AS b, CAST(count(*) AS BIGINT) AS c
-      FROM tok, unnest(ws) AS u(w) GROUP BY 1, 2),
-    nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
-    z1 AS (SELECT doc_id, y, CAST(0 AS BIGINT) AS z FROM tok)"""
-    ]
-    for t in range(1, _LOGREG_ITERS + 1):
-        prev_w = "0" if t == 1 else f"w{t-1}.w"
-        join_w = "" if t == 1 else f" JOIN w{t-1} USING (b)"
-        prev_b = "0" if t == 1 else f"(SELECT bias FROM b{t-1})"
-        parts.append(f""",
-    e{t} AS (SELECT doc_id, y,
-                    CAST({lookup('z')} - y * 1000000 AS BIGINT) AS e
-             FROM z{t}),
-    g{t} AS (SELECT x.b, CAST(sum(e{t}.e * x.c) AS BIGINT) AS g
-             FROM e{t} JOIN x USING (doc_id) GROUP BY x.b),
-    w{t} AS (SELECT b, CAST({prev_w} - ((1 * g) // (2 * nn.n)) AS BIGINT)
-                    AS w
-             FROM g{t}{join_w} CROSS JOIN nn),
-    b{t} AS (SELECT CAST({prev_b} - ((1 * (SELECT sum(e) FROM e{t}))
-                    // (2 * nn.n)) AS BIGINT) AS bias FROM nn)""")
-        if t < _LOGREG_ITERS:
-            parts.append(f""",
-    z{t + 1} AS (
-      SELECT t.doc_id, t.y,
-             CAST((SELECT bias FROM b{t})
-                  + COALESCE(sum(x.c * w{t}.w), 0) AS BIGINT) AS z
-      FROM tok t
-      LEFT JOIN x ON x.doc_id = t.doc_id
-      LEFT JOIN w{t} ON w{t}.b = x.b
-      GROUP BY t.doc_id, t.y)""")
-    T = _LOGREG_ITERS
-    parts.append(f""",
-    score AS (
-      SELECT d.doc_id,
-             CAST((SELECT bias FROM b{T})
-                  + COALESCE(sum(x.c * w{T}.w), 0) AS BIGINT) AS z_micro
-      FROM documents d
-      LEFT JOIN x ON x.doc_id = d.doc_id
-      LEFT JOIN w{T} ON w{T}.b = x.b
-      GROUP BY d.doc_id)
-    SELECT doc_id, z_micro,
-           CAST({lookup('z_micro')} AS BIGINT) AS p_micro,
-           {lookup('z_micro')} > 500000 AS pred
-    FROM score""")
-    return "".join(parts)
-
-
-@register(
-    "logreg_quality_scores",
-    oracle=_logreg_oracle(),
-    doc="Integer-exact logistic regression, trained in-query "
-    "(operators/classifier.py:train_logreg, r10): the TRAINED "
-    "iterative tier next to the closed-form NB log-odds — hashed "
-    "bag-of-words logit in integer micro-nats, the sigmoid as a "
-    "pinned 1025-entry quantile table (no runtime libm), full-batch "
-    "gradient descent from all-zero init with truncating-integer-"
-    "division updates (DuckDB's native // semantics replicated "
-    "driver-side), so every weight of every iteration is "
-    "bit-identical across engines.  Per iteration: one zero-shuffle "
-    "error scan + ONE bucket-bounded gradient aggregate (exchange "
-    "<= n_buckets+1 rows, map-side partials); only the <= n_buckets "
-    "gradient rows reach the driver.  Scoring is the NB zero-shuffle "
-    "scan-fused contract.  The oracle unrolls both iterations as CTE "
-    "blocks — the kmeans unrolled-iteration posture extended to a "
-    "gradient method.  At 100 TB: train on a deterministic hash "
-    "sample (the ivf/pq posture).",
-)
-def q_logreg_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.classifier import logreg_scores, train_logreg
-
-    docs = load_table(spark, sf_dir, "documents")
-    w, b = train_logreg(
-        docs,
-        positive=(F.col("doc_id") % 7 == 3),
-        n_buckets=_LOGREG_B,
-        iters=_LOGREG_ITERS,
-        lr_num=1,
-        lr_den=2,
-    )
-    return logreg_scores(docs, w, b, n_buckets=_LOGREG_B)
-
-
-@register(
-    "dedup_quality_report",
-    oracle=_MINHASH_CTE
-    + f""",
-    banded AS (
-      SELECT doc_id, h_idx // 4 AS band_id,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h_idx) AS band_sig
-      FROM mh GROUP BY 1, 2),
-    prs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a
-      JOIN banded b ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-                   AND a.doc_id < b.doc_id),
-    sets AS (
-      SELECT doc_id,
-             list_transform(sh,
-               s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)) AS hs
-      FROM grams),
-    ver AS (
-      SELECT p.doc_a, p.doc_b,
-             len(list_intersect(a.hs, b.hs)) AS inter,
-             len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)) AS un
-      FROM prs p
-      JOIN sets a ON a.doc_id = p.doc_a
-      JOIN sets b ON b.doc_id = p.doc_b),
-    verj AS (
-      SELECT CASE WHEN un > 0
-                  THEN round(inter / CAST(un AS DOUBLE), 6)
-                  ELSE 0.0 END AS j
-      FROM ver),
-    vagg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_candidates,
-             CAST(sum(CASE WHEN j >= 0.1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_weak,
-             CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_strong
-      FROM verj),
-    tsets AS (SELECT doc_id, lang AS blk, list_sort(sh) AS sh
-              FROM grams WHERE len(sh) > 0),
-    truth AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM tsets a JOIN tsets b ON a.blk = b.blk AND a.doc_id < b.doc_id
-      WHERE round(len(list_intersect(a.sh, b.sh)) /
-                  CAST(len(list_distinct(a.sh || b.sh)) AS DOUBLE), 6)
-            >= 0.5),
-    tagg AS (SELECT CAST(count(*) AS BIGINT) AS n_truth_strong FROM truth),
-    hagg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_hit_strong
-      FROM truth t JOIN prs p
-        ON t.doc_a = p.doc_a AND t.doc_b = p.doc_b)
-    SELECT n_candidates, n_weak, n_strong,
-           CASE WHEN n_candidates > 0
-                THEN round(n_weak / CAST(n_candidates AS DOUBLE), 6) END
-             AS precision_weak,
-           CASE WHEN n_candidates > 0
-                THEN round(n_strong / CAST(n_candidates AS DOUBLE), 6) END
-             AS precision_strong,
-           n_truth_strong, n_hit_strong,
-           CASE WHEN n_truth_strong > 0
-                THEN round(n_hit_strong / CAST(n_truth_strong AS DOUBLE), 6)
-             END AS recall_strong
-    FROM vagg CROSS JOIN tagg CROSS JOIN hagg
-    """,
-    doc="Dedup-policy evaluation report "
-    "(operators/dedup.py:dedup_quality_report, r10): measures the LSH "
-    "banding against exact Jaccard on BOTH sides of the S-curve — "
-    "candidate precision (every LSH pair re-verified with the exact "
-    "shingle-set Jaccard, bucketed at J>=0.1 worth-verifying and "
-    "J>=0.5 design-target) and strong-pair recall (the exact blocked "
-    "J>=0.5 set as truth; (1/4)^(1/4)~0.707 banding makes strong "
-    "pairs near-certain candidates, so a recall drop flags a "
-    "banding/tokenization regression).  This is the report a pipeline "
-    "consults before trusting a dedup threshold, the operator-level "
-    "analogue of nb_threshold_sweep.  Candidates stay O(true dups); "
-    "verification ships shingle arrays once per candidate; aggregates "
-    "are single-row (the whitelisted 1-row crossJoin shape).",
-)
-def q_dedup_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.dedup_quality_report(load_table(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
-# IVFADC search (r11): coarse routing composed with residual PQ
-# ---------------------------------------------------------------------------
-
 #: Provenance: operators.similarity.kmeans_train(embeddings@sf0.001,
 #: k=16, iters=2, scale=1000) for the coarse centroids and
 #: operators.similarity.ivfadc_train(embeddings@sf0.001, cents, m=8,
@@ -5933,6 +5357,572 @@ _IVFADC_CODEBOOKS: list[list[list[int]]] = [
     ],
 ]
 
+#: The vector family's DuckDB replay, shared by every PQ and IVFADC
+#: oracle, batch and streaming: integer end-to-end on the kmeans grid
+#: (round(x * 1000)), so each replay is bit-identical to its plan.
+#: ``str`` of a pinned list is its SQL list literal.
+_CENTS_SQL = str(_IVFADC_CENTS)
+
+_QV_CTE = """
+    WITH qv AS (
+      SELECT vec_id,
+             list_transform(CAST(embedding AS DOUBLE[]),
+               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
+      FROM embeddings)"""
+
+
+def _pq_decode_cte(
+    src: str, keys: str, col: str, books: list[list[list[int]]]
+) -> str:
+    """CTEs ``d`` and ``dec`` over ``src``: each subspace of the vector
+    ``col`` encodes to its nearest code of ``books`` (first minimum
+    wins) and decodes back; ``dec`` carries ``keys``, ``col`` and the
+    reconstruction ``rr``."""
+    sub = 64 // len(books)
+    cbs = [str(b) for b in books]
+    d_cols = ", ".join(
+        f"""list_transform({cb}, c -> list_sum(list_transform(
+            range(1, {sub + 1}), j -> ({col}[{s * sub}+j]-c[j])*({col}[{s * sub}+j]-c[j])))) AS d{s}"""
+        for s, cb in enumerate(cbs)
+    )
+    recon = " || ".join(
+        f"{cb}[list_indexof(d{s}, list_min(d{s}))]" for s, cb in enumerate(cbs)
+    )
+    return f""",
+    d AS (SELECT {keys}, {col}, {d_cols} FROM {src}),
+    dec AS (SELECT {keys}, {col}, ({recon}) AS rr FROM d)"""
+
+
+#: Coarse assignment: ``asg.dc`` holds the distances to the pinned
+#: centroids, ``cl.cell`` the nearest one (1-based).
+_IVF_ASSIGN_CTE = _QV_CTE + f""",
+    asg AS (
+      SELECT vec_id, q,
+             list_transform({_CENTS_SQL}, c -> list_sum(list_transform(
+               range(1, 65), i -> (q[i]-c[i])*(q[i]-c[i])))) AS dc
+      FROM qv),
+    cl AS (
+      SELECT vec_id, q, dc,
+             CAST(list_indexof(dc, list_min(dc)) AS INT) AS cell
+      FROM asg)"""
+
+#: The IVFADC encode: coarse assignment, residual ``res.r``, residual
+#: PQ encode and decode (``dec``: vec_id, cell, r, rr).
+_IVFADC_CHAIN_CTE = _IVF_ASSIGN_CTE + f""",
+    res AS (
+      SELECT vec_id, cell,
+             list_transform(range(1, 65),
+               i -> q[i] - list_extract(list_extract({_CENTS_SQL}, cell), i)) AS r
+      FROM cl)""" + _pq_decode_cte("res", "vec_id, cell", "r", _IVFADC_CODEBOOKS)
+
+#: Per-vector quantization error over ``dec``.
+_IVFADC_ERR_CTE = """,
+    e AS (
+      SELECT vec_id, cell,
+             list_sum(list_transform(range(1, 65),
+               i -> (r[i]-rr[i])*(r[i]-rr[i]))) AS err
+      FROM dec)"""
+
+
+def _rerank_cte(shortlist: int, k: int) -> str:
+    """Tail of every ADC search replay: the ``shortlist`` smallest
+    ``adc.adc_d`` per query re-rank by the exact grid distance from
+    ``qs.qq`` to ``qv.q``, and the top ``k`` by (sqdist, vec_id) are
+    the result."""
+    return f""",
+    sl AS (
+      SELECT query_id, vec_id FROM (
+        SELECT query_id, vec_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY adc_d, vec_id) AS rn
+        FROM adc) t WHERE rn <= {shortlist}),
+    ex AS (
+      SELECT sl.query_id, sl.vec_id,
+             CAST(list_sum(list_transform(range(1, 65),
+               i -> (s.qq[i]-v.q[i])*(s.qq[i]-v.q[i]))) AS BIGINT) AS sqdist
+      FROM sl
+      JOIN qv v ON v.vec_id = sl.vec_id
+      JOIN qs s ON s.query_id = sl.query_id),
+    rr AS (
+      SELECT query_id, vec_id, sqdist,
+             CAST(row_number() OVER (PARTITION BY query_id
+                                     ORDER BY sqdist, vec_id) AS INT) AS rank
+      FROM ex)
+    SELECT query_id, vec_id, sqdist, rank FROM rr WHERE rank <= {k}
+    """
+
+
+def _ivfadc_probe_cte(
+    queries: str,
+    k: int = 5,
+    shortlist: int = _PQ_SHORTLIST,
+    cand_filter: str = "",
+    dec: str = "dec",
+) -> str:
+    """The IVFADC probe after _IVFADC_CHAIN_CTE: the rows of ``cl``
+    matching ``queries`` query; each routes to its _IVFADC_NPROBE
+    nearest cells, scores the reconstructions in ``dec`` of those cells
+    by residual ADC (``cand_filter`` is ANDed onto the candidate side:
+    the pre-filter), then re-ranks exactly."""
+    return f""",
+    qs AS (SELECT vec_id AS query_id, q AS qq, dc FROM cl WHERE {queries}),
+    pr AS (
+      SELECT query_id, j FROM (
+        SELECT query_id, j,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY dc[CAST(j AS INT)], j) AS rn
+        FROM qs, range(1, {len(_IVFADC_CENTS) + 1}) t(j)) z
+      WHERE rn <= {_IVFADC_NPROBE}),
+    qres AS (
+      SELECT p.query_id, CAST(p.j AS INT) AS cell,
+             list_transform(range(1, 65),
+               i -> s.qq[i]
+                    - list_extract(list_extract({_CENTS_SQL}, CAST(p.j AS INT)), i)
+             ) AS qr
+      FROM pr p JOIN qs s ON s.query_id = p.query_id),
+    adc AS (
+      SELECT s.query_id, b.vec_id,
+             list_sum(list_transform(range(1, 65),
+               i -> (s.qr[i]-b.rr[i])*(s.qr[i]-b.rr[i]))) AS adc_d
+      FROM {dec} b JOIN qres s ON s.cell = b.cell
+      WHERE b.vec_id <> s.query_id{cand_filter})""" + _rerank_cte(shortlist, k)
+
+
+def _pq_oracle(k: int = 5) -> str:
+    """Full relational replay of pq_search: encode (argmin per
+    subspace) -> decode -> ADC shortlist -> exact integer re-rank."""
+    return (
+        _QV_CTE
+        + _pq_decode_cte("qv", "vec_id", "q", _PQ_CODEBOOKS)
+        + f""",
+    qs AS (SELECT vec_id AS query_id, q AS qq FROM qv
+           WHERE vec_id < {len(_QUERY_IDS)}),
+    adc AS (
+      SELECT s.query_id, b.vec_id,
+             list_sum(list_transform(range(1, 65),
+               i -> (s.qq[i]-b.rr[i])*(s.qq[i]-b.rr[i]))) AS adc_d
+      FROM dec b CROSS JOIN qs s WHERE b.vec_id <> s.query_id)"""
+        + _rerank_cte(_PQ_SHORTLIST, k)
+    )
+
+
+@register(
+    "pq_search_rerank",
+    oracle=_pq_oracle(),
+    doc="Product-quantization search with exact re-ranking "
+    "(operators/similarity.py pq_train/pq_encode/pq_topk/pq_search, "
+    "r10; Jégou, Douze & Schmid, TPAMI 2011): the ANN tier's "
+    "compression path — vectors encode to m=8 sub-codes (4 bits each "
+    "under the PINNED integer codebooks; a 100 TB float corpus "
+    "becomes ~1.5 TB of codes), the scan ranks asymmetric distances "
+    "against the literal-decoded reconstructions, the best "
+    "shortlist=50 per query re-rank under the exact integer grid "
+    "distance (pure ADC plateaus ~0.35 recall on unclusterable "
+    "embeddings; shortlist re-rank measures 0.90, floor pinned in "
+    "pytest — the deployed IVFADC+R shape).  Integer-exact Lloyd "
+    "training per subspace (ONE bounded job per iteration, "
+    "m*k*subdim-cell exchange+collect, loud cap); encode/ADC are "
+    "zero-shuffle scan-fused projections; the corpus never shuffles "
+    "in either search stage (queries and the candidate shortlist "
+    "broadcast); both top-k cuts are the salted two-stage rank.  The "
+    "oracle replays encode, decode, ADC shortlist and re-rank "
+    "relationally, bit-for-bit.",
+)
+def q_pq_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sim.pq_search(
+        load_table(spark, sf_dir, "embeddings"),
+        _PQ_CODEBOOKS,
+        query_ids=_QUERY_IDS,
+        k=5,
+        shortlist=_PQ_SHORTLIST,
+    )
+
+
+@register(
+    "multimodal_video_meta_roundtrip",
+    oracle="""
+    WITH a AS (
+      SELECT user_id,
+             CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(((CAST(FLOOR(value * 1000) AS BIGINT) % 600 + 600)
+                       % 600)) AS BIGINT) AS ssum
+      FROM events GROUP BY user_id),
+    p AS (
+      SELECT user_id, n, ssum,
+             600 * n + ssum                        AS dur,
+             16 * (1 + (n % 64))                   AS w,
+             16 * (1 + (ssum % 48))                AS h,
+             ((user_id % 2) + 2) % 2               AS has_audio
+      FROM a)
+    SELECT user_id AS doc_id,
+           'mp4-meta' AS decoder,
+           -- features surface through a FLOAT32 Arrow array; replay the
+           -- double->float32 rounding so the match stays BIT-exact
+           CAST(CAST(CAST(dur AS DOUBLE) / CAST(600 AS DOUBLE) AS REAL)
+                AS DOUBLE)                         AS f0,
+           CAST(CAST(600 AS REAL) AS DOUBLE)       AS f1,
+           CAST(CAST(dur AS REAL) AS DOUBLE)       AS f2,
+           CAST(CAST(1 + has_audio AS REAL) AS DOUBLE) AS f3,
+           CAST(CAST(1 AS REAL) AS DOUBLE)         AS f4,
+           CAST(CAST(has_audio AS REAL) AS DOUBLE) AS f5,
+           CAST(CAST(w AS REAL) AS DOUBLE)         AS f6,
+           CAST(CAST(h AS REAL) AS DOUBLE)         AS f7
+    FROM p
+    """,
+    doc="Driver-tier roundtrip proof for the stdlib ISO BMFF (MP4) "
+    "container parser (r10, the video sibling of "
+    "multimodal_audio_roundtrip): per user, derive deterministic "
+    "container parameters from the events table (duration units, "
+    "16.16 track dimensions, a parity-keyed audio track), ENCODE a "
+    "minimal ftyp+moov box tree in an executor (Arrow-batched "
+    "mapInPandas), route it through decode_features' magic-byte "
+    "dispatch, and emit the mp4-meta features.  The oracle recomputes "
+    "every feature DIRECTLY from the parameter derivation — never "
+    "touching a box — so a hash match proves the encoder+parser pair "
+    "is field-exact (timescale, 64-bit-safe duration, fixed-point "
+    "dimensions, handler-type track split) and fake=False pins the "
+    "routing.  Scale shape: one bounded per-user aggregate, then two "
+    "narrow Arrow passes; no collect.",
+)
+def q_multimodal_video_meta_roundtrip(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import pandas as pd
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        F.pmod(F.floor(F.col("value") * 1000).cast("long"), F.lit(600)).alias(
+            "m"
+        ),
+    )
+    params = ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("m").alias("ssum")
+    ).select(
+        "user_id",
+        (F.lit(600) * F.col("n") + F.col("ssum")).alias("dur"),
+        (F.lit(16) * (F.lit(1) + F.pmod(F.col("n"), F.lit(64)))).alias("w"),
+        (F.lit(16) * (F.lit(1) + F.pmod(F.col("ssum"), F.lit(48)))).alias(
+            "h"
+        ),
+        F.pmod(F.col("user_id"), F.lit(2)).cast("int").alias("has_audio"),
+    )
+
+    def encode(batches):
+        # self-contained (cloudpickle by value): minimal ftyp+moov tree
+        import struct as _s
+
+        def _box(t, body):
+            return _s.pack(">I", 8 + len(body)) + t + body
+
+        def _full(t, body):
+            return _box(t, b"\0\0\0\0" + body)
+
+        def _trak(handler, w, h):
+            tkhd = _full(
+                b"tkhd",
+                _s.pack(">IIIII", 0, 0, 1, 0, 0)
+                + b"\0" * 16
+                + b"\0" * 36
+                + _s.pack(">II", w << 16, h << 16),
+            )
+            hdlr = _full(
+                b"hdlr", _s.pack(">I", 0) + handler + b"\0" * 12 + b"\0"
+            )
+            return _box(b"trak", tkhd + _box(b"mdia", hdlr))
+
+        def mp4(dur, w, h, has_audio):
+            ftyp = _box(
+                b"ftyp", b"isom" + _s.pack(">I", 512) + b"isomiso2mp41"
+            )
+            mvhd = _full(
+                b"mvhd", _s.pack(">IIII", 0, 0, 600, dur) + b"\0" * 80
+            )
+            tracks = _trak(b"vide", w, h)
+            if has_audio:
+                tracks += _trak(b"soun", 0, 0)
+            return ftyp + _box(b"moov", mvhd + tracks)
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["user_id"],
+                    "payload": [
+                        mp4(int(d), int(w), int(h), int(a))
+                        for d, w, h, a in zip(
+                            pdf["dur"], pdf["w"], pdf["h"], pdf["has_audio"]
+                        )
+                    ],
+                    "media_type": "video/mp4",
+                }
+            )
+
+    media = params.mapInPandas(
+        encode, "doc_id bigint, payload binary, media_type string"
+    )
+    feats = mm.decode_features(media, fake=False, route_magic=True)
+    return feats.select(
+        "doc_id",
+        "decoder",
+        *[
+            F.col("feature")[i].cast("double").alias(f"f{i}")
+            for i in range(8)
+        ],
+    )
+
+
+@register(
+    "hard_negative_pairs",
+    oracle=_MINHASH_CLOSURE_CTE
+    + """,
+    comp AS (SELECT a AS doc_id, min(b) AS component_id FROM reach GROUP BY a),
+    rp AS (
+      SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v,
+             COALESCE(c.component_id, e.vec_id) AS rep
+      FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.doc_id),
+    qs AS (SELECT vec_id AS query_id, v AS qv, rep AS qrep
+           FROM rp WHERE vec_id < 10),
+    scored AS (
+      SELECT q.query_id, b.vec_id,
+             round(list_cosine_similarity(qv, v), 6) AS cos_sim
+      FROM rp b CROSS JOIN qs q
+      WHERE b.vec_id <> q.query_id AND b.rep <> q.qrep),
+    ranked AS (
+      SELECT *, CAST(row_number() OVER (
+        PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS INTEGER)
+        AS rank
+      FROM scored)
+    SELECT query_id, vec_id, cos_sim, rank FROM ranked WHERE rank <= 5
+    """,
+    doc="Hard-negative mining for contrastive training pairs "
+    "(operators/similarity.py:hard_negative_topk, r10; the DPR / "
+    "SimCSE recipe): per query document, the top-5 highest-cosine "
+    "candidates AFTER excluding the query's own near-dup cluster — "
+    "high-similarity candidates make the hardest negatives, but a "
+    "near-duplicate of the query is a FALSE negative (semantically "
+    "the positive), which untreated poisons the contrastive loss.  "
+    "Composes the engine's tiers across both modalities: documents "
+    "-> minhash LSH pairs -> pointer-jumped closure -> cluster "
+    "representative joins the EMBEDDINGS side (one corpus equi join, "
+    "AQE-splittable), queries + reps broadcast, salted two-stage "
+    "top-k cut.  Oracle = the recursive-CTE closure + "
+    "list_cosine_similarity rank replay.",
+)
+def q_hard_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.similarity import hard_negative_topk
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dd.minhash_candidate_pairs(dd.minhash_signatures(docs))
+    comp = dd.connected_components(pairs)
+    reps = (
+        docs.select("doc_id")
+        .join(comp, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("component_id"), F.col("doc_id")).alias("rep"),
+        )
+    )
+    return hard_negative_topk(
+        load_table(spark, sf_dir, "embeddings"), reps, query_ids=_QUERY_IDS
+    )
+
+
+_LOGREG_B = 64
+_LOGREG_ITERS = 2
+
+
+def _logreg_oracle() -> str:
+    """Unrolled-CTE replay of integer-exact logistic GD: one
+    (sigmoid-lookup -> error -> bucket gradient -> truncated-division
+    update) block per iteration from all-zero init, then the final
+    scoring pass over ALL documents.  Every intermediate is an integer
+    (DuckDB's truncating // replicated driver-side), so the replay is
+    bit-identical — the kmeans unrolled-iteration posture extended to
+    a gradient method."""
+    from ..operators.classifier import (
+        SIGMOID_CLAMP_MICRO,
+        SIGMOID_STEP_MICRO,
+        sigmoid_micro_table,
+    )
+
+    lst = "[" + ", ".join(str(v) for v in sigmoid_micro_table()) + "]"
+
+    def lookup(z: str) -> str:
+        zc = (
+            f"least(greatest({z}, -{SIGMOID_CLAMP_MICRO}), "
+            f"{SIGMOID_CLAMP_MICRO})"
+        )
+        return (
+            f"({lst})[CAST((({zc}) + {SIGMOID_CLAMP_MICRO}) "
+            f"// {SIGMOID_STEP_MICRO} AS INT) + 1]"
+        )
+
+    bucket = f"CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % {_LOGREG_B}"
+    parts = [
+        f"""
+    WITH tok AS (
+      SELECT doc_id, CASE WHEN doc_id % 7 = 3 THEN 1 ELSE 0 END AS y,
+             regexp_extract_all(lower(text), '[a-z]+') AS ws
+      FROM documents WHERE text IS NOT NULL),
+    x AS (
+      SELECT doc_id, {bucket} AS b, CAST(count(*) AS BIGINT) AS c
+      FROM tok, unnest(ws) AS u(w) GROUP BY 1, 2),
+    nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
+    z1 AS (SELECT doc_id, y, CAST(0 AS BIGINT) AS z FROM tok)"""
+    ]
+    for t in range(1, _LOGREG_ITERS + 1):
+        prev_w = "0" if t == 1 else f"w{t-1}.w"
+        join_w = "" if t == 1 else f" JOIN w{t-1} USING (b)"
+        prev_b = "0" if t == 1 else f"(SELECT bias FROM b{t-1})"
+        parts.append(f""",
+    e{t} AS (SELECT doc_id, y,
+                    CAST({lookup('z')} - y * 1000000 AS BIGINT) AS e
+             FROM z{t}),
+    g{t} AS (SELECT x.b, CAST(sum(e{t}.e * x.c) AS BIGINT) AS g
+             FROM e{t} JOIN x USING (doc_id) GROUP BY x.b),
+    w{t} AS (SELECT b, CAST({prev_w} - ((1 * g) // (2 * nn.n)) AS BIGINT)
+                    AS w
+             FROM g{t}{join_w} CROSS JOIN nn),
+    b{t} AS (SELECT CAST({prev_b} - ((1 * (SELECT sum(e) FROM e{t}))
+                    // (2 * nn.n)) AS BIGINT) AS bias FROM nn)""")
+        if t < _LOGREG_ITERS:
+            parts.append(f""",
+    z{t + 1} AS (
+      SELECT t.doc_id, t.y,
+             CAST((SELECT bias FROM b{t})
+                  + COALESCE(sum(x.c * w{t}.w), 0) AS BIGINT) AS z
+      FROM tok t
+      LEFT JOIN x ON x.doc_id = t.doc_id
+      LEFT JOIN w{t} ON w{t}.b = x.b
+      GROUP BY t.doc_id, t.y)""")
+    T = _LOGREG_ITERS
+    parts.append(f""",
+    score AS (
+      SELECT d.doc_id,
+             CAST((SELECT bias FROM b{T})
+                  + COALESCE(sum(x.c * w{T}.w), 0) AS BIGINT) AS z_micro
+      FROM documents d
+      LEFT JOIN x ON x.doc_id = d.doc_id
+      LEFT JOIN w{T} ON w{T}.b = x.b
+      GROUP BY d.doc_id)
+    SELECT doc_id, z_micro,
+           CAST({lookup('z_micro')} AS BIGINT) AS p_micro,
+           {lookup('z_micro')} > 500000 AS pred
+    FROM score""")
+    return "".join(parts)
+
+
+@register(
+    "logreg_quality_scores",
+    oracle=_logreg_oracle(),
+    doc="Integer-exact logistic regression, trained in-query "
+    "(operators/classifier.py:train_logreg, r10): the TRAINED "
+    "iterative tier next to the closed-form NB log-odds — hashed "
+    "bag-of-words logit in integer micro-nats, the sigmoid as a "
+    "pinned 1025-entry quantile table (no runtime libm), full-batch "
+    "gradient descent from all-zero init with truncating-integer-"
+    "division updates (DuckDB's native // semantics replicated "
+    "driver-side), so every weight of every iteration is "
+    "bit-identical across engines.  Per iteration: one zero-shuffle "
+    "error scan + ONE bucket-bounded gradient aggregate (exchange "
+    "<= n_buckets+1 rows, map-side partials); only the <= n_buckets "
+    "gradient rows reach the driver.  Scoring is the NB zero-shuffle "
+    "scan-fused contract.  The oracle unrolls both iterations as CTE "
+    "blocks — the kmeans unrolled-iteration posture extended to a "
+    "gradient method.  At 100 TB: train on a deterministic hash "
+    "sample (the ivf/pq posture).",
+)
+def q_logreg_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.classifier import logreg_scores, train_logreg
+
+    docs = load_table(spark, sf_dir, "documents")
+    w, b = train_logreg(
+        docs,
+        positive=(F.col("doc_id") % 7 == 3),
+        n_buckets=_LOGREG_B,
+        iters=_LOGREG_ITERS,
+        lr_num=1,
+        lr_den=2,
+    )
+    return logreg_scores(docs, w, b, n_buckets=_LOGREG_B)
+
+
+@register(
+    "dedup_quality_report",
+    oracle=_MINHASH_CTE
+    + _LSH_PAIRS_CTE
+    + f""",
+    sets AS (
+      SELECT doc_id,
+             list_transform(sh,
+               s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)) AS hs
+      FROM grams),
+    ver AS (
+      SELECT p.doc_a, p.doc_b,
+             len(list_intersect(a.hs, b.hs)) AS inter,
+             len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)) AS un
+      FROM prs p
+      JOIN sets a ON a.doc_id = p.doc_a
+      JOIN sets b ON b.doc_id = p.doc_b),
+    verj AS (
+      SELECT CASE WHEN un > 0
+                  THEN round(inter / CAST(un AS DOUBLE), 6)
+                  ELSE 0.0 END AS j
+      FROM ver),
+    vagg AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_candidates,
+             CAST(sum(CASE WHEN j >= 0.1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_weak,
+             CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_strong
+      FROM verj),
+    tsets AS (SELECT doc_id, lang AS blk, list_sort(sh) AS sh
+              FROM grams WHERE len(sh) > 0),
+    truth AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM tsets a JOIN tsets b ON a.blk = b.blk AND a.doc_id < b.doc_id
+      WHERE round(len(list_intersect(a.sh, b.sh)) /
+                  CAST(len(list_distinct(a.sh || b.sh)) AS DOUBLE), 6)
+            >= 0.5),
+    tagg AS (SELECT CAST(count(*) AS BIGINT) AS n_truth_strong FROM truth),
+    hagg AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_hit_strong
+      FROM truth t JOIN prs p
+        ON t.doc_a = p.doc_a AND t.doc_b = p.doc_b)
+    SELECT n_candidates, n_weak, n_strong,
+           CASE WHEN n_candidates > 0
+                THEN round(n_weak / CAST(n_candidates AS DOUBLE), 6) END
+             AS precision_weak,
+           CASE WHEN n_candidates > 0
+                THEN round(n_strong / CAST(n_candidates AS DOUBLE), 6) END
+             AS precision_strong,
+           n_truth_strong, n_hit_strong,
+           CASE WHEN n_truth_strong > 0
+                THEN round(n_hit_strong / CAST(n_truth_strong AS DOUBLE), 6)
+             END AS recall_strong
+    FROM vagg CROSS JOIN tagg CROSS JOIN hagg
+    """,
+    doc="Dedup-policy evaluation report "
+    "(operators/dedup.py:dedup_quality_report, r10): measures the LSH "
+    "banding against exact Jaccard on BOTH sides of the S-curve — "
+    "candidate precision (every LSH pair re-verified with the exact "
+    "shingle-set Jaccard, bucketed at J>=0.1 worth-verifying and "
+    "J>=0.5 design-target) and strong-pair recall (the exact blocked "
+    "J>=0.5 set as truth; (1/4)^(1/4)~0.707 banding makes strong "
+    "pairs near-certain candidates, so a recall drop flags a "
+    "banding/tokenization regression).  This is the report a pipeline "
+    "consults before trusting a dedup threshold, the operator-level "
+    "analogue of nb_threshold_sweep.  Candidates stay O(true dups); "
+    "verification ships shingle arrays once per candidate; aggregates "
+    "are single-row (the whitelisted 1-row crossJoin shape).",
+)
+def q_dedup_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dd.dedup_quality_report(load_table(spark, sf_dir, "documents"))
+
+
+# ---------------------------------------------------------------------------
+# IVFADC search (r11): coarse routing composed with residual PQ
+# ---------------------------------------------------------------------------
+
 def _ivfadc_oracle(k: int = 5, cand_filter: str = "") -> str:
     """Full relational replay of ivfadc_search: coarse assignment
     (argmin over the pinned centroids) -> residual -> residual-PQ
@@ -5943,92 +5933,9 @@ def _ivfadc_oracle(k: int = 5, cand_filter: str = "") -> str:
     recall-claimed.  ``cand_filter`` (r13, filtered search): extra SQL
     ANDed onto the candidate side of the ADC join — the pre-filter
     semantics replay (candidates restricted, queries unrestricted)."""
-    m, sub = _PQ_M, 64 // _PQ_M
-    cents = "[" + ", ".join(
-        "[" + ", ".join(str(v) for v in c) + "]" for c in _IVFADC_CENTS
-    ) + "]"
-    n_cells = len(_IVFADC_CENTS)
-    cb = [
-        "[" + ", ".join(
-            "[" + ", ".join(str(v) for v in c) + "]"
-            for c in _IVFADC_CODEBOOKS[s]
-        ) + "]"
-        for s in range(m)
-    ]
-    d_cols = ", ".join(
-        f"""list_transform({cb[s]}, c -> list_sum(list_transform(
-            range(1, {sub + 1}), j -> (r[{s * sub}+j]-c[j])*(r[{s * sub}+j]-c[j])))) AS d{s}"""
-        for s in range(m)
+    return _IVFADC_CHAIN_CTE + _ivfadc_probe_cte(
+        f"vec_id < {len(_QUERY_IDS)}", k, cand_filter=cand_filter
     )
-    recon = " || ".join(
-        f"{cb[s]}[list_indexof(d{s}, list_min(d{s}))]" for s in range(m)
-    )
-    return f"""
-    WITH qv AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings),
-    asg AS (
-      SELECT vec_id, q,
-             list_transform({cents}, c -> list_sum(list_transform(
-               range(1, 65), i -> (q[i]-c[i])*(q[i]-c[i])))) AS dc
-      FROM qv),
-    cl AS (
-      SELECT vec_id, q, dc,
-             CAST(list_indexof(dc, list_min(dc)) AS INT) AS cell
-      FROM asg),
-    res AS (
-      SELECT vec_id, cell,
-             list_transform(range(1, 65),
-               i -> q[i] - list_extract(list_extract({cents}, cell), i)) AS r
-      FROM cl),
-    d AS (SELECT vec_id, cell, r, {d_cols} FROM res),
-    dec AS (SELECT vec_id, cell, ({recon}) AS rr FROM d),
-    qs AS (SELECT vec_id AS query_id, q AS qq, dc FROM cl
-           WHERE vec_id < 10),
-    pr AS (
-      SELECT query_id, j FROM (
-        SELECT query_id, j,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY dc[CAST(j AS INT)], j) AS rn
-        FROM qs, range(1, {n_cells + 1}) t(j)) z
-      WHERE rn <= {_IVFADC_NPROBE}),
-    qres AS (
-      SELECT p.query_id, CAST(p.j AS INT) AS cell,
-             list_transform(range(1, 65),
-               i -> s.qq[i]
-                    - list_extract(list_extract({cents}, CAST(p.j AS INT)), i)
-             ) AS qr,
-             s.qq
-      FROM pr p JOIN qs s ON s.query_id = p.query_id),
-    adc AS (
-      SELECT s.query_id, b.vec_id,
-             list_sum(list_transform(range(1, 65),
-               i -> (s.qr[i]-b.rr[i])*(s.qr[i]-b.rr[i]))) AS adc_d
-      FROM dec b JOIN qres s ON s.cell = b.cell
-      WHERE b.vec_id <> s.query_id{cand_filter}),
-    sl AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc_d, vec_id) AS rn
-        FROM adc) t WHERE rn <= {_PQ_SHORTLIST}),
-    ex AS (
-      SELECT sl.query_id, sl.vec_id,
-             CAST(list_sum(list_transform(range(1, 65),
-               i -> (s.qq[i]-v.q[i])*(s.qq[i]-v.q[i]))) AS BIGINT) AS sqdist
-      FROM sl
-      JOIN qv v ON v.vec_id = sl.vec_id
-      JOIN (SELECT DISTINCT query_id, qq FROM qres) s
-        ON s.query_id = sl.query_id),
-    rr AS (
-      SELECT query_id, vec_id, sqdist,
-             CAST(row_number() OVER (PARTITION BY query_id
-                                     ORDER BY sqdist, vec_id) AS INT) AS rank
-      FROM ex)
-    SELECT query_id, vec_id, sqdist, rank FROM rr WHERE rank <= {k}
-    """
 
 
 @register(
@@ -6072,14 +5979,10 @@ def _staged_ivfadc_index_dir(spark: SparkSession, sf_dir: str) -> str:
     coarse cell, keyed by (sf_dir, content fingerprint) exactly like
     the streaming staging dirs, so every probe query against the same
     testdata reuses the layout instead of re-encoding."""
-    import os
-    import tempfile
-
     # runtime import: streaming_queries imports _IVFADC_* from THIS
     # module at load time, so the reverse import must not be top-level
-    from .streaming_queries import _evict_stale, _fingerprint
+    from .streaming_queries import _fingerprint, _stage_once
 
-    tag = sf_dir.strip("/").replace("/", "_")
     emb = load_table(spark, sf_dir, "embeddings")
     # fingerprint the VECTOR VALUES, not just id + dim (ADVICE r12,
     # medium): same-shape regenerated testdata (sequential ids, fixed
@@ -6089,14 +5992,14 @@ def _staged_ivfadc_index_dir(spark: SparkSession, sf_dir: str) -> str:
     fp = _fingerprint(
         emb, "vec_id", F.xxhash64(F.lit(1), F.col("embedding"))
     )
-    out = os.path.join(tempfile.gettempdir(), f"ivfadc_idx_{tag}_{fp}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        _evict_stale(f"ivfadc_idx_{tag}_", os.path.basename(out))
-        sim.write_ivfadc_index(
+    return _stage_once(
+        "ivfadc_idx",
+        sf_dir,
+        fp,
+        lambda out: sim.write_ivfadc_index(
             sim.ivfadc_encode(emb, _IVFADC_CENTS, _IVFADC_CODEBOOKS), out
-        )
-    return out
+        ),
+    )
 
 
 @register(
@@ -6388,32 +6291,18 @@ _SSP_KEEP_PCT = 70
 
 
 def _ssp_oracle() -> str:
-    cents = "[" + ", ".join(
-        "[" + ", ".join(str(v) for v in c) + "]" for c in _IVFADC_CENTS
-    ) + "]"
-    return f"""
-    WITH qv AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings),
-    asg AS (
-      SELECT vec_id,
-             list_transform({cents}, c -> list_sum(list_transform(
-               range(1, 65), i -> (q[i]-c[i])*(q[i]-c[i])))) AS dc
-      FROM qv),
-    cl AS (
-      SELECT vec_id,
-             CAST(list_indexof(dc, list_min(dc)) - 1 AS INT) AS cluster,
+    return _IVF_ASSIGN_CTE + f""",
+    c AS (
+      SELECT vec_id, CAST(cell - 1 AS INT) AS cluster,
              CAST(list_min(dc) AS BIGINT) AS sqdist
-      FROM asg),
+      FROM cl),
     r AS (
       SELECT vec_id, cluster, sqdist,
              CAST(row_number() OVER (PARTITION BY cluster
                     ORDER BY sqdist DESC, vec_id) AS BIGINT) AS ssp_rank,
              CAST(count(*) OVER (PARTITION BY cluster) AS BIGINT)
                AS n_cluster
-      FROM cl)
+      FROM c)
     SELECT vec_id, cluster, sqdist, ssp_rank, n_cluster,
            ssp_rank <= ((n_cluster * {_SSP_KEEP_PCT} + 99) // 100) AS keep
     FROM r
@@ -6744,52 +6633,7 @@ def q_nb_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfadc_distortion_oracle() -> str:
-    m, sub = _PQ_M, 64 // _PQ_M
-    cents = "[" + ", ".join(
-        "[" + ", ".join(str(v) for v in c) + "]" for c in _IVFADC_CENTS
-    ) + "]"
-    cb = [
-        "[" + ", ".join(
-            "[" + ", ".join(str(v) for v in c) + "]"
-            for c in _IVFADC_CODEBOOKS[s]
-        ) + "]"
-        for s in range(m)
-    ]
-    d_cols = ", ".join(
-        f"""list_transform({cb[s]}, c -> list_sum(list_transform(
-            range(1, {sub + 1}), j -> (r[{s * sub}+j]-c[j])*(r[{s * sub}+j]-c[j])))) AS d{s}"""
-        for s in range(m)
-    )
-    recon = " || ".join(
-        f"{cb[s]}[list_indexof(d{s}, list_min(d{s}))]" for s in range(m)
-    )
-    return f"""
-    WITH qv AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings),
-    asg AS (
-      SELECT vec_id, q,
-             list_transform({cents}, c -> list_sum(list_transform(
-               range(1, 65), i -> (q[i]-c[i])*(q[i]-c[i])))) AS dc
-      FROM qv),
-    cl AS (
-      SELECT vec_id, q,
-             CAST(list_indexof(dc, list_min(dc)) AS INT) AS cell
-      FROM asg),
-    res AS (
-      SELECT vec_id, cell,
-             list_transform(range(1, 65),
-               i -> q[i] - list_extract(list_extract({cents}, cell), i)) AS r
-      FROM cl),
-    d AS (SELECT vec_id, cell, r, {d_cols} FROM res),
-    dec AS (SELECT vec_id, cell, r, ({recon}) AS rr FROM d),
-    e AS (
-      SELECT cell,
-             list_sum(list_transform(range(1, 65),
-               i -> (r[i]-rr[i])*(r[i]-rr[i]))) AS err
-      FROM dec)
+    return _IVFADC_CHAIN_CTE + _IVFADC_ERR_CTE + """
     SELECT CAST(cell - 1 AS INTEGER) AS cluster,  -- 0-based like the plan
            CAST(count(*) AS BIGINT) AS n_vectors,
            CAST(sum(err) // count(*) AS BIGINT) AS mean_err,
@@ -6842,12 +6686,8 @@ def _staged_ivfadc_meta_index_dir(spark: SparkSession, sf_dir: str) -> str:
     query-time corpus join — the vector-DB pre-filter layout.
     Fingerprint folds the vector values AND the lang values so any
     regeneration of either table is a cache miss."""
-    import os
-    import tempfile
+    from .streaming_queries import _fingerprint, _stage_once
 
-    from .streaming_queries import _evict_stale, _fingerprint
-
-    tag = sf_dir.strip("/").replace("/", "_")
     emb = load_table(spark, sf_dir, "embeddings")
     meta = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang"
@@ -6859,23 +6699,28 @@ def _staged_ivfadc_meta_index_dir(spark: SparkSession, sf_dir: str) -> str:
         F.xxhash64(F.lit(1), F.col("embedding")),
         F.xxhash64(F.lit(2), F.col("lang")),
     )
-    out = os.path.join(tempfile.gettempdir(), f"ivfadc_meta_idx_{tag}_{fp}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        _evict_stale(f"ivfadc_meta_idx_{tag}_", os.path.basename(out))
-        coded = sim.ivfadc_encode(emb, _IVFADC_CENTS, _IVFADC_CODEBOOKS)
-        sim.write_ivfadc_index(coded.join(meta, "vec_id"), out)
-    return out
+    return _stage_once(
+        "ivfadc_meta_idx",
+        sf_dir,
+        fp,
+        lambda out: sim.write_ivfadc_index(
+            sim.ivfadc_encode(emb, _IVFADC_CENTS, _IVFADC_CODEBOOKS).join(
+                meta, "vec_id"
+            ),
+            out,
+        ),
+    )
+
+
+#: The probe's pre-filter replayed: candidates are the lang='en' docs.
+_EN_CANDIDATES = (
+    " AND b.vec_id IN (SELECT doc_id FROM documents WHERE lang = 'en')"
+)
 
 
 @register(
     "ann_filtered_search",
-    oracle=_ivfadc_oracle(
-        cand_filter=(
-            " AND b.vec_id IN (SELECT doc_id FROM documents "
-            "WHERE lang = 'en')"
-        )
-    ),
+    oracle=_ivfadc_oracle(cand_filter=_EN_CANDIDATES),
     headline=True,  # the filtered-probe cost belongs on the record
     # next to the unfiltered pruned probe it specializes
     doc="Metadata-filtered ANN over the stored index (r13) — the "
@@ -6918,51 +6763,10 @@ def _ivfadc_nprobe_sweep_oracle(
     composition with the probe stage crossed against the tier list,
     plus the exact brute-force top-k baseline and the per-tier hit
     aggregate — recall is REPLAYED, not trusted."""
-    m, sub = _PQ_M, 64 // _PQ_M
-    cents = "[" + ", ".join(
-        "[" + ", ".join(str(v) for v in c) + "]" for c in _IVFADC_CENTS
-    ) + "]"
-    n_cells = len(_IVFADC_CENTS)
-    cb = [
-        "[" + ", ".join(
-            "[" + ", ".join(str(v) for v in c) + "]"
-            for c in _IVFADC_CODEBOOKS[s]
-        ) + "]"
-        for s in range(m)
-    ]
-    d_cols = ", ".join(
-        f"""list_transform({cb[s]}, c -> list_sum(list_transform(
-            range(1, {sub + 1}), j -> (r[{s * sub}+j]-c[j])*(r[{s * sub}+j]-c[j])))) AS d{s}"""
-        for s in range(m)
-    )
-    recon = " || ".join(
-        f"{cb[s]}[list_indexof(d{s}, list_min(d{s}))]" for s in range(m)
-    )
     tiers = ", ".join(f"({int(n)})" for n in sorted(set(nprobes)))
     n_q = len(_QUERY_IDS)
     possible = n_q * k
-    return f"""
-    WITH qv AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings),
-    asg AS (
-      SELECT vec_id, q,
-             list_transform({cents}, c -> list_sum(list_transform(
-               range(1, 65), i -> (q[i]-c[i])*(q[i]-c[i])))) AS dc
-      FROM qv),
-    cl AS (
-      SELECT vec_id, q, dc,
-             CAST(list_indexof(dc, list_min(dc)) AS INT) AS cell
-      FROM asg),
-    res AS (
-      SELECT vec_id, cell,
-             list_transform(range(1, 65),
-               i -> q[i] - list_extract(list_extract({cents}, cell), i)) AS r
-      FROM cl),
-    d AS (SELECT vec_id, cell, r, {d_cols} FROM res),
-    dec AS (SELECT vec_id, cell, ({recon}) AS rr FROM d),
+    return _IVFADC_CHAIN_CTE + f""",
     qs AS (SELECT vec_id AS query_id, q AS qq, dc FROM cl
            WHERE vec_id < {n_q}),
     tiers(np) AS (VALUES {tiers}),
@@ -6971,15 +6775,14 @@ def _ivfadc_nprobe_sweep_oracle(
         SELECT query_id, t.np, j,
                row_number() OVER (PARTITION BY query_id, t.np
                                   ORDER BY dc[CAST(j AS INT)], j) AS rn
-        FROM qs, range(1, {n_cells + 1}) r(j), tiers t) z
+        FROM qs, range(1, {len(_IVFADC_CENTS) + 1}) r(j), tiers t) z
       WHERE rn <= np),
     qres AS (
       SELECT p.query_id, p.np, CAST(p.j AS INT) AS cell,
              list_transform(range(1, 65),
                i -> s.qq[i]
-                    - list_extract(list_extract({cents}, CAST(p.j AS INT)), i)
-             ) AS qr,
-             s.qq
+                    - list_extract(list_extract({_CENTS_SQL}, CAST(p.j AS INT)), i)
+             ) AS qr
       FROM pr p JOIN qs s ON s.query_id = p.query_id),
     adc AS (
       SELECT s.query_id, s.np, b.vec_id,
@@ -6999,8 +6802,7 @@ def _ivfadc_nprobe_sweep_oracle(
                i -> (s.qq[i]-v.q[i])*(s.qq[i]-v.q[i]))) AS BIGINT) AS sqdist
       FROM sl
       JOIN qv v ON v.vec_id = sl.vec_id
-      JOIN (SELECT DISTINCT query_id, qq FROM qres) s
-        ON s.query_id = sl.query_id),
+      JOIN qs s ON s.query_id = sl.query_id),
     top AS (
       SELECT query_id, np, vec_id FROM (
         SELECT query_id, np, vec_id,

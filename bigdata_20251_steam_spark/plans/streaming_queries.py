@@ -35,6 +35,18 @@ from ..functions.timeutil import epoch_seconds
 from ..operators.core import sentiment_windows
 from ..sources.batch import load_table
 from ..streaming.engine import file_stream, run_available_now
+from .extension_queries import (
+    _EN_CANDIDATES,
+    _IVFADC_CENTS,
+    _IVFADC_CHAIN_CTE,
+    _IVFADC_CODEBOOKS,
+    _IVFADC_ERR_CTE,
+    _IVFADC_NPROBE,
+    _PQ_SHORTLIST,
+    _QUERY_IDS,
+    _ivfadc_oracle,
+    _ivfadc_probe_cte,
+)
 from .registry import QUERIES, register
 
 EVENTS_STREAM_SCHEMA = StructType(
@@ -66,60 +78,48 @@ def _fingerprint(df, *agg_cols) -> str:
     return "_".join(str(v) for v in row)
 
 
-def _evict_stale(tag_prefix: str, keep: str) -> None:
-    """Delete superseded staged copies for the same (kind, sf_dir) tag.
-
-    Without this, every regeneration of testdata leaves a dead
-    ``events_stream_*``/``docs_stream_*`` dir in tempdir forever
-    (ADVICE r5).  Only dirs sharing the exact tag prefix are touched;
-    the surviving copy is the one whose fingerprint we are about to
-    (re)use."""
-    import shutil
-
-    base = tempfile.gettempdir()
-    for name in os.listdir(base):
-        if name.startswith(tag_prefix) and name != keep:
-            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-
-
-def _silver_dir(kind: str, sf_dir: str, key: str) -> str:
-    """The staged SILVER directory of one streaming query's result for
-    one SF and content key: ``{tempdir}/{kind}_silver/{sf tag}/{key}``.
+def _staged_dir(kind: str, sf_dir: str, key: str) -> str:
+    """The staged directory of one kind for one SF and content key:
+    ``{tempdir}/{kind}/{sf tag}/{key}``.
 
     Older keys of the same kind and SF tag are evicted, so each testdata
     generation leaves one directory.  Another SF's copies are kept:
     another process, or a frame returned earlier in this one, may still
     be reading them.  The SF tag is a directory level of its own, so no
     tag matches another as a name prefix (``sf0.1`` and ``sf0.1_x10``).
-    Copies left in the older flat layout, ``{kind}_silver_{tag}_{key}``,
-    match no key of this one and are evicted too."""
+    Copies left in the older flat layout, ``{kind}_{tag}_{key}``, match
+    no key of this one and are evicted too."""
     import shutil
 
-    _evict_stale(f"{kind}_silver_", "")
-    parent = os.path.join(
-        tempfile.gettempdir(),
-        f"{kind}_silver",
-        sf_dir.strip("/").replace("/", "_"),
-    )
+    base = tempfile.gettempdir()
+    parent = os.path.join(base, kind, sf_dir.strip("/").replace("/", "_"))
+    stale = [os.path.join(base, n) for n in os.listdir(base)
+             if n.startswith(f"{kind}_")]
     if os.path.isdir(parent):
-        for name in os.listdir(parent):
-            if name != key:
-                shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+        stale += [os.path.join(parent, n) for n in os.listdir(parent)
+                  if n != key]
+    for path in stale:
+        shutil.rmtree(path, ignore_errors=True)
     return os.path.join(parent, key)
+
+
+def _stage_once(kind: str, sf_dir: str, key: str, write) -> str:
+    """:func:`_staged_dir`, filled by ``write(path)`` unless a finished
+    copy (its ``_SUCCESS`` marker) is already there."""
+    out = _staged_dir(kind, sf_dir, key)
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        write(out)
+    return out
 
 
 def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write a normalized (micros-timestamp) copy of events once per
     (sf_dir, content fingerprint)."""
-    tag = sf_dir.strip("/").replace("/", "_")
     src = load_table(spark, sf_dir, "events")
     fp = _fingerprint(src, "event_id", F.col("ts").cast("timestamp"))
-    out = os.path.join(tempfile.gettempdir(), f"events_stream_{tag}_{fp}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        _evict_stale(f"events_stream_{tag}_", os.path.basename(out))
-        src.write.mode("overwrite").parquet(out)
-    return out
+    return _stage_once(
+        "events_stream", sf_dir, fp, src.write.mode("overwrite").parquet
+    )
 
 
 DOCS_STREAM_SCHEMA = StructType(
@@ -135,17 +135,13 @@ DOCS_STREAM_SCHEMA = StructType(
 def _staged_docs_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the documents table (projected to the stream schema) once
     per (sf_dir, content fingerprint)."""
-    tag = sf_dir.strip("/").replace("/", "_")
     src = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"
     )
     fp = _fingerprint(src, "doc_id", F.length("text"))
-    out = os.path.join(tempfile.gettempdir(), f"docs_stream_{tag}_{fp}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        _evict_stale(f"docs_stream_{tag}_", os.path.basename(out))
-        src.write.mode("overwrite").parquet(out)
-    return out
+    return _stage_once(
+        "docs_stream", sf_dir, fp, src.write.mode("overwrite").parquet
+    )
 
 
 @register(
@@ -1235,7 +1231,6 @@ _PQ_PROBE_TAU = 900_000
 def _staged_embeddings_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the embeddings table (vec ids + double vectors) once per
     (sf_dir, content fingerprint)."""
-    tag = sf_dir.strip("/").replace("/", "_")
     src = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1248,79 +1243,35 @@ def _staged_embeddings_dir(spark: SparkSession, sf_dir: str) -> str:
     fp = _fingerprint(
         src, "vec_id", F.xxhash64(F.lit(1), F.col("embedding"))
     )
-    out = os.path.join(tempfile.gettempdir(), f"emb_stream_{tag}_{fp}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        _evict_stale(f"emb_stream_{tag}_", os.path.basename(out))
-        src.write.mode("overwrite").parquet(out)
-    return out
-
-
-def _streaming_pq_probe_oracle() -> str:
-    from .extension_queries import _IVFADC_CENTS, _IVFADC_CODEBOOKS
-
-    m, sub = len(_IVFADC_CODEBOOKS), 64 // len(_IVFADC_CODEBOOKS)
-    cents = "[" + ", ".join(
-        "[" + ", ".join(str(v) for v in c) + "]" for c in _IVFADC_CENTS
-    ) + "]"
-    cb = [
-        "[" + ", ".join(
-            "[" + ", ".join(str(v) for v in c) + "]"
-            for c in _IVFADC_CODEBOOKS[s]
-        ) + "]"
-        for s in range(m)
-    ]
-    d_cols = ", ".join(
-        f"""list_transform({cb[s]}, c -> list_sum(list_transform(
-            range(1, {sub + 1}), j -> (r[{s * sub}+j]-c[j])*(r[{s * sub}+j]-c[j])))) AS d{s}"""
-        for s in range(m)
+    return _stage_once(
+        "emb_stream", sf_dir, fp, src.write.mode("overwrite").parquet
     )
-    recon = " || ".join(
-        f"{cb[s]}[list_indexof(d{s}, list_min(d{s}))]" for s in range(m)
-    )
-    return f"""
-    WITH qv AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings),
-    asg AS (
-      SELECT vec_id, q,
-             list_transform({cents}, c -> list_sum(list_transform(
-               range(1, 65), i -> (q[i]-c[i])*(q[i]-c[i])))) AS dc
-      FROM qv),
-    cl AS (
-      SELECT vec_id, q,
-             CAST(list_indexof(dc, list_min(dc)) AS INT) AS cell
-      FROM asg),
-    res AS (
-      SELECT vec_id, cell,
-             list_transform(range(1, 65),
-               i -> q[i] - list_extract(list_extract({cents}, cell), i)) AS r
-      FROM cl),
-    d AS (SELECT vec_id, cell, r, {d_cols} FROM res),
-    dec AS (SELECT vec_id, cell, ({recon}) AS rr FROM d),
+
+
+#: The stream's flag gate replayed over the batch encode (alias ``a``
+#: of ``cl``): another vector of the same cell decodes within
+#: _PQ_PROBE_TAU of the vector's residual.
+_PQ_FLAG_SQL = f"""EXISTS (
+        SELECT 1 FROM dec b, res ar
+        WHERE ar.vec_id = a.vec_id AND b.cell = a.cell
+          AND b.vec_id <> a.vec_id
+          AND list_sum(list_transform(range(1, 65),
+                i -> (ar.r[i]-b.rr[i])*(ar.r[i]-b.rr[i])))
+              <= {_PQ_PROBE_TAU})"""
+
+
+@register(
+    "streaming_pq_probe",
+    oracle=_IVFADC_CHAIN_CTE
+    + f""",
     flags AS (
-      SELECT a.vec_id, a.cell,
-             CASE WHEN EXISTS (
-               SELECT 1 FROM dec b, res ar
-               WHERE ar.vec_id = a.vec_id AND b.cell = a.cell
-                 AND b.vec_id <> a.vec_id
-                 AND list_sum(list_transform(range(1, 65),
-                       i -> (ar.r[i]-b.rr[i])*(ar.r[i]-b.rr[i])))
-                     <= {_PQ_PROBE_TAU}
-             ) THEN 1 ELSE 0 END AS flagged
+      SELECT a.cell, CASE WHEN {_PQ_FLAG_SQL} THEN 1 ELSE 0 END AS flagged
       FROM cl a)
     SELECT CAST(cell - 1 AS INTEGER) AS cell,  -- 0-based like the plan
            CAST(count(*) AS BIGINT)     AS n_probed,
            CAST(sum(flagged) AS BIGINT) AS n_flagged
     FROM flags GROUP BY cell
-    """
-
-
-@register(
-    "streaming_pq_probe",
-    oracle=_streaming_pq_probe_oracle(),
+    """,
     doc="The ANN tier running IN the stream (r11, verdict #6): the "
     "live-ingest 'is this a near-duplicate of the corpus?' gate at "
     "the embedding tier, complementing the exact-hash "
@@ -1343,7 +1294,6 @@ def _streaming_pq_probe_oracle() -> str:
 )
 def q_streaming_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as sim
-    from .extension_queries import _IVFADC_CENTS, _IVFADC_CODEBOOKS
 
     src_dir = _staged_embeddings_dir(spark, sf_dir)
     stream = file_stream(spark, src_dir, EMB_STREAM_SCHEMA)
@@ -1390,110 +1340,14 @@ _ADJ_K = 3
 _ADJ_SHORTLIST = 10
 
 
-def _streaming_pq_adjudicate_oracle() -> str:
-    from .extension_queries import _IVFADC_CENTS, _IVFADC_CODEBOOKS, _IVFADC_NPROBE
-
-    m, sub = len(_IVFADC_CODEBOOKS), 64 // len(_IVFADC_CODEBOOKS)
-    cents = "[" + ", ".join(
-        "[" + ", ".join(str(v) for v in c) + "]" for c in _IVFADC_CENTS
-    ) + "]"
-    n_cells = len(_IVFADC_CENTS)
-    cb = [
-        "[" + ", ".join(
-            "[" + ", ".join(str(v) for v in c) + "]"
-            for c in _IVFADC_CODEBOOKS[s]
-        ) + "]"
-        for s in range(m)
-    ]
-    d_cols = ", ".join(
-        f"""list_transform({cb[s]}, c -> list_sum(list_transform(
-            range(1, {sub + 1}), j -> (r[{s * sub}+j]-c[j])*(r[{s * sub}+j]-c[j])))) AS d{s}"""
-        for s in range(m)
-    )
-    recon = " || ".join(
-        f"{cb[s]}[list_indexof(d{s}, list_min(d{s}))]" for s in range(m)
-    )
-    return f"""
-    WITH qv AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings),
-    asg AS (
-      SELECT vec_id, q,
-             list_transform({cents}, c -> list_sum(list_transform(
-               range(1, 65), i -> (q[i]-c[i])*(q[i]-c[i])))) AS dc
-      FROM qv),
-    cl AS (
-      SELECT vec_id, q, dc,
-             CAST(list_indexof(dc, list_min(dc)) AS INT) AS cell
-      FROM asg),
-    res AS (
-      SELECT vec_id, cell,
-             list_transform(range(1, 65),
-               i -> q[i] - list_extract(list_extract({cents}, cell), i)) AS r
-      FROM cl),
-    d AS (SELECT vec_id, cell, r, {d_cols} FROM res),
-    dec AS (SELECT vec_id, cell, ({recon}) AS rr FROM d),
-    flagged AS (
-      SELECT a.vec_id FROM cl a
-      WHERE EXISTS (
-        SELECT 1 FROM dec b, res ar
-        WHERE ar.vec_id = a.vec_id AND b.cell = a.cell
-          AND b.vec_id <> a.vec_id
-          AND list_sum(list_transform(range(1, 65),
-                i -> (ar.r[i]-b.rr[i])*(ar.r[i]-b.rr[i])))
-              <= {_PQ_PROBE_TAU})),
-    qs AS (
-      SELECT c.vec_id AS query_id, c.q AS qq, c.dc
-      FROM cl c JOIN flagged f ON f.vec_id = c.vec_id),
-    pr AS (
-      SELECT query_id, j FROM (
-        SELECT query_id, j,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY dc[CAST(j AS INT)], j) AS rn
-        FROM qs, range(1, {n_cells + 1}) t(j)) z
-      WHERE rn <= {_IVFADC_NPROBE}),
-    qres AS (
-      SELECT p.query_id, CAST(p.j AS INT) AS cell,
-             list_transform(range(1, 65),
-               i -> s.qq[i]
-                    - list_extract(list_extract({cents}, CAST(p.j AS INT)), i)
-             ) AS qr,
-             s.qq
-      FROM pr p JOIN qs s ON s.query_id = p.query_id),
-    adc AS (
-      SELECT s.query_id, b.vec_id,
-             list_sum(list_transform(range(1, 65),
-               i -> (s.qr[i]-b.rr[i])*(s.qr[i]-b.rr[i]))) AS adc_d
-      FROM dec b JOIN qres s ON s.cell = b.cell
-      WHERE b.vec_id <> s.query_id),
-    sl AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc_d, vec_id) AS rn
-        FROM adc) t WHERE rn <= {_ADJ_SHORTLIST}),
-    ex AS (
-      SELECT sl.query_id, sl.vec_id,
-             CAST(list_sum(list_transform(range(1, 65),
-               i -> (s.qq[i]-v.q[i])*(s.qq[i]-v.q[i]))) AS BIGINT) AS sqdist
-      FROM sl
-      JOIN qv v ON v.vec_id = sl.vec_id
-      JOIN (SELECT DISTINCT query_id, qq FROM qres) s
-        ON s.query_id = sl.query_id),
-    rr AS (
-      SELECT query_id, vec_id, sqdist,
-             CAST(row_number() OVER (PARTITION BY query_id
-                                     ORDER BY sqdist, vec_id) AS INT) AS rank
-      FROM ex)
-    SELECT query_id, vec_id, sqdist, rank FROM rr WHERE rank <= {_ADJ_K}
-    """
-
-
 @register(
     "streaming_pq_adjudicate",
-    oracle=_streaming_pq_adjudicate_oracle(),
+    oracle=_IVFADC_CHAIN_CTE
+    + f""",
+    flagged AS (SELECT a.vec_id FROM cl a WHERE {_PQ_FLAG_SQL})"""
+    + _ivfadc_probe_cte(
+        "vec_id IN (SELECT vec_id FROM flagged)", _ADJ_K, _ADJ_SHORTLIST
+    ),
     doc="Streaming ANN flag -> batch IVFADC adjudication (r12, r11 "
     "verdict #7 — the composition streaming_pq_probe's docstring "
     "promised but no query executed): the same stateless micro-batch "
@@ -1517,7 +1371,6 @@ def _streaming_pq_adjudicate_oracle() -> str:
 def q_streaming_pq_adjudicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as sim
     from ..streaming.engine import idempotent_epoch_append
-    from .extension_queries import _IVFADC_CENTS, _IVFADC_CODEBOOKS, _IVFADC_NPROBE
 
     src_dir = _staged_embeddings_dir(spark, sf_dir)
     stream = file_stream(spark, src_dir, EMB_STREAM_SCHEMA)
@@ -1575,7 +1428,9 @@ def q_streaming_pq_adjudicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reusing ONE directory per testdata generation (no tempdir leak;
     # stale fingerprints evicted) — and only the per-run bronze +
     # checkpoint workdir is deleted eagerly.
-    silver = _silver_dir("pq_adjudicate", sf_dir, os.path.basename(src_dir))
+    silver = _staged_dir(
+        "pq_adjudicate_silver", sf_dir, os.path.basename(src_dir)
+    )
     out.write.mode("overwrite").parquet(silver)
     import shutil
 
@@ -1583,15 +1438,9 @@ def q_streaming_pq_adjudicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(silver)
 
 
-def _streaming_index_upsert_oracle() -> str:
-    from .extension_queries import _ivfadc_oracle
-
-    return _ivfadc_oracle()
-
-
 @register(
     "streaming_index_upsert",
-    oracle=_streaming_index_upsert_oracle(),
+    oracle=_ivfadc_oracle(),
     doc="Live IVFADC index maintenance as a STREAM (r13, r12 verdict "
     "#6): the staged embeddings replay as micro-batches "
     "(maxFilesPerTrigger=4) and operators/similarity.py:"
@@ -1609,13 +1458,6 @@ def _streaming_index_upsert_oracle() -> str:
 )
 def q_streaming_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as sim
-    from .extension_queries import (
-        _IVFADC_CENTS,
-        _IVFADC_CODEBOOKS,
-        _IVFADC_NPROBE,
-        _PQ_SHORTLIST,
-        _QUERY_IDS,
-    )
 
     src_dir = _staged_embeddings_dir(spark, sf_dir)
     stream = file_stream(
@@ -1648,8 +1490,8 @@ def q_streaming_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silver staging (the pq_adjudicate pattern): land the bounded
     # |queries| x k result once per content fingerprint, delete the
     # per-run store+checkpoint eagerly, return the parquet read
-    silver = _silver_dir(
-        "stream_idx_upsert", sf_dir, os.path.basename(src_dir)
+    silver = _staged_dir(
+        "stream_idx_upsert_silver", sf_dir, os.path.basename(src_dir)
     )
     out.write.mode("overwrite").parquet(silver)
     import shutil
@@ -1667,7 +1509,6 @@ def _staged_emb_meta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     folds the vector values AND the lang values (the
     _staged_ivfadc_meta_index_dir rule): regenerating either table is
     a cache miss."""
-    tag = sf_dir.strip("/").replace("/", "_")
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1681,12 +1522,12 @@ def _staged_emb_meta_stream_dir(spark: SparkSession, sf_dir: str) -> str:
         F.xxhash64(F.lit(1), F.col("embedding")),
         F.xxhash64(F.lit(2), F.col("lang")),
     )
-    out = os.path.join(tempfile.gettempdir(), f"emb_meta_stream_{tag}_{fp}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        _evict_stale(f"emb_meta_stream_{tag}_", os.path.basename(out))
-        src.repartition(8).write.mode("overwrite").parquet(out)
-    return out
+    return _stage_once(
+        "emb_meta_stream",
+        sf_dir,
+        fp,
+        src.repartition(8).write.mode("overwrite").parquet,
+    )
 
 
 #: Lifecycle capstone retrain policy: the TOP_N most-drifted cells
@@ -1720,38 +1561,10 @@ def _index_lifecycle_oracle() -> str:
     lang-filtered nprobe probe + shortlist + exact re-rank.  Integer
     end-to-end; floor(sum/n) is floor of IEEE double division of
     exact integers on both engines (bit-identical below 2^53)."""
-    from .extension_queries import (
-        _IVFADC_CENTS,
-        _IVFADC_CODEBOOKS,
-        _IVFADC_NPROBE,
-        _PQ_SHORTLIST,
-        _QUERY_IDS,
-    )
-
     m = len(_IVFADC_CODEBOOKS)
     sub = 64 // m
     k_sub = len(_IVFADC_CODEBOOKS[0])
     iters = 2
-    k = 5
-    n_cells = len(_IVFADC_CENTS)
-    cents = "[" + ", ".join(
-        "[" + ", ".join(str(v) for v in c) + "]" for c in _IVFADC_CENTS
-    ) + "]"
-    cb = [
-        "[" + ", ".join(
-            "[" + ", ".join(str(v) for v in c) + "]"
-            for c in _IVFADC_CODEBOOKS[s]
-        ) + "]"
-        for s in range(m)
-    ]
-    d_cols = ", ".join(
-        f"""list_transform({cb[s]}, c -> list_sum(list_transform(
-            range(1, {sub + 1}), j -> (r[{s * sub}+j]-c[j])*(r[{s * sub}+j]-c[j])))) AS d{s}"""
-        for s in range(m)
-    )
-    recon = " || ".join(
-        f"{cb[s]}[list_indexof(d{s}, list_min(d{s}))]" for s in range(m)
-    )
 
     # unrolled Lloyd iterations: b0 = seeds, b{t} = after iteration t.
     # Assignment and update are RELATIONAL over (cell, s) group keys —
@@ -1784,33 +1597,7 @@ def _index_lifecycle_oracle() -> str:
                     AND u{t}.c = p.c)"""
         prev = f"b{t}"
 
-    return f"""
-    WITH qv AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings),
-    asg AS (
-      SELECT vec_id, q,
-             list_transform({cents}, c -> list_sum(list_transform(
-               range(1, 65), i -> (q[i]-c[i])*(q[i]-c[i])))) AS dc
-      FROM qv),
-    cl AS (
-      SELECT vec_id, q, dc,
-             CAST(list_indexof(dc, list_min(dc)) AS INT) AS cell
-      FROM asg),
-    res AS (
-      SELECT vec_id, cell,
-             list_transform(range(1, 65),
-               i -> q[i] - list_extract(list_extract({cents}, cell), i)) AS r
-      FROM cl),
-    d AS (SELECT vec_id, cell, r, {d_cols} FROM res),
-    gdec AS (SELECT vec_id, cell, r, ({recon}) AS rr FROM d),
-    e AS (
-      SELECT vec_id, cell,
-             list_sum(list_transform(range(1, 65),
-               i -> (r[i]-rr[i])*(r[i]-rr[i]))) AS err
-      FROM gdec),
+    return _IVFADC_CHAIN_CTE + _IVFADC_ERR_CTE + f""",
     cs AS (SELECT cell, sum(err) // count(*) AS mean_err
            FROM e GROUP BY cell),
     ranked AS (
@@ -1847,55 +1634,11 @@ def _index_lifecycle_oracle() -> str:
     rrn AS (
       SELECT vec_id, flatten(list(w ORDER BY s)) AS rr
       FROM a_fin GROUP BY vec_id),
-    dec AS (
+    ldec AS (
       SELECT g.vec_id, g.cell, COALESCE(rn.rr, g.rr) AS rr
-      FROM gdec g LEFT JOIN rrn rn ON rn.vec_id = g.vec_id),
-    qs AS (SELECT vec_id AS query_id, q AS qq, dc FROM cl
-           WHERE vec_id < {len(_QUERY_IDS)}),
-    pr AS (
-      SELECT query_id, j FROM (
-        SELECT query_id, j,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY dc[CAST(j AS INT)], j) AS rn
-        FROM qs, range(1, {n_cells + 1}) t(j)) z
-      WHERE rn <= {_IVFADC_NPROBE}),
-    qres AS (
-      SELECT p.query_id, CAST(p.j AS INT) AS cell,
-             list_transform(range(1, 65),
-               i -> s.qq[i]
-                    - list_extract(list_extract({cents}, CAST(p.j AS INT)), i)
-             ) AS qr,
-             s.qq
-      FROM pr p JOIN qs s ON s.query_id = p.query_id),
-    adc AS (
-      SELECT s.query_id, b.vec_id,
-             list_sum(list_transform(range(1, 65),
-               i -> (s.qr[i]-b.rr[i])*(s.qr[i]-b.rr[i]))) AS adc_d
-      FROM dec b JOIN qres s ON s.cell = b.cell
-      WHERE b.vec_id <> s.query_id
-        AND b.vec_id IN (SELECT doc_id FROM documents
-                         WHERE lang = 'en')),
-    sl AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc_d, vec_id) AS rn
-        FROM adc) t WHERE rn <= {_PQ_SHORTLIST}),
-    ex AS (
-      SELECT sl.query_id, sl.vec_id,
-             CAST(list_sum(list_transform(range(1, 65),
-               i -> (s.qq[i]-v.q[i])*(s.qq[i]-v.q[i]))) AS BIGINT) AS sqdist
-      FROM sl
-      JOIN qv v ON v.vec_id = sl.vec_id
-      JOIN (SELECT DISTINCT query_id, qq FROM qres) s
-        ON s.query_id = sl.query_id),
-    rr AS (
-      SELECT query_id, vec_id, sqdist,
-             CAST(row_number() OVER (PARTITION BY query_id
-                                     ORDER BY sqdist, vec_id) AS INT) AS rank
-      FROM ex)
-    SELECT query_id, vec_id, sqdist, rank FROM rr WHERE rank <= {k}
-    """
+      FROM dec g LEFT JOIN rrn rn ON rn.vec_id = g.vec_id)""" + _ivfadc_probe_cte(
+        f"vec_id < {len(_QUERY_IDS)}", cand_filter=_EN_CANDIDATES, dec="ldec"
+    )
 
 
 @register(
@@ -1927,13 +1670,6 @@ def _index_lifecycle_oracle() -> str:
 )
 def q_index_lifecycle_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as sim
-    from .extension_queries import (
-        _IVFADC_CENTS,
-        _IVFADC_CODEBOOKS,
-        _IVFADC_NPROBE,
-        _PQ_SHORTLIST,
-        _QUERY_IDS,
-    )
 
     src_dir = _staged_emb_meta_stream_dir(spark, sf_dir)
     stream = file_stream(
@@ -1993,7 +1729,9 @@ def q_index_lifecycle_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silver staging (the pq_adjudicate pattern): land the bounded
     # |queries| x k result once per content fingerprint, delete the
     # per-run store+checkpoint eagerly, return the parquet read
-    silver = _silver_dir("idx_lifecycle", sf_dir, os.path.basename(src_dir))
+    silver = _staged_dir(
+        "idx_lifecycle_silver", sf_dir, os.path.basename(src_dir)
+    )
     out.write.mode("overwrite").parquet(silver)
     import shutil
 
@@ -2275,7 +2013,7 @@ def q_streaming_incremental_dedup(
     # fingerprint), delete the per-run work dir, return the parquet
     # read — O(files) driver-side however large the duplicate set
     fp = _fingerprint(docs, "doc_id", F.length("text"))
-    silver = _silver_dir("inc_dedup", sf_dir, fp)
+    silver = _staged_dir("inc_dedup_silver", sf_dir, fp)
     final.write.mode("overwrite").parquet(silver)
     shutil.rmtree(work, ignore_errors=True)
     return spark.read.parquet(silver)
@@ -2464,7 +2202,7 @@ def q_streaming_dedup_maintenance(
         "doc_id", "component_id"
     )
     fp = _fingerprint(docs, "doc_id", F.length("text"))
-    silver = _silver_dir("dedup_maint", sf_dir, fp)
+    silver = _staged_dir("dedup_maint_silver", sf_dir, fp)
     final.write.mode("overwrite").parquet(silver)
     shutil.rmtree(work, ignore_errors=True)
     return spark.read.parquet(silver)
@@ -2672,7 +2410,7 @@ def q_streaming_dedup_maintenance_bucketed(
             "doc_id", "component_id"
         )
         fp = _fingerprint(docs, "doc_id", F.length("text"))
-        silver = _silver_dir("dedup_maint_bkt", sf_dir, fp)
+        silver = _staged_dir("dedup_maint_bkt_silver", sf_dir, fp)
         final.write.mode("overwrite").parquet(silver)
         return spark.read.parquet(silver)
     finally:

@@ -671,7 +671,7 @@ def test_dsir_selection_banded_not_global(spark):
     # the constant-group banded rank folds its literal join keys, so
     # the edges/offsets joins degrade to nested loops over broadcast
     # sides of <= n_bands+1 rows (the user_value_quartiles shape,
-    # whitelisted with that reason in plan_audit.py) — bounded count,
+    # whitelisted with that reason in tools/plan_audit.py) — bounded count,
     # never against the corpus side
     assert len(re.findall(r"BroadcastNestedLoopJoin", plan)) <= 2, plan
     for line in plan.splitlines():
@@ -725,7 +725,7 @@ def test_pq_search_corpus_never_shuffles(spark):
     plan = _final_plan(df)
     assert "CartesianProduct" not in plan, plan
     # the non-equi query broadcast (vec_id <> query_id) is the
-    # embed_topk BNLJ shape, whitelisted in plan_audit.py
+    # embed_topk BNLJ shape, whitelisted in tools/plan_audit.py
     for line in plan.splitlines():
         if "SortMergeJoin" in line or "ShuffledHashJoin" in line:
             raise AssertionError(
@@ -743,7 +743,7 @@ def test_pq_search_corpus_never_shuffles(spark):
 def test_hard_negative_pairs_plan(spark):
     """hard_negative_pairs (r10): the corpus scoring pass must join the
     query frame by BROADCAST (the non-equi BNLJ is whitelisted in
-    plan_audit.py), never a cartesian; the closure subtrees are
+    tools/plan_audit.py), never a cartesian; the closure subtrees are
     lineage-cut (checkpointed), so the executed plan's real scan count
     stays inside the audit bound."""
     df = QUERIES["hard_negative_pairs"].fn(spark, SF_SMOKE)
@@ -970,7 +970,7 @@ def test_qbc_disagreement_plan(spark):
     """qbc_disagreement (r11): both member scores fuse into one
     scan-projection; the only joins are the banded-rank
     constant-group broadcasts (the user_value_quartiles/dsir shape,
-    whitelisted in plan_audit.py); scans stay inside the
+    whitelisted in tools/plan_audit.py); scans stay inside the
     banded_percent_rank multi-scan contract."""
     import re
 

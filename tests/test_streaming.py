@@ -1076,31 +1076,43 @@ def test_silver_dir_evicts_only_stale_copies_of_its_own_sf(
     evicts only the stale copy of the same SF.  ``sf0.1`` and
     ``sf0.1_x10`` are separate tags although one name is a prefix of
     the other.  A copy of the same kind in the older flat layout is
-    evicted; another kind's is not."""
+    evicted; another kind's is not.  A staged stream source keeps the
+    same rule: staging events for ``sf0.1`` keeps ``sf0.1_x10``'s copy."""
     import tempfile
 
-    from bigdata_20251_steam_spark.plans.streaming_queries import _silver_dir
+    from bigdata_20251_steam_spark.plans.streaming_queries import (
+        _staged_dir,
+        _staged_events_dir,
+    )
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     flat = tmp_path / "idx_lifecycle_silver_data_sf0.1_fp0"
     other_kind = tmp_path / "dedup_maint_silver_data_sf0.1_fp0"
     flat.mkdir()
     other_kind.mkdir()
-    first = _silver_dir("idx_lifecycle", "/data/sf0.1", "fp1")
+    first = _staged_dir("idx_lifecycle_silver", "/data/sf0.1", "fp1")
     assert not flat.exists() and other_kind.is_dir()
     spark.range(3).write.parquet(first)
     earlier = spark.read.parquet(first)
     for sf in ("/data/sf0.01", "/data/sf0.1_x10"):
-        other = _silver_dir("idx_lifecycle", sf, "fp2")
+        other = _staged_dir("idx_lifecycle_silver", sf, "fp2")
         spark.range(5).write.mode("overwrite").parquet(other)
     assert earlier.count() == 3
     assert os.path.isdir(first)
 
-    again = _silver_dir("idx_lifecycle", "/data/sf0.1", "fp1")
+    again = _staged_dir("idx_lifecycle_silver", "/data/sf0.1", "fp1")
     assert again == first and os.path.isdir(first)
-    newer = _silver_dir("idx_lifecycle", "/data/sf0.1", "fp3")
+    newer = _staged_dir("idx_lifecycle_silver", "/data/sf0.1", "fp3")
     assert not os.path.exists(first) and newer != first
-    assert os.path.isdir(_silver_dir("idx_lifecycle", "/data/sf0.01", "fp2"))
-    assert os.path.isdir(
-        _silver_dir("idx_lifecycle", "/data/sf0.1_x10", "fp2")
-    )
+    for sf in ("/data/sf0.01", "/data/sf0.1_x10"):
+        assert os.path.isdir(_staged_dir("idx_lifecycle_silver", sf, "fp2"))
+
+    data = tmp_path / "data"
+    data.mkdir()
+    for name in ("sf0.1_x10", "sf0.1"):
+        (data / name).symlink_to(SF_SMOKE)
+    x10 = _staged_events_dir(spark, str(data / "sf0.1_x10"))
+    staged = spark.read.parquet(x10)
+    one = _staged_events_dir(spark, str(data / "sf0.1"))
+    assert one != x10 and os.path.isdir(one)
+    assert os.path.isdir(x10) and staged.count() > 0
