@@ -834,8 +834,8 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the first frame byte via the deterministic mdat fill — so a "
     "hash match proves the encoder+sample-table-parser pair is "
     "field-exact; gapped-stco/co64/tail-chunk forms are pinned in "
-    "pytest.  Only the codec payload itself remains env-gated "
-    "(sampler column = provenance contract).  Scale shape: one "
+    "pytest.  Only the codec payload itself remains env-gated; a "
+    "payload without a parsable stbl raises.  Scale shape: one "
     "bounded per-user aggregate, two narrow Arrow passes, no "
     "collect.",
 )
@@ -933,7 +933,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = params.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    frames = mm.sample_frames(media, fake=False)
+    frames = mm.sample_frames(media)
     return frames.select(
         "doc_id",
         "frame_idx",
@@ -974,27 +974,27 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n % 251 AS DOUBLE)                        AS f7
     FROM h LEFT JOIN stats ON h.doc_id = stats.doc_id
     """,
-    # the fake-moment features are pure byte statistics of the
+    # the byte-moment features are pure byte statistics of the
     # payload, which SQL can recompute from hex(encode(text))
     doc="Arrow-batched mapInPandas feature extraction over binary payloads "
-    "(deterministic stand-in decoder; real PPM/BMP/PNG codecs route by "
-    "magic bytes, pinned in tests/test_multimodal.py).  The text-payload "
-    "fake features are byte statistics (length, first/last/middle byte, "
-    "byte-sum mod 997, min/max byte), so the oracle recomputes every "
-    "value from hex(encode(text)) — the full mapInPandas output is now "
+    "(byte_moments: stand-in features, decoder 'fake-moments'; the real "
+    "codecs route by magic bytes in decode_features, pinned in "
+    "tests/test_multimodal.py).  The text-payload features are byte "
+    "statistics (length, first/last/middle byte, byte-sum mod 997, "
+    "min/max byte), so the oracle recomputes every value from "
+    "hex(encode(text)) — the full mapInPandas output is now "
     "hash-matched, not rows-only.  Features surface as 8 scalar DOUBLE "
     "columns (array columns break row canonicalizers — the round-1 "
     "approx_stats lesson).  r6 hardening (ADVICE): the oracle uses "
     "TRY_CAST so an EMPTY text payload yields zeros instead of a DuckDB "
-    "cast error, and the query disables magic-byte routing "
-    "(route_magic=False) so a text that happens to start with P6/P3/BM/"
-    "PNG magic cannot be diverted into the pixel decoder — payloads "
-    "here are text bytes, so byte statistics are always the correct "
-    "feature set.",
+    "cast error, and byte_moments runs no magic-byte dispatch, so a "
+    "text that happens to start with P6/P3/BM/PNG magic cannot be "
+    "diverted into the pixel decoder — payloads here are text bytes, "
+    "so byte statistics are always the correct feature set.",
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = mm.to_media_frame(load_table(spark, sf_dir, "documents"))
-    feats = mm.decode_features(media, fake=True, route_magic=False)
+    feats = mm.byte_moments(media)
     return feats.select(
         "doc_id",
         "n_bytes",
@@ -1098,7 +1098,7 @@ def q_multimodal_audio_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = per_user.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    feats = mm.decode_features(media, fake=False, route_magic=True)
+    feats = mm.decode_features(media)
     return feats.select(
         "doc_id",
         "decoder",
@@ -5580,8 +5580,8 @@ def q_pq_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every feature DIRECTLY from the parameter derivation — never "
     "touching a box — so a hash match proves the encoder+parser pair "
     "is field-exact (timescale, 64-bit-safe duration, fixed-point "
-    "dimensions, handler-type track split) and fake=False pins the "
-    "routing.  Scale shape: one bounded per-user aggregate, then two "
+    "dimensions, handler-type track split) and the router raises on "
+    "any payload it cannot decode.  Scale shape: one bounded per-user aggregate, then two "
     "narrow Arrow passes; no collect.",
 )
 def q_multimodal_video_meta_roundtrip(
@@ -5659,7 +5659,7 @@ def q_multimodal_video_meta_roundtrip(
     media = params.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    feats = mm.decode_features(media, fake=False, route_magic=True)
+    feats = mm.decode_features(media)
     return feats.select(
         "doc_id",
         "decoder",
@@ -8014,7 +8014,7 @@ def q_takedown_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     "byte train from the events table (pmod-256, first 48 by "
     "event_id), wrap it as TWO RIFF/WAVE payloads — format code 7 "
     "(mu-law) and 6 (A-law) — in one Arrow pass, route both through "
-    "decode_features' magic dispatch (fake=False: any fallback "
+    "decode_features' magic dispatch (an undecodable payload "
     "raises), and emit the per-codec provenance + audio features.  "
     "The oracle re-expands every byte with the ITU integer formulas "
     "IN SQL (complement/segment/mantissa arithmetic — no codec, no "
@@ -8074,7 +8074,7 @@ def q_multimodal_g711_roundtrip(
     media = per_user.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    feats = mm.decode_features(media, fake=False, route_magic=True)
+    feats = mm.decode_features(media)
     return feats.select(
         "doc_id",
         "decoder",
@@ -8148,7 +8148,7 @@ def q_multimodal_g711_roundtrip(
     "(pmod-16, first 32 by event_id), pack it as a single ADPCM "
     "block (pred=0/index=0 header, low nibble first, "
     "samples-per-block in the fmt extension), decode through the "
-    "engine's magic dispatch (fake=False), and emit the audio "
+    "engine's magic dispatch, and emit the audio "
     "features.  The oracle replays the ENTIRE stateful decode "
     "recurrence as a recursive CTE — the 89-entry step table and the "
     "index-delta table as SQL list literals, predictor clamping and "
@@ -8219,7 +8219,7 @@ def q_multimodal_adpcm_roundtrip(
     media = per_user.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    feats = mm.decode_features(media, fake=False, route_magic=True)
+    feats = mm.decode_features(media)
     return feats.select(
         "doc_id",
         "decoder",
@@ -8266,7 +8266,7 @@ def q_multimodal_adpcm_roundtrip(
     "FLAC stream in an executor — STREAMINFO, frame header with "
     "CRC-8, a FIXED order-2 predictor subframe (verbatim below 3 "
     "samples) with partitioned-Rice residuals, frame CRC-16 — then "
-    "decode through the engine's magic dispatch (fake=False) and "
+    "decode through the engine's magic dispatch and "
     "emit the audio features.  FLAC is LOSSLESS, so the oracle "
     "recomputes the features directly from the sample derivation "
     "without modeling the codec at all: the hash match proves "
@@ -8426,7 +8426,7 @@ def q_multimodal_flac_roundtrip(
     media = per_user.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    feats = mm.decode_features(media, fake=False, route_magic=True)
+    feats = mm.decode_features(media)
     return feats.select(
         "doc_id",
         "decoder",
@@ -8463,20 +8463,20 @@ def q_multimodal_flac_roundtrip(
     FROM s WHERE rn <= 4
     """,
     doc="VIDEO FRAME DECODE end to end (r16 verdict missing #4, the "
-    "video half — frame decode was fully fake-moments before r17): "
+    "video half — frame decode was byte statistics before r17): "
     "per user, derive up to 4 DC levels from the events table, "
     "encode each as a DC-only baseline JPEG (Q00=8 makes the flat "
     "IDCT block exactly 128+dc with zero rounding ambiguity), pack "
     "them as the samples of a single-track ISO BMFF container "
     "(ftyp+mdat+moov with a full stts/stsc/stsz/stco set) — an "
     "MJPEG-flavored track, the real archival/webcam format family — "
-    "and run decode_frame_features(fake=False): the fused stbl "
+    "and run decode_frame_features: the fused stbl "
     "slicer + JPEG pixel tier decodes every frame FOR REAL in one "
     "Arrow pass.  The oracle recomputes frame identity (index, stts "
     "dts) and all eight pixel statistics from the DC derivation "
     "alone, so a hash match proves container arithmetic + entropy "
-    "decode + IDCT end to end.  Codec-packed tracks keep the loud "
-    "fallback contract (pytest).  Scale shape: bounded per-user "
+    "decode + IDCT end to end.  Codec-packed tracks raise "
+    "NotImplementedError (pytest).  Scale shape: bounded per-user "
     "aggregate, two narrow Arrow passes, no collect, no shuffle "
     "beyond the per-user groupBy.",
 )
@@ -8610,7 +8610,7 @@ def q_video_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = per_user.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    feats = mm.decode_frame_features(media, fake=False)
+    feats = mm.decode_frame_features(media)
     return feats.select(
         "doc_id",
         "frame_idx",
@@ -8657,7 +8657,7 @@ def q_video_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "derive up to 24 grayscale levels from the events table, encode "
     "them as an n-x-1 GIF89a (256-entry grayscale table, clear-heavy "
     "LZW — a valid stream per the deferred-clear rules), route "
-    "through decode_features' magic dispatch (fake=False), and emit "
+    "through decode_features' magic dispatch, and emit "
     "the pixel features.  GIF is palette-lossless, so the oracle "
     "recomputes the statistics straight from the level derivation "
     "(grayscale makes mean_r=mean_g=mean_b=mean and luma==level "
@@ -8747,7 +8747,7 @@ def q_multimodal_gif_roundtrip(
     media = per_user.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    feats = mm.decode_features(media, fake=False, route_magic=True)
+    feats = mm.decode_features(media)
     return feats.select(
         "doc_id",
         "decoder",
@@ -8791,10 +8791,11 @@ def q_multimodal_gif_roundtrip(
            CAST(CAST(mx AS REAL) AS DOUBLE) AS f7
     FROM agg
     """,
-    doc="Roundtrip proof for the r17 REAL image resize (the last fake "
-    "in the brief's decode/feature/resize/frame-sample quartet): per "
+    doc="Roundtrip proof for the r17 REAL image resize (the last "
+    "stand-in of the brief's decode/feature/resize/frame-sample "
+    "quartet): per "
     "user, derive up to 24 grayscale levels, encode an n-x-1 P6, run "
-    "resize_media(fake=False) to 5x3 — decode, nearest-neighbor "
+    "resize_media to 5x3 — decode, nearest-neighbor "
     "resample with the floor map src=(dst*src_dim)//dst_dim, "
     "re-encode P6 — then decode_features the RESIZED payload and "
     "emit its pixel stats.  The oracle replays the resample "
@@ -8850,12 +8851,8 @@ def q_multimodal_resize_roundtrip(
     media = per_user.mapInPandas(
         encode, "doc_id bigint, payload binary, media_type string"
     )
-    resized = mm.resize_media(media, width=5, height=3, fake=False)
-    feats = mm.decode_features(
-        resized.select("doc_id", "payload", "media_type"),
-        fake=False,
-        route_magic=True,
-    )
+    resized = mm.resize_media(media, width=5, height=3)
+    feats = mm.decode_features(resized.select("doc_id", "payload", "media_type"))
     return feats.select(
         "doc_id",
         "decoder",
@@ -8977,9 +8974,7 @@ def q_multimodal_resample_roundtrip(
     )
     resampled = mm.resample_audio(media, target_rate=3000)
     feats = mm.decode_features(
-        resampled.select("doc_id", "payload", "media_type"),
-        fake=False,
-        route_magic=True,
+        resampled.select("doc_id", "payload", "media_type")
     )
     return feats.select(
         "doc_id",

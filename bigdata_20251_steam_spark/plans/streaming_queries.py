@@ -2554,7 +2554,7 @@ def q_streaming_dedup_maintenance_bucketed(
     "encoded in ONE Arrow pass from per-user event derivations — "
     "lands in an epoch-keyed bronze store via the EXACTLY-ONCE "
     "foreachBatch append (idempotent_epoch_append, 4-file source = 4 "
-    "micro-batches), and decode_features(fake=False) then routes "
+    "micro-batches), and decode_features then routes "
     "every reconstructed payload by its own magic bytes: one stream, "
     "four real decoders, per-row provenance.  The oracle is the "
     "UNION of the four standalone roundtrip oracles (each restricted "
@@ -2835,7 +2835,7 @@ def q_streaming_media_decode(
     corpus = spark.read.parquet(bronze).select(
         "doc_id", "payload", "media_type"
     )
-    feats = mm.decode_features(corpus, fake=False, route_magic=True)
+    feats = mm.decode_features(corpus)
     out = feats.select(
         "doc_id",
         "decoder",

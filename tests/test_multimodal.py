@@ -11,45 +11,63 @@ from bigdata_20251_steam_spark.sources.batch import load_table
 from .conftest import SF_SMOKE
 
 
+MEDIA_DDL = "doc_id long, payload binary, media_type string"
+
+
 def _media(spark):
     return mm.to_media_frame(load_table(spark, SF_SMOKE, "documents"))
 
 
+def _one(spark, payload, media_type="application/octet-stream"):
+    """A one-payload media frame."""
+    return spark.createDataFrame([(1, bytearray(payload), media_type)], MEDIA_DDL)
+
+
+def _raises_not_implemented(df):
+    """Collecting ``df`` fails with the worker's NotImplementedError."""
+    with pytest.raises(Exception, match="NotImplementedError"):
+        df.collect()
+
+
 def test_resize_shapes(spark):
-    media = _media(spark)
+    """Every decodable image comes out 1:1 as a P6 of exactly w*h
+    pixels (a text payload raises: test_real_decoder_contract)."""
+    media = spark.createDataFrame(
+        [
+            (1, _ppm_p6(3, 2, GOLD_PX), "image/x-portable-pixmap"),
+            (2, _bmp24(3, 2, GOLD_PX), "image/bmp"),
+            (3, _png(3, 2, GOLD_PX), "image/png"),
+        ],
+        MEDIA_DDL,
+    )
     out = mm.resize_media(media, width=8, height=8)
     assert out.count() == media.count()  # 1:1
     lens = out.select(F.octet_length("payload").alias("n")).distinct().collect()
-    assert [r["n"] for r in lens] == [64]  # every payload exactly w*h bytes
-    # content is a prefix of the original payload
-    joined = out.alias("o").join(media.alias("m"), "doc_id").select(
-        F.expr("substring(m.payload, 1, least(octet_length(m.payload), 64))").alias("pre"),
-        F.expr("substring(o.payload, 1, least(octet_length(m.payload), 64))").alias("got"),
-    )
-    assert joined.filter(F.col("pre") != F.col("got")).count() == 0
+    assert [r["n"] for r in lens] == [len(b"P6\n8 8\n255\n") + 8 * 8 * 3]
 
 
 def test_sample_frames_fanout(spark):
-    media = _media(spark)
-    frames = mm.sample_frames(media, every_n_bytes=256)
-    expected = media.select(
-        "doc_id",
-        ((F.col("meta.n_bytes") - 1) / 256 + 1).cast("long").alias("n_frames"),
+    """1:N fan-out: one row per stbl sample of each container, frame 0
+    holding the first sample's bytes; a text payload raises."""
+    samples = {1: [b"a" * 5, b"bb" * 4, b"c"], 2: [b"\x00\x01" * 9]}
+    media = spark.createDataFrame(
+        [(d, _mp4_track(s), "video/mp4") for d, s in samples.items()], MEDIA_DDL
     )
-    got = frames.groupBy("doc_id").count()
-    diff = got.join(expected, "doc_id").filter(F.col("count") != F.col("n_frames"))
-    assert diff.count() == 0
-    # frame 0 holds the payload's first 16 bytes
-    f0 = frames.filter(F.col("frame_idx") == 0).join(media, "doc_id").select(
-        F.expr("substring(payload, 1, 16)").alias("pre"), "frame"
-    )
-    assert f0.filter(F.col("pre") != F.col("frame")).count() == 0
+    frames = mm.sample_frames(media)
+    got = {r["doc_id"]: r["count"] for r in frames.groupBy("doc_id").count().collect()}
+    assert got == {d: len(s) for d, s in samples.items()}
+    f0 = {
+        r["doc_id"]: bytes(r["frame"])
+        for r in frames.filter(F.col("frame_idx") == 0).collect()
+    }
+    assert f0 == {d: s[0] for d, s in samples.items()}
+    _raises_not_implemented(mm.sample_frames(_media(spark).limit(1)))
 
 
 def test_real_decoder_contract(spark):
     media = _media(spark).limit(1)
     with pytest.raises(Exception, match="NotImplementedError|real image resize"):
-        mm.resize_media(media, fake=False).collect()
+        mm.resize_media(media).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -311,9 +329,8 @@ def test_decode_real_jpeg_feature_parity_with_ppm():
 def test_decode_features_routes_jpeg(spark):
     """The mapInPandas router: baseline JPEG -> 'jpeg-pixel' real
     decode; an UNDECODABLE JPEG payload (here a truncated progressive
-    stream — SOF2 header, zero scans) falls through to the fake
-    decoder instead of failing the batch.  (Valid progressive streams
-    decode for real since r17 — see
+    stream — SOF2 header, zero scans) raises NotImplementedError.
+    (Valid progressive streams decode for real since r17 — see
     test_decode_features_routes_progressive_jpeg.)"""
     import struct
 
@@ -324,18 +341,13 @@ def test_decode_features_routes_jpeg(spark):
         + bytes([1, 0x11, 0])
         + b"\xff\xd9"
     )
-    media = spark.createDataFrame(
-        [(1, bytearray(_PY_JPG), "image/jpeg"),
-         (2, bytearray(progressive), "image/jpeg")],
-        "doc_id long, payload binary, media_type string",
-    )
     rows = {
         r["doc_id"]: r
-        for r in mm.decode_features(media, fake=True).collect()
+        for r in mm.decode_features(_one(spark, _PY_JPG, "image/jpeg")).collect()
     }
     assert rows[1]["decoder"] == "jpeg-pixel"
     assert rows[1]["feature"][0] == 16.0 and rows[1]["feature"][1] == 16.0
-    assert rows[2]["decoder"] == "fake-moments"
+    _raises_not_implemented(mm.decode_features(_one(spark, progressive, "image/jpeg")))
 
 
 def test_decode_jpeg_corrupt_payloads_fall_back(spark):
@@ -343,8 +355,8 @@ def test_decode_jpeg_corrupt_payloads_fall_back(spark):
     DQT, missing Huffman tables) must normalize to ValueError inside
     the decoder — review finding: the parser's raw struct.error /
     IndexError / KeyError would otherwise escape the router's
-    `except ValueError` and crash the whole mapInPandas job on one
-    corrupt byte string."""
+    `except ValueError` — so the router raises its NotImplementedError
+    for each of them."""
     import struct
 
     corrupt = [
@@ -360,12 +372,8 @@ def test_decode_jpeg_corrupt_payloads_fall_back(spark):
     for payload in corrupt:
         with pytest.raises(ValueError):
             mm.decode_image(payload)
-    media = spark.createDataFrame(
-        [(i, bytearray(p), "image/jpeg") for i, p in enumerate(corrupt)],
-        "doc_id long, payload binary, media_type string",
-    )
-    rows = mm.decode_features(media, fake=True).collect()
-    assert all(r["decoder"] == "fake-moments" for r in rows), rows
+    for payload in corrupt:
+        _raises_not_implemented(mm.decode_features(_one(spark, payload, "image/jpeg")))
 
 
 @pytest.mark.parametrize(
@@ -413,12 +421,11 @@ def test_decode_real_feature_vector():
 
 
 def test_decode_features_routes_real_and_fake(spark):
-    """End-to-end mapInPandas run: PPM/BMP payloads take the REAL pixel
-    branch, other payloads the deterministic fake — in one batch."""
+    """End-to-end mapInPandas run: PPM/BMP/PNG payloads take the REAL
+    pixel branch in one batch; a text payload raises."""
     rows = [
         (1, _ppm_p6(3, 2, GOLD_PX), "image/x-portable-pixmap"),
         (2, _bmp24(3, 2, GOLD_PX), "image/bmp"),
-        (3, b"just some text", "text/plain"),
         (4, _png(3, 2, GOLD_PX, color_type=6, filters=[1, 4]), "image/png"),
     ]
     media = spark.createDataFrame(
@@ -427,12 +434,14 @@ def test_decode_features_routes_real_and_fake(spark):
     got = {r["doc_id"]: r for r in mm.decode_features(media).collect()}
     assert got[1]["decoder"] == "ppm-bmp-pixel"
     assert got[2]["decoder"] == "ppm-bmp-pixel"
-    assert got[3]["decoder"] == "fake-moments"
     assert got[4]["decoder"] == "png-pixel"
     # PPM, BMP and PNG encode the same image -> identical pixel features
     assert got[1]["feature"] == got[2]["feature"] == got[4]["feature"]
     assert got[1]["feature"][:3] == [3.0, 2.0, 6.0]
-    assert got[3]["n_bytes"] == len(b"just some text")
+    assert got[1]["n_bytes"] == len(rows[0][1])
+    _raises_not_implemented(
+        mm.decode_features(_one(spark, b"just some text", "text/plain"))
+    )
 
 
 def test_multimodal_features_oracle_adversarial_payloads(spark, tmp_path):
@@ -566,8 +575,8 @@ def test_decode_wav_rejects_non_pcm():
 def test_decode_features_routes_wav_and_contract(spark):
     """Router provenance contract: real WAV -> 'wav-pcm'; payloads that
     LOOK like a supported format but aren't decodable (non-PCM WAV,
-    progressive-marker JPEG) -> 'fake-moments' — the documented
-    feature-poisoning guard (filter decoder != 'fake-moments')."""
+    progressive-marker JPEG) raise NotImplementedError — never
+    features a pipeline could mistake for decoded ones."""
     wav = _wav_pcm([0, 1000, -1000, 32767, -32768, 500], n_ch=2, rate=44100)
     bad_wav = _wav_pcm([0, 1, 2], fmt_code=2)  # ADPCM-coded
     # SOI + SOF2 (progressive) marker; pixel decoder must raise ValueError
@@ -577,19 +586,17 @@ def test_decode_features_routes_wav_and_contract(spark):
         (2, bad_wav, "audio/wav"),
         (3, prog_jpeg, "image/jpeg"),
     ]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary, media_type string")
+    media = spark.createDataFrame(rows[:1], "doc_id long, payload binary, media_type string")
     got = {r["doc_id"]: r for r in mm.decode_features(media).collect()}
     assert got[1]["decoder"] == "wav-pcm"
     assert got[1]["feature"][:3] == [3.0, 2.0, 44100.0]
-    assert got[2]["decoder"] == "fake-moments"
-    assert got[3]["decoder"] == "fake-moments"
-    # fake=False: the undecodable-but-recognized payloads must raise,
-    # never silently emit fake features
+    # the undecodable-but-recognized payloads must raise, never
+    # silently emit stand-in features
     with pytest.raises(Exception, match="NotImplementedError|heavyweight"):
         mm.decode_features(
             spark.createDataFrame(rows[1:2], "doc_id long, payload binary, media_type string"),
-            fake=False,
         ).collect()
+    _raises_not_implemented(mm.decode_features(_one(spark, prog_jpeg, "image/jpeg")))
 
 
 def _mp4_fixture(ts=600, dur=3000, mvhd_ver=0, tkhd_ver=0, tracks=(("vide", 640, 360), ("soun", 0, 0)), large_moov=False, size0_moov=False):
@@ -643,34 +650,32 @@ def test_mp4_parser_golden():
     assert mm.parse_mp4(
         _mp4_fixture(dur=1200, tracks=(("soun", 0, 0),), size0_moov=True)
     ) == [2.0, 600.0, 1200.0, 1.0, 0.0, 1.0, 0.0, 0.0]
-    # malformed trees raise (the fake-fallback contract)
+    # malformed trees raise (NotImplementedError from the router)
     for bad in (b"", b"x" * 16, _mp4_fixture()[:40]):
         with pytest.raises(ValueError):
             mm.parse_mp4(bad)
 
 
 def test_mp4_routing_contract(spark):
-    """decode_features routes ftyp payloads to 'mp4-meta'; truncated
-    containers fall to the fake visibly; fake=False raises instead of
-    silently faking — the decoder-provenance consumer contract."""
+    """decode_features routes ftyp payloads to 'mp4-meta'; a truncated
+    container raises instead of emitting stand-in features — the
+    decoder-provenance consumer contract."""
     good = _mp4_fixture()
     truncated = good[: len(good) - 30]
     rows = [(1, good, "video/mp4"), (2, truncated, "video/mp4")]
     media = spark.createDataFrame(
-        rows, "doc_id long, payload binary, media_type string"
+        rows[:1], "doc_id long, payload binary, media_type string"
     )
     got = {r["doc_id"]: r for r in mm.decode_features(media).collect()}
     assert got[1]["decoder"] == "mp4-meta"
     assert got[1]["feature"] == [
         5.0, 600.0, 3000.0, 2.0, 1.0, 1.0, 640.0, 360.0,
     ]
-    assert got[2]["decoder"] == "fake-moments"
     with pytest.raises(Exception, match="NotImplementedError|heavyweight|BMFF"):
         mm.decode_features(
             spark.createDataFrame(
                 rows[1:2], "doc_id long, payload binary, media_type string"
             ),
-            fake=False,
         ).collect()
     # decode_real surfaces the same integration-point contract
     assert mm.decode_real(good, "video/mp4")[2] == 3000.0
@@ -681,7 +686,7 @@ def test_mp4_routing_contract(spark):
 # ---------------------------------------------------------------------------
 # Adversarial-bytes fuzz: the stdlib binary parsers must treat a
 # 100 TB corpus's payload column as UNTRUSTED — every malformed input
-# raises ValueError (routed to the fake tier), never struct.error /
+# raises ValueError (NotImplementedError from the router), never struct.error /
 # IndexError / a hang.  r10 covered WAV/MP4; r11 extends the same
 # contract to the image decoders (PNG/baseline-JPEG), which caught
 # three live leaks: zlib.error on corrupt deflate, OverflowError on a
@@ -804,7 +809,7 @@ if _HAVE_HYP:
 
 def _check_image_contract(payload):
     """The image-decoder fuzz contract (r11, extending the r10 WAV/MP4
-    one): ValueError (-> visible fake-tier routing) or a well-formed
+    one): ValueError (-> the router's NotImplementedError) or a well-formed
     (w, h, px) decode — never zlib.error / struct.error / IndexError /
     ZeroDivisionError / a hang."""
     try:
@@ -1043,7 +1048,7 @@ def test_mp4_samples_const_stsz_allocation_bomb():
 
 def test_mp4_samples_offset_bounds():
     """r12 advice: a sample whose stco offset + stsz size extends past
-    the payload end must raise (visible fake fall-through) instead of
+    the payload end must raise (NotImplementedError from the router) instead of
     yielding sampler='mp4-stbl' rows whose frame slice is shorter than
     the reported size column."""
     import struct
@@ -1070,13 +1075,11 @@ def test_sample_frames_routes_stbl(spark):
     """The frame sampler's r11 routing: an ISO BMFF payload with a
     parsable stbl yields one row per SAMPLE carrying real container
     dts/size/offset and the payload slice at that offset (sampler
-    'mp4-stbl'); non-container payloads keep the fake byte grid
-    visibly ('fake-grid'); fake=False raises on a malformed
-    container."""
+    'mp4-stbl'); a non-container payload and a malformed container
+    raise NotImplementedError."""
     payload, exp = _stbl_mp4()
     rows = spark.createDataFrame(
-        [(1, bytearray(payload), "video/mp4"),
-         (2, bytearray(b"plain text bytes" * 20), "text/plain")],
+        [(1, bytearray(payload), "video/mp4")],
         "doc_id long, payload binary, media_type string",
     )
     got = mm.sample_frames(rows).collect()
@@ -1089,9 +1092,10 @@ def test_sample_frames_routes_stbl(spark):
     assert all(r["sampler"] == "mp4-stbl" for r in mp4_rows)
     for r in mp4_rows:
         assert bytes(r["frame"]) == payload[r["offset"]: r["offset"] + r["size"]]
-    txt_rows = [r for r in got if r["doc_id"] == 2]
-    assert txt_rows and all(r["sampler"] == "fake-grid" for r in txt_rows)
-    # malformed container: visible fake fall-through; loud under fake=False
+    _raises_not_implemented(
+        mm.sample_frames(_one(spark, b"plain text bytes" * 20, "text/plain"))
+    )
+    # malformed container: loud
     broken = bytearray(payload)
     broken[12:16] = b"zzzz"  # clobber moov walk entry (ftyp still intact)
     i = bytes(broken).find(b"stts")
@@ -1100,10 +1104,8 @@ def test_sample_frames_routes_stbl(spark):
         [(3, broken, "video/mp4")],
         "doc_id long, payload binary, media_type string",
     )
-    got2 = mm.sample_frames(rows2).collect()
-    assert got2 and all(r["sampler"] == "fake-grid" for r in got2)
     with pytest.raises(Exception, match="NotImplementedError|stbl"):
-        mm.sample_frames(rows2, fake=False).collect()
+        mm.sample_frames(rows2).collect()
 
 
 if _HAVE_HYP:
@@ -1711,8 +1713,7 @@ def test_decode_jpeg_progressive_color_444():
 def test_decode_features_routes_progressive_jpeg(spark):
     """r17: a VALID progressive JPEG now decodes for real through the
     router — decoder column 'jpeg-pixel', identical features to the
-    sequential encoding of the same coefficients (off the
-    'fake-moments' route, r16 verdict #8)."""
+    sequential encoding of the same coefficients (r16 verdict #8)."""
     blocks = [_gray_fixture_blocks()]
     prog = _jpeg_progressive(
         blocks, 16, 16,
@@ -1726,7 +1727,7 @@ def test_decode_features_routes_progressive_jpeg(spark):
     )
     rows = {
         r["doc_id"]: r
-        for r in mm.decode_features(media, fake=True).collect()
+        for r in mm.decode_features(media).collect()
     }
     assert rows[1]["decoder"] == "jpeg-pixel"
     assert rows[2]["decoder"] == "jpeg-pixel"
@@ -1735,7 +1736,7 @@ def test_decode_features_routes_progressive_jpeg(spark):
 
 # ---------------------------------------------------------------------------
 # r17: compressed-audio tiers — G.711, IMA ADPCM, FLAC (r16 verdict
-# "What's missing #4": these formats decoded via fake-moments before)
+# "What's missing #4": these formats had no real decode before)
 # ---------------------------------------------------------------------------
 
 
@@ -2051,7 +2052,7 @@ def test_decode_flac_stereo_decorrelation(stereo):
 
 def test_decode_flac_rejects_corruption():
     """CRC-8, CRC-16, sync and truncation all fail loudly (ValueError),
-    which is what routes a damaged stream to the fake-moments tier."""
+    which the media router turns into NotImplementedError."""
     good = _flac_encode([_FLAC_MONO])
     cases = {
         "frame footer CRC-16": lambda p: p[:-1] + bytes([p[-1] ^ 0xFF]),
@@ -2067,7 +2068,7 @@ def test_decode_flac_rejects_corruption():
 def test_decode_features_routes_compressed_audio(spark):
     """The mapInPandas router: per-codec provenance for every audio
     tier (wav-pcm / wav-g711u / wav-g711a / wav-ima-adpcm / flac-pcm),
-    and MP3-in-RIFF still falls to fake-moments."""
+    and MP3-in-RIFF raises NotImplementedError."""
     import struct
 
     blk = struct.pack("<hBB", 0, 0, 0) + bytes(8)
@@ -2086,14 +2087,13 @@ def test_decode_features_routes_compressed_audio(spark):
             "audio/wav",
         ),
         (5, bytearray(_flac_encode([_FLAC_MONO])), "audio/flac"),
-        (6, bytearray(_wav_raw(85, 16, bytes(16))), "audio/mpeg"),
     ]
     media = spark.createDataFrame(
         rows, "doc_id long, payload binary, media_type string"
     )
     got = {
         r["doc_id"]: r["decoder"]
-        for r in mm.decode_features(media, fake=True).collect()
+        for r in mm.decode_features(media).collect()
     }
     assert got == {
         1: "wav-pcm",
@@ -2101,8 +2101,10 @@ def test_decode_features_routes_compressed_audio(spark):
         3: "wav-g711a",
         4: "wav-ima-adpcm",
         5: "flac-pcm",
-        6: "fake-moments",
     }
+    _raises_not_implemented(
+        mm.decode_features(_one(spark, _wav_raw(85, 16, bytes(16)), "audio/mpeg"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2205,7 +2207,7 @@ def test_decode_frame_features_mjpeg(spark):
         "doc_id long, payload binary, media_type string",
     )
     rows = sorted(
-        mm.decode_frame_features(media, fake=False).collect(),
+        mm.decode_frame_features(media).collect(),
         key=lambda r: r["frame_idx"],
     )
     assert len(rows) == len(dcs)
@@ -2220,26 +2222,21 @@ def test_decode_frame_features_mjpeg(spark):
 
 
 def test_decode_frame_features_codec_packed_contract(spark):
-    """Frames without image magic: fake-moments under fake=True, loud
-    NotImplementedError under fake=False (the provenance contract
-    applied per frame); non-BMFF payloads take the fake grid."""
+    """Frames without per-sample magic raise NotImplementedError (the
+    provenance contract applied per frame), as does a non-BMFF
+    payload."""
     mp4 = _mp4_track([b"\x00\x00\x00\x01NAL0", b"\x00\x00\x00\x01NAL1"])
     media = spark.createDataFrame(
         [(1, bytearray(mp4), "video/mp4"), (2, bytearray(b"Z" * 300), "bin")],
         "doc_id long, payload binary, media_type string",
     )
-    rows = mm.decode_frame_features(media, fake=True).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert all(r["decoder"] == "fake-moments" for r in rows)
-    assert {r["sampler"] for r in by_doc[1]} == {"mp4-stbl"}
-    assert {r["sampler"] for r in by_doc[2]} == {"fake-grid"}
-    assert len(by_doc[2]) == 2  # 300 bytes / 256-byte grid
     with pytest.raises(Exception, match="codec-packed frame"):
         mm.decode_frame_features(
-            media.filter(F.col("doc_id") == 1), fake=False
+            media.filter(F.col("doc_id") == 1)
         ).collect()
+    _raises_not_implemented(
+        mm.decode_frame_features(media.filter(F.col("doc_id") == 2))
+    )
 
 
 def test_decode_frame_features_mixed_image_magics(spark):
@@ -2253,7 +2250,7 @@ def test_decode_frame_features_mixed_image_magics(spark):
         "doc_id long, payload binary, media_type string",
     )
     rows = sorted(
-        mm.decode_frame_features(media, fake=True).collect(),
+        mm.decode_frame_features(media).collect(),
         key=lambda r: r["frame_idx"],
     )
     assert [r["decoder"] for r in rows] == ["jpeg-pixel", "ppm-bmp-pixel"]
@@ -2452,21 +2449,15 @@ def test_decode_gif_rejects_malformed():
 
 
 def test_decode_features_routes_gif(spark):
-    """Router provenance: valid GIF -> 'gif-pixel'; damaged GIF ->
-    fake-moments under fake=True."""
+    """Router provenance: valid GIF -> 'gif-pixel'; a damaged GIF
+    raises NotImplementedError."""
     good = _gif_encode(6, 4, GOLD_PX * 4)
-    media = spark.createDataFrame(
-        [
-            (1, bytearray(good), "image/gif"),
-            (2, bytearray(good[:-12]), "image/gif"),
-        ],
-        "doc_id long, payload binary, media_type string",
-    )
     got = {
         r["doc_id"]: r["decoder"]
-        for r in mm.decode_features(media, fake=True).collect()
+        for r in mm.decode_features(_one(spark, good, "image/gif")).collect()
     }
-    assert got == {1: "gif-pixel", 2: "fake-moments"}
+    assert got == {1: "gif-pixel"}
+    _raises_not_implemented(mm.decode_features(_one(spark, good[:-12], "image/gif")))
 
 
 # ---------------------------------------------------------------------------
@@ -2486,7 +2477,7 @@ def test_resize_media_real_golden(spark):
         [(1, bytearray(_p6(4, 3, src)), "image/x-portable-pixmap")],
         "doc_id long, payload binary, media_type string",
     )
-    rows = mm.resize_media(media, width=6, height=2, fake=False).collect()
+    rows = mm.resize_media(media, width=6, height=2).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["width"], r["height"]) == (6, 2)
@@ -2514,9 +2505,7 @@ def test_resize_media_real_transcodes_any_decodable(spark):
     )
     rows = {
         r["doc_id"]: bytes(r["payload"])
-        for r in mm.resize_media(
-            media, width=3, height=2, fake=False
-        ).collect()
+        for r in mm.resize_media(media, width=3, height=2).collect()
     }
     assert rows[1] == rows[2]  # format-independent resample
     assert rows[1].startswith(b"P6\n3 2\n255\n")
@@ -2528,7 +2517,7 @@ def test_resize_media_real_undecodable_raises(spark):
         "doc_id long, payload binary, media_type string",
     )
     with pytest.raises(Exception, match="stdlib pixel tier"):
-        mm.resize_media(media, fake=False).collect()
+        mm.resize_media(media).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -2604,3 +2593,67 @@ def test_resample_audio_upsample_and_reject(spark):
         mm.resample_audio(bad, target_rate=4000).collect()
     with pytest.raises(ValueError, match="target_rate"):
         mm.resample_audio(media, target_rate=0)
+
+
+# ---------------------------------------------------------------------------
+# One media router: every entry point dispatches, decodes and names a
+# payload the same way, and raises NotImplementedError on a malformed one
+# ---------------------------------------------------------------------------
+
+
+def _adpcm_block_wav():
+    import struct
+
+    blk = struct.pack("<hBB", 0, 0, 0) + bytes(8)
+    return _wav_raw(0x11, 4, blk, balign=len(blk), extra=struct.pack("<HH", 2, 17))
+
+
+@pytest.mark.parametrize(
+    "make,decoder",
+    [
+        (lambda: _ppm_p6(3, 2, GOLD_PX), "ppm-bmp-pixel"),
+        (lambda: _bmp24(3, 2, GOLD_PX), "ppm-bmp-pixel"),
+        (lambda: _png(3, 2, GOLD_PX, filters=[1, 4]), "png-pixel"),
+        (lambda: _gif_encode(6, 4, GOLD_PX * 4), "gif-pixel"),
+        (lambda: _PY_JPG, "jpeg-pixel"),
+        (
+            lambda: _jpeg_progressive(
+                [_gray_fixture_blocks()], 16, 16,
+                [(None, 0, 0, 0, 0), (0, 1, 63, 0, 0)],
+            ),
+            "jpeg-pixel",
+        ),
+        (lambda: _wav_pcm([0, 1000, -1000, 32767, -32768, 500], n_ch=2), "wav-pcm"),
+        (lambda: _wav_raw(7, 8, bytes(range(64))), "wav-g711u"),
+        (_adpcm_block_wav, "wav-ima-adpcm"),
+        (lambda: _flac_encode([_FLAC_MONO]), "flac-pcm"),
+        (_mp4_fixture, "mp4-meta"),
+    ],
+    ids=[
+        "ppm", "bmp", "png", "gif", "jpeg", "jpeg_progressive", "wav_pcm",
+        "g711", "ima_adpcm", "flac", "mp4",
+    ],
+)
+def test_router_parity_across_entry_points(spark, make, decoder):
+    """decode_real, decode_features and decode_frame_features (the
+    payload as the one sample of an MJPEG-style track) return the same
+    features and decoder name for every golden fixture; a malformed
+    copy (cut to its first 12 bytes, magic intact) raises
+    NotImplementedError from every one of them."""
+    import struct
+
+    payload = make()
+    real = mm.decode_real(payload, "application/octet-stream")
+    as_f32 = list(struct.unpack("<8f", struct.pack("<8f", *real)))
+    (row,) = mm.decode_features(_one(spark, payload)).collect()
+    assert (list(row["feature"]), row["decoder"]) == (as_f32, decoder)
+    assert row["n_bytes"] == len(payload)
+    (frame,) = mm.decode_frame_features(_one(spark, _mp4_track([payload]))).collect()
+    assert (list(frame["feature"]), frame["decoder"]) == (as_f32, decoder)
+    assert (frame["sampler"], frame["size"]) == ("mp4-stbl", len(payload))
+
+    bad = payload[:12]
+    with pytest.raises(NotImplementedError):
+        mm.decode_real(bad, "application/octet-stream")
+    _raises_not_implemented(mm.decode_features(_one(spark, bad)))
+    _raises_not_implemented(mm.decode_frame_features(_one(spark, _mp4_track([bad]))))

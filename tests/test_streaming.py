@@ -639,7 +639,9 @@ def test_streaming_curation_epoch_replay_is_idempotent(spark):
     assert base, "pipeline produced no per-source rows"
 
 
-def test_streaming_curation_matches_batch_with_normalized_dups(spark, tmp_path):
+def test_streaming_curation_matches_batch_with_normalized_dups(
+    spark, tmp_path, monkeypatch
+):
     """r7 advice: the capstone's arrival-order claim was untested because
     the synthetic corpus holds no normalized duplicates with distinct
     doc_ids.  This fixture has them — including the adversarial corner
@@ -648,6 +650,8 @@ def test_streaming_curation_matches_batch_with_normalized_dups(spark, tmp_path):
     to the canonical copy and then decontaminates it away (the key
     dies); a first-arrival ingest dedup could keep the clean copy
     instead.  Stream and batch pipelines must agree row-for-row."""
+    import tempfile
+
     from bigdata_20251_steam_spark.plans.extension_queries import (
         q_curation_pipeline_end_to_end,
     )
@@ -681,6 +685,11 @@ def test_streaming_curation_matches_batch_with_normalized_dups(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string"
     )
     d = str(tmp_path / "dupfix")
+    # the stream stages its copy under the temp dir, keyed by this SF
+    # path; stage it inside tmp_path so pytest's retention removes it
+    # (a shared temp dir would keep one copy per run: nothing evicts
+    # another run's SF tag)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     df.withColumn("n_chars", F.length("text")).write.parquet(
         f"{d}/documents.parquet"
     )
